@@ -14,7 +14,8 @@ runs:
   retraining, no touching existing files: the daily-ingest path is one
   scan over the delta plus one blind txlog append;
 - ``search`` probes each query's ``n_probe`` nearest lists and reads
-  the index through ``read_pruned_in`` on the probed centroid ids —
+  the index through ``read_pruned(..., values=ids)`` on the probed
+  centroid ids (the txlog file-skipping planner picks its route) —
   zone-map file skipping turns every probe into a partition-pruned
   scan, the property that makes a 100 TB index answer queries without
   scanning 100 TB;
@@ -218,7 +219,7 @@ class TxAnnIndex:
         centroids, cbs, _v = model
         probes, ids = self.probed_centroids(spark, queries, n_probe, model=model)
         index = (
-            self.codes.read_pruned_in(spark, "centroid_id", ids)
+            self.codes.read_pruned(spark, "centroid_id", values=ids)
             if pruned
             else self.codes.read(spark)
         )

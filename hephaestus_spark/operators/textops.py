@@ -450,8 +450,9 @@ def _first_match_pairs(
             vals = ", ".join(str(v) for v in hot_by_t[k])
             cond += f" AND element_at(a._sig, {k + 1}) NOT IN ({vals})"
         terms.append(cond + ")")
-    earlier = " OR ".join(terms)
-    return pairs.filter(~F.expr(earlier)).select(
+    if terms:  # n_tables == 1 has no earlier table
+        pairs = pairs.filter(~F.expr(" OR ".join(terms)))
+    return pairs.select(
         F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b")
     )
 

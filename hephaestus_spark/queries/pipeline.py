@@ -1454,13 +1454,13 @@ def x_txlog_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
             "value", F.col("value") * 2
         )
         t.overwrite_partitions(spark, backfill)
-        keep, total = t.pruned_files_in("day", [d0, dmax])
+        keep, total = t.pruned_files("day", values=[d0, dmax])
         pruned = 0 < len(keep) < total
         versioned = (
             t.read(spark, 0).filter(F.col("day") == d0).count()
             == backfill.count()
         )
-        out = t.read_pruned_in(spark, "day", [d0, dmax]).select(
+        out = t.read_pruned(spark, "day", values=[d0, dmax]).select(
             "event_id",
             "user_id",
             "event_type",
@@ -1517,7 +1517,7 @@ def x_txlog_datasource_partitioned(spark: SparkSession, sf_dir: str) -> DataFram
     try:
         t = TxTable(f"{workdir}/events_by_day")
         t.append(e, partition_by=["day"])
-        keep, total = t.pruned_files_in("day", [d0])
+        keep, total = t.pruned_files("day", values=[d0])
         pruned = 0 < len(keep) < total
         got = (
             spark.read.format("txlog")
@@ -2234,14 +2234,14 @@ def x_txlog_bloom_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
         total = len(t._snapshot_files())
         # zones alone keep everything (hash column: full-range zones)
-        keep_needle, _ = t.pruned_files_in("h", needles)
+        keep_needle, _ = t.pruned_files("h", values=needles)
         needle_pruned = 0 < len(keep_needle) <= max(3, total // 2) < total
-        keep_miss, _ = t.pruned_files_in("h", ["0" * 32])
+        keep_miss, _ = t.pruned_files("h", values=["0" * 32])
         miss_zero = keep_miss == []
         r = TxLogBatchReader(t, t.latest_version())
         r.pushFilters([EqualTo(("h",), needles[0])])
         sql_pruned = r._keep is not None and 0 < len(r._keep) < total
-        out = t.read_pruned_in(spark, "h", needles).select(
+        out = t.read_pruned(spark, "h", values=needles).select(
             "c_custkey",
             "c_name",
             "h",

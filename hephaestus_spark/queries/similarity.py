@@ -664,7 +664,7 @@ def x_txlog_ann_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     committed model (no retraining, no rewrite of existing files — the
     daily-ingest path); queries probe their 2 nearest lists and the
     index is read through zone-map file skipping on the probed
-    centroid ids (``read_pruned_in``).
+    centroid ids (``read_pruned(..., values=ids)``).
 
     The oracle pins three booleans computed in-query (the q26
     pattern — each is a real invariant a bug would flip):
@@ -705,7 +705,7 @@ def x_txlog_ann_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         pr = idx.search(spark, queries, n_probe=2, pruned=True)
         fl = idx.search(spark, queries, n_probe=2, pruned=False)
         _probes, ids = idx.probed_centroids(spark, queries, n_probe=2)
-        kept, total = idx.codes.pruned_files_in("centroid_id", ids)
+        kept, total = idx.codes.pruned_files("centroid_id", values=ids)
         topk = F.array_sort(
             F.collect_list(F.struct("rn", "vec_id", "cos_sim"))
         )

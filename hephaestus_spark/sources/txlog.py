@@ -186,6 +186,32 @@ def _zone_probe_value(v):
     return v
 
 
+def _probe(lo=None, hi=None, values=None, is_null=None) -> tuple:
+    """One predicate in the file-skipping planner's form:
+    ``("range", lo, hi)`` (either bound may be None), ``("in",
+    values)`` or ``("null", want_null)``. Values are normalised here,
+    once, by ``_zone_probe_value``; NULLs drop out of an IN-list (they
+    match no row). The three forms are mutually exclusive."""
+    given = (lo is not None or hi is not None) + (values is not None)
+    if given + (is_null is not None) > 1:
+        raise ValueError("pass lo/hi, values= or is_null=, not several")
+    if is_null is not None:
+        return ("null", bool(is_null))
+    if values is not None:
+        return ("in", [_zone_probe_value(v) for v in values if v is not None])
+    return ("range", _zone_probe_value(lo), _zone_probe_value(hi))
+
+
+def _dml_probes(prune_column, lo, hi, partitions) -> dict:
+    """The planner probes of a DML call's pruning options: the
+    ``prune_column`` range plus one IN probe per ``partitions``
+    column."""
+    probes = {} if prune_column is None else {prune_column: [_probe(lo, hi)]}
+    for col, vals in (partitions or {}).items():
+        probes.setdefault(col, []).append(_probe(values=vals))
+    return probes
+
+
 def _sql_literal(v) -> str:
     """A Python value rendered as a Spark SQL literal (r12). Strings
     are single-quoted with embedded quotes doubled; dates/timestamps
@@ -1111,10 +1137,10 @@ class TxTable:
     # the newest parquet checkpoint plus the log tail (≤
     # CHECKPOINT_INTERVAL small JSON entries, applied driver-side —
     # that bound is the design, not an accident). Driver-bound callers
-    # that remain by design: pruned_files/pruned_files_in (their
-    # OUTPUT is the driver-side file list a read plan needs),
-    # stats_summary's column bounds (typed min/max folding over
-    # heterogeneous JSON stats), and every mutation path.
+    # that remain by design: pruned_files and the SQL connector's
+    # pushFilters (their OUTPUT is the driver-side file list a read
+    # plan needs) and stats_summary's column bounds (typed min/max
+    # folding over heterogeneous JSON stats).
 
     def live_adds_df(self, spark: SparkSession) -> DataFrame:
         """The live file set as a DataFrame (path, rows, v, payload)
@@ -1133,7 +1159,7 @@ class TxTable:
         driver-side: it is bounded by files-with-tombstones (a
         compaction-managed quantity), never by table size; the meta
         dict is one row. ``upto`` pins the snapshot version (r13
-        TOCTOU fix — see ``_dml_context``)."""
+        TOCTOU fix — see ``_planner``)."""
         schema = "path string, rows long, v long, payload string"
         if upto is None:
             upto = self.latest_version()
@@ -1434,72 +1460,6 @@ class TxTable:
             os.unlink(tmp)
         self._maybe_checkpoint(version)
 
-    @staticmethod
-    def _act_overlaps(act: dict, column: str, lo=None, hi=None, values=None):
-        """Could the file behind this add action contain a row with
-        ``column`` in [lo, hi] (or in ``values``)? The single-action
-        twin of ``pruned_files``/``pruned_files_in``, sharing their
-        exactness rules: missing stats keep (True — safe side), a
-        TRUNCATED string hi bound can never prove ``max < lo``, and
-        partition columns work for free because their hive values are
-        committed as exact singleton zones. ``column`` must already be
-        the PHYSICAL name. An EMPTY file (rows == 0 — Spark's writer
-        emits one per task that received no rows, so a small append on
-        a wide cluster commits several) trivially overlaps nothing; it
-        has no footer stats at all, so without this test it would read
-        as 'unknown — keep' and veto every rebase."""
-        if act.get("rows") == 0:
-            return False
-        st = (act.get("stats") or {}).get(column)
-        if st is None:
-            return True
-        if isinstance(st, dict):
-            mn, mx = st["lo"], st["hi"]
-            hi_usable = st.get("hi_exact", True)
-        else:
-            mn, mx = st
-            hi_usable = True
-        if values is not None:
-            return any(
-                v >= mn and (not hi_usable or v <= mx) for v in values
-            )
-        if lo is not None and hi_usable and mx < lo:
-            return False
-        if hi is not None and mn > hi:
-            return False
-        return True
-
-    def _act_overlaps_bloom(
-        self, act: dict, column: str, lo=None, hi=None, values=None
-    ) -> bool:
-        """``_act_overlaps`` with a bloom refinement (r13): when the
-        zone says "may overlap" and the transaction's read predicate
-        is an equality/IN probe, a definitely-absent verdict from the
-        RACER file's bloom sidecar proves disjointness — the racer
-        cannot contain a row this transaction would have read — so an
-        equality-scoped DML rebases over blind appends that merely
-        share the key RANGE (the common hot-ingest case: every new
-        file's zone spans the whole hash space). Sound because
-        definitely-absent is exact; a false positive, a missing
-        sidecar, or an unencodable probe just keeps the conflict
-        verdict (safe side)."""
-        if not self._act_overlaps(act, column, lo=lo, hi=hi, values=values):
-            return False
-        if values is not None:
-            probes = [v for v in values if v is not None]
-        elif lo is not None and lo == hi:
-            probes = [lo]
-        else:
-            return True
-        name = act.get("add")
-        if probes and name:
-            if (
-                self._bloom_probe(os.path.basename(name), column, probes)
-                is False
-            ):
-                return False
-        return True
-
     def _commit_snapshot_dependent(
         self,
         base_version: int,
@@ -1694,7 +1654,7 @@ class TxTable:
         # (the Delta add-action field) parsed from their hive path,
         # and inject each value as an EXACT singleton zone (lo == hi)
         # into the stats — partition pruning then IS zone-map pruning:
-        # pruned_files/pruned_files_in skip whole partitions with zero
+        # the file-skipping planner skips whole partitions with zero
         # new machinery and zero I/O (the columns aren't in the file
         # bytes at all).
         if pschema is None:
@@ -2203,6 +2163,23 @@ class TxTable:
         # helper passes the _f/_p provenance columns through untouched.
         dvs = self.dv_map(version)
         dv_names = sorted({d for f in files for d in dvs.get(f, [])})
+        return self._scan_live(spark, files, dv_names, meta, keep_keys)
+
+    def _scan_live(
+        self,
+        spark: SparkSession,
+        files: list[str],
+        dv_names: list[str],
+        meta: dict | None,
+        keep_keys: bool = False,
+    ) -> DataFrame:
+        """``_scan`` with meta and the deletion-vector names given —
+        on the Spark-side metadata path both come from the caller's
+        ``_live_frames`` pass, so the driver never folds the
+        checkpoint. There the anti-join runs against ALL live vectors:
+        tombstones key on (basename, pos) and basenames are
+        table-unique, so vectors for unscanned files match nothing —
+        correct, just a few extra KB-sized parquets read."""
         if not dv_names and not keep_keys:
             return self._project_logical(
                 self._read_files(spark, meta, files), meta
@@ -2224,42 +2201,136 @@ class TxTable:
         keyed = self._project_logical(keyed, meta)
         return keyed if keep_keys else keyed.drop("_f", "_p")
 
-    def _scan_live(
-        self,
-        spark: SparkSession,
-        files: list[str],
-        dv_names: list[str],
-        meta: dict | None,
-        keep_keys: bool = False,
-    ) -> DataFrame:
-        """``_scan`` for the Spark-side metadata path (r12, VERDICT
-        r11 #4): meta and the LIVE deletion-vector name list come from
-        the caller's ``_live_frames`` pass, so the driver never folds
-        the checkpoint. The anti-join runs against ALL live vectors —
-        tombstones key on (basename, pos) and basenames are
-        table-unique (``_base2rel`` refuses legacy collisions), so
-        vectors for unscanned files match nothing: correct, just a few
-        extra KB-sized parquets read (same trade as
-        ``read_pruned_spark``)."""
-        if not dv_names and not keep_keys:
-            return self._project_logical(
-                self._read_files(spark, meta, files), meta
-            )
-        self._base2rel(files)
-        keyed = self._read_files(spark, meta, files, keyed=True)
-        if dv_names:
-            dv = spark.read.parquet(
-                *[os.path.join(self.path, n) for n in dv_names]
-            ).select(F.col("file").alias("_dvf"), F.col("pos").alias("_dvp"))
-            keyed = keyed.join(
-                dv,
-                (F.col("_f") == F.col("_dvf")) & (F.col("_p") == F.col("_dvp")),
-                "left_anti",
-            )
-        keyed = self._project_logical(keyed, meta)
-        return keyed if keep_keys else keyed.drop("_f", "_p")
+    # ---- the file-skipping planner ----
+    #
+    # Every route that asks "may this file hold rows matching the
+    # predicate?" — pruned reads, the SQL connector's pushFilters, DML
+    # and merge candidate selection, optimize's partition scope and the
+    # OCC rebase check — goes through ONE predicate form (``_probe``:
+    # range / in / null, keyed by LOGICAL column) and ONE keep-test,
+    # with a driver twin (``_act_keep``) and a Spark twin
+    # (``_keep_column``) that agree file for file.
 
-    # Engage the Spark-side DML planner when the newest complete
+    @staticmethod
+    def _phys_probes(probes: dict, meta: dict | None) -> list[tuple]:
+        """``{logical column: [probe, ...]}`` -> [(physical column,
+        probe)]: zone maps, null counts and bloom sidecars all key on
+        PHYSICAL names (column mapping)."""
+        mapping = (meta or {}).get("mapping") or {}
+        return [(mapping.get(c, c), p) for c, ps in probes.items() for p in ps]
+
+    def _act_keep(self, act: dict, probes: list[tuple]) -> bool:
+        """THE driver-side keep-test: may the file behind add action
+        ``act`` hold a row matching EVERY (physical column, probe)?
+
+        - an EMPTY file (rows == 0 — Spark's writer emits one per task
+          that received no rows) holds nothing; it has no footer
+          stats, so without this rule it would read as "unknown —
+          keep" and veto every rebase;
+        - null probes read the committed per-file null COUNTS: 0 nulls
+          cannot satisfy IS NULL, nulls == rows cannot satisfy IS NOT
+          NULL — the only metadata that prunes all-null columns and
+          hive-null partitions;
+        - range / in probes read the zone ([min, max] for numerics,
+          ``{lo, hi, lo_exact, hi_exact}`` for strings; partition
+          values are exact singleton zones). A TRUNCATED string hi is
+          a prefix, an under-estimate of the real max, so it never
+          proves ``max < lo``; ``min > hi`` is always sound (a prefix
+          of the min is still a lower bound). An IN-list keeps the file
+          when any value does;
+        - equality and IN probes then consult the file's bloom sidecar
+          (``_bloom_keep``).
+
+        Missing stats or counts, and a zone of another form than the
+        probe, prove nothing: the file is kept (safe side)."""
+        if act.get("rows") == 0:
+            return False
+        for col, p in probes:
+            if p[0] == "null":
+                n = (act.get("nulls") or {}).get(col)
+                if n is not None and n == (0 if p[1] else act.get("rows")):
+                    return False
+                continue
+            st = (act.get("stats") or {}).get(col)
+            if st is None:
+                continue
+            if isinstance(st, dict):
+                mn, mx, hi_ok = st["lo"], st["hi"], st.get("hi_exact", True)
+            else:
+                (mn, mx), hi_ok = st, True
+            bounds = [(v, v) for v in p[1]] if p[0] == "in" else [p[1:]]
+            try:
+                if not any(
+                    (lo is None or not (hi_ok and mx < lo))
+                    and (hi is None or not mn > hi)
+                    for lo, hi in bounds
+                ):
+                    return False
+            except TypeError:
+                pass  # a zone of another form than the probe: keep
+        return self._bloom_keep(act["add"], probes)
+
+    @staticmethod
+    def _keep_column(probes: list[tuple]):
+        """THE Spark keep-Column over a ``_live_frames`` add row
+        (path, rows, v, payload): ``_act_keep``'s rows / null-count /
+        zone rules as one distributed filter (the bloom consult runs
+        driver-side on the collected survivors). A JSON lookup that
+        finds nothing — missing stats or counts, a zone of another
+        form — yields NULL, which folds to keep. Integer bounds compare
+        as DECIMAL(38,12) so int64 zones stay exact; floats as double.
+        None when a physical name is not expressible as a quoted JSON
+        path (the caller falls back to the driver fold)."""
+
+        def num(v):
+            return "double" if isinstance(v, float) else "decimal(38,12)"
+
+        skip = F.col("rows") == 0
+        for col, p in probes:
+            if "'" in col or "\\" in col:
+                return None
+            if p[0] == "null":
+                n = F.get_json_object("payload", f"$['nulls']['{col}']")
+                skip = skip | (
+                    n.cast("long") == (F.lit(0) if p[1] else F.col("rows"))
+                )
+                continue
+
+            def j(suffix: str = "", col=col):
+                return F.get_json_object(
+                    "payload", f"$['stats']['{col}']{suffix}"
+                )
+
+            bounds = [(v, v) for v in p[1]] if p[0] == "in" else [p[1:]]
+            # skip iff the zone exists and rules out every bound
+            s = j().isNotNull()
+            for lo, hi in bounds:
+                out = F.lit(False)
+                if isinstance(lo, str):
+                    exact = F.coalesce(j("['hi_exact']"), F.lit("true"))
+                    out = (exact == "true") & (j("['hi']") < F.lit(lo))
+                elif lo is not None:
+                    t = num(lo)
+                    out = j("[1]").cast(t) < F.lit(lo).cast(t)
+                if isinstance(hi, str):
+                    out = out | (j("['lo']") > F.lit(hi))
+                elif hi is not None:
+                    t = num(hi)
+                    out = out | (j("[0]").cast(t) > F.lit(hi).cast(t))
+                s = s & F.coalesce(out, F.lit(False))
+            skip = skip | s
+        return ~F.coalesce(skip, F.lit(False))
+
+    def _disjoint(self, probes: dict, meta: dict | None):
+        """The OCC rebase check of a transaction that read exactly the
+        files ``probes`` keep: an interleaved appended file is disjoint
+        iff the keep-test drops it (see ``_commit_snapshot_dependent``).
+        None — never rebase — without probes: the transaction read the
+        whole table, so any concurrent row could change its result."""
+        phys = self._phys_probes(probes, meta)
+        return (lambda act: not self._act_keep(act, phys)) if phys else None
+
+    # Engage the Spark-side planner when the newest complete
     # checkpoint holds at least this many rows (≈ live files): below
     # it the driver fold is both faster and already log-sized; above
     # it materializing every add action into Python dicts is the
@@ -2293,120 +2364,63 @@ class TxTable:
                     return 0
         return 0
 
-    def _dml_snapshot(self, spark: SparkSession, upto: int | None = None):
-        """The Spark-side snapshot context for DML planning, or None
-        when the table is below ``DML_SPARK_PLAN_THRESHOLD`` (the
-        driver fold is both faster and already log-sized there).
-        Returns (meta, scan, select): ``scan(files, keep_keys)`` reads
-        with tombstones applied through ``_scan_live``;
-        ``select(prune_column, lo, hi, partitions)`` plans candidate
-        files by filtering the columnar checkpoint's add rows
-        (``_zone_keep_cond``) and collecting only the survivors —
-        O(selected) driver state — returning (candidates, n_live), or
-        None for an unquotable physical name (caller refolds)."""
-        if upto is None:
-            upto = self.latest_version()
-        if self._ckpt_live_rows(upto) < self.DML_SPARK_PLAN_THRESHOLD:
-            return None
-        adds, dv_names, meta = self._live_frames(spark, upto)
-        mapping = (meta or {}).get("mapping") or {}
+    def _planner(
+        self, spark: SparkSession | None = None, version: int | None = None
+    ):
+        """THE file-skipping planner, resolved once for one snapshot:
+        (version, meta, plan, scan). ``plan(probes)`` returns (kept
+        files, total live files) for ``{logical column: [probe, ...]}``
+        (every probe must hold; no probes keeps every file);
+        ``scan(files, keep_keys=False)`` reads files of that snapshot
+        with tombstones applied (``keep_keys`` leaves the ``_f``/``_p``
+        provenance columns). The version is resolved exactly once, so
+        candidates, meta, scan and the caller's commit base agree.
+
+        Route: with a session, on the LATEST snapshot, and when its
+        checkpoint holds at least ``DML_SPARK_PLAN_THRESHOLD`` rows,
+        plan filters the columnar checkpoint's add rows
+        (``_live_frames``) with ``_keep_column`` and collects only the
+        survivors — driver state O(selected files), the checkpoint is
+        never folded — then consults bloom sidecars on that list.
+        Otherwise, and for a physical name ``_keep_column`` cannot
+        quote, the driver fold applies ``_act_keep`` to every live add.
+        Both routes keep the same files."""
+        latest = self.latest_version()
+        version = latest if version is None else version
+        frames = None
+        if (
+            spark is not None
+            and version == latest
+            and self._ckpt_live_rows(version) >= self.DML_SPARK_PLAN_THRESHOLD
+        ):
+            frames, dv_names, meta = self._live_frames(spark, version)
+        else:
+            meta = self._fold_state(version)[3]
+
+        def plan(probes: dict) -> tuple[list[str], int]:
+            phys = self._phys_probes(probes, meta)
+            cond = None
+            if frames is not None:
+                cond = self._keep_column(phys) if phys else F.lit(True)
+            if cond is None:
+                adds = self._snapshot_adds(version)
+                keep = [
+                    n for n, a in adds.items()
+                    if not phys or self._act_keep(a, phys)
+                ]
+                return keep, len(adds)
+            rows = frames.filter(cond).select("path").collect()
+            keep = [
+                r["path"] for r in rows if self._bloom_keep(r["path"], phys)
+            ]
+            return keep, frames.count()
 
         def scan(files, keep_keys=False):
+            if frames is None:
+                return self._scan(spark, files, version, keep_keys)
             return self._scan_live(spark, files, dv_names, meta, keep_keys)
 
-        def select(prune_column=None, lo=None, hi=None, partitions=None):
-            conds = []
-            if prune_column is not None:
-                conds.append(
-                    self._zone_keep_cond(
-                        mapping.get(prune_column, prune_column),
-                        lo=_zone_probe_value(lo),
-                        hi=_zone_probe_value(hi),
-                    )
-                )
-            for col, vals in (partitions or {}).items():
-                norm = [_zone_probe_value(v) for v in vals if v is not None]
-                conds.append(
-                    self._zone_keep_cond(mapping.get(col, col), values=norm)
-                )
-            if any(c is None for c in conds):
-                return None
-            n_live = adds.count()
-            cand_df = adds
-            for c in conds:
-                cand_df = cand_df.filter(c)
-            paths = [r["path"] for r in cand_df.select("path").collect()]
-            # r13: equality-probe DML consults bloom sidecars over the
-            # already-collected O(selected) candidate list
-            if prune_column is not None and lo is not None and lo == hi:
-                phys = mapping.get(prune_column, prune_column)
-                paths = [
-                    n for n in paths if self._bloom_keep(n, phys, [lo])
-                ]
-            return (paths, n_live)
-
-        return meta, scan, select
-
-    def _dml_context(
-        self,
-        spark: SparkSession,
-        prune_column: str | None = None,
-        lo=None,
-        hi=None,
-        partitions: dict | None = None,
-    ):
-        """Candidate selection + snapshot context for a DML mutation:
-        (candidates, n_live, meta, scan, base_version) where
-        ``scan(files, keep_keys=False)`` reads the files with
-        tombstones applied and ``base_version`` is THE version every
-        piece of the context was read at.
-
-        r13 (ADVICE r12 TOCTOU): the version is resolved exactly ONCE
-        here and threaded into ``_dml_snapshot`` → ``_ckpt_live_rows``
-        / ``_live_frames`` and the fold path alike; callers commit
-        against the RETURNED version instead of one they captured
-        earlier. A commit landing between the caller's capture and the
-        context build can no longer mix snapshot N+1 candidates with a
-        claimed base of N (which double-classified the racer as
-        interleaved and mis-attributed n_live/metrics).
-
-        r12 (VERDICT r11 #4): above ``DML_SPARK_PLAN_THRESHOLD``
-        checkpoint rows the candidates are planned THROUGH SPARK — the
-        zone/partition keep-predicates filter the columnar
-        checkpoint's add rows (``_live_frames``) and only the
-        surviving paths are collected, so driver state is O(selected
-        files) and ``_load_checkpoint`` is never called (a pruned
-        UPDATE/MERGE on a million-file table plans from a few hundred
-        paths). Small/young tables keep the driver fold. Both routes
-        return identical candidates: the Spark keep-conditions mirror
-        ``pruned_files``/``pruned_files_in`` exactness rules
-        (``_zone_keep_cond``), and an inexpressible physical name
-        falls back to the fold."""
-        base_version = self.latest_version()
-        snap = self._dml_snapshot(spark, upto=base_version)
-        if snap is not None:
-            meta, scan, select = snap
-            sel = select(prune_column, lo, hi, partitions)
-            if sel is not None:
-                candidates, n_live = sel
-                return candidates, n_live, meta, scan, base_version
-            # an unquotable physical name: fall through to the fold
-        meta = self._fold_state(base_version)[3]
-        candidates = (
-            self.pruned_files(prune_column, lo, hi, base_version)[0]
-            if prune_column is not None
-            else self._snapshot_files(base_version)
-        )
-        for col, vals in (partitions or {}).items():
-            norm = [_zone_probe_value(v) for v in vals if v is not None]
-            keep = set(self.pruned_files_in(col, norm, base_version)[0])
-            candidates = [f for f in candidates if f in keep]
-        n_live = len(self._snapshot_files(base_version))
-
-        def scan(files, keep_keys=False):
-            return self._scan(spark, files, base_version, keep_keys)
-
-        return candidates, n_live, meta, scan, base_version
+        return version, meta, plan, scan
 
     def delete_mor(
         self,
@@ -2440,9 +2454,9 @@ class TxTable:
         base_version = self.latest_version()
         if base_version < 0:
             raise ValueError(f"table {self.path} is empty")
-        candidates, _n_live, meta0, scan, base_version = self._dml_context(
-            spark, prune_column, lo, hi, partitions
-        )
+        probes = _dml_probes(prune_column, lo, hi, partitions)
+        base_version, meta0, plan, scan = self._planner(spark)
+        candidates, _n_live = plan(probes)
         if not candidates:
             return base_version, 0, 0
         # r12 (ADVICE r11): tombstone exactly `where AND col IN (…)`
@@ -2470,26 +2484,9 @@ class TxTable:
         # — and with pruning declared, appends outside the predicate's
         # ranges cannot hold rows this delete covers. Same contract as
         # the copy-on-write path.
-        mapping = (meta0 or {}).get("mapping") or {}
-        disjoint = None
-        if prune_column is not None or partitions:
-
-            def disjoint(act):
-                if prune_column is not None and not self._act_overlaps_bloom(
-                    act, mapping.get(prune_column, prune_column), lo=lo, hi=hi
-                ):
-                    return True
-                for col, vals in (partitions or {}).items():
-                    norm = [_zone_probe_value(v) for v in vals if v is not None]
-                    if not self._act_overlaps_bloom(
-                        act, mapping.get(col, col), values=norm
-                    ):
-                        return True
-                return False
-
         v = self._commit_snapshot_dependent(
             base_version, "deleteMor", actions,
-            disjoint=disjoint, base_meta=meta0,
+            disjoint=self._disjoint(probes, meta0), base_meta=meta0,
         )
         return v, len(covered), n_rows
 
@@ -2652,45 +2649,19 @@ class TxTable:
         lo=None,
         hi=None,
         version: int | None = None,
+        *,
+        values=None,
+        is_null: bool | None = None,
     ) -> tuple[list[str], int]:
-        """(surviving files, total live files) for a [lo, hi] range
-        predicate on ``column`` using the committed zone maps. A file
-        without stats for the column is always kept (safe side).
-
-        String zones carry exactness flags: a file is skipped on
-        ``max < lo`` only when its ``hi`` bound is exact (a truncated
-        hi is a prefix — an UNDER-estimate of the real max — so the
-        comparison proves nothing); ``min > hi`` skipping is always
-        sound because truncation produces a prefix, and a prefix of
-        the min is still ≤ the min (a valid lower bound)."""
-        meta = self._fold_state(version)[3]
-        if meta:  # zone maps key on PHYSICAL names (r9 column mapping)
-            column = (meta.get("mapping") or {}).get(column, column)
-        adds = self._snapshot_adds(version)
-        keep = []
-        for name, act in adds.items():
-            st = (act.get("stats") or {}).get(column)
-            if st is not None:
-                if isinstance(st, dict):
-                    mn, mx = st["lo"], st["hi"]
-                    hi_usable = st.get("hi_exact", True)
-                else:
-                    mn, mx = st
-                    hi_usable = True
-                if (lo is not None and hi_usable and mx < lo) or (
-                    hi is not None and mn > hi
-                ):
-                    continue
-            # r13: an equality probe (lo == hi) additionally consults
-            # the file's bloom sidecar
-            if (
-                lo is not None
-                and lo == hi
-                and not self._bloom_keep(name, column, [lo])
-            ):
-                continue
-            keep.append(name)
-        return keep, len(adds)
+        """(surviving files, total live files) for one predicate on
+        ``column`` — the range [lo, hi] (either bound may be None),
+        membership in ``values``, or ``IS NULL`` / ``IS NOT NULL``
+        (``is_null=True`` / ``False``) — from the committed zone maps,
+        null counts and bloom sidecars alone (``_act_keep`` holds the
+        rules). The three forms are mutually exclusive. Planned by the
+        driver fold; :meth:`read_pruned` plans through Spark at scale."""
+        probes = {column: [_probe(lo, hi, values, is_null)]}
+        return self._planner(version=version)[2](probes)
 
     def read_pruned(
         self,
@@ -2699,249 +2670,45 @@ class TxTable:
         lo=None,
         hi=None,
         version: int | None = None,
+        *,
+        values=None,
+        is_null: bool | None = None,
     ) -> DataFrame:
-        """File-skipping range read: scan ONLY files whose committed
-        [min, max] zone for ``column`` overlaps [lo, hi], then apply
-        the residual row filter — the Delta/Iceberg data-skipping
-        pattern, driven by the log instead of file listings. With data
-        clustered on the column (e.g. via z-order keys or ingestion
-        order), whole files drop out before any I/O."""
-        keep, total = self.pruned_files(column, lo, hi, version)
-        if not keep:
-            base = self.read(spark, version)
-            return base.filter(F.lit(False))
-        df = self._scan(spark, keep, version)
-        if lo is not None:
-            df = df.filter(F.col(column) >= lo)
-        if hi is not None:
-            df = df.filter(F.col(column) <= hi)
-        return df
-
-    def pruned_files_spark(
-        self, spark: SparkSession, column: str, lo=None, hi=None
-    ) -> tuple[list[str], int]:
-        """``pruned_files`` computed THROUGH Spark (r11, VERDICT r10
-        #6): the zone predicate is evaluated by the cluster over the
-        columnar checkpoint's add rows (``_live_frames``), and only the
-        SURVIVING paths are collected — driver state becomes
-        O(selected files), not O(live files). A narrow range on a
-        well-clustered million-file table then plans its read from a
-        driver list of a few hundred paths while the million-row zone
-        scan stays distributed. Latest snapshot only (time-travel
-        pruning keeps the driver fold — historical states are not in
-        the newest checkpoint). Semantics mirror ``pruned_files``
-        exactly: no-stats files kept, string-zone exactness flags
-        honored, mismatched zone/query types kept (safe side);
-        integer bounds compare as DECIMAL(38,12) so int64 zones stay
-        exact (floats compare as double)."""
-        keep, total, _dvs, meta = self._pruned_live_spark(
-            spark, column, lo, hi
-        )
-        # r13: equality probes additionally consult bloom sidecars —
-        # on the ALREADY-COLLECTED O(selected) list, so the consult
-        # reads at most len(keep) KB-sized sidecars driver-side
-        if lo is not None and lo == hi:
-            phys = ((meta or {}).get("mapping") or {}).get(column, column)
-            keep = [n for n in keep if self._bloom_keep(n, phys, [lo])]
-        return keep, total
-
-    @staticmethod
-    def _zone_keep_cond(col_phys: str, lo=None, hi=None, values=None):
-        """Spark Column over a ``_live_frames`` add row: TRUE when the
-        file's committed zone for ``col_phys`` may contain a value in
-        [lo, hi] / in ``values`` — the distributed twin of
-        ``pruned_files``/``pruned_files_in``'s keep test, sharing
-        their exactness rules (missing stats keep, a TRUNCATED string
-        hi bound never proves ``max < lo``, mismatched zone/query
-        forms keep — null comparisons fold to the safe side). Bounds
-        and values must already be ``_zone_probe_value``-normalized
-        PHYSICAL-column probes. Returns None when the physical name is
-        not expressible as a quoted JSON path (caller falls back to
-        the driver fold)."""
-        if "'" in col_phys or "\\" in col_phys:
-            return None
-        jpath = f"$['stats']['{col_phys}']"
-
-        def j(suffix: str = ""):
-            return F.get_json_object(F.col("payload"), jpath + suffix)
-
-        if values is not None:
-            # keep iff stats missing OR any value overlaps (mirrors
-            # pruned_files_in: an empty value list keeps ONLY the
-            # stat-less files)
-            ov_any = None
-            for v in values:
-                if isinstance(v, str):
-                    ov = (
-                        j("['lo']").isNotNull()
-                        & ~(
-                            (
-                                F.coalesce(j("['hi_exact']"), F.lit("true"))
-                                == "true"
-                            )
-                            & (j("['hi']") < F.lit(v))
-                        )
-                        & ~(j("['lo']") > F.lit(v))
-                    )
-                else:
-                    t = "double" if isinstance(v, float) else "decimal(38,12)"
-                    ov = ~(
-                        (j("[1]").cast(t) < F.lit(v).cast(t))
-                        | (j("[0]").cast(t) > F.lit(v).cast(t))
-                    )
-                ov_any = ov if ov_any is None else (ov_any | ov)
-            if ov_any is None:
-                ov_any = F.lit(False)
-            # a null overlap verdict (mismatched form) keeps the file
-            return ~(j().isNotNull() & ~F.coalesce(ov_any, F.lit(True)))
-        skips = []
-        # string zones (dict form, with exactness flags) vs str bounds
-        if isinstance(lo, str):
-            skips.append(
-                j("['lo']").isNotNull()
-                & (F.coalesce(j("['hi_exact']"), F.lit("true")) == "true")
-                & (j("['hi']") < F.lit(lo))
-            )
-        if isinstance(hi, str):
-            skips.append(j("['lo']").isNotNull() & (j("['lo']") > F.lit(hi)))
-        # numeric zones ([mn, mx] array form — always exact) vs bounds
-        if lo is not None and not isinstance(lo, str):
-            t = "double" if isinstance(lo, float) else "decimal(38,12)"
-            skips.append(j("[1]").cast(t) < F.lit(lo).cast(t))
-        if hi is not None and not isinstance(hi, str):
-            t = "double" if isinstance(hi, float) else "decimal(38,12)"
-            skips.append(j("[0]").cast(t) > F.lit(hi).cast(t))
-        cond = None
-        for s in skips:
-            cond = s if cond is None else (cond | s)
-        if cond is None:
-            return F.lit(True)
-        # null comparisons (missing stats / mismatched form) fold
-        # to "keep" — the same safe side as the driver loop
-        return ~F.coalesce(cond, F.lit(False))
-
-    def _pruned_live_spark(self, spark, column, lo, hi):
-        adds, dv_names, meta = self._live_frames(spark)
-        col_phys = ((meta or {}).get("mapping") or {}).get(column, column)
-        keep_cond = self._zone_keep_cond(
-            col_phys, lo=_zone_probe_value(lo), hi=_zone_probe_value(hi)
-        )
-        if keep_cond is None:
-            # not expressible as a quoted JSON path — driver fallback
-            keep, total = self.pruned_files(column, lo, hi)
-            return keep, total, dv_names, meta
-        total = adds.count()
-        keep = [
-            r["path"] for r in adds.filter(keep_cond).select("path").collect()
-        ]
-        return keep, total, dv_names, meta
-
-    def read_pruned_spark(
-        self, spark: SparkSession, column: str, lo=None, hi=None
-    ) -> DataFrame:
-        """File-skipping range read planned ENTIRELY from Spark-side
-        metadata (r11): zone pruning via :meth:`pruned_files_spark`,
-        reader schema and DV list from the same ``_live_frames`` pass
-        — the cold driver never materializes the add-set. Output is
-        identical to ``read_pruned`` (tombstones applied, residual
-        row filter, logical names)."""
-        keep, _total, dv_names, meta = self._pruned_live_spark(
-            spark, column, lo, hi
-        )
-        if not keep:
-            return self.read(spark).filter(F.lit(False))
-        if not dv_names:
-            df = self._read_files(spark, meta, keep)
-        else:
-            # anti-join against ALL live vectors: tombstones key on
-            # (basename, pos), and basenames are table-unique
-            # (_base2rel refuses legacy collisions), so vectors for
-            # unscanned files match nothing — correct, just a few
-            # extra KB-sized parquets read
-            self._base2rel(keep)
-            df = (
-                self._read_files(spark, meta, keep, keyed=True)
-                .join(
-                    spark.read.parquet(
-                        *[os.path.join(self.path, n) for n in dv_names]
-                    ).select(
-                        F.col("file").alias("_dvf"), F.col("pos").alias("_dvp")
-                    ),
-                    (F.col("_f") == F.col("_dvf"))
-                    & (F.col("_p") == F.col("_dvp")),
-                    "left_anti",
-                )
-                .drop("_f", "_p")
-            )
-        df = self._project_logical(df, meta)
-        if lo is not None:
-            df = df.filter(F.col(column) >= lo)
-        if hi is not None:
-            df = df.filter(F.col(column) <= hi)
-        return df
-
-    def pruned_files_in(
-        self, column: str, values, version: int | None = None
-    ) -> tuple[list[str], int]:
-        """Set-membership variant of :meth:`pruned_files`: keep a file
-        iff ANY of ``values`` can live inside its committed
-        [min, max] zone for ``column`` (r8 — the IVF-probe shape: a
-        query probing centroid lists {3, 7} reads only files whose
-        zone overlaps one of those ids). Exactness rules mirror the
-        range case: a value above a TRUNCATED hi bound cannot be ruled
-        out (the stored prefix under-estimates the real max), while
-        ``v < min`` rejection is always sound."""
-        meta = self._fold_state(version)[3]
-        if meta:  # zone maps key on PHYSICAL names (r9 column mapping)
-            column = (meta.get("mapping") or {}).get(column, column)
-        adds = self._snapshot_adds(version)
-        keep = []
-        for name, act in adds.items():
-            st = (act.get("stats") or {}).get(column)
-            if st is not None:
-                if isinstance(st, dict):
-                    mn, mx = st["lo"], st["hi"]
-                    hi_usable = st.get("hi_exact", True)
-                else:
-                    mn, mx = st
-                    hi_usable = True
-                if not any(
-                    v >= mn and (not hi_usable or v <= mx) for v in values
-                ):
-                    continue
-            # r13: bloom consult AFTER zone maps — skips the files a
-            # high-cardinality point probe's zones cannot eliminate
-            if not self._bloom_keep(name, column, values):
-                continue
-            keep.append(name)
-        return keep, len(adds)
-
-    def read_pruned_in(
-        self,
-        spark: SparkSession,
-        column: str,
-        values,
-        version: int | None = None,
-    ) -> DataFrame:
-        """File-skipping IN-list read: scan only files whose zone for
-        ``column`` can contain at least one of ``values``, then apply
-        the residual isin filter."""
-        keep, _total = self.pruned_files_in(column, values, version)
+        """File-skipping read: scan ONLY the files that may hold rows
+        matching the predicate (same forms as :meth:`pruned_files`),
+        then apply it as the residual row filter — the Delta/Iceberg
+        data-skipping pattern, driven by the log instead of file
+        listings. With data clustered on the column (z-order keys,
+        ingestion order), whole files drop out before any I/O. On a
+        large table's latest snapshot the planner filters the columnar
+        checkpoint through Spark, so the driver holds only the
+        surviving paths (see ``_planner``)."""
+        probe = _probe(lo, hi, values, is_null)
+        version, _meta, plan, scan = self._planner(spark, version)
+        keep, _total = plan({column: [probe]})
         if not keep:
             return self.read(spark, version).filter(F.lit(False))
-        df = self._scan(spark, keep, version)
-        return df.filter(F.col(column).isin(list(values)))
+        df, c = scan(keep), F.col(column)
+        if is_null is not None:
+            return df.filter(c.isNull() if is_null else c.isNotNull())
+        if values is not None:
+            return df.filter(c.isin(list(values)))
+        if lo is not None:
+            df = df.filter(c >= lo)
+        if hi is not None:
+            df = df.filter(c <= hi)
+        return df
 
     # ---- per-file bloom filters (r13, VERDICT r12 #5) ----
     def set_bloom_filter(self, columns, fpp: float = 0.01) -> int:
         """Declare per-file bloom filters for ``columns`` (Delta's
         bloom-filter-index idea): every subsequent data stage writes a
         KB-sized sidecar per file, and equality/IN point lookups
-        (``pruned_files_in``, ``pruned_files(lo == hi)``, and the
-        Spark-side candidate routes) skip files whose filter says
-        definitely-absent — the skip zone maps cannot give on
-        high-cardinality non-sort columns. Existing files get filters
-        via :meth:`build_blooms`; until then they are simply kept
+        (``pruned_files``/``read_pruned`` with ``values=`` or lo ==
+        hi, DML and merge candidates, the SQL connector) skip files
+        whose filter says definitely-absent — the skip zone maps cannot
+        give on high-cardinality non-sort columns. Existing files get
+        filters via :meth:`build_blooms`; until then they are simply kept
         (advisory structure: no sidecar, no skip, never wrongness).
         No writer feature is required for the same reason — an
         unaware writer's new files lack sidecars and stay unskippable
@@ -3077,13 +2844,20 @@ class TxTable:
                 return True
         return False if probed else None
 
-    def _bloom_keep(self, name: str, col_phys: str, values) -> bool:
-        """keep-the-file verdict composing with zone pruning: False
-        only on a definite bloom miss for every probe value."""
-        return (
-            self._bloom_probe(os.path.basename(name), col_phys, values)
-            is not False
-        )
+    def _bloom_keep(self, name: str, probes: list[tuple]) -> bool:
+        """The bloom part of the keep-test: False only when, for some
+        equality or IN probe, the file's sidecar says every value is
+        DEFINITELY absent. A range probe with lo == hi is an equality;
+        other probes, a missing sidecar or an uncovered column keep."""
+        for col, p in probes:
+            eq = p[1] if p[0] == "in" else None
+            if p[0] == "range" and p[1] is not None and p[1] == p[2]:
+                eq = [p[1]]
+            if eq is not None and (
+                self._bloom_probe(os.path.basename(name), col, eq) is False
+            ):
+                return False
+        return True
 
     # ---- per-file NDV (HLL) sketch sidecars (r14) ----
     def set_ndv_columns(self, columns) -> int:
@@ -3337,51 +3111,6 @@ class TxTable:
             }
             for c, pc in phys.items()
         }
-
-    def pruned_files_null(
-        self, column: str, want_null: bool, version: int | None = None
-    ) -> tuple[list[str], int]:
-        """(surviving files, total live files) for an ``IS NULL`` /
-        ``IS NOT NULL`` predicate on ``column``, from the committed
-        per-file null COUNTS (r11 — Delta's nullCount stat): a file
-        with 0 nulls cannot satisfy IS NULL; a file whose null count
-        equals its row count cannot satisfy IS NOT NULL. This is the
-        ONLY metadata that can prune all-null columns (they have no
-        min/max at all) and hive-null partitions (their count is
-        file-constant by construction). Files without a recorded count
-        (pre-r11 commits, a row group that didn't report) are always
-        kept — the safe side, same rule as missing zone maps."""
-        meta = self._fold_state(version)[3]
-        if meta:  # null counts key on PHYSICAL names, like zone maps
-            column = (meta.get("mapping") or {}).get(column, column)
-        adds = self._snapshot_adds(version)
-        keep = []
-        for name, act in adds.items():
-            n = (act.get("nulls") or {}).get(column)
-            if n is not None:
-                if want_null and n == 0:
-                    continue
-                rows = act.get("rows")
-                if not want_null and rows is not None and n == rows:
-                    continue
-            keep.append(name)
-        return keep, len(adds)
-
-    def read_pruned_null(
-        self,
-        spark: SparkSession,
-        column: str,
-        want_null: bool,
-        version: int | None = None,
-    ) -> DataFrame:
-        """File-skipping IS [NOT] NULL read: scan only files the null
-        counts cannot rule out, then apply the residual filter."""
-        keep, _total = self.pruned_files_null(column, want_null, version)
-        if not keep:
-            return self.read(spark, version).filter(F.lit(False))
-        df = self._scan(spark, keep, version)
-        c = F.col(column)
-        return df.filter(c.isNull() if want_null else c.isNotNull())
 
     def null_counts(self, version: int | None = None) -> dict[str, dict]:
         """Per-column total null counts across the live snapshot, from
@@ -4749,27 +4478,10 @@ class TxTable:
         like a widening append (``_widened_meta`` — type changes still
         refuse loudly). Without the flag, a new source column raises a
         clear error instead of an opaque AnalysisException."""
-        base_version = self.latest_version()
         cols = [key] + compare_cols
-        read_parts: list[tuple[str, list]] = []  # rebase predicate (r11)
-        read_range: tuple | None = None
+        probes: dict[str, list] = {}  # the read predicate (r11)
         new_cols: list[str] = []  # columns the merge adds (r12)
-        if base_version < 0:
-            meta0, scan, select = None, None, None
-        else:
-            # r12 (VERDICT r11 #4): big checkpoint-backed tables plan
-            # candidates and scans through the Spark-side metadata
-            # path — the driver never materializes the checkpoint
-            snap_ctx = self._dml_snapshot(spark, upto=base_version)
-            if snap_ctx is not None:
-                meta0, scan, select = snap_ctx
-            else:
-                meta0 = self._fold_state(base_version)[3]
-                select = None
-
-                def scan(files, keep_keys=False):
-                    return self._scan(spark, files, base_version, keep_keys)
-
+        base_version, meta0, plan, scan = self._planner(spark)
         pcols_now = self._pcols_logical(meta0)
         # merge rewrites whole files through _stage's auto partitionBy,
         # so the projection must carry every partition column or the
@@ -4827,46 +4539,20 @@ class TxTable:
                             f"table {self.path}, staged as {f.dataType}; "
                             "type changes need an explicit migration"
                         )
-            pdict: dict[str, list] = {}
             if prune_on_partitions:
+                # files in the NULL partition carry no zone entry for
+                # pc and are never skipped — safe either way
                 for pc in pcols_now:
-                    vals = [
-                        _zone_probe_value(r[0])
-                        for r in staged.select(pc).distinct().collect()
-                        if r[0] is not None
-                    ]
-                    # files in the NULL partition carry no zone entry
-                    # for pc and are never skipped — safe either way
-                    pdict[pc] = vals
-                    read_parts.append((pc, vals))
-            lo = hi = None
+                    rows = staged.select(pc).distinct().collect()
+                    probes[pc] = [_probe(values=[r[0] for r in rows])]
             if prune_on_key:
                 bounds = staged.select(
                     F.min(key).alias("lo"), F.max(key).alias("hi")
                 ).first()
-                lo, hi = bounds["lo"], bounds["hi"]
-                read_range = (lo, hi)
-            sel = (
-                select(
-                    key if prune_on_key else None, lo, hi, pdict or None
+                probes.setdefault(key, []).append(
+                    _probe(bounds["lo"], bounds["hi"])
                 )
-                if select is not None
-                else None
-            )
-            if sel is not None:
-                old_files = sel[0]
-            else:
-                old_files = self._snapshot_files(base_version)
-                for pc, vals in pdict.items():
-                    keep = set(
-                        self.pruned_files_in(pc, vals, base_version)[0]
-                    )
-                    old_files = [f for f in old_files if f in keep]
-                if prune_on_key:
-                    touched = set(
-                        self.pruned_files(key, lo, hi, base_version)[0]
-                    )
-                    old_files = [f for f in old_files if f in touched]
+            old_files = plan(probes)[0]
             if old_files:
                 snap = scan(old_files)
                 if new_cols:
@@ -4951,31 +4637,12 @@ class TxTable:
         # concurrent row could collide with a staged key (duplicate
         # keys after rewrite), so conflicts stay loud (Delta's
         # ConcurrentAppendException).
-        mapping = (meta0 or {}).get("mapping") or {}
-        disjoint = None
-        if read_parts or read_range is not None:
-
-            def disjoint(act):
-                for pc, vals in read_parts:
-                    if not self._act_overlaps(
-                        act, mapping.get(pc, pc), values=vals
-                    ):
-                        return True
-                if read_range is not None and not self._act_overlaps(
-                    act,
-                    mapping.get(key, key),
-                    lo=read_range[0],
-                    hi=read_range[1],
-                ):
-                    return True
-                return False
-
         return self._commit_snapshot_dependent(
             base_version,
             "merge",
             actions,
             info={"key": key, "compare_cols": list(compare_cols)},
-            disjoint=disjoint,
+            disjoint=self._disjoint(probes, meta0),
             base_meta=meta0,
         )
 
@@ -5048,9 +4715,8 @@ class TxTable:
         base_version = self.latest_version()
         if base_version < 0:
             raise ValueError(f"table {self.path} is empty")
-        candidates, _n_live, meta0, scan, base_version = self._dml_context(
-            spark
-        )
+        base_version, meta0, plan, scan = self._planner(spark)
+        candidates = plan({})[0]
         m_candidates = candidates  # matched-side classification scope
         if scope_partitions:
             clauses = []
@@ -5060,8 +4726,8 @@ class TxTable:
                     f"t.`{col}` IN ({', '.join(lits)})" if lits else "FALSE"
                 )
             on = f"({on}) AND " + " AND ".join(clauses)
-            m_candidates = self._dml_context(
-                spark, partitions=scope_partitions
+            m_candidates = plan(
+                _dml_probes(None, None, None, scope_partitions)
             )[0]
         bad_ident = sorted(
             set(
@@ -5417,9 +5083,9 @@ class TxTable:
         base_version = self.latest_version()
         if base_version < 0:
             raise ValueError(f"table {self.path} is empty")
-        candidates, n_live, meta0, scan, base_version = self._dml_context(
-            spark, prune_column, lo, hi, partitions
-        )
+        probes = _dml_probes(prune_column, lo, hi, partitions)
+        base_version, meta0, plan, scan = self._planner(spark)
+        candidates, n_live = plan(probes)
         if not candidates:
             return base_version, 0, n_live
         # r12 (ADVICE r11): row-level partitions enforcement — the
@@ -5470,29 +5136,12 @@ class TxTable:
         # a row this delete would have removed, so the commit rebases
         # instead of raising (see _commit_snapshot_dependent). An
         # unbounded predicate read the whole table: conflicts stay.
-        mapping = (meta0 or {}).get("mapping") or {}
-        disjoint = None
-        if prune_column is not None or partitions:
-
-            def disjoint(act):
-                if prune_column is not None and not self._act_overlaps_bloom(
-                    act, mapping.get(prune_column, prune_column), lo=lo, hi=hi
-                ):
-                    return True
-                for col, vals in (partitions or {}).items():
-                    norm = [_zone_probe_value(v) for v in vals if v is not None]
-                    if not self._act_overlaps_bloom(
-                        act, mapping.get(col, col), values=norm
-                    ):
-                        return True
-                return False
-
         v = self._commit_snapshot_dependent(
             base_version,
             "delete",
             actions,
             info={"predicate": where},
-            disjoint=disjoint,
+            disjoint=self._disjoint(probes, meta0),
             base_meta=meta0,
         )
         return v, len(hits), n_live - len(hits)
@@ -5545,9 +5194,9 @@ class TxTable:
         base_version = self.latest_version()
         if base_version < 0:
             raise ValueError(f"table {self.path} is empty")
-        candidates, _n_live, meta0, scan, base_version = self._dml_context(
-            spark, prune_column, lo, hi, partitions
-        )
+        probes = _dml_probes(prune_column, lo, hi, partitions)
+        base_version, meta0, plan, scan = self._planner(spark)
+        candidates, _n_live = plan(probes)
         if not candidates:
             return base_version, 0, 0
         # r12 (ADVICE r11): enforce the partitions option at ROW
@@ -5617,29 +5266,12 @@ class TxTable:
                 {"cdc": n}
                 for n in self._stage(cdc_df, pcols=None, meta=meta0)
             ]
-        mapping = (meta0 or {}).get("mapping") or {}
-        disjoint = None
-        if prune_column is not None or partitions:
-
-            def disjoint(act):
-                if prune_column is not None and not self._act_overlaps_bloom(
-                    act, mapping.get(prune_column, prune_column), lo=lo, hi=hi
-                ):
-                    return True
-                for col, vals in (partitions or {}).items():
-                    norm = [_zone_probe_value(v) for v in vals if v is not None]
-                    if not self._act_overlaps_bloom(
-                        act, mapping.get(col, col), values=norm
-                    ):
-                        return True
-                return False
-
         v = self._commit_snapshot_dependent(
             base_version,
             "update",
             actions,
             info={"predicate": where, "set": dict(set_exprs)},
-            disjoint=disjoint,
+            disjoint=self._disjoint(probes, meta0),
             base_meta=meta0,
         )
         return v, len(hits), n_rows
@@ -6646,10 +6278,8 @@ class TxTable:
             )
         removes = self._snapshot_files(base_version)
         if partitions:
-            for col, vals in partitions.items():
-                norm = [_zone_probe_value(v) for v in vals if v is not None]
-                keep = set(self.pruned_files_in(col, norm, base_version)[0])
-                removes = [f for f in removes if f in keep]
+            probes = _dml_probes(None, None, None, partitions)
+            removes = self._planner(spark, base_version)[2](probes)[0]
         if small_files_below is not None:
             adds_map = self._fold_state(base_version)[0]
             sized = []

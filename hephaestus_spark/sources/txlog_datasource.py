@@ -81,7 +81,11 @@ from pyspark.sql.datasource import (
 )
 from pyspark.sql.types import LongType, StringType, StructField, StructType
 
-from hephaestus_spark.sources.txlog import TxTable, _parse_partition_values
+from hephaestus_spark.sources.txlog import (
+    TxTable,
+    _parse_partition_values,
+    _probe,
+)
 
 if TYPE_CHECKING:  # pragma: no cover
     import pyarrow as pa
@@ -351,9 +355,10 @@ def _prefix_upper(prefix: str) -> "str | None":
 
 
 def _zone_prunable(filters: list[Filter]) -> dict[str, list]:
-    """Translate top-level-column filters into zone-map probes:
-    {column: [probe, ...]} where a probe is ("range", lo, hi),
-    ("in", values), or ("null", want_null). Unsupported filter shapes
+    """Translate top-level-column filters into the file-skipping
+    planner's probes (``txlog._probe``): {column: [probe, ...]} where a
+    probe is ("range", lo, hi), ("in", values), or ("null",
+    want_null), values normalised once here. Unsupported filter shapes
     are simply absent — they prune nothing and Spark evaluates them
     row-level anyway.
 
@@ -372,21 +377,20 @@ def _zone_prunable(filters: list[Filter]) -> dict[str, list]:
         if col == VERSION_COL:
             continue
         if isinstance(f, EqualTo):
-            probes.setdefault(col, []).append(("range", f.value, f.value))
+            p = _probe(f.value, f.value)
         elif isinstance(f, (GreaterThan, GreaterThanOrEqual)):
-            probes.setdefault(col, []).append(("range", f.value, None))
+            p = _probe(lo=f.value)
         elif isinstance(f, (LessThan, LessThanOrEqual)):
-            probes.setdefault(col, []).append(("range", None, f.value))
+            p = _probe(hi=f.value)
         elif isinstance(f, In):
-            probes.setdefault(col, []).append(("in", list(f.value)))
+            p = _probe(values=f.value)
         elif isinstance(f, StringStartsWith) and isinstance(f.value, str):
-            probes.setdefault(col, []).append(
-                ("range", f.value, _prefix_upper(f.value))
-            )
-        elif isinstance(f, IsNull):
-            probes.setdefault(col, []).append(("null", True))
-        elif isinstance(f, IsNotNull):
-            probes.setdefault(col, []).append(("null", False))
+            p = _probe(f.value, _prefix_upper(f.value))
+        elif isinstance(f, (IsNull, IsNotNull)):
+            p = _probe(is_null=isinstance(f, IsNull))
+        else:
+            continue
+        probes.setdefault(col, []).append(p)
     return probes
 
 
@@ -412,24 +416,10 @@ class TxLogBatchReader(DataSourceReader):
     def pushFilters(self, filters: list[Filter]) -> Iterable[Filter]:
         # Strict > / < are pruned with their inclusive zone bound —
         # sound (a keep-set can only widen), and the residual row
-        # filter restores strictness.
-        keep = {n for n, _v in self.table.live_files(self.version)}
-        for col, plist in _zone_prunable(list(filters)).items():
-            for p in plist:
-                if p[0] == "range":
-                    names, _ = self.table.pruned_files(
-                        col, p[1], p[2], self.version
-                    )
-                elif p[0] == "null":
-                    names, _ = self.table.pruned_files_null(
-                        col, p[1], self.version
-                    )
-                else:
-                    names, _ = self.table.pruned_files_in(
-                        col, p[1], self.version
-                    )
-                keep &= set(names)
-        self._keep = keep
+        # filter restores strictness. No session here: the planner
+        # takes its driver-fold route.
+        plan = self.table._planner(version=self.version)[2]
+        self._keep = set(plan(_zone_prunable(list(filters)))[0])
         # everything comes back as residual: zone maps prune FILES,
         # Spark still evaluates the predicate on the surviving rows
         return filters

@@ -204,30 +204,39 @@ def test_narrow_banding_recall_pin(spark):
     collision can only MERGE buckets (extra candidates, discarded by
     the exact verify), never split them — so every pair sharing a
     64-bit min-hash value at some table MUST appear among candidates,
-    on every path. Pins the recall direction of the narrowing."""
+    on every path. Pins the recall direction of the narrowing. A
+    single table (no earlier table to check on the first-match path)
+    is one more input."""
     rows = []
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
     for i in range(12):
         rows.append((i, base + f" tail{i % 3}"))  # 3 groups of near-dups
     docs = spark.createDataFrame(rows, "doc_id long, text string")
-    sig = minhash_signature_table(shingle_table(docs, n=3), n_tables=4).persist()
-    sig_pd = sig.toPandas().set_index("doc_id")
-    expected = set()
-    ids = sorted(sig_pd.index)
-    for x in ids:
-        for y in ids:
-            if x < y and any(
-                sig_pd.loc[x, f"mh{i}"] == sig_pd.loc[y, f"mh{i}"]
-                for i in range(4)
-            ):
-                expected.add((x, y))
-    assert expected  # the corpus really has same-band pairs
-    for kwargs in (
-        {},
-        {"bucket_cap": 10_000},
-        {"bucket_cap": 10_000, "pre_exclude_hot": True},
-    ):
-        got = minhash_candidate_pairs(sig, n_tables=4, **kwargs).toPandas()
-        got_pairs = set(zip(got.id_a, got.id_b))
-        assert expected <= got_pairs, (kwargs, expected - got_pairs)
-    sig.unpersist()
+    for n_tables in (4, 1):
+        sig = minhash_signature_table(
+            shingle_table(docs, n=3), n_tables=n_tables
+        ).persist()
+        sig_pd = sig.toPandas().set_index("doc_id")
+        expected = set()
+        ids = sorted(sig_pd.index)
+        for x in ids:
+            for y in ids:
+                if x < y and any(
+                    sig_pd.loc[x, f"mh{i}"] == sig_pd.loc[y, f"mh{i}"]
+                    for i in range(n_tables)
+                ):
+                    expected.add((x, y))
+        assert expected  # the corpus really has same-band pairs
+        for kwargs in (
+            {},
+            {"bucket_cap": 10_000},
+            {"bucket_cap": 10_000, "pre_exclude_hot": True},
+        ):
+            got = minhash_candidate_pairs(
+                sig, n_tables=n_tables, **kwargs
+            ).toPandas()
+            got_pairs = set(zip(got.id_a, got.id_b))
+            assert expected <= got_pairs, (
+                n_tables, kwargs, expected - got_pairs
+            )
+        sig.unpersist()

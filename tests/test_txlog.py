@@ -1095,12 +1095,13 @@ def test_spark_metadata_ignores_partial_multipart_checkpoint(spark, tmp_path):
 
 
 def test_spark_side_pruned_read_avoids_driver_fold(spark, tmp_path, monkeypatch):
-    """r11 (VERDICT r10 #6): a pruned range read planned entirely from
-    Spark-side metadata — with driver-side checkpoint materialization
-    monkeypatched to explode, pruned_files_spark/read_pruned_spark
-    still serve the exact driver-fold answers (zone skipping, string
-    zones, tombstone discounts, tail commits past the checkpoint),
-    and the driver collects ONLY the surviving paths."""
+    """A pruned range read at scale (threshold 0) is planned entirely
+    from Spark-side metadata — with driver-side checkpoint
+    materialization monkeypatched to explode, ``read_pruned`` and the
+    planner's Spark route still serve the exact driver-fold answers
+    (zone skipping, string zones, tombstone discounts, tail commits
+    past the checkpoint), and the driver collects ONLY the surviving
+    paths."""
     import hephaestus_spark.sources.txlog as tx
 
     t = TxTable(str(tmp_path / "t"))
@@ -1118,21 +1119,24 @@ def test_spark_side_pruned_read_avoids_driver_fold(spark, tmp_path, monkeypatch)
         r["id"] for r in t.read_pruned(spark, "id", 10, 29).collect()
     )
     assert 15 not in truth_rows and len(truth_keep) < truth_total
+    tk, ttot = t.pruned_files("name", "s0010", "s0029")
 
-    cold = TxTable(t.path)
-
-    def boom(self, version):
+    def boom(self, *args):
         raise AssertionError("driver-side checkpoint materialization")
 
+    monkeypatch.setattr(TxTable, "DML_SPARK_PLAN_THRESHOLD", 0)
     monkeypatch.setattr(TxTable, "_load_checkpoint", boom)
-    keep, total = cold.pruned_files_spark(spark, "id", 10, 29)
+    monkeypatch.setattr(TxTable, "_snapshot_adds", boom)
+    cold = TxTable(t.path)
+    keep, total = cold._planner(spark)[2]({"id": [tx._probe(10, 29)]})
     assert (sorted(keep), total) == (sorted(truth_keep), truth_total)
-    got = sorted(r["id"] for r in cold.read_pruned_spark(spark, "id", 10, 29).collect())
+    got = sorted(r["id"] for r in cold.read_pruned(spark, "id", 10, 29).collect())
     assert got == truth_rows
-    # string zones with exactness flags through the Spark path too
+    # string zones with exactness flags through the Spark route too
     cold2 = TxTable(t.path)
-    sk, stot = cold2.pruned_files_spark(spark, "name", "s0010", "s0029")
-    tk, ttot = t.pruned_files("name", "s0010", "s0029")
+    sk, stot = cold2._planner(spark)[2](
+        {"name": [tx._probe("s0010", "s0029")]}
+    )
     assert (sorted(sk), stot) == (sorted(tk), ttot)
 
 

@@ -68,7 +68,7 @@ def test_pruned_search_equals_full_and_skips_files(spark, index, corpus):
         F.col("vec_id").between(0, 2)
     )
     _probes, ids = index.probed_centroids(spark, queries, n_probe=2)
-    kept, total = index.codes.pruned_files_in("centroid_id", ids)
+    kept, total = index.codes.pruned_files("centroid_id", values=ids)
     assert total >= 5
     assert 0 < len(kept) < total, f"no pruning: {len(kept)}/{total}"
     pr = sorted(map(tuple, index.search(spark, queries, pruned=True).collect()))
@@ -111,6 +111,6 @@ def test_clustered_compact_restores_prune_rate(spark, index, corpus):
     # DISJOINT centroid zones — a single-list probe then reads ~1/n
     index.optimize(spark, retrain=False)
     one_list = [index.codes.read(spark).select(F.min("centroid_id")).first()[0]]
-    kept, total = index.codes.pruned_files_in("centroid_id", one_list)
+    kept, total = index.codes.pruned_files("centroid_id", values=one_list)
     assert total >= 5
     assert len(kept) <= max(2, total // 3), (len(kept), total)

@@ -46,11 +46,11 @@ def test_needle_lookup_touches_at_most_one_file(spark, tmp_path):
     needle = rows[len(rows) // 2][1]
     # zones are useless on the hash column: without blooms every file
     # survives the IN-prune
-    keep, total = t.pruned_files_in("h", [needle])
+    keep, total = t.pruned_files("h", values=[needle])
     assert total == total_files
     assert len(keep) <= 2, (len(keep), total_files)  # fpp head-room
     # the common case is exactly one file
-    got = t.read_pruned_in(spark, "h", [needle]).collect()
+    got = t.read_pruned(spark, "h", values=[needle]).collect()
     assert [r["h"] for r in got] == [needle]
     # equality-range form consults the bloom too
     keep_eq, _ = t.pruned_files(
@@ -58,16 +58,16 @@ def test_needle_lookup_touches_at_most_one_file(spark, tmp_path):
     )
     assert len(keep_eq) <= 2
     # absent needle: zero files survive, zero rows, still oracle-equal
-    keep0, _ = t.pruned_files_in("h", ["not-a-hash"])
+    keep0, _ = t.pruned_files("h", values=["not-a-hash"])
     assert keep0 == []
-    assert t.read_pruned_in(spark, "h", ["not-a-hash"]).count() == 0
+    assert t.read_pruned(spark, "h", values=["not-a-hash"]).count() == 0
 
 
 def test_bloom_prune_oracle_equal_many_probes(spark, tmp_path):
     t, rows = _hash_table(spark, str(tmp_path / "t"), files=8, rows_per=30)
     full = t.read(spark)
     probes = [rows[i][1] for i in (0, 7, 33, 100, 150)] + ["missing-x"]
-    pruned = t.read_pruned_in(spark, "h", probes)
+    pruned = t.read_pruned(spark, "h", values=probes)
     oracle = full.filter(F.col("h").isin(probes))
     assert (
         pruned.exceptAll(oracle).count() == 0
@@ -82,17 +82,18 @@ def test_bloom_no_false_negatives_exhaustive(spark, tmp_path):
     present = {h for _i, h in rows}
     got = {
         r["h"]
-        for r in t.read_pruned_in(spark, "h", list(present)).collect()
+        for r in t.read_pruned(spark, "h", values=list(present)).collect()
     }
     assert got == present | {"seed"} - {"seed"} or got >= present
 
 
 def test_bloom_declaration_validates(spark, tmp_path):
     t = TxTable(str(tmp_path / "t"))
+    # one file whose id zone [1, 3] holds the probed-but-absent key 2
     t.append(
         spark.createDataFrame(
-            [(1, 1.5, "a")], "id long, val double, name string"
-        )
+            [(1, 1.5, "a"), (3, 3.5, "c")], "id long, val double, name string"
+        ).coalesce(1)
     )
     with pytest.raises(ValueError, match="only exact"):
         t.set_bloom_filter(["val"])  # float equality probes refuse
@@ -104,13 +105,13 @@ def test_bloom_declaration_validates(spark, tmp_path):
     assert v == 1
     # pre-declaration files have no sidecars: kept (advisory, no skip)
     n_files = len(t._snapshot_files())
-    keep, total = t.pruned_files_in("id", [999])
+    keep, total = t.pruned_files("id", values=[2])
     assert keep and total == n_files
     # backfill writes them; the impossible probe now prunes to zero
     assert t.build_blooms(spark) == n_files
-    keep2, _ = t.pruned_files_in("id", [999])
+    keep2, _ = t.pruned_files("id", values=[2])
     assert keep2 == []
-    assert t.read_pruned_in(spark, "id", [1]).count() == 1
+    assert t.read_pruned(spark, "id", values=[1]).count() == 1
     # drop: metadata-only, subsequent stages stop writing sidecars
     t.drop_bloom_filter()
     t.append(spark.createDataFrame([(2, 2.5, "b")], "id long, val double, name string"))
@@ -173,7 +174,7 @@ def test_bloom_primitives_deterministic():
 
 def test_bloom_skipping_through_sql_connector(spark, tmp_path):
     """The native connector's pushFilters routes EqualTo/In through
-    pruned_files/pruned_files_in, so SQL point probes get bloom
+    the file-skipping planner, so SQL point probes get bloom
     skipping with no new machinery — pinned via the planned keep-set
     and an end-to-end SQL result."""
     from pyspark.sql.datasource import EqualTo

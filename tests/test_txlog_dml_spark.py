@@ -1,7 +1,7 @@
 """Spark-side DML planning (sources/txlog.py r12, VERDICT r11 #4):
 above DML_SPARK_PLAN_THRESHOLD, update/delete/delete_mor/merge select
 their candidate files by filtering the columnar checkpoint THROUGH
-Spark (`_live_frames` + `_zone_keep_cond`) and scan via `_scan_live` —
+Spark (`_live_frames` + `_keep_column`) and scan via `_scan_live` —
 the driver never materializes the checkpoint. Proven the same way
 test_spark_side_pruned_read_avoids_driver_fold proves it for reads:
 `_load_checkpoint` is monkeypatched to explode and every DML still
@@ -13,7 +13,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
-from hephaestus_spark.sources.txlog import TxTable
+from hephaestus_spark.sources.txlog import TxTable, _dml_probes
 
 
 def _build(spark, path, commits=12):
@@ -36,7 +36,7 @@ def _build(spark, path, commits=12):
     return t
 
 
-def _boom(self, version):
+def _boom(self, *args):
     raise AssertionError("driver-side checkpoint materialization")
 
 
@@ -104,21 +104,14 @@ def test_pruned_dml_never_folds_checkpoint(spark, tmp_path, monkeypatch):
     assert len(got) == 120 - 5 - 1 + 1  # -delete hits -mor hit +insert
 
 
-def test_spark_route_candidates_match_driver_route(spark, tmp_path):
-    """Both routes select IDENTICAL candidate sets for range, IN-list,
-    and unpruned selections (the Spark keep-conditions mirror
-    pruned_files/pruned_files_in exactness rules)."""
+def test_spark_route_candidates_match_driver_route(
+    spark, tmp_path, monkeypatch
+):
+    """Both planner routes select IDENTICAL candidate sets for range,
+    IN-list, and unpruned selections (``_keep_column`` mirrors
+    ``_act_keep``), and the Spark route never folds the snapshot."""
     path = str(tmp_path / "t")
     t = _build(spark, path)
-    snap = None
-    try:
-        orig = TxTable.DML_SPARK_PLAN_THRESHOLD
-        TxTable.DML_SPARK_PLAN_THRESHOLD = 0
-        snap = t._dml_snapshot(spark)
-    finally:
-        TxTable.DML_SPARK_PLAN_THRESHOLD = orig
-    assert snap is not None
-    _meta, _scan, select = snap
     cases = [
         dict(prune_column="id", lo=33, hi=57),
         dict(prune_column="id", lo=1000, hi=None),
@@ -127,28 +120,31 @@ def test_spark_route_candidates_match_driver_route(spark, tmp_path):
         dict(prune_column="id", lo=10, hi=19, partitions={"day": ["d1"]}),
         dict(),
     ]
-    for kw in cases:
-        got, n = select(
-            kw.get("prune_column"),
-            kw.get("lo"),
-            kw.get("hi"),
+    probes = [
+        _dml_probes(
+            kw.get("prune_column"), kw.get("lo"), kw.get("hi"),
             kw.get("partitions"),
         )
-        want = (
-            t.pruned_files(kw["prune_column"], kw.get("lo"), kw.get("hi"))[0]
-            if kw.get("prune_column")
-            else t._snapshot_files()
-        )
-        for col, vals in (kw.get("partitions") or {}).items():
-            keep = set(t.pruned_files_in(col, vals)[0])
-            want = [f for f in want if f in keep]
-        assert sorted(got) == sorted(want), kw
-        assert n == len(t._snapshot_files())
+        for kw in cases
+    ]
+    want = [t._planner()[2](p) for p in probes]
+    monkeypatch.setattr(TxTable, "DML_SPARK_PLAN_THRESHOLD", 0)
+    monkeypatch.setattr(TxTable, "_load_checkpoint", _boom)
+    monkeypatch.setattr(TxTable, "_snapshot_adds", _boom)
+    plan = TxTable(path)._planner(spark)[2]
+    n_live = len(t._snapshot_files())
+    for kw, p, (keep, total) in zip(cases, probes, want):
+        got, n = plan(p)
+        assert sorted(got) == sorted(keep), kw
+        assert n == total == n_live
 
 
-def test_small_tables_keep_the_driver_fold(spark, tmp_path):
-    """Below the threshold the fold route engages (no Spark jobs for a
-    5-file table's planning) — _dml_snapshot returns None."""
+def test_small_tables_keep_the_driver_fold(spark, tmp_path, monkeypatch):
+    """Below the threshold the fold route engages (no Spark jobs for an
+    11-file table's planning) — the planner never builds the Spark-side
+    frames."""
     t = _build(spark, str(tmp_path / "t"), commits=11)
     assert t._ckpt_live_rows() > 0  # a checkpoint exists...
-    assert t._dml_snapshot(spark) is None  # ...but it is tiny
+    monkeypatch.setattr(TxTable, "_live_frames", _boom)
+    keep, total = t._planner(spark)[2]({})  # ...but it is tiny
+    assert len(keep) == total == 11

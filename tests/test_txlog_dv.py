@@ -45,7 +45,7 @@ def test_delete_mor_tombstones_without_rewriting_files(spark, tmp_path):
         r["id"] for r in t.read_pruned(spark, "id", 0, 39).collect()
     ) == expect
     assert sorted(
-        r["id"] for r in t.read_pruned_in(spark, "id", list(range(40))).collect()
+        r["id"] for r in t.read_pruned(spark, "id", values=list(range(40))).collect()
     ) == [i for i in range(40) if not 10 <= i <= 19]
     # time travel still shows the pre-delete rows
     assert t.read(spark, version=0).count() == 40

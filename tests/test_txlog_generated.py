@@ -143,7 +143,7 @@ def test_generated_partition_column_fill(spark, tmp_path):
     t.append(_ev(spark, 3, base_day=20))  # no day column supplied
     parts = {p["day"] for p in t.partitions()}
     assert {"2024-01-20", "2024-01-21", "2024-01-22"} <= parts
-    keep, total = t.pruned_files_in("day", ["2024-01-20"])
+    keep, total = t.pruned_files("day", values=["2024-01-20"])
     assert len(keep) < total  # partition pruning works on filled rows
 
 

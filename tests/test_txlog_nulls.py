@@ -31,13 +31,13 @@ def test_null_pruning_skips_provably_clean_files(spark, tmp_path):
             [(5, None), (6, None)], "id long, val double"
         ).coalesce(1)
     )
-    keep_null, total = t.pruned_files_null("val", want_null=True)
+    keep_null, total = t.pruned_files("val", is_null=True)
     assert total == 3 and len(keep_null) == 2  # file A skipped
-    keep_notnull, _ = t.pruned_files_null("val", want_null=False)
+    keep_notnull, _ = t.pruned_files("val", is_null=False)
     assert len(keep_notnull) == 2  # file C (all-null) skipped
-    got = {r["id"] for r in t.read_pruned_null(spark, "val", True).collect()}
+    got = {r["id"] for r in t.read_pruned(spark, "val", is_null=True).collect()}
     assert got == {4, 5, 6}
-    got = {r["id"] for r in t.read_pruned_null(spark, "val", False).collect()}
+    got = {r["id"] for r in t.read_pruned(spark, "val", is_null=False).collect()}
     assert got == {1, 2, 3}
 
 
@@ -68,11 +68,11 @@ def test_null_partition_pruning(spark, tmp_path):
         "id long, day string, val double",
     )
     t.append(df, partition_by=["day"])
-    keep, total = t.pruned_files_null("day", want_null=True)
+    keep, total = t.pruned_files("day", is_null=True)
     assert len(keep) < total
-    got = {r["id"] for r in t.read_pruned_null(spark, "day", True).collect()}
+    got = {r["id"] for r in t.read_pruned(spark, "day", is_null=True).collect()}
     assert got == {2}
-    got = {r["id"] for r in t.read_pruned_null(spark, "day", False).collect()}
+    got = {r["id"] for r in t.read_pruned(spark, "day", is_null=False).collect()}
     assert got == {1, 3}
 
 
@@ -85,7 +85,7 @@ def test_null_pruning_respects_column_mapping(spark, tmp_path):
     )
     t.rename_column(spark, "val", "amount")
     got = {
-        r["id"] for r in t.read_pruned_null(spark, "amount", True).collect()
+        r["id"] for r in t.read_pruned(spark, "amount", is_null=True).collect()
     }
     assert got == {1}
     assert t.null_counts()["amount"]["nulls"] == 1
@@ -108,7 +108,7 @@ def test_pre_null_stat_files_always_kept(spark, tmp_path):
     os.remove(log)
     json.dump(entry, open(log, "w"))
     t2 = TxTable(t.path)
-    keep, total = t2.pruned_files_null("val", want_null=True)
+    keep, total = t2.pruned_files("val", is_null=True)
     assert keep and len(keep) == total  # unknown -> kept
     assert t2.null_counts().get("val") is None
 

@@ -92,7 +92,7 @@ def test_partition_pruning_is_metadata_only(spark, tmp_path):
     got = t.read_pruned(spark, "day", "2024-01-02", "2024-01-02").collect()
     assert {r["id"] for r in got} == {3}
     # IN-list pruning too
-    keep_in, _ = t.pruned_files_in("day", ["2024-01-01", "2024-01-03"])
+    keep_in, _ = t.pruned_files("day", values=["2024-01-01", "2024-01-03"])
     assert {k.split("/")[0] for k in keep_in} == {
         "day=2024-01-01",
         "day=2024-01-03",

@@ -325,6 +325,34 @@ def test_update_rebases_over_zone_overlapping_append_via_bloom(
     assert got[41] == -1.0  # racer rows intact
 
 
+def test_merge_rebases_over_zone_overlapping_append_via_bloom(
+    spark, tmp_path, monkeypatch
+):
+    """A single-key ``merge(prune_on_key=True)`` rebases over a racing
+    blind append whose zone overlaps the key but whose bloom sidecar
+    proves it absent — the same rebase check delete and update use."""
+    path = str(tmp_path / "t")
+    t = TxTable(path)
+    evens = _df(spark, [(i, f"r{i}", float(i)) for i in range(0, 200, 2)])
+    t.append(evens.repartitionByRange(4, F.col("id")).sortWithinPartitions("id"))
+    t.set_bloom_filter(["id"])
+    # racer file: odd ids, zone [41, 59] spans key 50 but holds no 50
+    racer_rows = [(i, f"x{i}", -1.0) for i in range(41, 60, 2)]
+    _race(
+        monkeypatch,
+        {"merge"},
+        lambda: TxTable(path).append(_df(spark, racer_rows).coalesce(1)),
+    )
+    staged = _df(spark, [(50, "new50", 5.5)])
+    t.merge(spark, staged, "id", ["name", "val"], prune_on_key=True)
+    monkeypatch.undo()
+    assert [h["op"] for h in t.history()][-2:] == ["append", "merge"]
+    got = {r["id"]: (r["name"], r["val"]) for r in t.read(spark).collect()}
+    assert got[50] == ("new50", 5.5)
+    assert got[41] == ("x41", -1.0) and got[48] == ("r48", 48.0)
+    assert len(got) == 100 + len(racer_rows)
+
+
 def test_update_conflicts_without_bloom_on_overlapping_zone(
     spark, tmp_path, monkeypatch
 ):

@@ -186,9 +186,7 @@ def main() -> None:
                 "delete",
                 actions,
                 info={"predicate": f"id = {key}"},
-                disjoint=lambda a: not t._act_overlaps(
-                    a, "id", lo=key, hi=key
-                ),
+                disjoint=t._disjoint({"id": [("range", key, key)]}, None),
             )
 
         retry(attempt)
