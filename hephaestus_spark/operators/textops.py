@@ -232,12 +232,23 @@ def minhash_signature_scan(
     )
 
 
+# Largest LSH bucket that emits candidate pairs. A bucket of b
+# near-identical docs costs b(b-1)/2 pairs, so buckets over the cap
+# are masked out of candidate generation and reported by
+# minhash_hot_buckets — the cut is never silent.
+LSH_BUCKET_CAP = 10_000
+
+# Exact-Jaccard threshold of jaccard_verify; candidate emission drops
+# the pairs whose length bound already falls under it.
+JACCARD_THRESHOLD = 0.8
+
+
 def jaccard_verify(
     joined: DataFrame,
     id_cols: list[str],
     sh_a: str = "sh_a",
     sh_b: str = "sh_b",
-    threshold: float = 0.8,
+    threshold: float = JACCARD_THRESHOLD,
     handles: list[DataFrame] | None = None,
 ) -> DataFrame:
     """Exact-Jaccard verify over candidate pairs carrying both shingle
@@ -267,31 +278,17 @@ def jaccard_verify(
     (bench.py clears between runs; oracle sweeps are one-shot
     processes) bounds the residency.
 
-    r16 size-ratio prefilter (guide §1.2 — don't compute what you
-    throw away): |A∩B| <= min(|A|,|B|), so jaccard <= min/(|A|+|B|-min)
-    — a pair whose SIZE bound is already under the threshold cannot
-    pass, and is dropped before its array_intersect is ever evaluated.
-    This is exactly the length filter of the AllPairs/PPJoin family,
-    and it is what defuses LSH's r=1 false-positive leak at scale: a
-    boilerplate shingle whose salted hash lands extremely low becomes
-    the min for THOUSANDS of docs, and that one bucket emits ~m^2/2
-    candidate pairs of mostly unrelated (differently-sized) docs —
-    measured at sf1, a 1629-doc bucket put a 4.3 s straggler (15x the
-    median task) in the verify stage; the prefilter reduces those
-    pairs to a size comparison. EXACT: when nc = min the two quotients
-    are the same double; when nc < min the real gap between bound and
-    jaccard is >> 1 ulp, so the double comparison never drops a
-    passing pair (both are single IEEE divides of exact integers)."""
+    Pairs failing the AllPairs length bound (``_size_ratio_ok``) are
+    dropped before their array_intersect is evaluated. Candidates from
+    ``minhash_candidate_pairs``/``minhash_probe_pairs`` already passed
+    that bound at ``JACCARD_THRESHOLD``, so a caller verifying them
+    at a LOWER threshold would miss pairs the emission dropped."""
     na = F.size(sh_a).cast("bigint")
     nb = F.size(sh_b).cast("bigint")
-    mn = F.least(na, nb)
-    pre = joined.filter(mn * 1.0 / (na + nb - mn) >= threshold)
+    pre = joined.filter(_size_ratio_ok(na, nb, threshold))
     nc = F.size(F.array_intersect(sh_a, sh_b)).cast("bigint")
     counts = pre.select(
-        *id_cols,
-        nc.alias("_nc"),
-        F.size(sh_a).cast("bigint").alias("_na"),
-        F.size(sh_b).cast("bigint").alias("_nb"),
+        *id_cols, nc.alias("_nc"), na.alias("_na"), nb.alias("_nb")
     ).persist()
     if handles is not None:
         handles.append(counts)
@@ -302,20 +299,15 @@ def jaccard_verify(
 
 
 def _band32(i: int) -> Column:
-    """32-bit band value of min-hash table ``i`` (r16, guide §2.3
-    narrower types): the candidate exchange is q33's ONLY shuffle, and
-    its band rows carried the full 8x64-bit signature. Banding on
-    ``hash(mh_i)`` (Murmur3, 32-bit, deterministic) halves the carried
-    signature and the bucket key. A 32-bit collision between two
-    DISTINCT mh values only MERGES buckets — the pair becomes a
-    candidate it wasn't before, and the exact-Jaccard verify stage
-    discards it — so every consumer's output is unchanged; the one
-    semantic channel is the bucket cap (a merged bucket could cross it
-    where the 64-bit buckets did not), which needs ~thousands of
-    colliding distinct values in one (t, v32) — see the cap notes in
-    minhash_candidate_pairs. All capped paths and the hot-bucket
-    logging use the SAME 32-bit banding, so cross-path equivalence is
-    exact, not statistical (tests/test_lsh_cap.py)."""
+    """32-bit band value of min-hash table ``i``: ``hash(mh_i)``
+    (Murmur3, deterministic). Banding on it instead of the 64-bit
+    min-hash halves the carried signature and the bucket key of the
+    band exchange. A 32-bit collision between two DISTINCT mh values
+    only MERGES buckets — the pair becomes a candidate it wasn't
+    before, and the exact-Jaccard verify discards it. The one semantic
+    channel is the bucket cap (a merged bucket could cross it where
+    the 64-bit buckets did not), which needs thousands of colliding
+    distinct values in one (t, v32) key."""
     return F.hash(F.col(f"mh{i}"))
 
 
@@ -331,328 +323,147 @@ def _size_ratio_ok(na: Column, nb: Column, ratio: float) -> Column:
     return mn * 1.0 / (na + nb - mn) >= ratio
 
 
-def _first_match_pairs(
-    sig: DataFrame,
-    n_tables: int,
-    id_col: str,
-    bucket_cap: int,
-    hot: list,
-    size_ratio_min: float | None = None,
+def _band_rows(
+    sig: DataFrame, n_tables: int, id_col: str, hot: DataFrame | None = None
 ) -> DataFrame:
-    """Capped LSH candidate pairs emitted from each pair's FIRST
-    surviving table only (r15) — the classic banding dedup, applied
-    where it is exact: with the hot (t, v) exclusion set known
-    driver-side, "bucket (k, sig[k]) survived" is decidable per pair
-    from the two signatures alone (survivors are exactly the non-hot
-    keys: the pre-exclusion guarantees every remaining bucket is
-    <= cap). A pair agreeing first at surviving table t is emitted
-    there and nowhere else, so the output is distinct BY CONSTRUCTION
-    and the global dropDuplicates shuffle — ~n_tables x the distinct
-    pair volume on duplicate-heavy corpora, since an exact-dup group
-    agrees on every table — disappears. Bucket arrays carry (id,
-    signature) structs instead of bare ids: bounded by the same cap,
-    repaid by the deleted shuffle.
+    """(_id, _sig, _n, t, v) band rows, one per doc and table: ``_sig``
+    is the doc's 32-bit band array (``_band32`` per table), ``_n`` its
+    shingle-set size, and ``v = _sig[t]`` the bucket key. Requires the
+    ``shingles`` column.
 
-    r16 narrowing (guide §2.3): the carried signature is the 32-bit
-    band array (see _band32) — the exchange moves 8x4 B per band row
-    instead of 8x8 B — and the earlier-table agreement check is a flat
-    codegen'd OR chain over the (n_tables - 1) possible earlier tables
-    instead of an exists() lambda over a per-row sequence() (HOF
-    lambdas evaluate interpreted, per element, outside whole-stage
-    codegen). Hot exclusion folds into the chain as a per-table
-    NOT IN literal list — the driver already holds the hot set.
-
-    ``size_ratio_min`` (r16, the AllPairs length filter pushed to the
-    earliest possible point): bucket members carry their shingle-set
-    SIZE (+4 B per band row), and a pair whose size-ratio bound is
-    under the caller's verify threshold is dropped AT EMISSION —
-    before it is ever materialized, probed against the signature
-    broadcasts, or intersected. This is what bounds LSH's r=1
-    false-positive leak: a boilerplate shingle whose salted hash lands
-    extremely low makes ONE bucket of thousands of unrelated docs
-    (measured at sf1: a 1629-doc bucket, 1.3M of the 1.74M generated
-    pairs, 64% of which fail the size bound). Cannot change any
-    thresholded output — see _size_ratio_ok."""
-    sig_arr = F.array(*[_band32(i) for i in range(n_tables)])
-    extra = (
-        [F.size("shingles").cast("int").alias("_n")]
-        if size_ratio_min is not None
-        else []
+    ``hot`` is a (t, v) relation of bucket keys to mask: each table
+    looks its band up in it with a broadcast hash join, a hit sets that
+    entry of ``_sig`` to NULL, and a NULL band emits no row. Masking
+    happens before any (t, v) grouping, so a hot bucket never builds
+    agg state."""
+    rows = sig.select(
+        F.col(id_col).alias("_id"),
+        F.array(*[_band32(i) for i in range(n_tables)]).alias("_sig"),
+        F.size("shingles").cast("int").alias("_n"),
     )
-    b = sig.select(
-        F.col(id_col).alias("_id"), sig_arr.alias("_sig"), *extra
-    ).select(
-        "_id",
-        "_sig",
-        *(["_n"] if extra else []),
-        F.explode(
-            F.array(*[F.lit(i) for i in range(n_tables)])
-        ).alias("t"),
-    ).select(
-        "_id",
-        "_sig",
-        *(["_n"] if extra else []),
-        "t",
-        F.element_at("_sig", F.col("t") + 1).alias("v"),
-    )
-    if hot:
-        hot_local = sig.sparkSession.createDataFrame(
-            [(r["t"], r["v"]) for r in hot], "t int, v int"
-        )
-        b = b.join(F.broadcast(hot_local), ["t", "v"], "left_anti")
-    member = (
-        F.struct("_id", "_sig", "_n") if extra else F.struct("_id", "_sig")
-    )
-    bl = (
-        b.groupBy("t", "v")
-        .agg(F.collect_list(member).alias("ms"))
-        .filter((F.size("ms") >= 2) & (F.size("ms") <= bucket_cap))
-    )
-    # triangular explode (r15): posexplode the bucket once, then pair
-    # each member only with the members AFTER it — m(m-1)/2 generated
-    # rows instead of m^2 filtered down. collect_list order is
-    # arbitrary, so order the ids explicitly at emission.
-    pairs = (
-        bl.select("t", "ms", F.posexplode("ms").alias("p", "x"))
-        .select(
-            "t",
-            "x",
-            F.explode(F.expr("slice(ms, p + 2, size(ms))")).alias("y"),
-        )
-        .select(
-            "t",
-            F.when(F.col("x._id") < F.col("y._id"), F.col("x"))
-            .otherwise(F.col("y"))
-            .alias("a"),
-            F.when(F.col("x._id") < F.col("y._id"), F.col("y"))
-            .otherwise(F.col("x"))
-            .alias("b"),
-        )
-    )
-    if size_ratio_min is not None:
-        pairs = pairs.filter(
-            _size_ratio_ok(F.col("a._n"), F.col("b._n"), size_ratio_min)
-        )
-    # "some EARLIER table already paired them in a surviving bucket":
-    # agreement at k < t whose (k, value) key is not hot-excluded.
-    # Flat OR chain, one statically-indexed term per possible earlier
-    # table — fully codegen'd (r16; was exists() over sequence()).
-    hot_by_t: dict[int, list[int]] = {}
-    for r in hot or ():
-        hot_by_t.setdefault(int(r["t"]), []).append(int(r["v"]))
-    terms = []
-    for k in range(n_tables - 1):
-        cond = (
-            f"(t > {k} AND element_at(a._sig, {k + 1})"
-            f" = element_at(b._sig, {k + 1})"
-        )
-        if hot_by_t.get(k):
-            vals = ", ".join(str(v) for v in hot_by_t[k])
-            cond += f" AND element_at(a._sig, {k + 1}) NOT IN ({vals})"
-        terms.append(cond + ")")
-    if terms:  # n_tables == 1 has no earlier table
-        pairs = pairs.filter(~F.expr(" OR ".join(terms)))
-    return pairs.select(
-        F.col("a._id").alias("id_a"), F.col("b._id").alias("id_b")
-    )
-
-
-def _minhash_buckets(
-    sig: DataFrame,
-    n_tables: int,
-    id_col: str,
-    narrow: bool = False,
-    with_size: bool = False,
-) -> DataFrame:
-    """(id, t, v[, _n]) band rows; ``narrow=True`` bands on the 32-bit
-    _band32 values (r16) — used by every capped candidate path and the
-    hot-bucket logging so the cap and the exclusion sets key
-    identically everywhere. ``with_size=True`` carries the shingle-set
-    size for the emission-time length filter."""
-    val = _band32 if narrow else (lambda i: F.col(f"mh{i}"))
-    extra = (
-        [F.size("shingles").cast("int").alias("_n")] if with_size else []
-    )
-    cols = [id_col] + (["_n"] if with_size else [])
-    return sig.select(
-        F.col(id_col),
-        *extra,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(i).alias("t"), val(i).alias("v"))
-                    for i in range(n_tables)
-                ]
+    if hot is not None:
+        for i in range(n_tables):
+            hit = hot.filter(F.col("t") == i).select(
+                F.col("v").alias("_hv"), F.lit(True).alias(f"_h{i}")
             )
-        ).alias("_b"),
-    ).select(*cols, F.col("_b.t").alias("t"), F.col("_b.v").alias("v"))
+            rows = rows.join(
+                F.broadcast(hit), F.col("_sig")[i] == F.col("_hv"), "left"
+            ).drop("_hv")
+        masked = [
+            F.when(F.col(f"_h{i}").isNull(), F.col("_sig")[i])
+            for i in range(n_tables)
+        ]
+        rows = rows.select("_id", F.array(*masked).alias("_sig"), "_n")
+    return rows.select(
+        "_id", "_sig", "_n", F.posexplode("_sig").alias("t", "v")
+    ).filter(F.col("v").isNotNull())
+
+
+def _emit(a: Column, b: Column, n_tables: int) -> Column:
+    """Emission rule for two band-row structs (_id, _sig, _n) meeting
+    in table ``t``: the pair passes the AllPairs length bound at
+    ``JACCARD_THRESHOLD`` and ``t`` is the FIRST table where the two
+    agree. Every pair is therefore emitted exactly once, with no
+    dedup stage. Each earlier-table term is null-safe: a band masked
+    to NULL (hot bucket) makes its term false, so a pair whose first
+    agreement is hot surfaces from its first surviving table."""
+    keep = _size_ratio_ok(a["_n"], b["_n"], JACCARD_THRESHOLD)
+    for k in range(n_tables - 1):
+        same = F.coalesce(a["_sig"][k] == b["_sig"][k], F.lit(False))
+        keep = keep & ~((F.col("t") > k) & same)
+    return keep
 
 
 def minhash_hot_buckets(
-    sig: DataFrame, n_tables: int = 16, id_col: str = "doc_id", cap: int = 10_000
+    sig: DataFrame, n_tables: int = 16, id_col: str = "doc_id"
 ) -> DataFrame:
-    """(t, v, bucket_rows) of LSH buckets larger than ``cap`` — the
-    buckets ``minhash_candidate_pairs`` drops when capped. One small
-    agg; count/log it so the cut is never silent (a hot bucket at
-    corpus scale usually means boilerplate/empty docs, and each pair
-    inside it costs quadratic verify work). Keys on the same 32-bit
-    banding the candidate paths use (r16), so the report names exactly
-    the buckets the cap drops."""
+    """(t, v, bucket_rows) of the LSH buckets over ``LSH_BUCKET_CAP`` —
+    the buckets ``minhash_candidate_pairs`` masks out. One small
+    map-side-combined count; log it so the cut is never silent (a hot
+    bucket at corpus scale usually means boilerplate/empty docs, and
+    each pair inside it costs quadratic verify work).
+
+    ``v`` is the 32-bit band hash ``hash(mh_t)`` (``_band32``) that the
+    candidate paths bucket on, NOT a min-hash value."""
     return (
-        _minhash_buckets(sig, n_tables, id_col, narrow=True)
+        _band_rows(sig, n_tables, id_col)
         .groupBy("t", "v")
         .agg(F.count("*").alias("bucket_rows"))
-        .filter(F.col("bucket_rows") > cap)
+        .filter(F.col("bucket_rows") > LSH_BUCKET_CAP)
     )
-
-
-# Max hot-(t,v) keys held driver-side by pre_exclude_hot before falling
-# back to the distributed broadcast anti-join (see rationale in-line).
-_HOT_DRIVER_LIMIT = 1000
 
 
 def minhash_candidate_pairs(
-    sig: DataFrame,
-    n_tables: int = 16,
-    id_col: str = "doc_id",
-    bucket_cap: int | None = None,
-    pre_exclude_hot: bool = False,
-    size_ratio_min: float | None = None,
+    sig: DataFrame, n_tables: int = 16, id_col: str = "doc_id"
 ) -> DataFrame:
-    """Distinct pairs sharing at least one min-hash table value.
+    """Distinct (id_a < id_b) pairs sharing a (table, 32-bit band)
+    bucket of at most ``LSH_BUCKET_CAP`` docs and passing the AllPairs
+    length bound at ``JACCARD_THRESHOLD``. ``sig`` carries ``id_col``,
+    ``shingles`` and ``mh0..mh{n_tables-1}``.
 
     The (table, value) banding IS the LSH trick: fan-out is bounded by
-    bucket size (docs agreeing on a whole-set min-hash), never
-    quadratic in a hot shingle's document frequency — the skew-safety
-    that a raw shingle inverted-index self-join lacks. A pair with true
-    Jaccard J escapes all tables with prob (1-J)^n_tables.
+    bucket size, never quadratic in a hot shingle's document
+    frequency. A pair with true Jaccard J escapes all tables with prob
+    (1-J)^n_tables.
 
-    ``bucket_cap`` (VERDICT r2 item 8) bounds the one remaining skew
-    channel: a bucket of b identical/near-identical docs still yields
-    b^2 candidate pairs. With a cap, buckets are materialized as id
-    arrays in ONE (t, v) aggregation and pairs are exploded from the
-    capped arrays — one shuffle, no self-join, no window (the r4
-    count-window variant cost 2.4x: the window was evaluated once per
-    self-join side). The cap is exactly what licenses the array form:
-    a surviving bucket is <= cap ids (80 KB at cap 10k). A hot bucket's
-    collect state is still O(bucket) transiently before the size filter
-    drops it (ObjectHashAggregate falls back to sort-based spill);
-    where the corpus may hold buckets of MILLIONS (degenerate
-    boilerplate at 100 TB), set ``pre_exclude_hot=True`` to first
-    exclude hot (t, v) keys via a map-side-combined count agg +
-    broadcast anti-join — same output, bounded agg state, one extra
-    cheap pass. Pairs inside a dropped bucket can still surface through
-    their other n_tables-1 buckets. Use ``minhash_hot_buckets`` with
-    the same cap to LOG what was dropped — never cap silently.
-
-    Without a cap the bucket arrays would be unbounded, so the no-cap
-    path keeps the streaming (t, v) self-join instead.
-
-    r16 (guide §2.3 narrower types): every path bands on the 32-bit
-    _band32 values — the band exchange (the only shuffle left in q33)
-    carries an int key and, on the first-match path, an 8x int32
-    signature instead of 8x int64. A 32-bit collision merges buckets,
-    which can only ADD candidate pairs (callers verify exactly, so
-    output is unchanged); the single semantic channel is the cap — a
-    merged bucket crossing it would drop pairs a 64-bit bucket kept,
-    which takes thousands of distinct colliding min-hash values in one
-    (t, v32) key (vanishingly unlikely, and deterministic for a fixed
-    corpus — the oracle posture is unchanged from the hash_shingles
-    collision argument above). All paths (capped, pre-excluded,
-    first-match, no-cap) use the same banding, so the cross-path
-    equivalence tests stay exact.
-
-    ``size_ratio_min`` (r16): when the caller will threshold an exact
-    Jaccard verify at this ratio, pairs whose shingle-set sizes already
-    violate the AllPairs length bound (see _size_ratio_ok) are dropped
-    at emission on EVERY path — they cannot appear in the verified
-    output, and a single low-hash boilerplate shingle otherwise turns
-    its bucket into m^2/2 mostly size-mismatched pairs. Requires the
-    ``shingles`` column. Applied identically on all paths so the
-    cross-path equivalence stays exact."""
-    buckets = _minhash_buckets(
-        sig, n_tables, id_col, narrow=True,
-        with_size=size_ratio_min is not None,
+    Plan: the hot set — buckets over the cap, structurally <=
+    rows*n_tables/cap keys and empty on a healthy corpus — is counted
+    first and enters as one broadcast (t, v) relation that masks its
+    bands (``_band_rows``); when it is empty no join is planned. Then
+    ONE (t, v) aggregation collects each bucket's (id, band array,
+    size) members, and a triangular explode pairs each member with
+    the members after it. ``_emit`` keeps a pair only at its first
+    agreeing table, so the output is distinct by construction and
+    needs no dedup shuffle. Pairs inside a hot bucket still surface
+    through their other tables; log the hot set with
+    ``minhash_hot_buckets``."""
+    hot = minhash_hot_buckets(sig, n_tables, id_col).select("t", "v").collect()
+    hot_rel = (
+        sig.sparkSession.createDataFrame(hot, "t int, v int") if hot else None
     )
-    if bucket_cap is not None:
-        if pre_exclude_hot:
-            # The hot set is structurally small: <= rows*n_tables/cap
-            # keys can exceed the cap, and in practice a healthy corpus
-            # has none. Materializing it driver-side (r7) lets the
-            # empty case — the norm — skip the anti-join stage
-            # entirely, and the small case use an inline relation;
-            # both cut ~0.3 s of fixed stage overhead per run at
-            # sf0.1. The driver budget is the k-means-centroid one:
-            # past _HOT_DRIVER_LIMIT keys (a pathologically templated
-            # corpus) the broadcast anti-join path engages instead of
-            # growing driver state. Output is identical on every path
-            # (tests/test_lsh_cap.py).
-            counts = (
-                buckets.groupBy("t", "v")
-                .agg(F.count("*").alias("n"))
-                .filter(F.col("n") > bucket_cap)
-                .select("t", "v")
-            )
-            hot_sample = counts.limit(_HOT_DRIVER_LIMIT + 1).collect()
-            if len(hot_sample) <= _HOT_DRIVER_LIMIT:
-                # r15 (VERDICT r14 #3): first-matching-band emission.
-                # With the hot set known driver-side, a pair's bucket
-                # SURVIVAL at any table is decidable from the two
-                # signatures alone, so each pair is emitted only from
-                # its first surviving table — exact-distinct by
-                # construction, which deletes the dropDuplicates
-                # shuffle (the old path shuffled ~n_tables x the
-                # distinct pair count: every duplicate group agrees on
-                # ALL tables). Output identical (test_lsh_cap.py).
-                return _first_match_pairs(
-                    sig, n_tables, id_col, bucket_cap, hot_sample,
-                    size_ratio_min=size_ratio_min,
-                )
-            buckets = buckets.join(
-                F.broadcast(counts), ["t", "v"], "left_anti"
-            )
-        member = (
-            F.struct(F.col(id_col).alias("_id"), F.col("_n"))
-            if size_ratio_min is not None
-            else F.col(id_col)
-        )
-        bl = (
-            buckets.groupBy("t", "v")
-            .agg(F.collect_list(member).alias("ids"))
-            .filter((F.size("ids") >= 2) & (F.size("ids") <= bucket_cap))
-        )
-        # triangular explode (r15): pair each member only with the
-        # members after it — m(m-1)/2 generated rows instead of m^2
-        tri = bl.select("ids", F.posexplode("ids").alias("p", "x")).select(
-            "x",
-            F.explode(F.expr("slice(ids, p + 2, size(ids))")).alias("y"),
-        )
-        if size_ratio_min is not None:
-            tri = tri.filter(
-                _size_ratio_ok(F.col("x._n"), F.col("y._n"), size_ratio_min)
-            ).select(F.col("x._id").alias("x"), F.col("y._id").alias("y"))
-        return (
-            tri.select(
-                F.least("x", "y").alias("id_a"),
-                F.greatest("x", "y").alias("id_b"),
-            )
-            .dropDuplicates(["id_a", "id_b"])
-        )
-    a, b = buckets.alias("a"), buckets.alias("b")
-    joined = a.join(
-        b,
-        (F.col("a.t") == F.col("b.t"))
-        & (F.col("a.v") == F.col("b.v"))
-        & (F.col(f"a.{id_col}") < F.col(f"b.{id_col}")),
+    buckets = (
+        _band_rows(sig, n_tables, id_col, hot_rel)
+        .groupBy("t", "v")
+        .agg(F.collect_list(F.struct("_id", "_sig", "_n")).alias("ms"))
+        .filter(F.size("ms") >= 2)
     )
-    if size_ratio_min is not None:
-        joined = joined.filter(
-            _size_ratio_ok(F.col("a._n"), F.col("b._n"), size_ratio_min)
-        )
+    pairs = buckets.select("t", "ms", F.posexplode("ms").alias("p", "x")).select(
+        "t", "x", F.explode(F.expr("slice(ms, p + 2, size(ms))")).alias("y")
+    )
+    return pairs.filter(_emit(F.col("x"), F.col("y"), n_tables)).select(
+        F.least("x._id", "y._id").alias("id_a"),
+        F.greatest("x._id", "y._id").alias("id_b"),
+    )
+
+
+def minhash_probe_pairs(
+    batch_sig: DataFrame,
+    corpus_sig: DataFrame,
+    n_tables: int = 16,
+    id_col: str = "doc_id",
+) -> DataFrame:
+    """One-sided LSH probe: distinct (batch_id, corpus_id) candidates
+    for an incoming batch against an existing corpus signature table,
+    under the same band rows and emission rule (``_emit``) as
+    ``minhash_candidate_pairs``.
+
+    The daily-ingest shape at 100 TB: the corpus signatures are a
+    MAINTAINED table (bucketed/partitioned on its band keys on disk),
+    so dedup of a new batch never re-shuffles the corpus — the batch's
+    band rows (|batch| x n_tables, typically MBs) BROADCAST into a map-
+    side join against the corpus bands. No corpus self-join, no
+    quadratic channel on the corpus side, and no cap: fan-out is
+    |batch bucket| x |corpus bucket| only where band values collide."""
+    b = _band_rows(batch_sig, n_tables, id_col).select(
+        "t", "v", F.struct("_id", "_sig", "_n").alias("b")
+    )
+    c = _band_rows(corpus_sig, n_tables, id_col).select(
+        "t", "v", F.struct("_id", "_sig", "_n").alias("c")
+    )
     return (
-        joined
-        .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
+        c.join(F.broadcast(b), ["t", "v"])
+        .filter(_emit(F.col("b"), F.col("c"), n_tables))
+        .select(F.col("b._id").alias("batch_id"), F.col("c._id").alias("corpus_id"))
     )
 
 
@@ -788,34 +599,4 @@ def url_domain(url_col: str) -> F.Column:
     so a DuckDB oracle can run the identical extraction."""
     return F.regexp_extract(
         F.lower(F.col(url_col)), r"^[a-z]+://(www\.)?([^/?]+)", 2
-    )
-
-
-def minhash_probe_pairs(
-    batch_sig: DataFrame,
-    corpus_sig: DataFrame,
-    n_tables: int = 16,
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """One-sided LSH probe: (batch_id, corpus_id) candidates for an
-    incoming batch against an existing corpus signature table.
-
-    The daily-ingest shape at 100 TB: the corpus signatures are a
-    MAINTAINED table (bucketed/partitioned on its band keys on disk),
-    so dedup of a new batch never re-shuffles the corpus — the batch's
-    band rows (|batch| x n_tables, typically MBs) BROADCAST into a map-
-    side join against the corpus bands. No corpus self-join, no
-    quadratic channel at all on the corpus side: fan-out is |batch
-    bucket| x |corpus bucket| only where band values collide.
-    """
-    b = _minhash_buckets(batch_sig, n_tables, id_col).withColumnRenamed(
-        id_col, "batch_id"
-    )
-    c = _minhash_buckets(corpus_sig, n_tables, id_col).withColumnRenamed(
-        id_col, "corpus_id"
-    )
-    return (
-        c.join(F.broadcast(b), ["t", "v"])
-        .select("batch_id", "corpus_id")
-        .dropDuplicates(["batch_id", "corpus_id"])
     )

@@ -105,28 +105,17 @@ def q33_near_dedup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     run-to-run. The jaccard ratio is int/int division — bit-identical
     across engines (single IEEE divide, no accumulation).
 
-    bucket_cap=10000 (r4) insures the worst case: a bucket of b
-    near-identical docs costs b^2 candidate pairs, so buckets beyond
-    the cap are excluded (minhash_hot_buckets logs what a cap drops —
-    never silent). pre_exclude_hot=True is the DEFAULT posture for
-    corpus-scale near-dedup (r6): at 100 TB a degenerate
-    boilerplate/empty-doc bucket of millions of rows is the norm, not
-    the edge, and excluding hot (t, v) keys with a map-side-combined
-    count BEFORE the collect_list agg bounds the transient agg state
-    that the post-filter alone would not
-    (operators/textops.py:minhash_candidate_pairs). r7: the hot set —
-    structurally <= rows*n_tables/cap keys, zero on a healthy corpus —
-    materializes driver-side under a 1000-key limit (the same
-    dimension-sized driver budget as the k-means centroids; beyond the
-    limit the broadcast anti-join path engages), so the empty case
-    skips the exclusion join entirely: q33 runs at its pre-exclusion-
-    free best while keeping the bounded-state default. Output is
-    IDENTICAL on every path — asserted by
-    tests/test_lsh_cap.py::test_minhash_cap_pre_exclude_hot_equivalent
-    and on a genuinely skewed corpus by
-    tests/test_scale_trend.py. The cap cannot fire on the driver's
-    test corpora (far fewer than 10k docs share any min-hash there),
-    so the oracle — which models no cap — is unchanged."""
+    Candidates come from ``minhash_candidate_pairs``: each pair is
+    emitted once, from its first shared bucket, and only if its
+    shingle-set sizes can still reach the 0.8 verify threshold (the
+    AllPairs length bound). Buckets over ``LSH_BUCKET_CAP`` (10k docs)
+    are masked out — at 100 TB a degenerate boilerplate/empty-doc
+    bucket of millions of rows is the norm, and each costs b^2 pairs —
+    and ``minhash_hot_buckets`` reports them, so the cut is never
+    silent. The hot set is empty on the oracle test corpora (far
+    fewer than 10k docs share any band there), so no masking join is
+    planned and the oracle, which models no cap, is unchanged
+    (tests/test_scale_trend.py exercises a genuinely skewed corpus)."""
     corpus = _near_corpus(spark, sf_dir)
     # r15: ZERO-shuffle signatures — doc_ids are unique per corpus
     # row, so shingle sets and all 8 min-hashes are scan-side array
@@ -139,15 +128,7 @@ def q33_near_dedup_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     sig = minhash_signature_scan(
         corpus, n=5, n_tables=8, hash_shingles=True
     ).persist()
-    # r16: size_ratio_min pushes the AllPairs length filter to pair
-    # emission — a low-hash boilerplate shingle makes one bucket of
-    # thousands of mostly size-mismatched docs (sf1: a 1629-doc bucket,
-    # 1.3M of 1.74M generated pairs), and those pairs cannot pass the
-    # 0.8 verify threshold, so they never leave the bucket stage.
-    cand = minhash_candidate_pairs(
-        sig, n_tables=8, bucket_cap=10_000, pre_exclude_hot=True,
-        size_ratio_min=0.8,
-    )
+    cand = minhash_candidate_pairs(sig, n_tables=8)
     sa = sig.select(F.col("doc_id").alias("id_a"), F.col("shingles").alias("sh_a"))
     sb = sig.select(F.col("doc_id").alias("id_b"), F.col("shingles").alias("sh_b"))
     # r15: jaccard_verify pins array_intersect to ONE evaluation per
@@ -482,8 +463,9 @@ def x_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-ingested verbatim, every 7th with a 4-token suffix, and every
     97th doc doubling as the held-out benchmark set (so its survivors
     flag as contaminated). Plan shape: each stage is the same bounded
-    plan its standalone query uses (hash-groupBy; banded equi-join +
-    verify with the bucket cap; per-round label propagation; broadcast
+    plan its standalone query uses (hash-groupBy; q33's candidate
+    path — first-match emission under the bucket cap — and exact
+    verify; per-round label propagation; broadcast
     semi-join for contamination — the corpus never shuffles for it;
     scan-side regex for PII; scan-side token math) with statuses
     assembled by left joins on doc_id — no new shuffle classes, so the
@@ -528,12 +510,12 @@ def x_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     sig = minhash_signature_table(
         shingle_hash_table(kept1, n=5), n_tables=8, prehashed=True
     ).persist()
-    cand = minhash_candidate_pairs(
-        sig, n_tables=8, bucket_cap=10_000, pre_exclude_hot=True,
-        size_ratio_min=0.8,  # r16: same emission-time length filter as q33
-    )
+    cand = minhash_candidate_pairs(sig, n_tables=8)
     sa = sig.select(F.col("doc_id").alias("id_a"), F.col("shingles").alias("sh_a"))
     sb = sig.select(F.col("doc_id").alias("id_b"), F.col("shingles").alias("sh_b"))
+    # Inline verify, not jaccard_verify: its persisted counts would nest
+    # in the cached lineage of every connected_components round below
+    # (measured +22 s exec at sf0.1, 4 cores).
     n_common = F.size(F.array_intersect("sh_a", "sh_b")).cast("bigint")
     jac = n_common * 1.0 / (
         F.size("sh_a").cast("bigint") + F.size("sh_b").cast("bigint") - n_common

@@ -7,7 +7,7 @@ array_join) so the cross-engine value hash is well-defined.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hephaestus_spark.functions.money import sum_money
@@ -253,19 +253,24 @@ def q20_array_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         f"array_repeat('{c}', CAST(_f{c} AS INT))" for c in _Q20_FLAGS
     ) + "))"
     n_lines = " + ".join(f"_c{i}" for i in _Q20_LINENUMBERS)
-    guard = (
-        "CASE WHEN _ood > 0 THEN CAST(raise_error(concat("
-        "'q20_array_agg: out-of-domain l_linenumber/flag values in order ',"
-        " CAST(l_orderkey AS STRING),"
-        " ' — the counts reconstruction assumes the TPC-H domains'"
-        ")) AS BIGINT) ELSE CAST({n} AS BIGINT) END"
-    ).format(n=n_lines)
+
+    def guarded(expr: str, typ: str) -> Column:
+        # every rebuilt output carries the guard, so a consumer that
+        # selects any single column cannot prune it away
+        return F.expr(
+            "CASE WHEN _ood > 0 THEN CAST(raise_error(concat("
+            "'q20_array_agg: out-of-domain l_linenumber/flag values in order ',"
+            " CAST(l_orderkey AS STRING),"
+            " ' — the counts reconstruction assumes the TPC-H domains'"
+            f")) AS {typ}) ELSE CAST({expr} AS {typ}) END"
+        )
+
     return li.groupBy("l_orderkey").agg(*ln_counts, *flag_counts, ood).select(
         "l_orderkey",
-        F.expr(f"array_join({lns}, ',')").alias("linenumbers"),
-        F.expr(guard).alias("n_lines"),
-        F.expr("_c3 > 0").alias("has_line3"),
-        F.expr(f"array_join({flags}, ',')").alias("flags_flat"),
+        guarded(f"array_join({lns}, ',')", "STRING").alias("linenumbers"),
+        guarded(n_lines, "BIGINT").alias("n_lines"),
+        guarded("_c3 > 0", "BOOLEAN").alias("has_line3"),
+        guarded(f"array_join({flags}, ',')", "STRING").alias("flags_flat"),
     )
 
 

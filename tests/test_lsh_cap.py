@@ -1,4 +1,5 @@
-"""Hot-bucket caps for LSH band joins (VERDICT r2 item 8).
+"""Hot-bucket caps for LSH band joins (VERDICT r2 item 8), and the one
+MinHash candidate path checked against a pure-Python reference.
 
 The skew scenario: b near-identical rows land in ONE bucket, making the
 band self-join produce ~b^2/2 candidate pairs. With the cap, buckets
@@ -9,22 +10,33 @@ worst bucket's contribution at cap^2 regardless of corpus skew.
 
 from __future__ import annotations
 
+from collections import Counter
+
 from pyspark.sql import functions as F
 
 from hephaestus_spark.operators import similarity as sim
+from hephaestus_spark.operators import textops
 from hephaestus_spark.operators.textops import (
+    JACCARD_THRESHOLD,
+    LSH_BUCKET_CAP,
     minhash_candidate_pairs,
     minhash_hot_buckets,
+    minhash_probe_pairs,
     minhash_signature_table,
     shingle_table,
 )
 
+_BOILERPLATE = "the quick brown fox jumps over the lazy dog again and again today"
 
-def _boilerplate_corpus(spark, n_hot=60):
+
+def _boilerplate_corpus(spark, n_hot=60, n_late=0):
     """n_hot identical docs (classic boilerplate skew: same shingles ->
-    same min-hashes -> one bucket per table) + 2 distinct near-dup docs."""
-    text = "the quick brown fox jumps over the lazy dog again and again today"
-    rows = [(i, text) for i in range(n_hot)]
+    same min-hashes -> one bucket per table) + 2 distinct near-dup docs
+    + ``n_late`` copies (ids 500..) of a boilerplate variant that shares
+    the boilerplate's min-hashes at tables 0-2 but not at table 3."""
+    variant = "near a quiet river bank at dawn " + _BOILERPLATE[10:]
+    rows = [(i, _BOILERPLATE) for i in range(n_hot)]
+    rows += [(500 + i, variant) for i in range(n_late)]
     rows += [
         (1000, "completely different words appear in this tiny document body"),
         (1001, "completely different words appear in this tiny document frame"),
@@ -32,18 +44,79 @@ def _boilerplate_corpus(spark, n_hot=60):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
-def test_minhash_cap_bounds_candidates(spark):
+def _near_dup_groups(spark):
+    """12 docs in 3 groups of near-duplicates (same shingle-set size)."""
+    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
+    rows = [(i, base + f" tail{i % 3}") for i in range(12)]
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+def _bands(sig, n_tables):
+    """{id: (shingle-set size, [hash(mh_i) per table])} collected from
+    a signature table — the 32-bit band values the candidate paths
+    bucket on."""
+    rows = sig.select(
+        "doc_id",
+        F.size("shingles").alias("n"),
+        *[F.hash(f"mh{i}").alias(f"b{i}") for i in range(n_tables)],
+    ).collect()
+    return {
+        r["doc_id"]: (r["n"], [r[f"b{i}"] for i in range(n_tables)])
+        for r in rows
+    }
+
+
+def _reference_pairs(left, right, n_tables, cap):
+    """Pure-Python candidate set: (x, y), x from ``left`` and y from
+    ``right`` (x < y when both are the same table), sharing some (t, v)
+    bucket of 2..cap docs and passing the AllPairs length bound at the
+    verify threshold. Bucket sizes count both sides."""
+    sizes = Counter(
+        (t, bands[t])
+        for _, bands in {**left, **right}.values()
+        for t in range(n_tables)
+    )
+
+    def length_ok(na, nb):
+        mn = min(na, nb)
+        return mn * 1.0 / (na + nb - mn) >= JACCARD_THRESHOLD
+
+    return {
+        (x, y)
+        for x, (nx, bx) in left.items()
+        for y, (ny, by) in right.items()
+        if (x < y if left is right else True)
+        and length_ok(nx, ny)
+        and any(
+            bx[t] == by[t] and 2 <= sizes[(t, bx[t])] <= cap
+            for t in range(n_tables)
+        )
+    }
+
+
+def _pairs_once(df, cols):
+    """Collected pairs as a set, asserting each is emitted exactly once
+    and that the plan has no dedup stage to hide double emission."""
+    plan = df._jdf.queryExecution().analyzed().toString()
+    assert "Deduplicate" not in plan, plan[:2000]
+    got = [tuple(r) for r in df.select(*cols).collect()]
+    assert len(got) == len(set(got)), "a pair was emitted twice"
+    return set(got)
+
+
+def test_minhash_cap_bounds_candidates(spark, monkeypatch):
     corpus = _boilerplate_corpus(spark, n_hot=60)
     sig = minhash_signature_table(shingle_table(corpus, n=3), n_tables=4).persist()
 
-    uncapped = minhash_candidate_pairs(sig, n_tables=4).count()
-    assert uncapped >= 60 * 59 // 2  # the quadratic bomb is real
+    below_cap = minhash_candidate_pairs(sig, n_tables=4).count()
+    assert below_cap >= 60 * 59 // 2  # the quadratic bomb is real
 
-    hot = minhash_hot_buckets(sig, n_tables=4, cap=10).toPandas()
+    monkeypatch.setattr(textops, "LSH_BUCKET_CAP", 10)
+    hot = minhash_hot_buckets(sig, n_tables=4).toPandas()
     assert len(hot) == 4  # one hot bucket per table
     assert (hot.bucket_rows == 60).all()
 
-    capped = minhash_candidate_pairs(sig, n_tables=4, bucket_cap=10)
+    capped = minhash_candidate_pairs(sig, n_tables=4)
     pairs = capped.toPandas()
     # the boilerplate block is capped away; the rare near-dup pair survives
     assert (1000, 1001) in set(zip(pairs.id_a, pairs.id_b))
@@ -51,37 +124,56 @@ def test_minhash_cap_bounds_candidates(spark):
     sig.unpersist()
 
 
-def test_minhash_cap_pre_exclude_hot_equivalent(spark):
-    """pre_exclude_hot=True (bounded agg state for pathological
-    buckets) must produce exactly the same pairs as the default
-    collect-then-filter path."""
-    corpus = _boilerplate_corpus(spark, n_hot=60)
-    sig = minhash_signature_table(shingle_table(corpus, n=3), n_tables=4).persist()
-    a = (
-        minhash_candidate_pairs(sig, n_tables=4, bucket_cap=10)
-        .toPandas().sort_values(["id_a", "id_b"]).reset_index(drop=True)
-    )
-    b = (
-        minhash_candidate_pairs(sig, n_tables=4, bucket_cap=10, pre_exclude_hot=True)
-        .toPandas().sort_values(["id_a", "id_b"]).reset_index(drop=True)
-    )
-    assert a.equals(b)
-    sig.unpersist()
+def test_candidate_pairs_match_reference(spark, monkeypatch):
+    """The one candidate path equals the pure-Python reference, each
+    pair emitted once: with no hot set, with a non-empty hot set (cap
+    10), and with a single table. Docs 500-502 agree with the
+    boilerplate at tables 0-2 (hot under cap 10) and only with each
+    other at table 3, so their pairs must surface from table 3."""
+    corpus = _boilerplate_corpus(spark, n_hot=60, n_late=3)
+    for n_tables, cap in ((4, 10_000), (4, 10), (1, 10_000)):
+        monkeypatch.setattr(textops, "LSH_BUCKET_CAP", cap)
+        sig = minhash_signature_table(
+            shingle_table(corpus, n=3), n_tables=n_tables
+        ).persist()
+        bands = _bands(sig, n_tables)
+        expected = _reference_pairs(bands, bands, n_tables, cap)
+        got = _pairs_once(
+            minhash_candidate_pairs(sig, n_tables=n_tables), ["id_a", "id_b"]
+        )
+        assert got == expected, (n_tables, cap, got ^ expected)
+        if cap == 10 and n_tables == 4:
+            assert expected == {(1000, 1001), (500, 501), (500, 502), (501, 502)}
+            assert all(bands[500][1][t] == bands[0][1][t] for t in range(3))
+        sig.unpersist()
 
 
-def test_minhash_cap_noop_below_threshold(spark):
-    corpus = _boilerplate_corpus(spark, n_hot=5)
-    sig = minhash_signature_table(shingle_table(corpus, n=3), n_tables=4).persist()
-    a = (
-        minhash_candidate_pairs(sig, n_tables=4)
-        .toPandas().sort_values(["id_a", "id_b"]).reset_index(drop=True)
+def test_probe_pairs_match_reference(spark):
+    """minhash_probe_pairs equals the same reference, one-sided: each
+    (batch, corpus) pair sharing a band and passing the length bound,
+    emitted once. Batch doc 200 extends a corpus doc by six tokens, so
+    it shares bands with it but fails the length bound."""
+    corpus_docs = _near_dup_groups(spark)
+    batch_docs = corpus_docs.filter(F.col("doc_id") % 4 == 0).select(
+        (F.col("doc_id") + 100).alias("doc_id"), "text"
+    ).union(
+        corpus_docs.filter(F.col("doc_id") == 1).select(
+            F.lit(200).cast("long").alias("doc_id"),
+            F.concat("text", F.lit(" one two three four five six")).alias("text"),
+        )
     )
-    b = (
-        minhash_candidate_pairs(sig, n_tables=4, bucket_cap=10_000)
-        .toPandas().sort_values(["id_a", "id_b"]).reset_index(drop=True)
+    corpus_sig = minhash_signature_table(shingle_table(corpus_docs, n=3), n_tables=4)
+    batch_sig = minhash_signature_table(shingle_table(batch_docs, n=3), n_tables=4)
+    batch, corpus = _bands(batch_sig, 4), _bands(corpus_sig, 4)
+    expected = _reference_pairs(batch, corpus, 4, LSH_BUCKET_CAP)
+    assert expected
+    assert any(a == b for a, b in zip(batch[200][1], corpus[1][1]))
+    assert not any(x == 200 for x, _ in expected)
+    got = _pairs_once(
+        minhash_probe_pairs(batch_sig, corpus_sig, n_tables=4),
+        ["batch_id", "corpus_id"],
     )
-    assert a.equals(b)  # cap above every bucket -> identical result
-    sig.unpersist()
+    assert got == expected, got ^ expected
 
 
 def _clustered_vectors(spark, n_hot=50):
@@ -120,15 +212,16 @@ def test_band_cap_noop_below_threshold(spark):
 
 
 def test_pre_exclude_skips_anti_join_when_no_hot_buckets(spark):
-    """r7: on a healthy corpus the hot set is empty, so the returned
-    plan must contain NO anti-join stage — the pre-exclusion cost is
-    one counting agg, not an extra join in the candidate path."""
+    """On a healthy corpus the hot set is empty, so the returned plan
+    must contain no masking join — the hot-set cost is one counting
+    agg, not an extra join in the candidate path."""
     import hephaestus_spark.queries  # noqa: F401 — registration
     from hephaestus_spark.registry import QUERIES
 
     df = QUERIES["q33_near_dedup_jaccard"](spark, "/root/testdata/sf0.001")
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "LeftAnti" not in plan, plan[:2000]
+    assert "LeftOuter" not in plan, plan[:2000]
 
 
 def test_minhash_signature_scan_equivalent(spark):
@@ -175,43 +268,14 @@ def test_minhash_signature_scan_equivalent(spark):
             ), (hash_shingles, d)
 
 
-def test_first_match_pairs_equivalent_under_synthetic_hot_set(spark):
-    """r15: first-matching-band emission with a NON-EMPTY hot set must
-    equal the broadcast anti-join path's output — a pair whose
-    earliest agreement is hot-excluded must still surface from its
-    first SURVIVING table."""
-    corpus = _boilerplate_corpus(spark, n_hot=60)
-    sig = minhash_signature_table(
-        shingle_table(corpus, n=3), n_tables=4
-    ).persist()
-    capped = minhash_candidate_pairs(
-        sig, n_tables=4, bucket_cap=10, pre_exclude_hot=True
-    ).toPandas()
-    baseline = minhash_candidate_pairs(
-        sig, n_tables=4, bucket_cap=10, pre_exclude_hot=False
-    ).toPandas()
-    assert set(zip(capped.id_a, capped.id_b)) == set(
-        zip(baseline.id_a, baseline.id_b)
-    )
-    # and the hot path emitted each pair exactly once (distinct by
-    # construction — no dedup stage to hide double emission)
-    assert len(capped) == len(set(zip(capped.id_a, capped.id_b)))
-    sig.unpersist()
-
-
 def test_narrow_banding_recall_pin(spark):
-    """r16: candidate banding keys on 32-bit hash(mh_i). A 32-bit
-    collision can only MERGE buckets (extra candidates, discarded by
-    the exact verify), never split them — so every pair sharing a
-    64-bit min-hash value at some table MUST appear among candidates,
-    on every path. Pins the recall direction of the narrowing. A
-    single table (no earlier table to check on the first-match path)
-    is one more input."""
-    rows = []
-    base = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    for i in range(12):
-        rows.append((i, base + f" tail{i % 3}"))  # 3 groups of near-dups
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    """Candidate banding keys on 32-bit hash(mh_i). A 32-bit collision
+    can only MERGE buckets (extra candidates, discarded by the exact
+    verify), never split them — so every pair sharing a 64-bit min-hash
+    value at some table MUST appear among candidates. Pins the recall
+    direction of the narrowing, with 4 tables and with a single table
+    (no earlier table to check)."""
+    docs = _near_dup_groups(spark)
     for n_tables in (4, 1):
         sig = minhash_signature_table(
             shingle_table(docs, n=3), n_tables=n_tables
@@ -227,16 +291,7 @@ def test_narrow_banding_recall_pin(spark):
                 ):
                     expected.add((x, y))
         assert expected  # the corpus really has same-band pairs
-        for kwargs in (
-            {},
-            {"bucket_cap": 10_000},
-            {"bucket_cap": 10_000, "pre_exclude_hot": True},
-        ):
-            got = minhash_candidate_pairs(
-                sig, n_tables=n_tables, **kwargs
-            ).toPandas()
-            got_pairs = set(zip(got.id_a, got.id_b))
-            assert expected <= got_pairs, (
-                n_tables, kwargs, expected - got_pairs
-            )
+        got = minhash_candidate_pairs(sig, n_tables=n_tables).toPandas()
+        got_pairs = set(zip(got.id_a, got.id_b))
+        assert expected <= got_pairs, (n_tables, expected - got_pairs)
         sig.unpersist()

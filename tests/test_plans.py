@@ -210,7 +210,7 @@ def test_q33_capped_candidates_have_no_window(spark, sf_dir):
 
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     sig = minhash_signature_table(shingle_table(d, n=5), n_tables=4)
-    cand = minhash_candidate_pairs(sig, n_tables=4, bucket_cap=100)
+    cand = minhash_candidate_pairs(sig, n_tables=4)
     import contextlib, io
 
     buf = io.StringIO()

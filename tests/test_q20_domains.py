@@ -67,7 +67,8 @@ def test_q20_counts_form_matches_collect_list(spark):
 def test_q20_out_of_domain_raises(spark, tmp_path):
     """r16 (VERDICT r15 #5): the counts reconstruction must FAIL LOUDLY
     on out-of-domain values instead of silently dropping them from the
-    rebuilt arrays — the 13th counter + raise_error guard."""
+    rebuilt arrays — the 13th counter + raise_error guard, on every
+    output column."""
     import pyspark.errors
 
     d = str(tmp_path)
@@ -83,9 +84,12 @@ def test_q20_out_of_domain_raises(spark, tmp_path):
     from hephaestus_spark.registry import QUERIES
 
     df = QUERIES["q20_array_agg"](spark, d)
-    with pytest.raises(Exception) as ei:
-        df.collect()
-    assert "out-of-domain" in str(ei.value)
+    # every rebuilt output carries the guard: selecting any one column
+    # alone must not prune it away
+    for out in (df, *(df.select(c) for c in ("linenumbers", "flags_flat", "has_line3"))):
+        with pytest.raises(Exception) as ei:
+            out.collect()
+        assert "out-of-domain" in str(ei.value), out.columns
 
     # and a bad flag value trips it too
     rows = [(2, 1, "Z", "F")]
