@@ -1742,54 +1742,69 @@ class TxTable:
         rename/drop has been committed)."""
         return self._fold_state(version)[3]
 
-    def _evolve_mapping(self, spark: SparkSession, mutate) -> int:
-        """Commit a metadata-only schema change: fold the current
-        logical schema, let ``mutate(mapping, dropped)`` edit it, and
-        commit the COMPLETE new mapping as one ``meta`` action (no
-        data file is touched — rename/drop on a 100 TB table is one
-        small log write). Retries cleanly under commit races; the
-        mapping is rebuilt from the fresh snapshot each attempt."""
+    def _alter(self, op: str, edit) -> int:
+        """The one commit loop for metadata changes (ALTERs). Each
+        attempt folds the latest metadata, lets ``edit(meta, base)``
+        change a copy of it in place (returning ``False`` means nothing
+        changes: no commit, the current version is returned), derives
+        ``writer_features`` from the metadata keys, and commits the
+        COMPLETE new metadata as one ``meta`` action at ``base + 1``.
+        A racing commit refolds and re-runs ``edit``, so an ALTER whose
+        edit validates data (constraints, generated columns, identity)
+        re-validates the fresh snapshot; 10 lost races raise
+        CommitConflict."""
+        # writer feature <- the metadata key that demands it
+        demands = {
+            "partitioning": "partition_columns",
+            "column_mapping": "mapping",
+            "check_constraints": "constraints",
+            "generated_columns": "generated",
+            "identity_columns": "identity",
+            "column_defaults": "defaults",
+        }
         for _ in range(10):
             base = self.latest_version()
             if base < 0:
                 raise ValueError(f"table {self.path} is empty")
-            meta = self._fold_state(base)[3] or {}
+            cur = self._fold_state(base)[3]
+            meta = dict(cur or {})
+            if edit(meta, base) is False:
+                return base
+            wf = set(meta.get("writer_features") or []) - set(demands)
+            wf |= {f for f, key in demands.items() if meta.get(key)}
+            if wf or "writer_features" in meta:
+                meta["writer_features"] = sorted(wf)
+            try:
+                self._commit(base + 1, op, [{"meta": meta}], base_meta=cur)
+                return base + 1
+            except CommitConflict:
+                continue
+        raise CommitConflict(f"{op} lost 10 races on {self.path}")
+
+    def _evolve_mapping(self, spark: SparkSession, op: str, mutate) -> int:
+        """Commit a metadata-only schema change: fold the current
+        logical schema, let ``mutate(mapping, dropped)`` edit it, and
+        commit the COMPLETE new mapping (no data file is touched —
+        rename/drop on a 100 TB table is one small log write). The
+        mapping is rebuilt from the fresh snapshot on every attempt."""
+
+        def edit(meta: dict, base: int) -> None:
             mapping = dict(meta.get("mapping") or {})
             dropped = list(meta.get("dropped") or [])
             # every CURRENT logical column gets an explicit entry the
             # first time metadata is committed
             for c in self.read(spark, base).columns:
-                mapping.setdefault(c, mapping.get(c, c))
-            op = mutate(mapping, dropped)
-            # the meta action carries COMPLETE table metadata (latest
-            # wins in the fold) — partitioning/schema keys (r9) must
-            # ride along or a rename would silently un-partition the
-            # table; the feature stamp is a UNION for the same reason
-            new_meta = dict(meta)
-            new_meta.update(
-                {
-                    "mapping": mapping,
-                    "dropped": dropped,
-                    # protocol stamp: any reader lacking column-mapping
-                    # support must refuse the table rather than serve
-                    # the physical names (_fold_state check)
-                    "features": sorted(
-                        set(meta.get("features") or []) | {"column_mapping"}
-                    ),
-                    # writers must translate logical->physical names —
-                    # an unaware writer would commit un-mapped columns
-                    "writer_features": sorted(
-                        set(meta.get("writer_features") or [])
-                        | {"column_mapping"}
-                    ),
-                }
+                mapping.setdefault(c, c)
+            mutate(mapping, dropped)
+            meta["mapping"] = mapping
+            meta["dropped"] = dropped
+            # protocol stamp: any reader lacking column-mapping support
+            # must refuse the table rather than serve the physical names
+            meta["features"] = sorted(
+                set(meta.get("features") or []) | {"column_mapping"}
             )
-            try:
-                self._commit(base + 1, op, [{"meta": new_meta}])
-                return base + 1
-            except CommitConflict:
-                continue
-        raise CommitConflict(f"schema change lost 10 races on {self.path}")
+
+        return self._alter(op, edit)
 
     def _refuse_constrained(self, column: str, what: str) -> None:
         """Schema evolution guard: a CHECK constraint's (or generated
@@ -1856,9 +1871,8 @@ class TxTable:
             if new in mapping:
                 raise ValueError(f"column already exists: {new!r}")
             mapping[new] = mapping.pop(old)
-            return "rename_column"
 
-        return self._evolve_mapping(spark, mutate)
+        return self._evolve_mapping(spark, "rename_column", mutate)
 
     def drop_column(self, spark: SparkSession, name: str) -> int:
         """Metadata-only column DROP: data files keep the physical
@@ -1882,9 +1896,8 @@ class TxTable:
                     " is fixed at creation"
                 )
             dropped.append(mapping.pop(name))
-            return "drop_column"
 
-        return self._evolve_mapping(spark, mutate)
+        return self._evolve_mapping(spark, "drop_column", mutate)
 
     def _stage(self, df: DataFrame, pcols="auto", meta="fold") -> list[str]:
         """Write df as immutable uniquely-named parquet files inside the
@@ -2552,21 +2565,24 @@ class TxTable:
     def overwrite_partitions_names(
         self, names: list[str], staged_fields: dict | None = None
     ) -> int:
-        """The names-based core of dynamic partition overwrite (r10 —
-        the native connector's writers land hive task files and commit
+        """The names-based core of dynamic partition overwrite (the
+        native connector's writers land hive task files and commit
         here): replace exactly the partitions the files carry, widen
         the log schema when ``staged_fields`` (or the files' footers)
-        bring new columns."""
-        meta0 = self._fold_state()[3] or {}
-        self._refuse_identity_names()
+        bring new columns. The remove set depends on the snapshot, so
+        a racing commit raises CommitConflict (one attempt)."""
+        base = self.latest_version()
+        adds, _txns, _dvs, meta0 = self._fold_state(base)
+        meta0 = meta0 or {}
+        self._refuse_identity_names(meta0)
         declared = meta0.get("partition_columns") or []
         if not declared:
             raise ValueError(f"table {self.path} is not partitioned")
-        # r11 (ADVICE r10): same guard as commit_names — a dynamic
-        # overwrite whose files don't carry hive components for
-        # exactly the declared partition columns would commit adds
-        # with no partitionValues (partition columns read as null) and
-        # replace NOTHING, silently degrading to an append.
+        # same guard as the append loop — a dynamic overwrite whose
+        # files don't carry hive components for exactly the declared
+        # partition columns would commit adds with no partitionValues
+        # (partition columns read as null) and replace NOTHING,
+        # silently degrading to an append.
         bad = [
             n for n in names if set(_parse_partition_values(n)) != set(declared)
         ]
@@ -2576,27 +2592,28 @@ class TxTable:
                 f" overwrite files must carry exactly those hive path"
                 f" components (got {bad[:3]}...)"
             )
-        base = self.latest_version()
-        self._base2rel(names + [
-            f for f in self._snapshot_files(base) if f not in names
-        ])
+        self._base2rel(names + [f for f in adds if f not in names])
         incoming = {
             tuple(sorted(_parse_partition_values(n).items())) for n in names
         }
         removes = [
             {"remove": f}
-            for f, act in self._snapshot_adds(base).items()
+            for f, act in adds.items()
             if tuple(sorted((act.get("partitionValues") or {}).items()))
             in incoming
         ]
         if staged_fields is None:
             staged_fields = self._fields_from_footers(names)
         self._enforce_constraints(names, meta0)
+        widened = self._widened_meta(meta0, staged_fields)
         actions = (
-            self._add_actions(names) + removes + self._widened_meta(staged_fields)
+            self._add_actions(names, self._partition_dtypes(meta0))
+            + removes
+            + ([{"meta": widened}] if widened else [])
         )
-        self._commit(base + 1, "overwritePartitions", actions)
-        return base + 1
+        return self._commit_snapshot_dependent(
+            base, "overwritePartitions", actions
+        )
 
     # ---- public API ----
     def version_at(self, ts: float) -> int:
@@ -2718,44 +2735,39 @@ class TxTable:
         cols = list(columns)
         if not cols:
             raise ValueError("declare at least one bloom column")
-        base = self.latest_version()
-        if base < 0:
-            raise ValueError(f"table {self.path} is empty")
-        meta = dict(self._fold_state(base)[3] or {})
-        if meta.get("schema"):
-            rev = {p: l for l, p in (meta.get("mapping") or {}).items()}
-            types = {}
-            for f in json.loads(meta["schema"])["fields"]:
-                typ = f["type"]
-                typ = typ if isinstance(typ, str) else "nested"
-                types[rev.get(f["name"], f["name"])] = typ
-            pcols_t = self._partition_dtypes(meta) or {}
-            for c, t in pcols_t.items():
-                types.setdefault(c, t if isinstance(t, str) else "nested")
-            for c in cols:
-                t = types.get(c)
-                if t is None:
-                    raise ValueError(
-                        f"bloom column {c!r} not in table schema"
-                    )
-                if t not in _BLOOM_TYPES:
-                    raise ValueError(
-                        f"bloom column {c!r} has type {t}; only exact "
-                        f"types {sorted(_BLOOM_TYPES)} support equality "
-                        "probes"
-                    )
-        meta["bloom_columns"] = {"cols": cols, "fpp": float(fpp)}
-        self._commit(base + 1, "setBloomFilter", [{"meta": meta}])
-        return base + 1
+
+        def edit(meta: dict, _base: int) -> None:
+            if meta.get("schema"):
+                rev = {p: l for l, p in (meta.get("mapping") or {}).items()}
+                types = {}
+                for f in json.loads(meta["schema"])["fields"]:
+                    typ = f["type"]
+                    typ = typ if isinstance(typ, str) else "nested"
+                    types[rev.get(f["name"], f["name"])] = typ
+                pcols_t = self._partition_dtypes(meta) or {}
+                for c, t in pcols_t.items():
+                    types.setdefault(c, t if isinstance(t, str) else "nested")
+                for c in cols:
+                    t = types.get(c)
+                    if t is None:
+                        raise ValueError(
+                            f"bloom column {c!r} not in table schema"
+                        )
+                    if t not in _BLOOM_TYPES:
+                        raise ValueError(
+                            f"bloom column {c!r} has type {t}; only exact "
+                            f"types {sorted(_BLOOM_TYPES)} support equality "
+                            "probes"
+                        )
+            meta["bloom_columns"] = {"cols": cols, "fpp": float(fpp)}
+
+        return self._alter("setBloomFilter", edit)
 
     def drop_bloom_filter(self) -> int:
-        base = self.latest_version()
-        meta = dict(self._fold_state(base)[3] or {})
-        if "bloom_columns" not in meta:
-            return base
-        meta.pop("bloom_columns")
-        self._commit(base + 1, "dropBloomFilter", [{"meta": meta}])
-        return base + 1
+        return self._alter(
+            "dropBloomFilter",
+            lambda meta, _base: meta.pop("bloom_columns", None) is not None,
+        )
 
     def _bloom_sidecar(self, basename: str) -> str:
         return os.path.join(
@@ -2877,40 +2889,35 @@ class TxTable:
         cols = list(columns)
         if not cols:
             raise ValueError("declare at least one NDV column")
-        base = self.latest_version()
-        if base < 0:
-            raise ValueError(f"table {self.path} is empty")
-        meta = dict(self._fold_state(base)[3] or {})
-        if meta.get("schema"):
-            rev = {p: l for l, p in (meta.get("mapping") or {}).items()}
-            types = {}
-            for f in json.loads(meta["schema"])["fields"]:
-                typ = f["type"]
-                types[rev.get(f["name"], f["name"])] = (
-                    typ if isinstance(typ, str) else "nested"
-                )
-            for c in cols:
-                t = types.get(c)
-                if t is None:
-                    raise ValueError(f"NDV column {c!r} not in table schema")
-                if t not in _NDV_TYPES:
-                    raise ValueError(
-                        f"NDV column {c!r} has type {t}; only "
-                        f"{sorted(_NDV_TYPES)} hash canonically "
-                        "(nested types have no canonical bytes)"
+
+        def edit(meta: dict, _base: int) -> None:
+            if meta.get("schema"):
+                rev = {p: l for l, p in (meta.get("mapping") or {}).items()}
+                types = {}
+                for f in json.loads(meta["schema"])["fields"]:
+                    typ = f["type"]
+                    types[rev.get(f["name"], f["name"])] = (
+                        typ if isinstance(typ, str) else "nested"
                     )
-        meta["ndv_columns"] = {"cols": cols}
-        self._commit(base + 1, "setNdvColumns", [{"meta": meta}])
-        return base + 1
+                for c in cols:
+                    t = types.get(c)
+                    if t is None:
+                        raise ValueError(f"NDV column {c!r} not in table schema")
+                    if t not in _NDV_TYPES:
+                        raise ValueError(
+                            f"NDV column {c!r} has type {t}; only "
+                            f"{sorted(_NDV_TYPES)} hash canonically "
+                            "(nested types have no canonical bytes)"
+                        )
+            meta["ndv_columns"] = {"cols": cols}
+
+        return self._alter("setNdvColumns", edit)
 
     def drop_ndv_columns(self) -> int:
-        base = self.latest_version()
-        meta = dict(self._fold_state(base)[3] or {})
-        if "ndv_columns" not in meta:
-            return base
-        meta.pop("ndv_columns")
-        self._commit(base + 1, "dropNdvColumns", [{"meta": meta}])
-        return base + 1
+        return self._alter(
+            "dropNdvColumns",
+            lambda meta, _base: meta.pop("ndv_columns", None) is not None,
+        )
 
     def _ndv_sidecar(self, basename: str) -> str:
         return os.path.join(
@@ -3153,96 +3160,24 @@ class TxTable:
         under conflicts (an append is valid against ANY snapshot).
 
         ``partition_by`` on the FIRST append declares hive
-        partitioning for the table's whole life (r9 — Delta's
+        partitioning for the table's whole life (Delta's
         partitionColumns): appends split into ``col=value/`` dirs, the
         log records partitionValues per file, and partition predicates
         prune whole partitions from the metadata alone. On a non-empty
         table it must match the declared partitioning (or be omitted
-        — staging partitions automatically)."""
-        meta = self._fold_state()[3]
-        df = self._fill_generated(df, meta)
-        ident = (meta or {}).get("identity") or {}
-        if ident:
-            supplied = sorted(set(ident) & set(df.columns))
-            if supplied:
-                raise ValueError(
-                    f"column(s) {supplied} are GENERATED ALWAYS AS IDENTITY "
-                    f"on {self.path}: explicit values are refused — omit "
-                    "them and the append allocates"
-                )
-            # r12 (ADVICE r11): the identity path returned before the
-            # partition_by check ran, so a mismatched declaration was
-            # silently IGNORED instead of erroring like it does on
-            # non-identity tables. Identity tables exist only after
-            # add_identity_column declared them, so partitioning is
-            # already fixed — validate, never absorb.
-            if partition_by:
-                mapping = (meta or {}).get("mapping") or {}
-                phys = [mapping.get(c, c) for c in partition_by]
-                declared = (meta or {}).get("partition_columns") or []
-                if phys != declared:
-                    raise ValueError(
-                        f"table {self.path} is partitioned by {declared}, "
-                        f"not {phys}; partitioning is fixed at creation"
-                    )
-            return self._append_identity(df, max_retries)
-        declared = (meta or {}).get("partition_columns") or []
-        if partition_by:
-            mapping = (meta or {}).get("mapping") or {}
-            phys = [mapping.get(c, c) for c in partition_by]
-            if self.latest_version() < 0:
-                return self._create_partitioned(df, phys)
-            if phys != declared:
-                raise ValueError(
-                    f"table {self.path} is partitioned by {declared}, "
-                    f"not {phys}; partitioning is fixed at creation"
-                )
-        if self.latest_version() < 0:
-            return self._create_tracked(df, max_retries)
-        names = self._stage(df)
-        if (meta or {}).get("schema"):
-            v = self._commit_schema_tracked(df, names, meta, max_retries)
-        else:
-            v = self.commit_names(names, max_retries=max_retries)
-        # r13: opt-in autoCompact tick AFTER the append landed — the
-        # returned version is the append's own either way
-        self._maybe_auto_compact(df.sparkSession, meta)
-        return v
+        — staging partitions automatically).
 
-    def _create_tracked(self, df: DataFrame, max_retries: int) -> int:
-        """First commit of an unpartitioned table (r10): data files
-        plus a meta action carrying the log-owned schema — the same
-        contract partitioned tables have had since r9, now universal.
-        The payoff is the read plan: an explicit reader schema needs
-        ZERO footer I/O, where the legacy mergeSchema read merges
-        every live file's footer at plan time — a real cost at
-        millions of files. Writes gain schema enforcement for free
-        (type changes refuse loudly through ``_widened_meta``).
-        Tables created before r10 stay on the mergeSchema path.
-
-        A lost creation race falls through to the normal append path
-        with the already-staged files — the meta action must NOT be
-        blind-retried, or it would clobber the winner's schema."""
-        names = self._stage(df)
-        meta = {"schema": df.schema.json()}
-        try:
-            self._commit(
-                0, "append", self._add_actions(names) + [{"meta": meta}]
-            )
-            return 0
-        except CommitConflict:
-            meta_now = self._fold_state()[3]
-            if (meta_now or {}).get("partition_columns"):
-                raise ValueError(
-                    f"table {self.path} was concurrently created as a "
-                    "partitioned table; these files were staged without "
-                    "hive dirs — re-run the append"
-                )
-            if (meta_now or {}).get("schema"):
-                return self._commit_schema_tracked(
-                    df, names, meta_now, max_retries
-                )
-            return self.commit_names(names, max_retries=max_retries)
+        The first commit of a table carries a meta action with the
+        log-owned schema, so reads need no footer I/O and later writes
+        get schema enforcement (a type change refuses loudly, a new
+        column widens the schema in the same commit). Generated
+        columns and DEFAULTs the frame omits are filled; identity
+        columns are allocated (explicit values refuse)."""
+        return self._append_commit(
+            df=df,
+            pcols=list(partition_by) if partition_by else None,
+            max_retries=max_retries,
+        )
 
     def _fields_from_footers(self, names: list[str]) -> dict:
         """name -> StructField from the files' own parquet footers, in
@@ -3264,63 +3199,18 @@ class TxTable:
                 ordered.setdefault(f.name, f)
         return ordered
 
-    def _create_partitioned(self, df: DataFrame, pcols: list[str]) -> int:
-        """First commit of a partitioned table: data files + the meta
-        action declaring partition columns and the log-owned schema
-        (data fields in writer order, partition fields last — the
-        order every read serves). Creation races are NOT blindly
-        retryable (two creators may declare different layouts), so a
-        lost race raises CommitConflict for the caller to resolve."""
+    def _widened_meta(self, meta: dict, staged_fields: dict) -> dict | None:
+        """``meta`` with its log schema widened by ``staged_fields``
+        (physical-name StructFields) — None when nothing widens or the
+        table has no log schema. The append loop recomputes it against
+        the fresh snapshot on every attempt: two appends racing with
+        DIFFERENT new columns each fold the other's widening in, so
+        the last meta action always carries the full union. Type
+        changes are refused loudly."""
         from pyspark.sql.types import StructType
 
-        missing = [c for c in pcols if c not in df.columns]
-        if missing:
-            raise ValueError(f"partition columns {missing} not in {df.columns}")
-        if len(pcols) == len(df.columns):
-            raise ValueError("cannot partition by every column")
-        pset = set(pcols)
-        fields = [f for f in df.schema.fields if f.name not in pset] + [
-            df.schema[c] for c in pcols
-        ]
-        schema_json = StructType(fields).json()
-        pschema = {
-            f["name"]: f["type"]
-            for f in json.loads(schema_json)["fields"]
-            if f["name"] in pset
-        }
-        names = self._stage(df, pcols=pcols)
-        meta = {
-            "partition_columns": pcols,
-            "schema": schema_json,
-            # protocol stamp: a reader that doesn't understand
-            # partitionValues would scan the files WITHOUT the
-            # partition columns (they are not in the bytes) — it must
-            # refuse the table, not serve a narrower schema
-            "features": ["partitioning"],
-            # writers must stage into hive dirs + record partitionValues
-            # and widen the log-owned schema on widening commits — an
-            # unaware writer would land un-partitioned files or hide
-            # new columns from the explicit-schema read
-            "writer_features": ["partitioning"],
-        }
-        actions = self._add_actions(names, pschema) + [{"meta": meta}]
-        self._commit(0, "createPartitioned", actions)
-        return 0
-
-    def _widened_meta(self, staged_fields: dict) -> list[dict]:
-        """The meta action (as a 0/1-element action list) publishing
-        the union of the CURRENT log schema with ``staged_fields``
-        (physical-name StructFields) — empty when nothing widens.
-        Recompute against the fresh snapshot on every conflict retry:
-        two appends racing with DIFFERENT new columns each fold the
-        other's widening in, so the last meta action always carries
-        the full union (the lost-update hazard a stage-time-only
-        union would have). Type changes are refused loudly."""
-        from pyspark.sql.types import StructType
-
-        meta = self._fold_state()[3] or {}
         if not meta.get("schema"):
-            return []
+            return None
         cur = StructType.fromJson(json.loads(meta["schema"]))
         have = {f.name: f for f in cur.fields}
         for name, f in staged_fields.items():
@@ -3334,50 +3224,171 @@ class TxTable:
             else:
                 have[name] = f
         if len(have) == len(cur.fields):
-            return []
+            return None
         pcols = meta.get("partition_columns") or []
         ordered = [f for n, f in have.items() if n not in pcols] + [
             have[c] for c in pcols
         ]
-        new_meta = dict(meta)
-        new_meta["schema"] = StructType(ordered).json()
-        return [{"meta": new_meta}]
+        return {**meta, "schema": StructType(ordered).json()}
 
-    def _commit_schema_tracked(
+    def _append_commit(
         self,
-        df: DataFrame,
-        names: list[str],
-        meta_at_stage: dict,
-        max_retries: int,
-    ) -> int:
-        """Append commit for a table whose schema lives in the log: a
-        widening append (new columns) must publish the widened schema
-        in the SAME commit, or explicit-schema reads would hide the
-        new columns. The union is recomputed against the fresh
-        snapshot on every conflict retry — two appends racing with
-        DIFFERENT new columns each fold the other's widening in, so
-        the last meta action always carries the full union (the lost-
-        update hazard a stage-time-only union would have)."""
-        staged = {
-            f.name: f
-            for f in self._to_physical(df.limit(0), meta_at_stage).schema.fields
-        }
-        actions = self._add_actions(names)
-        checked_cons: dict | None = None
+        names: list[str] | None = None,
+        df: DataFrame | None = None,
+        pcols: list[str] | None = None,
+        schema=None,
+        txn: dict | None = None,
+        overwrite: bool = False,
+        max_retries: int = 10,
+    ) -> int | None:
+        """The one commit loop for every row-introducing blind commit:
+        ``append``, ``commit_names``, ``create_partitioned_names``,
+        ``append_stream_batch``, ``commit_stream_names`` and the
+        native connector's writers. The commit is valid against any
+        snapshot, so a lost version race re-runs the attempt on a
+        fresh fold. Each attempt, in order:
+
+        1. folds the latest snapshot; the target is latest + 1;
+        2. returns None when ``txn`` (``{"app", "batch"}``) names a
+           batch the log already holds — a replayed micro-batch;
+        3. on an identity table, allocates values from the current
+           marks, re-staging ``df`` only when a racer moved them;
+        4. stages ``df`` lazily (after the replay check) under the
+           table's partitioning, or ``pcols`` when creating;
+        5. checks the files' hive components against the declared
+           partition columns (``pcols`` at version 0);
+        6. validates the files against CHECK constraints and
+           generated-column rules, again only when a racer changed
+           that set;
+        7. builds the meta action: the creation meta at version 0
+           (fields from ``schema``, the staged frame or the footers,
+           partition fields last), else the widened schema; advanced
+           identity marks are overlaid on either;
+        8. recomputes the remove set when ``overwrite``;
+        9. commits, then runs the auto-compact tick.
+
+        A lost creation race resolves here too: the loser appends when
+        its files fit the winner's layout and raises ValueError when
+        they do not. ``names`` are already-written files in the table
+        dir; ``df`` is a frame to stage instead; ``schema`` is the
+        writer's StructType, used with ``pcols``."""
+        from pyspark.sql.types import StructType
+
+        given = names is not None
+        spark = df.sparkSession if df is not None else None
+        # a partitioned creation from files takes the writer's schema:
+        # their footers lack the partition columns
+        fields = {f.name: f for f in schema.fields} if pcols and schema else None
+        frame = fill = used = checked = acts = None
+        n_rows = 0
         for _ in range(max_retries):
+            # pin the target BEFORE the replay check: a racer landing
+            # anything in between makes our create at v fail, and the
+            # next attempt re-checks the longer log
             v = self.latest_version() + 1
-            meta_now = self._fold_state()[3]
-            cons_now = self._effective_checks(meta_now)
-            if cons_now != checked_cons:
-                checked_cons = self._enforce_constraints(
-                    names, meta_now, df.sparkSession
+            adds, txns, _dvs, meta = self._fold_state()
+            meta = meta or {}
+            if txn and txns.get(txn["app"], -1) >= txn["batch"]:
+                return None  # this micro-batch already landed
+            declared = meta.get("partition_columns") or []
+            if v > 0 and pcols:
+                mapping = meta.get("mapping") or {}
+                if [mapping.get(c, c) for c in pcols] != declared:
+                    raise ValueError(
+                        f"table {self.path} is partitioned by {declared}, "
+                        f"not {pcols}; partitioning is fixed at creation"
+                    )
+            layout = declared if v > 0 else list(pcols or [])
+            if v == 0 and layout:
+                cols = schema.names if schema is not None else df.columns
+                missing = [c for c in layout if c not in cols]
+                if missing:
+                    raise ValueError(f"partition columns {missing} not in {cols}")
+                if len(layout) == len(cols):
+                    raise ValueError("cannot partition by every column")
+            ident = meta.get("identity") or {}
+            if given:
+                self._refuse_identity_names(meta)
+            elif set(ident) & set(df.columns):
+                raise ValueError(
+                    f"column(s) {sorted(set(ident) & set(df.columns))} are "
+                    f"GENERATED ALWAYS AS IDENTITY on {self.path}: explicit "
+                    "values are refused — omit them and the append allocates"
                 )
-            extra = self._widened_meta(staged)
+            bases = {c: dict(ident[c]) for c in ident}
+            if not given and (names is None or bases != used):
+                if frame is None:
+                    frame = self._fill_generated(df, meta)
+                    if ident:
+                        fill, n_rows = self._identity_filler(frame)
+                staged = fill(bases) if fill else frame
+                names = self._stage(staged, pcols=layout, meta=meta)
+                fields = {
+                    f.name: f
+                    for f in self._to_physical(staged.limit(0), meta).schema.fields
+                }
+                used, checked, acts = bases, None, None
+            bad = [n for n in names if set(_parse_partition_values(n)) != set(layout)]
+            if bad:
+                raise ValueError(
+                    f"table {self.path} is partitioned by {layout}; committed"
+                    f" files must carry exactly those hive path components"
+                    f" (got {bad[:3]}...) — stage through TxTable.append"
+                )
+            if given:
+                # externally-written names must keep the table-wide
+                # basename uniqueness _stage guarantees (DV/delete maps
+                # key on it), unless the commit replaces the snapshot
+                mine = set(names)
+                live = [] if overwrite else [f for f in adds if f not in mine]
+                self._base2rel(names + live)
+            cons = self._effective_checks(meta)
+            if cons != checked:
+                checked = self._enforce_constraints(names, meta, spark)
+            new_meta = None
+            if v == 0 or meta.get("schema"):
+                if fields is None:
+                    fields = self._fields_from_footers(names)
+                if v > 0:
+                    new_meta = self._widened_meta(meta, fields)
+                else:
+                    new_meta = {
+                        "schema": StructType(
+                            [f for n, f in fields.items() if n not in layout]
+                            + [fields[c] for c in layout]
+                        ).json()
+                    }
+                    if layout:
+                        # readers must understand partitionValues (the
+                        # columns are not in the file bytes); writers
+                        # must stage into hive dirs
+                        new_meta["partition_columns"] = layout
+                        new_meta["features"] = ["partitioning"]
+                        new_meta["writer_features"] = ["partitioning"]
+            if ident:
+                # the advanced marks ride the SAME commit, overlaid on
+                # the widened meta so neither clobbers the other
+                new_meta = new_meta or dict(meta)
+                new_meta["identity"] = {
+                    c: {**s, "next": s["next"] + n_rows * s["step"]}
+                    for c, s in ident.items()
+                }
+            pschema = self._partition_dtypes(meta if v > 0 else new_meta)
+            if acts is None or acts[0] != pschema:
+                acts = (pschema, self._add_actions(names, pschema))
+            actions = acts[1] + ([{"remove": f} for f in adds] if overwrite else [])
+            if new_meta:
+                actions.append({"meta": new_meta})
+            if v == 0 and layout:
+                op = "createPartitioned"
+            else:
+                op = "streamAppend" if txn else "overwrite" if overwrite else "append"
             try:
-                self._commit(v, "append", actions + extra)
-                return v
+                self._commit(v, op, actions, txn=txn, base_meta=meta)
             except CommitConflict:
                 continue
+            self._maybe_auto_compact(spark, meta)
+            return v
         raise CommitConflict(f"append lost {max_retries} races on {self.path}")
 
     def commit_names(
@@ -3386,68 +3397,15 @@ class TxTable:
         overwrite: bool = False,
         max_retries: int = 10,
     ) -> int:
-        """Commit already-written files in the table dir (r8 — the
-        native datasource's batch writer lands task files directly).
+        """Commit already-written files in the table dir (the native
+        datasource's batch writer lands task files directly).
         ``overwrite=True`` additionally removes the current snapshot's
         files (mode("overwrite") semantics); the remove set is
         recomputed on every conflict retry so a racing append's files
         are replaced too, matching what an overwrite means."""
-        self._refuse_identity_names()
-        declared = (self._fold_state()[3] or {}).get("partition_columns") or []
-        bad = [n for n in names if set(_parse_partition_values(n)) != set(declared)]
-        if bad:
-            raise ValueError(
-                f"table {self.path} is partitioned by {declared}; committed"
-                f" files must carry exactly those hive path components"
-                f" (got {bad[:3]}...) — stage through TxTable.append"
-            )
-        # externally-written names must keep the table-wide basename
-        # uniqueness _stage guarantees (DV/delete maps key on it) —
-        # check within the batch AND, unless the commit replaces the
-        # snapshot anyway, against the current live set (r10)
-        live = [] if overwrite else self._snapshot_files()
-        self._base2rel(names + [f for f in live if f not in names])
-        actions = self._add_actions(names)
-        checked_cons: dict | None = None
-        for _ in range(max_retries):
-            v = self.latest_version() + 1
-            meta_now = self._fold_state()[3] if v > 0 else None
-            # constraint gate (r11): validate the NEW files once before
-            # the first attempt; a conflict retry re-scans only if a
-            # racer changed the constraint set in between
-            cons_now = self._effective_checks(meta_now)
-            if cons_now != checked_cons:
-                checked_cons = self._enforce_constraints(names, meta_now)
-            removes = (
-                [{"remove": f} for f in self._snapshot_files(v - 1)]
-                if overwrite and v > 0
-                else []
-            )
-            # r10 universal schema tracking: a creating commit
-            # publishes the files' footer schema; a widening commit on
-            # a tracked table publishes the union (recomputed per
-            # retry); a type change refuses loudly (_widened_meta)
-            if v == 0:
-                from pyspark.sql.types import StructType
-
-                flds = self._fields_from_footers(names)
-                extra = [
-                    {"meta": {"schema": StructType(list(flds.values())).json()}}
-                ]
-            elif (meta_now or {}).get("schema"):
-                extra = self._widened_meta(self._fields_from_footers(names))
-            else:
-                extra = []
-            try:
-                self._commit(
-                    v,
-                    "overwrite" if overwrite else "append",
-                    actions + removes + extra,
-                )
-                return v
-            except CommitConflict:
-                continue
-        raise CommitConflict(f"append lost {max_retries} races on {self.path}")
+        return self._append_commit(
+            names=names, overwrite=overwrite, max_retries=max_retries
+        )
 
     def create_partitioned_names(
         self,
@@ -3457,53 +3415,16 @@ class TxTable:
         txn: dict | None = None,
     ) -> int:
         """First commit of a partitioned table from EXTERNALLY-written
-        files (r10 — the native connector's writers land hive-layout
-        task files directly): same meta contract as
-        ``_create_partitioned``. ``schema`` is the writer's StructType
+        files (the native connector's writers land hive-layout task
+        files directly): the same creation meta as ``append`` with
+        ``partition_by``. ``schema`` is the writer's StructType
         (physical names — creation predates any mapping); field order
-        in the log is data fields then partition fields. A racing
-        creator surfaces as CommitConflict for the caller to resolve
-        (the layouts may differ — never blind-retry a creation)."""
-        from pyspark.sql.types import StructType
-
-        if self.latest_version() >= 0:
-            raise ValueError(f"table {self.path} already exists")
-        field_names = [f.name for f in schema.fields]
-        missing = [c for c in pcols if c not in field_names]
-        if missing:
-            raise ValueError(f"partition columns {missing} not in {field_names}")
-        if len(pcols) == len(field_names):
-            raise ValueError("cannot partition by every column")
-        pset = set(pcols)
-        bad = [n for n in names if set(_parse_partition_values(n)) != pset]
-        if bad:
-            raise ValueError(
-                f"files must carry hive components for exactly {sorted(pset)}"
-                f" (got {bad[:3]}...)"
-            )
-        self._base2rel(names)
-        fields = [f for f in schema.fields if f.name not in pset] + [
-            schema[c] for c in pcols
-        ]
-        schema_json = StructType(fields).json()
-        pschema = {
-            f["name"]: f["type"]
-            for f in json.loads(schema_json)["fields"]
-            if f["name"] in pset
-        }
-        meta = {
-            "partition_columns": list(pcols),
-            "schema": schema_json,
-            "features": ["partitioning"],
-            "writer_features": ["partitioning"],
-        }
-        self._commit(
-            0,
-            "createPartitioned",
-            self._add_actions(names, pschema) + [{"meta": meta}],
-            txn=txn,
+        in the log is data fields then partition fields. When another
+        writer created the table first, the files append if they fit
+        its layout and ValueError is raised if they do not."""
+        return self._append_commit(
+            names=names, pcols=list(pcols), schema=schema, txn=txn
         )
-        return 0
 
     def constraints(self, version: int | None = None) -> dict[str, str]:
         """name -> CHECK expression (Spark SQL) in force at
@@ -3540,44 +3461,33 @@ class TxTable:
         DuckDB): a row violates only when the expression IS FALSE — an
         UNKNOWN/NULL result passes. Raises ConstraintViolation when
         current rows fail, ValueError for an unparsable expression or
-        duplicate name, CommitConflict if another writer lands first
-        (re-run: the validation is only good for the snapshot it
-        scanned)."""
+        duplicate name. A commit that lands first is retried: the
+        validation is only good for the snapshot it scanned, so every
+        attempt re-scans the fresh snapshot."""
         if not re.fullmatch(r"[A-Za-z_][A-Za-z0-9_]*", name):
             raise ValueError(f"bad constraint name {name!r}")
-        base = self.latest_version()
-        if base < 0:
-            raise ValueError(f"table {self.path} is empty")
-        meta = dict(self._fold_state(base)[3] or {})
-        cons = dict(meta.get("constraints") or {})
-        if name in cons:
-            raise ValueError(
-                f"constraint {name!r} already exists on {self.path}: "
-                f"CHECK ({cons[name]})"
-            )
-        snapshot = self.read(spark, base)
-        # r12 (VERDICT r11 #5): the portability contract is ENFORCED,
-        # not documented — an expression the sessionless DuckDB gate
-        # cannot bind refuses HERE instead of bricking every
-        # native-connector write after the constraint lands. Note this
-        # TIGHTENS the r11 contract: Spark-only expressions (backticked
-        # names, Spark-only functions, nested-type columns) that
-        # previously landed now refuse at ADD time. r13 (ADVICE r12):
-        # the probe runs BEFORE the snapshot scan — it needs only the
-        # schema (building the DataFrame is lazy, no job runs), so a
-        # non-portable expression is refused metadata-only instead of
-        # paying an O(table) scan first.
-        self._probe_duckdb_binding(snapshot.schema, {name: expr})
-        # one full-snapshot scan, through the DV-aware read so
-        # tombstoned rows don't fail a constraint they can't violate
-        self._raise_violations(snapshot, {name: expr})
-        cons[name] = expr
-        meta["constraints"] = cons
-        meta["writer_features"] = sorted(
-            set(meta.get("writer_features") or []) | {"check_constraints"}
-        )
-        self._commit(base + 1, "addConstraint", [{"meta": meta}])
-        return base + 1
+
+        def edit(meta: dict, base: int) -> None:
+            cons = dict(meta.get("constraints") or {})
+            if name in cons:
+                raise ValueError(
+                    f"constraint {name!r} already exists on {self.path}: "
+                    f"CHECK ({cons[name]})"
+                )
+            snapshot = self.read(spark, base)
+            # the portability contract is enforced: an expression the
+            # sessionless DuckDB gate cannot bind refuses here instead
+            # of bricking every native-connector write after the
+            # constraint lands. The probe needs only the schema (the
+            # DataFrame is lazy), so it runs before the snapshot scan.
+            self._probe_duckdb_binding(snapshot.schema, {name: expr})
+            # one full-snapshot scan, through the DV-aware read so
+            # tombstoned rows don't fail a constraint they can't violate
+            self._raise_violations(snapshot, {name: expr})
+            cons[name] = expr
+            meta["constraints"] = cons
+
+        return self._alter("addConstraint", edit)
 
     # Spark simpleString -> DuckDB type, for the binding probe. Nested
     # types (array/map/struct) are deliberately absent: their function
@@ -3662,25 +3572,15 @@ class TxTable:
         """ALTER TABLE DROP CONSTRAINT — metadata-only. Dropping the
         LAST constraint also retires the ``check_constraints`` writer
         feature so pre-constraint writer versions can commit again."""
-        for _ in range(10):
-            base = self.latest_version()
-            meta = dict(self._fold_state(base)[3] or {})
+
+        def edit(meta: dict, _base: int) -> None:
             cons = dict(meta.get("constraints") or {})
             if name not in cons:
                 raise ValueError(f"no such constraint: {name!r}")
             del cons[name]
             meta["constraints"] = cons
-            if not cons:
-                meta["writer_features"] = sorted(
-                    set(meta.get("writer_features") or [])
-                    - {"check_constraints"}
-                )
-            try:
-                self._commit(base + 1, "dropConstraint", [{"meta": meta}])
-                return base + 1
-            except CommitConflict:
-                continue
-        raise CommitConflict(f"drop constraint lost 10 races on {self.path}")
+
+        return self._alter("dropConstraint", edit)
 
     def generated(self, version: int | None = None) -> dict[str, str]:
         """column -> GENERATED ALWAYS AS expression in force at
@@ -3731,58 +3631,43 @@ class TxTable:
             raise ValueError(
                 f"generated column {name!r} cannot reference itself: {expr}"
             )
-        base = self.latest_version()
-        if base < 0:
-            raise ValueError(f"table {self.path} is empty")
-        meta = dict(self._fold_state(base)[3] or {})
-        gen = dict(meta.get("generated") or {})
-        if name in gen:
-            raise ValueError(
-                f"column {name!r} is already generated on {self.path}: "
-                f"AS ({gen[name]})"
+
+        def edit(meta: dict, base: int) -> None:
+            gen = dict(meta.get("generated") or {})
+            if name in gen:
+                raise ValueError(
+                    f"column {name!r} is already generated on {self.path}: "
+                    f"AS ({gen[name]})"
+                )
+            if name in (meta.get("identity") or {}):
+                raise ValueError(f"column {name!r} is an identity column")
+            # unlike add_check_constraint, no DuckDB binding probe: a
+            # generation rule is legitimately Spark-side (date_format
+            # patterns etc.) — it is FILLED by the session-ful write
+            # paths, and a non-portable rule only makes SESSIONLESS
+            # connector writes unavailable (the gate refuses those
+            # loudly) rather than corrupting anything.
+            self._raise_violations(
+                self.read(spark, base), {name: self._gen_check(name, expr)}
             )
-        if name in (meta.get("identity") or {}):
-            raise ValueError(f"column {name!r} is an identity column")
-        # NOTE (r12): unlike add_check_constraint, NO DuckDB binding
-        # probe here — a generation rule is legitimately Spark-side
-        # (date_format patterns etc.): it is FILLED by the session-ful
-        # write paths, and a non-portable rule only makes SESSIONLESS
-        # connector writes unavailable (the gate refuses those loudly,
-        # tested) rather than corrupting anything.
-        self._raise_violations(
-            self.read(spark, base), {name: self._gen_check(name, expr)}
-        )
-        gen[name] = expr
-        meta["generated"] = gen
-        meta["writer_features"] = sorted(
-            set(meta.get("writer_features") or []) | {"generated_columns"}
-        )
-        self._commit(base + 1, "setGenerated", [{"meta": meta}])
-        return base + 1
+            gen[name] = expr
+            meta["generated"] = gen
+
+        return self._alter("setGenerated", edit)
 
     def drop_generated(self, name: str) -> int:
         """Retire a generation rule (metadata-only); the column and
         its values stay. Dropping the last rule retires the
         ``generated_columns`` writer feature."""
-        for _ in range(10):
-            base = self.latest_version()
-            meta = dict(self._fold_state(base)[3] or {})
+
+        def edit(meta: dict, _base: int) -> None:
             gen = dict(meta.get("generated") or {})
             if name not in gen:
                 raise ValueError(f"no generated column: {name!r}")
             del gen[name]
             meta["generated"] = gen
-            if not gen:
-                meta["writer_features"] = sorted(
-                    set(meta.get("writer_features") or [])
-                    - {"generated_columns"}
-                )
-            try:
-                self._commit(base + 1, "dropGenerated", [{"meta": meta}])
-                return base + 1
-            except CommitConflict:
-                continue
-        raise CommitConflict(f"drop generated lost 10 races on {self.path}")
+
+        return self._alter("dropGenerated", edit)
 
     def _fill_generated(self, df: DataFrame, meta: dict | None) -> DataFrame:
         """Materialize every generated column AND column default a
@@ -3830,66 +3715,56 @@ class TxTable:
         WRITER feature: a writer that would land frames without
         filling refuses the whole table instead of silently writing
         NULLs where the table contract promises the default."""
-        base = self.latest_version()
-        if base < 0:
-            raise ValueError(f"table {self.path} is empty")
-        meta = dict(self._fold_state(base)[3] or {})
-        if name in (meta.get("generated") or {}):
-            raise ValueError(f"column {name!r} is GENERATED — no DEFAULT")
-        if name in (meta.get("identity") or {}):
-            raise ValueError(f"column {name!r} is IDENTITY — no DEFAULT")
-        types: dict[str, str] = {}
-        if meta.get("schema"):
-            rev = {p: l for l, p in (meta.get("mapping") or {}).items()}
-            for f in json.loads(meta["schema"])["fields"]:
-                typ = f["type"]
-                types[rev.get(f["name"], f["name"])] = (
-                    typ if isinstance(typ, str) else None
+
+        def edit(meta: dict, _base: int) -> None:
+            if name in (meta.get("generated") or {}):
+                raise ValueError(f"column {name!r} is GENERATED — no DEFAULT")
+            if name in (meta.get("identity") or {}):
+                raise ValueError(f"column {name!r} is IDENTITY — no DEFAULT")
+            types: dict[str, str] = {}
+            if meta.get("schema"):
+                rev = {p: l for l, p in (meta.get("mapping") or {}).items()}
+                for f in json.loads(meta["schema"])["fields"]:
+                    typ = f["type"]
+                    types[rev.get(f["name"], f["name"])] = (
+                        typ if isinstance(typ, str) else None
+                    )
+            if types and name not in types:
+                raise ValueError(f"column {name!r} not in table schema")
+            ctype = types.get(name)
+            if ctype is None:
+                raise ValueError(
+                    f"column {name!r} has a nested/unknown type; DEFAULT "
+                    "supports primitive columns"
                 )
-        if types and name not in types:
-            raise ValueError(f"column {name!r} not in table schema")
-        ctype = types.get(name)
-        if ctype is None:
-            raise ValueError(
-                f"column {name!r} has a nested/unknown type; DEFAULT "
-                "supports primitive columns"
-            )
-        # constant-folding probe: a columnless SELECT analyzes the
-        # expression with NO resolvable attributes, so any column
-        # reference fails here instead of at some later write
-        try:
-            spark.sql(f"SELECT CAST(({expr}) AS {ctype}) AS v").collect()
-        except Exception as e:
-            raise ValueError(
-                f"DEFAULT expression {expr!r} must be a constant "
-                f"castable to {ctype}: {e}"
-            ) from None
-        defaults = dict(meta.get("defaults") or {})
-        defaults[name] = {"expr": expr, "type": ctype}
-        meta["defaults"] = defaults
-        meta["writer_features"] = sorted(
-            set(meta.get("writer_features") or []) | {"column_defaults"}
-        )
-        self._commit(base + 1, "setColumnDefault", [{"meta": meta}])
-        return base + 1
+            # constant-folding probe: a columnless SELECT analyzes the
+            # expression with NO resolvable attributes, so any column
+            # reference fails here instead of at some later write
+            try:
+                spark.sql(f"SELECT CAST(({expr}) AS {ctype}) AS v").collect()
+            except Exception as e:
+                raise ValueError(
+                    f"DEFAULT expression {expr!r} must be a constant "
+                    f"castable to {ctype}: {e}"
+                ) from None
+            defaults = dict(meta.get("defaults") or {})
+            defaults[name] = {"expr": expr, "type": ctype}
+            meta["defaults"] = defaults
+
+        return self._alter("setColumnDefault", edit)
 
     def drop_column_default(self, name: str) -> int:
-        base = self.latest_version()
-        meta = dict(self._fold_state(base)[3] or {})
-        defaults = dict(meta.get("defaults") or {})
-        if name not in defaults:
-            return base
-        defaults.pop(name)
-        if defaults:
-            meta["defaults"] = defaults
-        else:
-            meta.pop("defaults", None)
-            meta["writer_features"] = sorted(
-                set(meta.get("writer_features") or [])
-                - {"column_defaults"}
-            )
-        self._commit(base + 1, "dropColumnDefault", [{"meta": meta}])
-        return base + 1
+        def edit(meta: dict, _base: int) -> bool:
+            defaults = dict(meta.get("defaults") or {})
+            if defaults.pop(name, None) is None:
+                return False
+            if defaults:
+                meta["defaults"] = defaults
+            else:
+                del meta["defaults"]
+            return True
+
+        return self._alter("dropColumnDefault", edit)
 
     def identity(self, version: int | None = None) -> dict[str, dict]:
         """column -> {"start", "step", "next"} for every identity
@@ -3921,11 +3796,8 @@ class TxTable:
         explicit values nor allocate) refuses the table."""
         if step == 0:
             raise ValueError("identity step must be nonzero")
-        for _ in range(10):
-            base = self.latest_version()
-            if base < 0:
-                raise ValueError(f"table {self.path} is empty")
-            meta = dict(self._fold_state(base)[3] or {})
+
+        def edit(meta: dict, base: int) -> None:
             if name in (meta.get("identity") or {}):
                 raise ValueError(f"{name!r} is already an identity column")
             if name in (meta.get("generated") or {}):
@@ -3951,48 +3823,31 @@ class TxTable:
                 "next": int(nxt),
             }
             meta["identity"] = ident
-            meta["writer_features"] = sorted(
-                set(meta.get("writer_features") or []) | {"identity_columns"}
-            )
-            try:
-                self._commit(base + 1, "setIdentity", [{"meta": meta}])
-                return base + 1
-            except CommitConflict:
-                continue
-        raise CommitConflict(f"set identity lost 10 races on {self.path}")
+
+        return self._alter("setIdentity", edit)
 
     def drop_identity(self, name: str) -> int:
         """Retire an identity declaration (metadata-only); the column
         and its values stay. Dropping the last one retires the
         ``identity_columns`` writer feature."""
-        for _ in range(10):
-            base = self.latest_version()
-            meta = dict(self._fold_state(base)[3] or {})
+
+        def edit(meta: dict, _base: int) -> None:
             ident = dict(meta.get("identity") or {})
             if name not in ident:
                 raise ValueError(f"no identity column: {name!r}")
             del ident[name]
             meta["identity"] = ident
-            if not ident:
-                meta["writer_features"] = sorted(
-                    set(meta.get("writer_features") or [])
-                    - {"identity_columns"}
-                )
-            try:
-                self._commit(base + 1, "dropIdentity", [{"meta": meta}])
-                return base + 1
-            except CommitConflict:
-                continue
-        raise CommitConflict(f"drop identity lost 10 races on {self.path}")
 
-    def _refuse_identity_names(self) -> None:
+        return self._alter("dropIdentity", edit)
+
+    def _refuse_identity_names(self, meta: dict | None) -> None:
         """Externally-staged commits (the native connector's writers
         land finished task files) cannot allocate identity values or
         refuse explicit ones — block them on identity tables instead
         of silently bypassing GENERATED ALWAYS. Generated columns need
         no twin guard: externally-staged files still pass through the
         validation gate, where a missing or wrong value refuses."""
-        ident = (self._fold_state()[3] or {}).get("identity") or {}
+        ident = (meta or {}).get("identity") or {}
         if ident:
             raise ValueError(
                 f"table {self.path} has identity column(s) "
@@ -4046,61 +3901,6 @@ class TxTable:
             return d.drop("_pid")
 
         return fill, acc
-
-    def _append_identity(self, df: DataFrame, max_retries: int) -> int:
-        """Append onto a table with identity columns: allocate values
-        from the current marks, commit data + advanced marks
-        ATOMICALLY (the mark bump rides the same log entry), re-assign
-        and re-stage on a lost race (the orphaned first staging is
-        vacuum's normal diet). Schema widening composes: the widened
-        meta is computed per retry and the identity bump overlaid on
-        it, so neither clobbers the other."""
-        spark = df.sparkSession
-        fill, n_rows = self._identity_filler(df)
-        staged: list[str] | None = None
-        used: dict | None = None
-        checked_cons: dict | None = None
-        for _ in range(max_retries):
-            v = self.latest_version() + 1
-            meta_now = self._fold_state()[3] or {}
-            ident = dict(meta_now.get("identity") or {})
-            bases = {c: dict(ident[c]) for c in ident}
-            if bases != used:
-                filled = fill(bases)
-                staged = self._stage(filled)
-                used = bases
-                staged_fields = {
-                    f.name: f
-                    for f in self._to_physical(
-                        filled.limit(0), meta_now
-                    ).schema.fields
-                }
-            cons_now = self._effective_checks(meta_now)
-            if cons_now != checked_cons:
-                checked_cons = self._enforce_constraints(
-                    staged, meta_now, spark
-                )
-            wid = self._widened_meta(staged_fields)
-            new_meta = wid[0]["meta"] if wid else dict(meta_now)
-            new_meta["identity"] = {
-                c: {
-                    **ident[c],
-                    "next": ident[c]["next"] + n_rows * ident[c]["step"],
-                }
-                for c in ident
-            }
-            try:
-                self._commit(
-                    v, "append", self._add_actions(staged) + [{"meta": new_meta}]
-                )
-                # r13: autoCompact tick applies to identity appends too
-                self._maybe_auto_compact(spark, new_meta)
-                return v
-            except CommitConflict:
-                continue
-        raise CommitConflict(
-            f"identity append lost {max_retries} races on {self.path}"
-        )
 
     @classmethod
     def _effective_checks(cls, meta: dict | None) -> dict[str, str]:
@@ -4246,11 +4046,8 @@ class TxTable:
         """SET TBLPROPERTIES — upsert the given keys (a None value
         unsets the key, Delta's UNSET). Metadata-only commit,
         conflict-retried like every other metadata mutation."""
-        for _ in range(10):
-            base = self.latest_version()
-            if base < 0:
-                raise ValueError(f"table {self.path} is empty")
-            meta = dict(self._fold_state(base)[3] or {})
+
+        def edit(meta: dict, _base: int) -> None:
             cur = dict(meta.get("properties") or {})
             for k, v in props.items():
                 if v is None:
@@ -4258,16 +4055,12 @@ class TxTable:
                 else:
                     cur[k] = str(v)
             meta["properties"] = cur
-            try:
-                self._commit(base + 1, "setProperties", [{"meta": meta}])
-                return base + 1
-            except CommitConflict:
-                continue
-        raise CommitConflict(f"set properties lost 10 races on {self.path}")
+
+        return self._alter("setProperties", edit)
 
     def set_change_data_feed(self, enabled: bool = True) -> int:
-        """Delta's ``delta.enableChangeDataFeed`` table property
-        (r11): with it set, MERGE and copy-on-write DELETE write their
+        """Delta's ``delta.enableChangeDataFeed`` table property:
+        with it set, MERGE and copy-on-write DELETE write their
         row-level changes as CDC SIDECAR parquets (``cdc`` actions —
         Delta's _change_data design) in the same commit. The change
         feed then serves those commits by READING the sidecar instead
@@ -4276,15 +4069,13 @@ class TxTable:
         partition — can serve them at all. Sidecar volume is the
         changed-row set, not the rewrite. A metadata-only commit; the
         current schema/mapping ride along unchanged."""
-        base = self.latest_version()
-        if base < 0:
-            raise ValueError(f"table {self.path} is empty")
-        meta = dict(self._fold_state(base)[3] or {})
-        if bool(meta.get("change_data_feed")) == bool(enabled):
-            return base
-        meta["change_data_feed"] = bool(enabled)
-        self._commit(base + 1, "setTableProperties", [{"meta": meta}])
-        return base + 1
+
+        def edit(meta: dict, _base: int) -> "bool | None":
+            if bool(meta.get("change_data_feed")) == bool(enabled):
+                return False
+            meta["change_data_feed"] = bool(enabled)
+
+        return self._alter("setTableProperties", edit)
 
     def set_auto_compact(
         self,
@@ -4293,7 +4084,7 @@ class TxTable:
         small_bytes: int = 16 << 20,
         target_files: int = 1,
     ) -> int:
-        """Delta's autoCompact, opt-in per table (r13): after each
+        """Delta's autoCompact, opt-in per table: after each
         successful append / stream batch, when the live snapshot holds
         at least ``min_files`` files under ``small_bytes``, a
         best-effort ``optimize(small_files_below=small_bytes)`` commit
@@ -4310,24 +4101,19 @@ class TxTable:
         reader never notices: the optimize commit is pure add+remove
         bookkeeping. Metadata-only commit; disable with
         ``enabled=False``."""
-        base = self.latest_version()
-        if base < 0:
-            raise ValueError(f"table {self.path} is empty")
-        meta = dict(self._fold_state(base)[3] or {})
-        if not enabled:
-            if "auto_compact" not in meta:
-                return base
-            meta.pop("auto_compact")
-        else:
-            if min_files < 2:
-                raise ValueError("min_files must be >= 2")
+        if enabled and min_files < 2:
+            raise ValueError("min_files must be >= 2")
+
+        def edit(meta: dict, _base: int) -> "bool | None":
+            if not enabled:
+                return meta.pop("auto_compact", None) is not None
             meta["auto_compact"] = {
                 "min_files": int(min_files),
                 "small_bytes": int(small_bytes),
                 "target_files": int(target_files),
             }
-        self._commit(base + 1, "setAutoCompact", [{"meta": meta}])
-        return base + 1
+
+        return self._alter("setAutoCompact", edit)
 
     def _maybe_auto_compact(self, spark, meta) -> "int | None":
         """Post-commit auto-compaction tick (see set_auto_compact).
@@ -4451,7 +4237,7 @@ class TxTable:
         the pruning RATE does. Output is identical to the full rewrite
         (tests/test_txlog.py asserts it).
 
-        ``prune_on_partitions=True`` (r11, VERDICT r10 #3) is the
+        ``prune_on_partitions=True`` is the
         partitioned-table twin: the staged delta's DISTINCT partition
         values (driver-bounded by the delta's partition cardinality —
         a daily backfill is one value) select candidate files by their
@@ -4467,8 +4253,8 @@ class TxTable:
         leave it off and pay the full-condition merge. Composes with
         ``prune_on_key`` (partitions first, key zones within).
 
-        ``schema_evolution=True`` (r12, VERDICT r11 #3 — Delta's
-        ``withSchemaEvolution`` merge, the standard ingest path for
+        ``schema_evolution=True`` (Delta's ``withSchemaEvolution``
+        merge, the standard ingest path for
         evolving upstreams): ``compare_cols`` naming columns the table
         does not have yet WIDEN it in the same commit — existing rows
         read the new columns as NULL (the snapshot side is padded with
@@ -4479,8 +4265,8 @@ class TxTable:
         refuse loudly). Without the flag, a new source column raises a
         clear error instead of an opaque AnalysisException."""
         cols = [key] + compare_cols
-        probes: dict[str, list] = {}  # the read predicate (r11)
-        new_cols: list[str] = []  # columns the merge adds (r12)
+        probes: dict[str, list] = {}  # the read predicate
+        new_cols: list[str] = []  # columns the merge adds
         base_version, meta0, plan, scan = self._planner(spark)
         pcols_now = self._pcols_logical(meta0)
         # merge rewrites whole files through _stage's auto partitionBy,
@@ -4577,7 +4363,7 @@ class TxTable:
             else:
                 merged = staged.select(*cols)
         names = self._stage(merged, meta=meta0)
-        # constraint gate (r11): a merge's updates/inserts are new rows
+        # constraint gate: a merge's updates/inserts are new rows
         # — validate the rewritten files (O(files touched), which the
         # merge just wrote anyway) before anything commits
         self._enforce_constraints(names, meta0, spark)
@@ -4595,12 +4381,12 @@ class TxTable:
                     merged.limit(0), meta0
                 ).schema.fields
             }
-            widened = self._widened_meta(staged_fields)
-            actions += widened
+            widened = self._widened_meta(meta0 or {}, staged_fields)
             if widened:  # the read-back must see the NEW columns
-                meta_read = widened[0]["meta"]
+                actions.append({"meta": widened})
+                meta_read = widened
         if (meta0 or {}).get("change_data_feed") and old_files:
-            # CDC sidecar (r11, Delta's _change_data design): compute
+            # CDC sidecar (Delta's _change_data design): compute
             # the diff ONCE at write time from what was actually
             # committed — old visible rows vs the freshly staged files
             # (read back, so a nondeterministic staged source cannot
@@ -4627,7 +4413,7 @@ class TxTable:
                 self._merge_cdc(old_df, new_df, key), pcols=None, meta=meta0
             )
             actions += [{"cdc": n} for n in cdc_names]
-        # OCC rebase predicate (r11): with pruning declared, the merge
+        # OCC rebase predicate: with pruning declared, the merge
         # read exactly {files overlapping staged partitions/key range};
         # an interleaved blind append landing entirely OUTSIDE that
         # predicate cannot contain a staged key, so the merge result
@@ -5848,11 +5634,11 @@ class TxTable:
         version: int | None = None,
         timestamp: float | None = None,
     ) -> int:
-        """RESTORE the table to a past ``version`` — or, r12, to a
-        point in time (``timestamp``, epoch seconds — Delta's RESTORE
-        TO TIMESTAMP, resolved through :meth:`version_at`'s monotone
-        in-commit stamps) — AS A NEW COMMIT
-        (r10, VERDICT r9 #4 — Delta RESTORE semantics): history is
+        """RESTORE the table to a past ``version`` — or to a point in
+        time (``timestamp``, epoch seconds — Delta's RESTORE TO
+        TIMESTAMP, resolved through :meth:`version_at`'s monotone
+        in-commit stamps) — AS A NEW COMMIT (Delta RESTORE
+        semantics): history is
         never rewritten, the old snapshot's state is re-published at
         ``latest + 1``. The commit is computed as a diff against the
         current snapshot:
@@ -5925,8 +5711,7 @@ class TxTable:
             actions.append({"meta": meta_t})
         if not actions:
             return base  # already at the target state
-        self._commit(base + 1, "restore", actions)
-        return base + 1
+        return self._commit_snapshot_dependent(base, "restore", actions)
 
     def append_stream_batch(
         self, df: DataFrame, app_id: str, batch_id: int, max_retries: int = 10
@@ -5937,20 +5722,19 @@ class TxTable:
         whose id is already in the log is SKIPPED instead of appended
         twice. Returns the committed version, or None for a skip.
 
-        The replay check consults the FOLDED per-app txn map (r8:
-        checkpointed + cached, not a full log scan — Delta's
+        The replay check consults the FOLDED per-app txn map
+        (checkpointed + cached, not a full log scan — Delta's
         latest-txn-per-app design): foreachBatch batch ids are
         monotonic, so ``batch_id <= latest[app]`` identifies a
-        redelivery. Cost per commit is the fold tail since this
-        instance's last fold — typically one entry — instead of the
-        O(V) scan the r7 version paid (O(V²) over a stream's life).
-
-        The check re-runs inside the retry loop, so two replicas
-        racing the same batch id end with exactly one commit — the
-        loser's exclusive create fails, it re-folds, finds its batch
-        id recorded, and skips."""
-        return self.commit_stream_names(
-            None, app_id, batch_id, max_retries=max_retries, df=df
+        redelivery. It runs on every attempt of the append loop, and
+        staging waits for it, so two replicas racing the same batch id
+        end with exactly one commit — the loser's exclusive create
+        fails, it re-folds, finds its batch id recorded, and skips
+        without staging anything."""
+        return self._append_commit(
+            df=df,
+            txn={"app": app_id, "batch": batch_id},
+            max_retries=max_retries,
         )
 
     def commit_stream_names(
@@ -5961,147 +5745,17 @@ class TxTable:
         max_retries: int = 10,
         df: DataFrame | None = None,
     ) -> int | None:
-        """The exactly-once commit core, decoupled from staging (r8):
-        ``names`` are already-written files in the table dir (the
-        native datasource's stream writer lands task files directly
-        and commits them here). With ``names=None`` and ``df`` given,
-        staging is lazy — only after the dedup check says the batch is
-        genuinely new. A skipped replay leaves pre-staged ``names`` as
-        unreferenced files for vacuum (bounded: one batch's files)."""
-        meta0 = self._fold_state()[3] or {}
-        if df is not None:
-            df = self._fill_generated(df, meta0)
-        if names is not None:
-            self._refuse_identity_names()
-        id_fill = None
-        if df is not None and meta0.get("identity"):
-            supplied = sorted(set(meta0["identity"]) & set(df.columns))
-            if supplied:
-                raise ValueError(
-                    f"column(s) {supplied} are GENERATED ALWAYS AS IDENTITY "
-                    f"on {self.path}: explicit values are refused"
-                )
-            # identity allocation for the streaming sink (r11): the
-            # filler pins the batch once; the loop below re-assigns +
-            # re-stages only when a lost race moved the marks, and the
-            # advanced marks ride the same txn-stamped commit — the
-            # exactly-once dedup check still precedes any staging, so
-            # a replayed batch allocates nothing
-            id_fill, id_rows = self._identity_filler(df)
-        id_used: dict | None = None
-        declared = meta0.get("partition_columns") or []
-        if names is not None:
-            bad = [
-                n for n in names if set(_parse_partition_values(n)) != set(declared)
-            ]
-            if bad:
-                raise ValueError(
-                    f"table {self.path} is partitioned by {declared}; stream"
-                    f" files must carry those hive path components (got"
-                    f" {bad[:3]}...) — stage through append_stream_batch"
-                )
-            # table-wide basename uniqueness (r10) — see commit_names
-            live = self._snapshot_files()
-            self._base2rel(names + [f for f in live if f not in names])
-        # r9: on a schema-tracked table a widening micro-batch must
-        # publish the widened schema with its commit, same as
-        # _commit_schema_tracked (recomputed per retry below); r10:
-        # the first stream commit CREATES the table schema-tracked
-        staged_fields = (
-            {
-                f.name: f
-                for f in self._to_physical(df.limit(0), meta0).schema.fields
-            }
-            if df is not None
-            else None
-        )
-        checked_cons: dict | None = None
-        for _ in range(max_retries):
-            # Pin the target version BEFORE the dedup check: if a racer
-            # lands ANY commit between this check and our commit, our
-            # exclusive create on v fails and the loop re-checks the
-            # (now longer) log. Reading latest_version() after staging
-            # instead would let a racer's identical batch slip in
-            # un-collided — caught by
-            # test_stream_batch_race_lands_exactly_once.
-            v = self.latest_version() + 1
-            _, txns, _dvs, _meta = self._fold_state()
-            latest = txns.get(app_id)
-            if latest is not None and batch_id <= latest:
-                return None  # this micro-batch already landed
-            if id_fill is not None:
-                ident_now = dict((_meta or {}).get("identity") or {})
-                bases = {c: dict(ident_now[c]) for c in ident_now}
-                if bases != id_used:
-                    filled = id_fill(bases)
-                    names = self._stage(filled)
-                    id_used = bases
-                    staged_fields = {
-                        f.name: f
-                        for f in self._to_physical(
-                            filled.limit(0), _meta
-                        ).schema.fields
-                    }
-                    checked_cons = None  # new files -> re-validate
-            elif names is None:  # stage once, only if genuinely new
-                assert df is not None
-                names = self._stage(df)
-            cons_now = self._effective_checks(_meta)
-            if cons_now != checked_cons:
-                checked_cons = self._enforce_constraints(
-                    names, _meta, df.sparkSession if df is not None else None
-                )
-            if v == 0:
-                from pyspark.sql.types import StructType
-
-                flds = (
-                    staged_fields
-                    if staged_fields is not None
-                    else self._fields_from_footers(names)
-                )
-                extra = [
-                    {"meta": {"schema": StructType(list(flds.values())).json()}}
-                ]
-            elif (self._fold_state()[3] or {}).get("schema"):
-                flds = (
-                    staged_fields
-                    if staged_fields is not None
-                    else self._fields_from_footers(names)
-                )
-                extra = self._widened_meta(flds)
-            else:
-                extra = []
-            if id_fill is not None:
-                # advanced identity marks ride the SAME commit; overlay
-                # on the widened meta (or the fresh fold) so neither
-                # clobbers the other
-                new_meta = extra[0]["meta"] if extra else dict(_meta or {})
-                new_meta["identity"] = {
-                    c: {
-                        **ident_now[c],
-                        "next": ident_now[c]["next"]
-                        + id_rows * ident_now[c]["step"],
-                    }
-                    for c in ident_now
-                }
-                extra = [{"meta": new_meta}]
-            try:
-                self._commit(
-                    v,
-                    "streamAppend",
-                    self._add_actions(names) + extra,
-                    txn={"app": app_id, "batch": batch_id},
-                )
-                # r13: opt-in autoCompact tick — streaming ingest is
-                # THE small-file generator this exists for
-                self._maybe_auto_compact(
-                    df.sparkSession if df is not None else None, _meta
-                )
-                return v
-            except CommitConflict:
-                continue
-        raise CommitConflict(
-            f"stream batch {batch_id} lost {max_retries} races on {self.path}"
+        """The exactly-once commit of already-written files: ``names``
+        are files in the table dir (the native datasource's stream
+        writer lands task files directly and commits them here). With
+        ``names=None`` and ``df`` given this is ``append_stream_batch``.
+        A skipped replay leaves pre-staged ``names`` as unreferenced
+        files for vacuum (bounded: one batch's files)."""
+        return self._append_commit(
+            names=names,
+            df=df,
+            txn={"app": app_id, "batch": batch_id},
+            max_retries=max_retries,
         )
 
     def _zorder_raw_ok(self, cols: list[str], version: int, bits: int = 16) -> bool:

@@ -26,8 +26,8 @@ express in Scala):
 - **streaming write** ``df.writeStream.format("txlog")``: tasks land
   Arrow batches as parquet files directly in the table dir (no rename
   dance — files are invisible until the log references them), and the
-  DRIVER commit calls ``TxTable.commit_stream_names`` with
-  ``(app_id, batchId)``: the Delta ``txn`` pattern, so a replayed
+  DRIVER commit runs the txlog's append loop with ``(app_id,
+  batchId)``: the Delta ``txn`` pattern, so a replayed
   micro-batch after a restart commits nothing (its orphan task files
   are vacuum-bounded). Exactly-once with ZERO coordination beyond the
   log's atomic create.
@@ -1077,31 +1077,15 @@ class TxLogStreamWriter(DataSourceStreamArrowWriter):
         return _write_task_file(self.path, iterator, self.pcols)
 
     def commit(self, messages, batchId: int) -> None:
-        from hephaestus_spark.sources.txlog import CommitConflict
-
-        names = [n for m in messages if m is not None for n in m.names]
-        t = TxTable(self.path)
-        if self.pcols and t.latest_version() < 0:
-            try:  # first batch CREATES the partitioned table, with the
-                # (app, batch) txn riding the creation commit so a
-                # redelivery of batch 0 after a restart adds nothing
-                t.create_partitioned_names(
-                    names,
-                    self.pcols,
-                    self.spark_schema,
-                    txn={"app": self.app_id, "batch": batchId},
-                )
-                return
-            except CommitConflict:
-                pass  # a racer created it; fall through to the txn path
-            except ValueError:
-                # r11 (ADVICE r10): a racer creating the table between
-                # the latest_version() check and the call surfaces as
-                # the "already exists" ValueError, not CommitConflict —
-                # same fall-through; anything else is a real arg error
-                if t.latest_version() < 0:
-                    raise
-        t.commit_stream_names(names, self.app_id, batchId)
+        # the first batch CREATES a partitioned table, with the (app,
+        # batch) txn riding the creation commit so a redelivery of
+        # batch 0 after a restart adds nothing
+        TxTable(self.path)._append_commit(
+            names=[n for m in messages if m is not None for n in m.names],
+            pcols=self.pcols,
+            schema=self.spark_schema,
+            txn={"app": self.app_id, "batch": batchId},
+        )
 
     def abort(self, messages, batchId: int) -> None:
         _remove_task_files(self.path, messages)
@@ -1129,32 +1113,23 @@ class TxLogBatchWriter(DataSourceArrowWriter):
         return _write_task_file(self.path, iterator, self.pcols)
 
     def commit(self, messages) -> None:
-        from hephaestus_spark.sources.txlog import CommitConflict
-
         names = [n for m in messages if m is not None for n in m.names]
         t = TxTable(self.path)
-        if self.pcols and t.latest_version() < 0:
-            try:  # first write creates the partitioned table
-                t.create_partitioned_names(names, self.pcols, self.spark_schema)
-                return
-            except CommitConflict:
-                pass  # a racer created it; the hive-component check in
-                # commit_names validates our layout against the winner's
-            except ValueError:
-                # r11 (ADVICE r10): the check-then-create race surfaces
-                # as the "already exists" ValueError — fall through like
-                # CommitConflict; a still-absent table means a real
-                # argument error, so re-raise
-                if t.latest_version() < 0:
-                    raise
-        if self.overwrite and self.dynamic:
+        create = bool(self.pcols) and t.latest_version() < 0
+        if self.overwrite and self.dynamic and not create:
             # Spark's partitionOverwriteMode=dynamic: replace exactly
             # the partitions the written files carry, keep the rest
             if names:
                 t.overwrite_partitions_names(names)
-            return
-        if names or self.overwrite:
-            t.commit_names(names, overwrite=self.overwrite)
+        elif names or self.overwrite or create:
+            # the first write creates a partitioned table; a lost
+            # creation race appends (or overwrites) inside the loop
+            t._append_commit(
+                names=names,
+                pcols=self.pcols,
+                schema=self.spark_schema,
+                overwrite=self.overwrite and not self.dynamic,
+            )
 
     def abort(self, messages) -> None:
         _remove_task_files(self.path, messages)

@@ -18,7 +18,6 @@ from __future__ import annotations
 
 import datetime
 import os
-import shutil
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -30,6 +29,7 @@ from hephaestus_spark.streaming.sinks import (
     MergeSinkJob,
     ParquetSnapshotTarget,
     WatermarkTable,
+    swap_parquet_dir,
 )
 
 EMPLOYEE_FEED_SCHEMA = T.StructType(
@@ -218,11 +218,7 @@ class TaskSyncPipeline:
                 "geocoding_error"
             ),
         )
-        tmp = f"{self.tasks_path}.tmp"
-        out.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(self.tasks_path):
-            shutil.rmtree(self.tasks_path)
-        os.rename(tmp, self.tasks_path)
+        swap_parquet_dir(out, self.tasks_path)
 
     def _rebuild_bridge(self, spark: SparkSession, staged: DataFrame) -> None:
         """A15: replace the executor sets of the tasks in this batch
@@ -241,11 +237,7 @@ class TaskSyncPipeline:
             touched = staged.select(F.col("id").alias("task_id")).distinct()
             kept = existing.join(touched, "task_id", "left_anti")
             fresh = kept.unionByName(fresh, allowMissingColumns=True)
-        tmp = f"{self.bridge_path}.tmp"
-        fresh.write.mode("overwrite").parquet(tmp)
-        if os.path.exists(self.bridge_path):
-            shutil.rmtree(self.bridge_path)
-        os.rename(tmp, self.bridge_path)
+        swap_parquet_dir(fresh, self.bridge_path)
 
     def run_available_now(self, spark: SparkSession) -> list:
         wm = WatermarkTable(self.watermark_path)

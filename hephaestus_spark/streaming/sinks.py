@@ -56,6 +56,29 @@ def batch_fingerprint(df: DataFrame, cols: list[str]) -> str:
     return row["h"] if row else ""
 
 
+def swap_parquet_dir(df: DataFrame, path: str) -> None:
+    """Write ``df`` as a parquet directory and swap it in at ``path``.
+
+    The old directory is renamed aside before the publish rename and
+    renamed back if the publish fails, so ``path`` always holds either
+    the previous table or the new one. ``df`` may read ``path`` itself:
+    the write finishes before anything is moved."""
+    tag = uuid.uuid4().hex[:8]
+    tmp, old = f"{path}.tmp-{tag}", f"{path}.old-{tag}"
+    df.write.mode("overwrite").parquet(tmp)
+    had_old = os.path.exists(path)
+    if had_old:
+        os.rename(path, old)
+    try:
+        os.rename(tmp, path)
+    except BaseException:
+        if had_old:
+            os.rename(old, path)
+        shutil.rmtree(tmp, ignore_errors=True)
+        raise
+    shutil.rmtree(old, ignore_errors=True)
+
+
 @dataclass
 class ParquetSnapshotTarget:
     """SCD-1 snapshot stored as a parquet directory, swapped atomically.
@@ -87,13 +110,7 @@ class ParquetSnapshotTarget:
             r["action"]: r["n"]
             for r in merged.groupBy("action").agg(F.count("*").alias("n")).collect()
         }
-        tmp = f"{self.path}.tmp-{uuid.uuid4().hex[:8]}"
-        merged.drop("action").write.mode("overwrite").parquet(tmp)
-        old = f"{self.path}.old-{uuid.uuid4().hex[:8]}"
-        if os.path.exists(self.path):
-            os.rename(self.path, old)
-        os.rename(tmp, self.path)
-        shutil.rmtree(old, ignore_errors=True)
+        swap_parquet_dir(merged.drop("action"), self.path)
         return counts
 
 
@@ -336,13 +353,7 @@ class WatermarkTable:
         df = spark.createDataFrame(
             [(1, date, batch_id)], "id int, last_processed_date date, batch_id long"
         ).withColumn("updated_at", F.current_timestamp())
-        tmp = f"{self.path}.tmp-{uuid.uuid4().hex[:8]}"
-        df.write.mode("overwrite").parquet(tmp)
-        old = f"{self.path}.old-{uuid.uuid4().hex[:8]}"
-        if os.path.exists(self.path):
-            os.rename(self.path, old)
-        os.rename(tmp, self.path)
-        shutil.rmtree(old, ignore_errors=True)
+        swap_parquet_dir(df, self.path)
 
 
 @dataclass

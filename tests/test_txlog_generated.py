@@ -297,10 +297,9 @@ def test_describe_detail(spark, tmp_path):
 
 
 def test_identity_append_validates_partition_by(spark, tmp_path):
-    """r12 (ADVICE r11): append() on an identity table used to return
-    via _append_identity BEFORE the partition_by check, silently
-    ignoring a mismatched declaration; it must raise exactly as on
-    non-identity tables."""
+    """append() on an identity table validates partition_by exactly
+    as on non-identity tables: a mismatched declaration raises instead
+    of being silently ignored."""
     t = TxTable(str(tmp_path / "t"))
     t.append(spark.createDataFrame([(1, "a")], "uid long, name string"))
     t.set_identity(spark, "uid", start=1, step=1)

@@ -576,30 +576,30 @@ def test_dynamic_overwrite_refuses_unpartitioned_files(spark, tmp_path):
 
 
 def test_writer_creation_race_falls_through(spark, tmp_path, monkeypatch):
-    """r11 (ADVICE r10): a racer creating the table between the
-    writer's latest_version() check and create_partitioned_names must
-    not fail the batch — the already-exists ValueError falls through
-    to the normal commit path exactly like CommitConflict."""
+    """A racer creating the table between the writer's first commit
+    attempt and its exclusive create must not fail the batch: the
+    append loop refolds, finds the winner's matching layout and
+    appends the loser's files as the next version."""
     from hephaestus_spark.sources import txlog_datasource as ds
 
     path = str(tmp_path / "t")
     os.makedirs(path, exist_ok=True)
     schema = _df(spark, [(1, "2024-01-01", 1.0)]).schema
-    orig = TxTable.create_partitioned_names
+    orig = TxTable._commit
     raced = {"done": False}
 
-    def race_then_create(self, names, pcols, schema_, txn=None):
+    def race_then_commit(self, version, op, actions, **kw):
         if not raced["done"]:
             raced["done"] = True
-            # the racer wins creation between the check and the call
+            # the racer wins creation before the loser's first create
             racer = TxTable(self.path)
             rn = racer._stage(
-                _df(spark, [(99, "2024-01-09", 9.0)]), pcols=list(pcols)
+                _df(spark, [(99, "2024-01-09", 9.0)]), pcols=["day"]
             )
-            orig(racer, rn, list(pcols), schema_)
-        return orig(self, names, pcols, schema_, txn=txn)
+            racer.create_partitioned_names(rn, ["day"], schema)
+        return orig(self, version, op, actions, **kw)
 
-    monkeypatch.setattr(TxTable, "create_partitioned_names", race_then_create)
+    monkeypatch.setattr(TxTable, "_commit", race_then_commit)
     # the loser's task files are already on disk (written pre-commit)
     loser = TxTable(path)
     names = TxTable._stage(loser, _df(spark, [(1, "2024-01-01", 1.0)]),
@@ -624,6 +624,32 @@ def test_writer_creation_race_falls_through(spark, tmp_path, monkeypatch):
     t2 = TxTable(path2)
     assert raced["done"]
     assert {r["id"] for r in t2.read(spark).collect()} == {99, 2}
+
+
+def test_lost_creation_race_to_other_layout_refuses(spark, tmp_path, monkeypatch):
+    """The loser of a creation race appends only into a matching
+    layout: a winner partitioned differently makes it raise
+    ValueError, and only the winner's rows are live."""
+    path = str(tmp_path / "t")
+    orig = TxTable._commit
+    raced = {"done": False}
+
+    def race_then_commit(self, version, op, actions, **kw):
+        if not raced["done"]:
+            raced["done"] = True
+            TxTable(self.path).append(
+                _df(spark, [(99, "2024-01-09", 9.0)]), partition_by=["val"]
+            )
+        return orig(self, version, op, actions, **kw)
+
+    monkeypatch.setattr(TxTable, "_commit", race_then_commit)
+    with pytest.raises(ValueError, match="partitioned by"):
+        TxTable(path).append(
+            _df(spark, [(1, "2024-01-01", 1.0)]), partition_by=["day"]
+        )
+    t = TxTable(path)
+    assert t.partition_columns() == ["val"]
+    assert [r["id"] for r in t.read(spark).collect()] == [99]
 
 
 def test_merge_prunes_by_partition_values(spark, tmp_path):
