@@ -3271,21 +3271,26 @@ class TxTable:
         its files fit the winner's layout and raises ValueError when
         they do not. ``names`` are already-written files in the table
         dir; ``df`` is a frame to stage instead; ``schema`` is the
-        writer's StructType, used with ``pcols``."""
+        writer's StructType, used with ``pcols`` to create. ``overwrite``
+        is True to replace the snapshot, or ``"partitions"`` for
+        Spark's dynamic partition overwrite: that creates like an
+        append, and on an existing table (a lost creation race
+        included) replaces the partitions its files carry through
+        ``overwrite_partitions_names``."""
         from pyspark.sql.types import StructType
 
         given = names is not None
         spark = df.sparkSession if df is not None else None
-        # a partitioned creation from files takes the writer's schema:
-        # their footers lack the partition columns
-        fields = {f.name: f for f in schema.fields} if pcols and schema else None
-        frame = fill = used = checked = acts = None
+        fields = footers = frame = fill = used = checked = acts = None
         n_rows = 0
         for _ in range(max_retries):
             # pin the target BEFORE the replay check: a racer landing
             # anything in between makes our create at v fail, and the
             # next attempt re-checks the longer log
             v = self.latest_version() + 1
+            if overwrite == "partitions" and (v > 0 or not pcols):
+                # the remove set depends on the snapshot: one attempt
+                return self.overwrite_partitions_names(names) if names else None
             adds, txns, _dvs, meta = self._fold_state()
             meta = meta or {}
             if txn and txns.get(txn["app"], -1) >= txn["batch"]:
@@ -3347,8 +3352,14 @@ class TxTable:
                 checked = self._enforce_constraints(names, meta, spark)
             new_meta = None
             if v == 0 or meta.get("schema"):
-                if fields is None:
-                    fields = self._fields_from_footers(names)
+                if given and v == 0 and layout:
+                    # hive files lack the partition columns: take the
+                    # writer's schema (creation predates any mapping)
+                    fields = {f.name: f for f in schema.fields}
+                elif given:
+                    # physical names, as the writer mapped them
+                    footers = footers or self._fields_from_footers(names)
+                    fields = footers
                 if v > 0:
                     new_meta = self._widened_meta(meta, fields)
                 else:
@@ -3419,9 +3430,11 @@ class TxTable:
         files directly): the same creation meta as ``append`` with
         ``partition_by``. ``schema`` is the writer's StructType
         (physical names — creation predates any mapping); field order
-        in the log is data fields then partition fields. When another
-        writer created the table first, the files append if they fit
-        its layout and ValueError is raised if they do not."""
+        in the log is data fields then partition fields. An existing
+        table refuses; a creator racing this call wins, and the files
+        then append if they fit its layout (ValueError if not)."""
+        if self.latest_version() >= 0:
+            raise ValueError(f"table {self.path} already exists")
         return self._append_commit(
             names=names, pcols=list(pcols), schema=schema, txn=txn
         )

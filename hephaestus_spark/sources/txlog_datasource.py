@@ -1115,20 +1115,20 @@ class TxLogBatchWriter(DataSourceArrowWriter):
     def commit(self, messages) -> None:
         names = [n for m in messages if m is not None for n in m.names]
         t = TxTable(self.path)
-        create = bool(self.pcols) and t.latest_version() < 0
-        if self.overwrite and self.dynamic and not create:
-            # Spark's partitionOverwriteMode=dynamic: replace exactly
-            # the partitions the written files carry, keep the rest
-            if names:
-                t.overwrite_partitions_names(names)
-        elif names or self.overwrite or create:
-            # the first write creates a partitioned table; a lost
-            # creation race appends (or overwrites) inside the loop
+        # an empty append commits nothing, unless it creates a
+        # partitioned table
+        if names or self.overwrite or (self.pcols and t.latest_version() < 0):
+            # the first write creates a partitioned table; Spark's
+            # partitionOverwriteMode=dynamic replaces exactly the
+            # partitions the written files carry, keeping the rest
             t._append_commit(
                 names=names,
                 pcols=self.pcols,
                 schema=self.spark_schema,
-                overwrite=self.overwrite and not self.dynamic,
+                overwrite=(
+                    "partitions" if self.overwrite and self.dynamic
+                    else self.overwrite
+                ),
             )
 
     def abort(self, messages) -> None:

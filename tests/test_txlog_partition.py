@@ -652,6 +652,76 @@ def test_lost_creation_race_to_other_layout_refuses(spark, tmp_path, monkeypatch
     assert [r["id"] for r in t.read(spark).collect()] == [99]
 
 
+def test_dynamic_overwrite_creation_race_keeps_overwrite(spark, tmp_path, monkeypatch):
+    """Two dynamic partition overwrites race to create the same table:
+    the loser's lost creation still REPLACES the shared partition, so
+    the result is a serial order (winner, then loser) — never the
+    union of both writers' rows."""
+    from hephaestus_spark.sources import txlog_datasource as ds
+
+    path = str(tmp_path / "t")
+    os.makedirs(path, exist_ok=True)
+    schema = _df(spark, [(1, "2024-01-01", 1.0)]).schema
+    orig = TxTable._commit
+    raced = {"done": False}
+
+    def race_then_commit(self, version, op, actions, **kw):
+        if not raced["done"]:
+            raced["done"] = True
+            rn = TxTable._stage(
+                TxTable(self.path), _df(spark, [(99, "2024-01-01", 9.0)]),
+                pcols=["day"],
+            )
+            ds.TxLogBatchWriter(
+                self.path, overwrite=True, pcols=["day"], schema=schema,
+                dynamic=True,
+            ).commit([ds.TxLogCommitMessage(names=rn)])
+        return orig(self, version, op, actions, **kw)
+
+    monkeypatch.setattr(TxTable, "_commit", race_then_commit)
+    names = TxTable._stage(
+        TxTable(path), _df(spark, [(1, "2024-01-01", 1.0)]), pcols=["day"]
+    )
+    ds.TxLogBatchWriter(
+        path, overwrite=True, pcols=["day"], schema=schema, dynamic=True
+    ).commit([ds.TxLogCommitMessage(names=names)])
+    t = TxTable(path)
+    assert raced["done"]
+    assert [r["id"] for r in t.read(spark).collect()] == [1]
+    assert [h["op"] for h in t.history()] == [
+        "createPartitioned", "overwritePartitions"
+    ]
+
+
+def test_connector_append_after_rename_keeps_columns(spark, tmp_path):
+    """A connector append with partitionBy into a renamed partitioned
+    table widens nothing: its task files carry physical names, and
+    the loop reads the widening from their footers, not from the
+    writer's logical schema."""
+    from hephaestus_spark.sources.txlog_datasource import TxLogDataSource
+
+    spark.dataSource.register(TxLogDataSource)
+    t = _pt(spark, tmp_path)
+    t.rename_column(spark, "val", "amount")
+    cols = t.read(spark).columns
+    spark.createDataFrame(
+        [(7, "2024-01-07", 7.0)], "id long, day string, amount double"
+    ).write.format("txlog").option("partitionBy", "day").mode("append").save(
+        t.path
+    )
+    got = t.read(spark)
+    assert got.columns == cols
+    assert {r["id"]: r["amount"] for r in got.collect()}[7] == 7.0
+
+
+def test_create_partitioned_names_refuses_existing_table(spark, tmp_path):
+    t = _pt(spark, tmp_path)
+    names = t._stage(_df(spark, [(5, "2024-01-05", 5.0)]), pcols=["day"])
+    with pytest.raises(ValueError, match="already exists"):
+        t.create_partitioned_names(names, ["day"], _df(spark, []).schema)
+    assert t.latest_version() == 0
+
+
 def test_merge_prunes_by_partition_values(spark, tmp_path):
     """r11 (VERDICT r10 #3): a partition-disjoint daily delta merged
     with prune_on_partitions touches ONLY the staged partitions'
