@@ -192,14 +192,14 @@ class InProcessTransport:
 
 
 class SocketGrpcTransport:
-    """gRPC over a REAL TCP socket with NO grpcio (r7): the transport
+    """gRPC over a REAL TCP socket with NO grpcio: the transport
     speaks the genuine wire protocol — HTTP/2 framing + HPACK headers +
     gRPC length-prefixed messages — through the from-the-spec client in
     sources/http2grpc.py. Envelope encode/decode is the SAME public
     protobuf codec GrpcTransport uses, so this is the identical poll
     loop crossing an actual network channel instead of a Python call.
-    (grpcio interop remains untestable in this image — no grpcio peer
-    can exist here — but the 'never crossed a socket' caveat is gone.)"""
+    (grpcio interop remains untestable without a grpcio peer, but the
+    'never crossed a socket' caveat is gone.)"""
 
     def __init__(self, host: str, port: int):
         from hephaestus_spark.sources.http2grpc import Http2GrpcClient

@@ -1,14 +1,13 @@
 """gRPC over HTTP/2 on raw sockets, stdlib only — client AND server.
 
 The reference's ingress is a gRPC poll loop
-(/root/reference/internal/client/hermes/client.go:11-35). grpcio is not
-in this image and installs are disallowed (COVERAGE.md "environmental
-blocks"), so since r4 the transport seam has been exercised through an
-in-process fake. This module closes the remaining distance WITHOUT
-grpcio: a from-the-spec implementation of the slice of HTTP/2
-(RFC 7540) + HPACK (RFC 7541) + gRPC framing (the length-prefixed
-message protocol) that unary gRPC needs, speaking over a REAL TCP
-socket. The bytes on the wire are genuine gRPC/HTTP-2 — connection
+(internal/client/hermes/client.go:11-35). grpcio is not available
+(COVERAGE.md "environmental blocks"), so the transport seam was first
+exercised through an in-process fake. This module closes the remaining
+distance WITHOUT grpcio: a from-the-spec implementation of the slice
+of HTTP/2 (RFC 7540) + HPACK (RFC 7541) + gRPC framing (the
+length-prefixed message protocol) that unary gRPC needs, speaking over
+a REAL TCP socket. The bytes on the wire are genuine gRPC/HTTP-2 — connection
 preface, SETTINGS exchange, HPACK-coded HEADERS, DATA frames carrying
 5-byte-prefixed protobuf messages, grpc-status trailers — so the
 `SocketGrpcTransport` in sources/grpc_source.py drives the SAME poll
@@ -16,21 +15,26 @@ loop the reference runs, over an actual network channel.
 
 Deliberate subset (documented, spec-legal):
 - unary-unary only (all three reference RPCs are unary);
-- HPACK string Huffman coding is fully supported (r8,
-  hpack_huffman.py): the decoder accepts Huffman-coded strings (every
-  real gRPC peer emits them by default — the interop-critical
-  direction) and the encoder Huffman-codes whenever it saves octets,
+- HPACK string Huffman coding is fully supported (hpack_huffman.py):
+  the decoder accepts Huffman-coded strings (every real gRPC peer
+  emits them by default — the interop-critical direction) and the encoder Huffman-codes whenever it saves octets,
   falling back to raw otherwise (grpc-go/nghttp2 behavior);
 - PRIORITY/PUSH_PROMISE/CONTINUATION are not emitted; CONTINUATION is
   rejected, and PADDED/PRIORITY flags on incoming HEADERS/DATA are
-  rejected loudly (r8) rather than silently mis-parsed as payload
+  rejected loudly rather than silently mis-parsed as payload
   (our header blocks are far below the 16 KB frame limit);
-- flow control: BOTH directions are real (r7 review fix) — senders
-  account the peer's connection and stream windows and block until
-  WINDOW_UPDATEs arrive; receivers replenish after every DATA frame.
-  Bodies far beyond the 65535-byte initial window stream through in
-  16 KB frames without ever overrunning a window (exercised in tests,
-  including a window-starved peer).
+- flow control: BOTH directions are real — senders account the peer's
+  connection and stream windows and block until WINDOW_UPDATEs arrive;
+  receivers replenish after every DATA frame. Bodies far beyond the
+  65535-byte initial window stream through in 16 KB frames without
+  ever overrunning a window (exercised in tests, including a
+  window-starved peer on either end).
+
+Latency: both ends set TCP_NODELAY, and each group of frames that
+leaves together (a request's HEADERS + DATA, a reply's HEADERS + DATA +
+trailers, a WINDOW_UPDATE pair) goes out in one write. With Nagle's
+algorithm on, the second small write of a group waits for the peer's
+delayed ACK (~40 ms on Linux), once per direction on every call.
 
 Interop with a grpcio peer is still untestable here (no such peer can
 exist in this image); what this removes is the "never left one
@@ -110,7 +114,7 @@ def _int_decode(data: bytes, pos: int, prefix_bits: int) -> tuple[int, int]:
 
 def _str_encode(s: str) -> bytes:
     b = s.encode("utf-8")
-    # r8: Huffman-code when it actually saves octets (what grpc-go /
+    # Huffman-code when it actually saves octets (what grpc-go /
     # nghttp2 do); otherwise raw with the H bit clear. Both are legal;
     # the shorter wins. The decoder accepts either way regardless.
     from hephaestus_spark.sources.hpack_huffman import huffman_encode
@@ -166,10 +170,9 @@ class HpackDecoder:
     indexing into a dynamic table WITH the RFC 7541 section 4 size
     accounting — insertion evicts from the oldest end, and
     dynamic-table-size-update instructions resize and evict. Without
-    eviction (the original r7 implementation — caught in review) the
-    decoder's indices desynchronize from a conforming peer as soon as
-    the peer's table evicts, resolving dynamic indices to the WRONG
-    header silently."""
+    eviction the decoder's indices desynchronize from a conforming peer
+    as soon as the peer's table evicts, resolving dynamic indices to the
+    WRONG header silently."""
 
     def __init__(self) -> None:
         self.dynamic: list[tuple[str, str]] = []
@@ -268,11 +271,10 @@ def _read_frame(sock: socket.socket) -> tuple[int, int, int, bytes]:
     stream_id = struct.unpack(">I", head[5:9])[0] & 0x7FFFFFFF
     if length > MAX_FRAME:
         raise ValueError("frame exceeds SETTINGS_MAX_FRAME_SIZE")
-    # r8 (ADVICE): PADDED/PRIORITY are legal for any peer without
-    # negotiation, but this subset does not parse the extra octets —
-    # feeding them into HPACK or the message body would be a SILENT
-    # mis-parse, so reject loudly like the other unsupported features
-    # (Huffman used to be, CONTINUATION still is).
+    # PADDED/PRIORITY are legal for any peer without negotiation, but
+    # this subset does not parse the extra octets — feeding them into
+    # HPACK or the message body would be a SILENT mis-parse, so reject
+    # loudly like the other unsupported feature (CONTINUATION).
     if ftype in (F_DATA, F_HEADERS) and flags & FLAG_PADDED:
         raise ValueError("PADDED frames not supported by this subset")
     if ftype == F_HEADERS and flags & FLAG_PRIORITY:
@@ -284,11 +286,10 @@ INITIAL_WINDOW = 65535
 
 
 class _SendWindows:
-    """Sender-side flow-control accounting (RFC 7540 section 6.9 —
-    review fix: the first cut sent DATA without consulting the peer's
-    windows, a FLOW_CONTROL_ERROR against any conforming peer once a
-    body exceeded 65535 bytes). One per connection; per-stream windows
-    created on first use."""
+    """Sender-side flow-control accounting (RFC 7540 section 6.9): DATA
+    sent past the peer's windows is a FLOW_CONTROL_ERROR against any
+    conforming peer once a body exceeds 65535 bytes. One per connection;
+    per-stream windows created on first use."""
 
     def __init__(self) -> None:
         self.conn = INITIAL_WINDOW
@@ -310,20 +311,30 @@ class _SendWindows:
             )
 
 
+def _window_updates(sid: int, n: int) -> bytes:
+    """The connection and stream WINDOW_UPDATE pair crediting ``n``
+    received DATA octets, as one write."""
+    inc = struct.pack(">I", n)
+    return _frame(F_WINDOW, 0, 0, inc) + _frame(F_WINDOW, 0, sid, inc)
+
+
 def _pump_body(
     sock: socket.socket,
     sid: int,
     body: bytes,
     windows: _SendWindows,
+    out: bytearray,
     end_stream: bool,
 ) -> None:
-    """Send ``body`` as DATA frames WITHIN the peer's advertised
-    connection and stream windows; when blocked, read frames (control
-    frames and WINDOW_UPDATEs — the only traffic a synchronous unary
-    peer produces mid-body) until the window opens."""
+    """Append ``body`` to ``out`` as DATA frames WITHIN the peer's
+    advertised connection and stream windows; the caller writes ``out``.
+    When blocked, write ``out`` first — a peer that replenishes only
+    once its window is dry must see the frames that dried it — then
+    read frames (control frames and WINDOW_UPDATEs — the only traffic a
+    synchronous unary peer produces mid-body) until the window opens."""
     if not body:
         if end_stream:
-            sock.sendall(_frame(F_DATA, FLAG_END_STREAM, sid, b""))
+            out += _frame(F_DATA, FLAG_END_STREAM, sid, b"")
         return
     off = 0
     while off < len(body):
@@ -331,6 +342,8 @@ def _pump_body(
             MAX_FRAME, windows.conn, windows.stream(sid), len(body) - off
         )
         if allow <= 0:
+            sock.sendall(out)
+            out.clear()
             ftype, flags, stream_id, payload = _read_frame(sock)
             if ftype == F_WINDOW:
                 (inc,) = struct.unpack(">I", payload)
@@ -349,13 +362,8 @@ def _pump_body(
                 )
             continue
         last = end_stream and off + allow >= len(body)
-        sock.sendall(
-            _frame(
-                F_DATA,
-                FLAG_END_STREAM if last else 0,
-                sid,
-                body[off:off + allow],
-            )
+        out += _frame(
+            F_DATA, FLAG_END_STREAM if last else 0, sid, body[off:off + allow]
         )
         windows.consume(sid, allow)
         off += allow
@@ -387,13 +395,13 @@ class Http2GrpcClient:
 
     def __init__(self, host: str, port: int, authority: str | None = None):
         self._sock = socket.create_connection((host, port))
+        self._sock.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
         self._authority = authority or f"{host}:{port}"
         self._enc = HpackEncoder()
         self._dec = HpackDecoder()
         self._windows = _SendWindows()
         self._next_stream = 1
-        self._sock.sendall(PREFACE)
-        self._sock.sendall(_frame(F_SETTINGS, 0, 0, b""))
+        self._sock.sendall(PREFACE + _frame(F_SETTINGS, 0, 0, b""))
         # server preface: its SETTINGS, which we ACK; it ACKs ours.
         ftype, flags, _, _ = _read_frame(self._sock)
         if ftype != F_SETTINGS or flags & FLAG_ACK:
@@ -418,12 +426,14 @@ class Http2GrpcClient:
             ("content-type", "application/grpc"),
             ("te", "trailers"),
         ]
-        self._sock.sendall(
+        out = bytearray(
             _frame(F_HEADERS, FLAG_END_HEADERS, sid, self._enc.encode(headers))
         )
         _pump_body(
-            self._sock, sid, grpc_wrap(request), self._windows, end_stream=True
+            self._sock, sid, grpc_wrap(request), self._windows, out,
+            end_stream=True,
         )
+        self._sock.sendall(out)
 
         body = bytearray()
         status = grpc_status = None
@@ -457,10 +467,8 @@ class Http2GrpcClient:
             elif ftype == F_DATA:
                 body += payload
                 if payload:  # replenish flow-control windows
-                    inc = struct.pack(">I", len(payload))
                     try:
-                        self._sock.sendall(_frame(F_WINDOW, 0, 0, inc))
-                        self._sock.sendall(_frame(F_WINDOW, 0, sid, inc))
+                        self._sock.sendall(_window_updates(sid, len(payload)))
                     except OSError:
                         # a peer that half-closed after its final
                         # frames no longer needs the credit
@@ -519,6 +527,7 @@ class Http2GrpcServer:
 
     def _connection(self, conn: socket.socket) -> None:
         try:
+            conn.setsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY, 1)
             if _recv_exact(conn, len(PREFACE)) != PREFACE:
                 conn.close()
                 return
@@ -556,9 +565,7 @@ class Http2GrpcServer:
                         continue
                     st["body"] += payload
                     if payload:
-                        inc = struct.pack(">I", len(payload))
-                        conn.sendall(_frame(F_WINDOW, 0, 0, inc))
-                        conn.sendall(_frame(F_WINDOW, 0, sid, inc))
+                        conn.sendall(_window_updates(sid, len(payload)))
                     if flags & FLAG_END_STREAM:
                         self._respond(conn, enc, windows, sid, streams.pop(sid))
         except (ConnectionError, ValueError, OSError):
@@ -571,41 +578,27 @@ class Http2GrpcServer:
     ) -> None:
         handler = self.handlers.get(st["path"])
         resp_headers = [(":status", "200"), ("content-type", "application/grpc")]
-        if handler is None:
-            conn.sendall(
-                _frame(F_HEADERS, FLAG_END_HEADERS, sid, enc.encode(resp_headers))
-            )
-            trailers = [("grpc-status", "12"), ("grpc-message", "unimplemented")]
-            conn.sendall(
-                _frame(
-                    F_HEADERS,
-                    FLAG_END_HEADERS | FLAG_END_STREAM,
-                    sid,
-                    enc.encode(trailers),
-                )
-            )
-            return
-        try:
-            reply = handler(grpc_unwrap(bytes(st["body"])))
-            status, msg = "0", ""
-        except ValueError as e:
-            reply, status, msg = b"", "13", str(e)
-        conn.sendall(
+        out = bytearray(
             _frame(F_HEADERS, FLAG_END_HEADERS, sid, enc.encode(resp_headers))
         )
+        if handler is None:
+            status, msg = "12", "unimplemented"
+        else:
+            try:
+                reply = handler(grpc_unwrap(bytes(st["body"])))
+                status, msg = "0", ""
+            except ValueError as e:
+                status, msg = "13", str(e)
         if status == "0":
             # gRPC responses end on the trailers HEADERS, not the last
             # DATA frame, hence end_stream=False
-            _pump_body(conn, sid, grpc_wrap(reply), windows, end_stream=False)
+            _pump_body(
+                conn, sid, grpc_wrap(reply), windows, out, end_stream=False
+            )
         trailers = [("grpc-status", status)]
         if msg:
             trailers.append(("grpc-message", msg))
-        conn.sendall(
-            _frame(
-                F_HEADERS,
-                FLAG_END_HEADERS | FLAG_END_STREAM,
-                sid,
-                enc.encode(trailers),
-            )
-        )
+        end = FLAG_END_HEADERS | FLAG_END_STREAM
+        out += _frame(F_HEADERS, end, sid, enc.encode(trailers))
+        conn.sendall(out)
 

@@ -1,19 +1,40 @@
-"""gRPC over raw-socket HTTP/2 (sources/http2grpc.py, r7): the wire
+"""gRPC over raw-socket HTTP/2 (sources/http2grpc.py): the wire
 protocol implemented from RFC 7540/7541 + the gRPC framing spec, with
-no grpcio anywhere. These tests pin HPACK both ways, the frame layer's
-flow control on >64 KB bodies, error trailers, and the REAL reference
-poll loop (FeedPoller) crossing an actual TCP connection."""
+no grpcio anywhere. These tests pin HPACK both ways, both ends' wire
+bytes, the frame layer's flow control on >64 KB bodies against strict
+peers on either side, error trailers, the hash-skip call's latency,
+and the REAL reference poll loop (FeedPoller) crossing an actual TCP
+connection."""
 
 from __future__ import annotations
+
+import socket
+import statistics
+import struct
+import threading
+import time
 
 import pytest
 
 from hephaestus_spark.sources.http2grpc import (
+    FLAG_ACK,
+    FLAG_END_HEADERS,
+    FLAG_END_STREAM,
+    F_DATA,
+    F_HEADERS,
+    F_SETTINGS,
+    F_WINDOW,
+    INITIAL_WINDOW,
+    PREFACE,
     HpackDecoder,
     HpackEncoder,
     Http2GrpcClient,
+    Http2GrpcServer,
+    _frame,
     _int_decode,
     _int_encode,
+    _read_frame,
+    _recv_exact,
     grpc_unwrap,
     grpc_wrap,
 )
@@ -305,29 +326,10 @@ def test_sender_respects_a_strict_window_peer():
     peer treats an overrun as FLOW_CONTROL_ERROR), and it replenishes
     LAZILY — only once the client has fully exhausted the window — so
     a 200 KB request forces the client to block on WINDOW_UPDATEs at
-    least twice. The pre-review sender blasted all frames immediately
-    and fails this peer on the fourth frame."""
-    import socket
-    import struct
-    import threading
-
-    from hephaestus_spark.sources.http2grpc import (
-        FLAG_ACK,
-        FLAG_END_HEADERS,
-        FLAG_END_STREAM,
-        F_DATA,
-        F_HEADERS,
-        F_PING,
-        F_SETTINGS,
-        F_WINDOW,
-        INITIAL_WINDOW,
-        PREFACE,
-        _frame,
-        _read_frame,
-        _recv_exact,
-        grpc_wrap,
-    )
-
+    least twice. A sender that ignores the windows fails this peer on
+    the fourth frame; one that blocks without writing the frames it
+    buffered starves it, and the socket timeouts turn that deadlock into
+    a failure."""
     lsock = socket.socket()
     lsock.bind(("127.0.0.1", 0))
     lsock.listen(1)
@@ -337,6 +339,7 @@ def test_sender_respects_a_strict_window_peer():
 
     def strict_server():
         conn, _ = lsock.accept()
+        conn.settimeout(10)
         try:
             assert _recv_exact(conn, len(PREFACE)) == PREFACE
             conn.sendall(_frame(F_SETTINGS, 0, 0, b""))
@@ -391,6 +394,7 @@ def test_sender_respects_a_strict_window_peer():
     th = threading.Thread(target=strict_server, daemon=True)
     th.start()
     client = Http2GrpcClient("127.0.0.1", port)
+    client._sock.settimeout(10)
     try:
         request = bytes(200_000)
         reply = client.call("/x/Echo", request)
@@ -400,3 +404,221 @@ def test_sender_respects_a_strict_window_peer():
     finally:
         client.close()
         lsock.close()
+
+
+# --------------------------------------------------------------------------
+# golden wire bytes: every frame both ends write, pinned octet for octet
+# --------------------------------------------------------------------------
+
+# Http2GrpcClient(authority="golden").call("/x/Echo", b"abc"), one frame a
+# line, everything after the connection preface up to the GOAWAY of close().
+_GOLDEN_REQUEST = bytes.fromhex(
+    # HEADERS (END_HEADERS): POST http /x/Echo golden application/grpc te
+    "00002a010400000001"
+    "8386048663cb180939ff018598f4485abf0f108b1d75d0620d263d4c4d6564"
+    "00027465864d833505b11f"
+    # DATA (END_STREAM): grpc_wrap(b"abc")
+    "0000080001000000010000000003616263"
+)
+_GOLDEN_CLIENT = (
+    bytes.fromhex(
+        "000000040000000000"  # SETTINGS
+        "000000040100000000"  # SETTINGS ACK
+    )
+    + _GOLDEN_REQUEST
+    + bytes.fromhex(
+        "00000408000000000000000008"  # WINDOW_UPDATE connection +8
+        "00000408000000000100000008"  # WINDOW_UPDATE stream 1 +8
+        "0000080700000000000000000000000000"  # GOAWAY NO_ERROR
+    )
+)
+# Http2GrpcServer's bytes for preface + SETTINGS + _GOLDEN_REQUEST with a
+# handler that reverses its input, up to the trailers.
+_GOLDEN_SERVER = bytes.fromhex(
+    "000000040000000000"  # SETTINGS
+    "000000040100000000"  # SETTINGS ACK
+    "00000408000000000000000008"  # WINDOW_UPDATE connection +8
+    "00000408000000000100000008"  # WINDOW_UPDATE stream 1 +8
+    # HEADERS (END_HEADERS): :status 200, content-type application/grpc
+    "00000f010400000001880f108b1d75d0620d263d4c4d6564"
+    # DATA: grpc_wrap(b"cba")
+    "0000080000000000010000000003636261"
+    # HEADERS (END_HEADERS | END_STREAM): grpc-status 0
+    "00000c01050000000100889acac8b21234da8f0130"
+)
+
+
+class _Tap:
+    """Socket stand-in for ``_read_frame`` that keeps every octet read."""
+
+    def __init__(self, sock):
+        self.sock, self.seen = sock, bytearray()
+
+    def recv(self, n: int) -> bytes:
+        chunk = self.sock.recv(n)
+        self.seen += chunk
+        return chunk
+
+
+def test_client_wire_bytes_are_golden():
+    """The HPACK encoder uses the static table only, so the client's
+    frames are a pure function of the call: pinning them shows that
+    how the client groups its writes never changes what it writes."""
+    lsock = socket.socket()
+    lsock.bind(("127.0.0.1", 0))
+    lsock.listen(1)
+    seen: list = []
+
+    def recording_server():
+        conn, _ = lsock.accept()
+        conn.settimeout(10)
+        tap = _Tap(conn)
+        try:
+            assert _recv_exact(conn, len(PREFACE)) == PREFACE
+            conn.sendall(_frame(F_SETTINGS, 0, 0, b""))
+            while True:
+                try:
+                    ftype, flags, sid, _ = _read_frame(tap)
+                except ConnectionError:  # the client closed
+                    break
+                if ftype == F_SETTINGS and not flags & FLAG_ACK:
+                    conn.sendall(_frame(F_SETTINGS, FLAG_ACK, 0, b""))
+                if ftype == F_DATA and flags & FLAG_END_STREAM:
+                    enc = HpackEncoder()
+                    conn.sendall(
+                        _frame(
+                            F_HEADERS,
+                            FLAG_END_HEADERS,
+                            sid,
+                            enc.encode(
+                                [(":status", "200"),
+                                 ("content-type", "application/grpc")]
+                            ),
+                        )
+                        + _frame(F_DATA, 0, sid, grpc_wrap(b"cba"))
+                        + _frame(
+                            F_HEADERS,
+                            FLAG_END_HEADERS | FLAG_END_STREAM,
+                            sid,
+                            enc.encode([("grpc-status", "0")]),
+                        )
+                    )
+            seen.append(bytes(tap.seen))
+        finally:
+            conn.close()
+
+    th = threading.Thread(target=recording_server, daemon=True)
+    th.start()
+    try:
+        client = Http2GrpcClient(
+            "127.0.0.1", lsock.getsockname()[1], authority="golden"
+        )
+        assert client.call("/x/Echo", b"abc") == b"cba"
+        client.close()
+        th.join(timeout=10)
+    finally:
+        lsock.close()
+    assert seen == [_GOLDEN_CLIENT]
+
+
+def test_server_wire_bytes_are_golden():
+    server = Http2GrpcServer({"/x/Echo": lambda req: req[::-1]}).start()
+    sock = socket.create_connection(("127.0.0.1", server.port), timeout=10)
+    tap = _Tap(sock)
+    try:
+        sock.sendall(PREFACE + _frame(F_SETTINGS, 0, 0, b"") + _GOLDEN_REQUEST)
+        while True:
+            ftype, flags, _, _ = _read_frame(tap)
+            if ftype == F_HEADERS and flags & FLAG_END_STREAM:
+                break
+    finally:
+        sock.close()
+        server.stop()
+    assert bytes(tap.seen) == _GOLDEN_SERVER
+
+
+def test_hash_skip_rpc_is_off_the_delayed_ack_floor(socket_pair):
+    """Both ends set TCP_NODELAY and write each frame group at once. An
+    end that writes two small frames back to back with Nagle's algorithm
+    on holds the second until the peer's delayed ACK (~40 ms on Linux):
+    such a transport reads ~88 ms per hash-skip call, this one a few
+    ms. The bound is half of one delayed ACK."""
+    upstream, transport = socket_pair
+    sock = transport._client._sock
+    assert sock.getsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY)
+    known = transport.get_employees(None).new_hash
+    elapsed = []
+    for _ in range(20):
+        t0 = time.perf_counter()
+        assert transport.get_employees(known).payloads == []
+        elapsed.append(time.perf_counter() - t0)
+    assert statistics.median(elapsed) < 0.020, elapsed
+
+
+def test_server_sender_respects_a_strict_window_client():
+    """The mirror of the strict-window server below: a raw client that
+    checks every reply DATA frame against its connection and stream
+    windows and replenishes only when one is dry. A server that buffered
+    its frames and then blocked for a WINDOW_UPDATE without writing them
+    would starve this client; the socket timeout turns that deadlock
+    into a failure."""
+    from hephaestus_spark.sources.grpc_source import (
+        EMPLOYEES_REQUEST_FIELDS,
+        FEED_RESPONSE_FIELDS,
+        METHOD_EMPLOYEES,
+    )
+
+    upstream = InProcessTransport(
+        employee_payloads=[bytes([i % 251]) * 250 for i in range(1000)]
+    )
+    server = serve_transport(upstream)
+    sock = socket.create_connection(("127.0.0.1", server.port), timeout=10)
+    headers = HpackEncoder().encode(
+        [(":method", "POST"), (":scheme", "http"), (":path", METHOD_EMPLOYEES),
+         (":authority", "strict"), ("content-type", "application/grpc"),
+         ("te", "trailers")]
+    )
+    request = pc.encode_message({"known_hash": ""}, EMPLOYEES_REQUEST_FIELDS)
+    violations: list = []
+    starved = 0
+    body = bytearray()
+    trailers = None
+    try:
+        sock.sendall(
+            PREFACE
+            + _frame(F_SETTINGS, 0, 0, b"")
+            + _frame(F_HEADERS, FLAG_END_HEADERS, 1, headers)
+            + _frame(F_DATA, FLAG_END_STREAM, 1, grpc_wrap(request))
+        )
+        dec = HpackDecoder()
+        cw = sw = INITIAL_WINDOW
+        while trailers is None:
+            ftype, flags, sid, payload = _read_frame(sock)
+            if ftype == F_SETTINGS and not flags & FLAG_ACK:
+                sock.sendall(_frame(F_SETTINGS, FLAG_ACK, 0, b""))
+            elif ftype == F_HEADERS:
+                headers_seen = dict(dec.decode(payload))
+                if flags & FLAG_END_STREAM:
+                    trailers = headers_seen
+            elif ftype == F_DATA:
+                if len(payload) > cw or len(payload) > sw:
+                    violations.append((len(payload), cw, sw))
+                cw -= len(payload)
+                sw -= len(payload)
+                body += payload
+                if cw <= 0 or sw <= 0:  # replenish only when dry
+                    starved += 1
+                    inc = struct.pack(">I", INITIAL_WINDOW)
+                    sock.sendall(
+                        _frame(F_WINDOW, 0, 0, inc)
+                        + _frame(F_WINDOW, 0, sid, inc)
+                    )
+                    cw = sw = INITIAL_WINDOW
+    finally:
+        sock.close()
+        server.stop()
+    assert trailers == {"grpc-status": "0"}
+    assert not violations, violations[:3]
+    assert len(body) >= 200_000 and starved >= 3
+    reply = pc.decode_message(grpc_unwrap(bytes(body)), FEED_RESPONSE_FIELDS)
+    assert reply["payloads"] == upstream.employee_payloads
