@@ -283,8 +283,9 @@ class TxAnnIndex:
         self._commit_model(spark, centroids, cbs, version=version)
         # full re-encode lands through the same MERGE the SCD path
         # uses: unchanged rows rewrite nothing beyond their files
-        # compare_cols also carry the raw vector: txlog.merge keeps
-        # exactly key+compare columns, and the rerank path needs it
+        # compare_cols also carry the raw vector: txlog.merge writes
+        # only key+compare columns into the rows it inserts or updates,
+        # and the rerank path needs it
         self.codes.merge(
             spark,
             self._encode(corpus, centroids, cbs),

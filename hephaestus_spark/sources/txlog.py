@@ -74,8 +74,6 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hephaestus_spark.operators.merge import scd1_merge
-
 
 class CommitConflict(Exception):
     """Another writer committed the version this transaction targeted
@@ -229,17 +227,15 @@ def _sql_literal(v) -> str:
     return "'" + str(v).replace("'", "''") + "'"
 
 
-def _with_partition_residual(where: str, partitions: dict | None) -> str:
-    """Row-level enforcement of the DML ``partitions`` option (r12,
-    ADVICE r11): the documented contract is exact — effective predicate
-    = ``where AND col IN (values)`` — but it was previously applied only
-    at FILE granularity via zone overlap, silently over-deleting /
-    over-updating when the column is not a declared partition column
-    (every ``where``-matching row in any zone-overlapping file was
-    rewritten). ANDing the IN-list into the row predicate makes the
-    contract hold for arbitrary columns; for true partition columns
-    (file-constant values) the residual is a per-file constant that
-    Catalyst folds, so the original zero-extra-I/O behavior is kept."""
+def _with_partition_residual(
+    where: str, partitions: dict | None, qual: str = ""
+) -> str:
+    """``where AND col IN (values)`` for each ``partitions`` column (a
+    column qualified by ``qual``, e.g. ``"t."``): the row-level form of
+    a DML call's partition scope, so the contract holds for any column,
+    not only declared partition columns. For a true partition column
+    the residual is constant per file and Catalyst folds it. An empty
+    value list matches no row."""
     if not partitions:
         return where
     clauses = []
@@ -247,7 +243,7 @@ def _with_partition_residual(where: str, partitions: dict | None) -> str:
         lits = [_sql_literal(v) for v in vals if v is not None]
         if not lits:  # empty IN-list matches no row
             return "FALSE"
-        clauses.append(f"`{col}` IN ({', '.join(lits)})")
+        clauses.append(f"{qual}`{col}` IN ({', '.join(lits)})")
     return f"({where}) AND " + " AND ".join(clauses)
 
 
@@ -1703,10 +1699,10 @@ class TxTable:
         the mapping doesn't know (e.g. ``_metadata`` provenance or a
         widening append without a rename since) pass through by
         name."""
-        if not meta:
+        rev = {p: l for l, p in ((meta or {}).get("mapping") or {}).items()}
+        dropped = set((meta or {}).get("dropped") or [])
+        if not rev and not dropped:
             return df
-        rev = {p: l for l, p in (meta.get("mapping") or {}).items()}
-        dropped = set(meta.get("dropped") or [])
         return df.select(
             *[F.col(c).alias(rev.get(c, c)) for c in df.columns if c not in dropped]
         )
@@ -4174,10 +4170,10 @@ class TxTable:
         """The row-level changes implied by replacing ``old`` with
         ``new`` under a key-matched merge, as one frame with a
         ``_change_type`` column (update_preimage / update_postimage /
-        insert / delete; value-identical keys emit nothing) — shared
-        by the CDC sidecar writer (:meth:`merge`) and the change
-        feed's reconstruction path so the two are definitionally
-        identical. Null-safe key join mirrors scd1_merge's own."""
+        insert / delete; value-identical keys emit nothing). The change
+        feed serves a ``merge`` commit written without a CDC sidecar
+        with it, from the commit's recorded key. The key join is
+        null-safe."""
         cols = new.columns
         o = old.select(
             F.col(key).alias("_k"),
@@ -4220,6 +4216,241 @@ class TxTable:
             .unionByName(part(F.col("_n").isNull(), "_o", "delete"))
         )
 
+    def _cow_dml(
+        self,
+        spark: SparkSession,
+        op: str,
+        info,
+        probes,
+        *,
+        source: DataFrame | None = None,
+        on: str | None = None,
+        matched: list = (),
+        insert: tuple | None = None,
+        target: list = (),
+        evolve: bool = False,
+        disjoint: bool = True,
+        create: bool = False,
+    ) -> tuple[int, dict[str, int], int]:
+        """The one copy-on-write DML engine: ``merge``, ``merge_into``,
+        ``update`` and ``delete`` are clause sets over it. Returns
+        (version, metrics, live files at the base version); metrics
+        has Delta's operationMetrics shape (rows_updated /
+        rows_deleted / rows_inserted / files_rewritten).
+
+        The clause set:
+
+        - ``probes``: the planner's ``{column: [probe, ...]}``, or a
+          callable ``(meta, pinned source) -> probes`` for probes that
+          depend on the table's layout or on the staged rows. Only the
+          files they keep are read; every other file stays untouched.
+        - ``source`` and ``on``: the staged rows, aliased ``s``, and
+          the join condition over ``t`` (target) and ``s``. The source
+          is pinned once with ``localCheckpoint``, so the probes, the
+          classification, the rewrite and the change rows all see the
+          same rows.
+        - ``matched``: ordered ``(condition, assignments)`` clauses for
+          target rows that match a source row; ``assignments`` is
+          ``{column: SQL expr}`` for an update and None for a delete.
+          The first clause whose condition holds wins, and a condition
+          that evaluates to NULL does not hold.
+        - ``insert``: ``(condition, assignments)`` for source rows that
+          match no target row; unassigned columns insert as NULL.
+        - ``target``: clauses of the same form for target rows that no
+          source row matches (Delta's NOT MATCHED BY SOURCE), or for
+          every target row when there is no source (UPDATE, DELETE).
+
+        ``evolve`` widens the table by the insert columns it does not
+        have yet (existing rows read them as NULL, a type change
+        refuses); ``create`` lets the inserts create a table with no
+        version yet. ``info(metrics)`` is the commit's operation info.
+        With ``disjoint`` the commit rebases over interleaved appends
+        the probes prove disjoint (``_commit_snapshot_dependent``);
+        without it any racer conflicts.
+
+        One pass over the joined candidate rows yields the rewritten
+        files (those with a matched row when matched clauses exist,
+        plus those where a target clause applies), the row counts and
+        the multiple-match check. A target row matching more than one
+        source row refuses when matched clauses exist (Delta's
+        nondeterministic-merge error). Only the hit files are
+        rewritten; inserts are staged beside them. With
+        ``change_data_feed`` set, the commit lands update_preimage /
+        update_postimage / delete / insert rows as a CDC sidecar.
+        Nothing to do commits nothing and returns the base version."""
+        base, meta, plan, scan = self._planner(spark)
+        if base < 0 and not create:
+            raise ValueError(f"table {self.path} is empty")
+        s = None
+        if source is not None:
+            clash = sorted({"_f", "_p", "_s_hit"} & set(source.columns))
+            if clash:
+                raise ValueError(
+                    f"source columns {clash} collide with merge bookkeeping "
+                    "names; rename them first"
+                )
+            s = source.withColumn("_s_hit", F.lit(1)).localCheckpoint().alias("s")
+        if callable(probes):
+            probes = probes(meta, s)
+        cands, n_live = plan(probes)
+        metrics = dict.fromkeys(
+            ("rows_updated", "rows_deleted", "rows_inserted", "files_rewritten"), 0
+        )
+        if not cands and s is None:
+            return base, metrics, n_live
+        if cands:
+            t = scan(cands, keep_keys=True)
+        else:  # an empty live snapshot (or none yet): a zero-row target
+            from pyspark.sql.types import StructType
+
+            schema = (meta or {}).get("schema")
+            empty = StructType.fromJson(json.loads(schema)) if schema else StructType()
+            t = self._project_logical(spark.createDataFrame([], empty), meta).select(
+                "*",
+                F.lit(None).cast("string").alias("_f"),
+                F.lit(None).cast("long").alias("_p"),
+            )
+        ttypes = {
+            f.name: f.dataType for f in t.schema.fields if f.name not in ("_f", "_p")
+        }
+        ins_cond, ins_map = insert or (None, {})
+        pad = []
+        if evolve or base < 0:
+            staged = s.select(*[F.expr(e).alias(c) for c, e in ins_map.items()])
+            for f in staged.schema.fields:
+                if f.name not in ttypes:
+                    pad.append(F.lit(None).cast(f.dataType).alias(f.name))
+                elif ttypes[f.name] != f.dataType:
+                    raise ValueError(
+                        f"column {f.name!r} is {ttypes[f.name]} in table "
+                        f"{self.path}, staged as {f.dataType}; type changes "
+                        "need an explicit migration"
+                    )
+                ttypes[f.name] = f.dataType
+        tcols = list(ttypes)
+        updates = [a for _c, a in (*matched, *target) if a is not None]
+        for label, a in [("INSERT", ins_map)] + [("UPDATE SET", a) for a in updates]:
+            unknown = sorted(set(a) - set(tcols))
+            if unknown:
+                raise ValueError(
+                    f"{label} references unknown column(s) {unknown}; table "
+                    f"columns: {tcols} (merge adds columns only with "
+                    "schema_evolution=True)"
+                )
+        ident = sorted(set().union(*updates) & set((meta or {}).get("identity") or {}))
+        if ident:  # Delta's rule: identity values are immutable
+            raise ValueError(
+                f"cannot UPDATE identity column(s) {ident} — values are "
+                "GENERATED ALWAYS"
+            )
+        how = "full_outer" if insert else "left_outer"
+
+        def joined(frame: DataFrame) -> DataFrame:
+            frame = frame.select("*", *pad).alias("t")
+            return frame if s is None else frame.join(s, F.expr(on), how)
+
+        j = joined(t)
+        false = F.lit(False)
+        if s is None:
+            m, t_only, s_only = false, F.lit(True), false
+        else:
+            m = F.col("t._f").isNotNull() & F.col("s._s_hit").isNotNull()
+            t_only, s_only = F.col("s._s_hit").isNull(), F.col("t._f").isNull()
+
+        def holds(cond):  # a NULL clause condition does not hold
+            return F.lit(True) if cond is None else F.coalesce(F.expr(cond), false)
+
+        clauses = [(m, c, a) for c, a in matched] + [(t_only, c, a) for c, a in target]
+        pick = F.lit(None).cast("int")  # the index of the clause that applies
+        for i, (side, c, _a) in reversed(list(enumerate(clauses))):
+            pick = F.when(side & holds(c), i).otherwise(pick)
+        gone = [i for i, (_s, _c, a) in enumerate(clauses) if a is None]
+        kept = [i for i in range(len(clauses)) if i not in gone]
+        upd = F.coalesce(pick.isin(kept), false)
+        dele = F.coalesce(pick.isin(gone), false)
+        ins = s_only & holds(ins_cond) if insert else false
+        hit = (m & F.lit(bool(matched))) | pick.isNotNull()
+        aggs = [
+            F.collect_set(F.when(hit, F.col("t._f"))),
+            F.count(F.when(upd, 1)),
+            F.count(F.when(dele, 1)),
+            F.count(F.when(ins, 1)),
+        ]
+        if matched:  # matched pairs against matched target rows
+            aggs += [
+                F.count(F.when(m, 1)),
+                F.size(F.collect_set(F.when(m, F.struct("t._f", "t._p")))),
+            ]
+        row = j.agg(*aggs).first()
+        if matched and row[4] != row[5]:
+            raise ValueError(
+                f"{op}: a target row matches more than one source row — the "
+                "update/delete outcome would be nondeterministic (Delta's "
+                "multiple-matches error); aggregate the source first"
+            )
+        base2rel = self._base2rel(cands)
+        hits = sorted(base2rel[b] for b in row[0])
+        metrics.update(
+            rows_updated=row[1], rows_deleted=row[2], rows_inserted=row[3],
+            files_rewritten=len(hits),
+        )
+        if not hits and not row[3]:
+            return base, metrics, n_live
+        # rewrite only the hit files; an insert clause without matched
+        # clauses must still anti-join every candidate
+        narrow = 0 < len(hits) < len(cands) and (matched or not insert)
+        r = joined(scan(hits, keep_keys=True)) if narrow else j
+
+        def value(c: str):
+            arms = [
+                (pick == i, a[c])
+                for i, (_s, _c, a) in enumerate(clauses)
+                if a and c in a
+            ]
+            if insert:
+                arms.insert(0, (ins, ins_map.get(c, "NULL")))
+            v = F.col(f"t.`{c}`")
+            for k, e in reversed(arms):
+                v = F.when(k, F.expr(e)).otherwise(v)
+            return v.cast(ttypes[c]).alias(c)
+
+        post = [value(c) for c in tcols]
+        out = r.filter((F.col("t._f").isin(list(row[0])) & ~dele) | ins).select(*post)
+        names = self._stage(out, meta=meta)
+        if insert or updates:  # a delete only keeps validated rows
+            self._enforce_constraints(names, meta, spark)
+        actions = self._add_actions(names, self._partition_dtypes(meta)) + [
+            {"remove": f} for f in hits
+        ]
+        if pad:  # the widened schema lands in the same commit
+            fields = self._to_physical(out.limit(0), meta).schema.fields
+            widened = self._widened_meta(meta or {}, {f.name: f for f in fields})
+            if widened:
+                actions.append({"meta": widened})
+        if (meta or {}).get("change_data_feed"):
+            pre = [F.col(f"t.`{c}`").alias(c) for c in tcols]
+
+            def image(cols, ctype):
+                return F.struct(*cols, F.lit(ctype).alias("_change_type"))
+
+            both = [image(pre, "update_preimage"), image(post, "update_postimage")]
+            change = (
+                F.when(upd, F.array(*both))
+                .when(dele, F.array(image(pre, "delete")))
+                .when(ins, F.array(image(post, "insert")))
+            )
+            cdc = r.select(F.explode(change).alias("c")).select("c.*")
+            actions += [{"cdc": n} for n in self._stage(cdc, pcols=None, meta=meta)]
+        v = self._commit_snapshot_dependent(
+            base,
+            op,
+            actions,
+            info=info(metrics),
+            disjoint=self._disjoint(probes, meta) if disjoint else None,
+            base_meta=meta,
+        )
+        return v, metrics, n_live
+
     def merge(
         self,
         spark: SparkSession,
@@ -4230,220 +4461,90 @@ class TxTable:
         prune_on_partitions: bool = False,
         schema_evolution: bool = False,
     ) -> int:
-        """Copy-on-write SCD-1 MERGE: read the current snapshot, apply
-        the set-wise merge (operators/merge.py — the same null-safe
-        insert/update/keep logic the JDBC sink ships), write the result
-        as new files, commit (add new, remove old). Raises
-        CommitConflict if another writer lands first — the merge result
-        depends on the snapshot read, so the caller must re-run on the
-        new snapshot rather than blindly retry.
+        """Copy-on-write SCD-1 MERGE — the set-wise twin of the
+        reference's ``INSERT … ON CONFLICT`` upsert, as a clause set
+        over :meth:`_cow_dml`: ``t.key = s.key``, a matched update of
+        ``compare_cols`` when any of them differs null-safely, and an
+        insert of every other staged row. Returns the new version.
+        Target columns outside ``key``/``compare_cols`` keep their
+        values on updated rows and are NULL on inserted ones.
 
-        ``prune_on_key=True`` is the at-scale path the full rewrite
-        grows into: files whose [min, max] zone for a NUMERIC merge key
-        cannot contain any staged key are left untouched — neither read
-        nor rewritten — and only the overlapping files join the merge.
-        A daily delta against a key-clustered 100 TB table then
-        rewrites a few files instead of all of them. Correctness does
-        not depend on the clustering (a staged key outside every kept
-        file's zone is an insert into the NEW files; rows in untouched
-        files cannot match any staged key by the zone bound) — only
-        the pruning RATE does. Output is identical to the full rewrite
-        (tests/test_txlog.py asserts it).
+        - Staged rows with a NULL key are ignored (a NULL key matches
+          nothing, so it can neither update nor insert).
+        - A staged batch that repeats a key matching an existing row
+          refuses with the multiple-matches error; a repeated NEW key
+          inserts every copy.
+        - Only files holding a staged key are rewritten; inserts land
+          as new files. A batch that changes nothing it can see — an
+          empty batch, or only NULL keys — commits nothing and returns
+          the base version.
 
-        ``prune_on_partitions=True`` is the
-        partitioned-table twin: the staged delta's DISTINCT partition
-        values (driver-bounded by the delta's partition cardinality —
-        a daily backfill is one value) select candidate files by their
-        committed partitionValues BEFORE any zone-map check, so a
-        partition-disjoint merge never examines the other partitions'
-        file metadata, let alone their data. Semantics follow Delta's
-        recommended ON-clause partition predicate: the merge condition
-        becomes ``key match AND partition IN (staged partitions)`` —
-        a matching key living OUTSIDE the staged partitions is treated
-        as absent (the staged row inserts into its own partition).
-        That is the intended contract for partition-local keys (the
-        daily-feed shape); when keys can move between partitions,
-        leave it off and pay the full-condition merge. Composes with
-        ``prune_on_key`` (partitions first, key zones within).
+        ``prune_on_key=True`` reads only the files whose [min, max]
+        zone for ``key`` overlaps the staged key range. Correctness does not depend on the clustering:
+        a row in a skipped file cannot hold a staged key, so the
+        output is the full merge's; only the pruning rate does.
 
-        ``schema_evolution=True`` (Delta's ``withSchemaEvolution``
-        merge, the standard ingest path for
-        evolving upstreams): ``compare_cols`` naming columns the table
-        does not have yet WIDEN it in the same commit — existing rows
-        read the new columns as NULL (the snapshot side is padded with
-        typed NULL literals before the set-wise merge, so no data file
-        is rewritten for the widening itself), staged rows carry their
-        values, and the commit publishes the widened schema exactly
-        like a widening append (``_widened_meta`` — type changes still
-        refuse loudly). Without the flag, a new source column raises a
-        clear error instead of an opaque AnalysisException."""
-        cols = [key] + compare_cols
-        probes: dict[str, list] = {}  # the read predicate
-        new_cols: list[str] = []  # columns the merge adds
-        base_version, meta0, plan, scan = self._planner(spark)
-        pcols_now = self._pcols_logical(meta0)
-        # merge rewrites whole files through _stage's auto partitionBy,
-        # so the projection must carry every partition column or the
-        # write fails deep inside Spark with an opaque AnalysisException
-        missing_pc = [c for c in pcols_now if c not in cols]
-        if missing_pc:
-            raise ValueError(
-                f"merge on {self.path} (partitioned by "
-                f"{pcols_now}) requires partition columns "
-                f"{missing_pc} in key/compare_cols — the rewrite must "
-                "carry them to place rows in their partitions"
-            )
-        if base_version < 0:
-            merged = staged.select(*cols)
-            old_files: list[str] = []
-        else:
-            if (meta0 or {}).get("schema"):
-                # the LOG owns the schema: logical column names/types
-                # without touching any data or the driver fold
-                from pyspark.sql.types import StructType as _ST
+        ``prune_on_partitions=True`` reads only the files of the
+        staged batch's partition values (one driver collect of its
+        DISTINCT partition values). This is Delta's ON-clause
+        partition predicate: a matching key living OUTSIDE the staged
+        partitions is treated as absent, and the staged row inserts
+        into its own partition — the contract for partition-local keys
+        (the daily-feed shape). Composes with ``prune_on_key``. A
+        partitioned table needs its partition columns among
+        ``key``/``compare_cols``.
 
-                rev = {
-                    p: l
-                    for l, p in ((meta0 or {}).get("mapping") or {}).items()
-                }
-                ctypes = {
-                    rev.get(f.name, f.name): f.dataType
-                    for f in _ST.fromJson(
-                        json.loads(meta0["schema"])
-                    ).fields
-                }
-            else:  # untracked (legacy/young) table: one schema read
-                ctypes = {
-                    f.name: f.dataType
-                    for f in self.read(spark, version=base_version)
-                    .schema.fields
-                }
-            have = set(ctypes)
-            new_cols = [c for c in cols if c not in have]
-            if new_cols and not schema_evolution:
+        With either pruning option the commit rebases over interleaved
+        blind appends wholly outside the pruned read (a daily-delta
+        merge lands under live ingest); without one, or against any
+        other racer, it raises ``CommitConflict`` and the caller
+        re-runs the merge on the new snapshot.
+
+        ``schema_evolution=True`` (Delta's ``withSchemaEvolution``):
+        ``compare_cols`` naming columns the table lacks WIDEN it in the
+        same commit — existing rows read them as NULL, staged rows
+        carry their values, type changes refuse. The widening rides
+        the data commit, so a batch that commits nothing (e.g. an
+        empty one) widens nothing. Without the flag a new column
+        refuses. Merging into a path with no table creates it.
+
+        The commit records ``{"key", "compare_cols"}`` so
+        ``read_changes`` can reconstruct the row changes of a merge
+        written without a change-data sidecar."""
+        cols = [key] + list(compare_cols)
+
+        def probes(meta: dict | None, src: DataFrame) -> dict:
+            pcols = self._pcols_logical(meta)
+            missing = [c for c in pcols if c not in cols]
+            if missing:
                 raise ValueError(
-                    f"merge on {self.path}: source columns {new_cols} do "
-                    "not exist in the table; pass schema_evolution=True "
-                    "to widen it (existing rows read them as NULL)"
+                    f"merge on {self.path} (partitioned by {pcols}) requires "
+                    f"partition columns {missing} in key/compare_cols — the "
+                    "inserts must carry them to place rows in their partitions"
                 )
-            if schema_evolution:
-                # evolution widens, it never mutates: an existing
-                # column arriving with a different type refuses HERE
-                # (same contract as _widened_meta) instead of blowing
-                # up as a cast error deep inside the set-wise merge
-                for f in staged.select(*cols).schema.fields:
-                    if f.name in ctypes and ctypes[f.name] != f.dataType:
-                        raise ValueError(
-                            f"column {f.name!r} is {ctypes[f.name]} in "
-                            f"table {self.path}, staged as {f.dataType}; "
-                            "type changes need an explicit migration"
-                        )
+            out: dict[str, list] = {}
             if prune_on_partitions:
-                # files in the NULL partition carry no zone entry for
-                # pc and are never skipped — safe either way
-                for pc in pcols_now:
-                    rows = staged.select(pc).distinct().collect()
-                    probes[pc] = [_probe(values=[r[0] for r in rows])]
+                for pc in pcols:
+                    vals = [r[0] for r in src.select(pc).distinct().collect()]
+                    out[pc] = [_probe(values=vals)]
             if prune_on_key:
-                bounds = staged.select(
-                    F.min(key).alias("lo"), F.max(key).alias("hi")
-                ).first()
-                probes.setdefault(key, []).append(
-                    _probe(bounds["lo"], bounds["hi"])
-                )
-            old_files = plan(probes)[0]
-            if old_files:
-                snap = scan(old_files)
-                if new_cols:
-                    # widen the snapshot side with typed NULLs — the
-                    # set-wise merge then treats every existing row as
-                    # "no value yet" for the evolved columns
-                    stypes = {
-                        f.name: f.dataType
-                        for f in staged.select(*cols).schema.fields
-                    }
-                    snap = snap.select(
-                        "*",
-                        *[
-                            F.lit(None).cast(stypes[c]).alias(c)
-                            for c in new_cols
-                        ],
-                    )
-                snapshot = snap.select(*cols)
-                merged = scd1_merge(
-                    snapshot, staged.select(*cols), key, compare_cols
-                ).drop("action")
-            else:
-                merged = staged.select(*cols)
-        names = self._stage(merged, meta=meta0)
-        # constraint gate: a merge's updates/inserts are new rows
-        # — validate the rewritten files (O(files touched), which the
-        # merge just wrote anyway) before anything commits
-        self._enforce_constraints(names, meta0, spark)
-        actions = self._add_actions(
-            names, self._partition_dtypes(meta0)
-        ) + [{"remove": f} for f in old_files]
-        meta_read = meta0  # what the CDC read-back resolves schema with
-        if new_cols:
-            # publish the widened schema in the SAME commit (exactly a
-            # widening append's contract); interleaved meta changes
-            # conflict the rebase below, so this union cannot go stale
-            staged_fields = {
-                f.name: f
-                for f in self._to_physical(
-                    merged.limit(0), meta0
-                ).schema.fields
-            }
-            widened = self._widened_meta(meta0 or {}, staged_fields)
-            if widened:  # the read-back must see the NEW columns
-                actions.append({"meta": widened})
-                meta_read = widened
-        if (meta0 or {}).get("change_data_feed") and old_files:
-            # CDC sidecar (Delta's _change_data design): compute
-            # the diff ONCE at write time from what was actually
-            # committed — old visible rows vs the freshly staged files
-            # (read back, so a nondeterministic staged source cannot
-            # desynchronize feed and table) — and land it as cdc
-            # parquets in the same commit. Sidecar volume ~ changed
-            # rows; the feed then serves this commit join-free.
-            new_df = self._project_logical(
-                self._reader(spark, meta_read).parquet(
-                    *[os.path.join(self.path, f) for f in names]
-                ),
-                meta_read,
-            )
-            old_df = scan(old_files)
-            if new_cols:  # the preimage reads evolved columns as NULL
-                ntypes = {f.name: f.dataType for f in new_df.schema.fields}
-                old_df = old_df.select(
-                    "*",
-                    *[
-                        F.lit(None).cast(ntypes[c]).alias(c)
-                        for c in new_cols
-                    ],
-                )
-            cdc_names = self._stage(
-                self._merge_cdc(old_df, new_df, key), pcols=None, meta=meta0
-            )
-            actions += [{"cdc": n} for n in cdc_names]
-        # OCC rebase predicate: with pruning declared, the merge
-        # read exactly {files overlapping staged partitions/key range};
-        # an interleaved blind append landing entirely OUTSIDE that
-        # predicate cannot contain a staged key, so the merge result
-        # stands and the commit rebases to the new head instead of
-        # dying — a daily-delta merge lands under live streaming
-        # ingest. Without pruning the merge read everything: any
-        # concurrent row could collide with a staged key (duplicate
-        # keys after rewrite), so conflicts stay loud (Delta's
-        # ConcurrentAppendException).
-        return self._commit_snapshot_dependent(
-            base_version,
+                lo, hi = src.select(F.min(key), F.max(key)).first()
+                out.setdefault(key, []).append(_probe(lo, hi))
+            return out
+
+        differs = " OR ".join(f"NOT (t.`{c}` <=> s.`{c}`)" for c in compare_cols)
+        return self._cow_dml(
+            spark,
             "merge",
-            actions,
-            info={"key": key, "compare_cols": list(compare_cols)},
-            disjoint=self._disjoint(probes, meta0),
-            base_meta=meta0,
-        )
+            lambda _m: {"key": key, "compare_cols": list(compare_cols)},
+            probes,
+            source=staged.select(*cols),
+            on=f"t.`{key}` = s.`{key}`",
+            matched=[(differs or "FALSE", {c: f"s.`{c}`" for c in compare_cols})],
+            insert=(f"s.`{key}` IS NOT NULL", {c: f"s.`{c}`" for c in cols}),
+            evolve=schema_evolution,
+            create=True,
+        )[0]
 
     def merge_into(
         self,
@@ -4463,8 +4564,8 @@ class TxTable:
         not_matched_by_source_delete_condition: str | None = None,
         scope_partitions: dict | None = None,
     ) -> tuple[int, dict[str, int]]:
-        """General MERGE INTO (r12 — Delta's full multi-clause merge
-        surface, beside the SCD-1 :meth:`merge`):
+        """General MERGE INTO (Delta's multi-clause merge surface), the
+        general caller of :meth:`_cow_dml`:
 
         - ``on``: arbitrary SQL join condition over the aliases ``t``
           (target) and ``s`` (source), e.g. ``"t.id = s.id AND s.op
@@ -4485,362 +4586,53 @@ class TxTable:
           ON-clause partition predicate made explicit: the effective
           condition becomes ``on AND t.col IN (values)`` (a matching
           key OUTSIDE the scope is treated as absent — the staged row
-          inserts), and the MATCHED-side classification scans only
-          zone-overlapping files, so a daily-delta merge classifies
-          one partition, not 100 TB. BY SOURCE clauses still examine
-          every file (their contract is table-wide) — omit them when
-          you want the scoped cost.
+          inserts), and only the scoped files are read, so a
+          daily-delta merge classifies one partition, not 100 TB. BY
+          SOURCE clauses still examine every file (their contract is
+          table-wide) — omit them when you want the scoped cost.
 
-        Copy-on-write and file-minimal: one pass classifies which
-        files contain matched rows (plus, when BY SOURCE clauses
-        exist, unmatched rows satisfying their conditions) — ONLY
-        those files rewrite; inserts stage as new files; untouched
-        files are neither read twice nor written. A target row
-        matching MORE THAN ONE source row refuses loudly when a
-        matched clause exists (Delta's nondeterministic-merge error).
-        The staged ``source`` is pinned with ``localCheckpoint`` so a
-        nondeterministic source cannot desynchronize the rewrite, the
-        metrics, and the CDC sidecar (the delta is the small side by
-        design). With ``change_data_feed`` set the commit lands
+        Only the files holding a matched row (when matched clauses
+        exist) or a row a BY SOURCE clause applies to are rewritten. A
+        condition that evaluates to NULL does not hold. A target row
+        matching MORE THAN ONE source row refuses when a matched
+        clause exists. With ``change_data_feed`` set the commit lands
         update_preimage/update_postimage/delete/insert sidecar rows;
-        without them a streaming CDF crossing this commit fails
-        loudly (a generic merge has no single key to reconstruct
-        from). Identity columns refuse assignment, exactly as UPDATE.
+        without them a change feed crossing this commit fails loudly
+        (a generic merge has no single key to reconstruct from).
+        Identity columns refuse assignment, exactly as UPDATE.
 
         Returns (version, metrics) with Delta's operationMetrics
         shape: rows_updated / rows_deleted / rows_inserted /
-        files_rewritten. No clause matching anything commits nothing
+        files_rewritten; the metrics also ride the commit info for
+        ``history()``. No clause matching anything commits nothing
         and returns (base_version, zeros)."""
-        base_version = self.latest_version()
-        if base_version < 0:
-            raise ValueError(f"table {self.path} is empty")
-        base_version, meta0, plan, scan = self._planner(spark)
-        candidates = plan({})[0]
-        m_candidates = candidates  # matched-side classification scope
-        if scope_partitions:
-            clauses = []
-            for col, vals in scope_partitions.items():
-                lits = [_sql_literal(v) for v in vals if v is not None]
-                clauses.append(
-                    f"t.`{col}` IN ({', '.join(lits)})" if lits else "FALSE"
-                )
-            on = f"({on}) AND " + " AND ".join(clauses)
-            m_candidates = plan(
-                _dml_probes(None, None, None, scope_partitions)
-            )[0]
-        bad_ident = sorted(
-            set(
-                list(matched_update or ())
-                + list(not_matched_by_source_update or ())
+        by_source = bool(not_matched_by_source_update) or not_matched_by_source_delete
+        on = _with_partition_residual(on, scope_partitions, "t.")
+        matched = [(matched_update_condition, matched_update)] if matched_update else []
+        if matched_delete:
+            matched.append((matched_delete_condition, None))
+        target = []
+        if not_matched_by_source_update:
+            target.append(
+                (not_matched_by_source_update_condition, not_matched_by_source_update)
             )
-            & set((meta0 or {}).get("identity") or {})
-        )
-        if bad_ident:
-            raise ValueError(
-                f"cannot UPDATE identity column(s) {bad_ident} — values "
-                "are GENERATED ALWAYS"
-            )
-        has_matched = bool(matched_update) or matched_delete
-        has_bs = bool(not_matched_by_source_update) or (
-            not_matched_by_source_delete
-        )
-        # with a partition scope and no table-wide BY SOURCE clause,
-        # EVERY classification join (matched semi, insert anti) may
-        # read only the scoped files: the injected residual falsifies
-        # the condition for out-of-scope rows anyway
-        class_candidates = (
-            m_candidates
-            if (scope_partitions and not has_bs)
-            else candidates
-        )
-        if class_candidates or candidates:
-            t_full = scan(class_candidates or candidates, keep_keys=True)
-            if not class_candidates:  # scoped to nothing: schema only
-                t_full = t_full.limit(0)
-        else:
-            # r13 (ADVICE r12 medium): empty LIVE snapshot (every row
-            # previously deleted/optimized away) — no files to scan,
-            # so build a zero-row target from the committed physical
-            # schema instead of crashing in _read_files. Downstream
-            # this makes every source row NOT MATCHED: the semi/anti
-            # hit scans are empty, hits == [], and only the insert
-            # clause (if any) lands rows — mirroring the base<0 guard.
-            from pyspark.sql.types import StructType
-
-            schema_json = (meta0 or {}).get("schema")
-            if not schema_json:
-                raise ValueError(
-                    f"table {self.path} has an empty live snapshot and "
-                    "no recorded schema; cannot plan MERGE"
-                )
-            t_full = (
-                self._project_logical(
-                    spark.createDataFrame(
-                        [], StructType.fromJson(json.loads(schema_json))
-                    ),
-                    meta0,
-                )
-                .withColumn("_f", F.lit(None).cast("string"))
-                .withColumn("_p", F.lit(None).cast("long"))
-            )
-        tcols = [c for c in t_full.columns if c not in ("_f", "_p")]
-        ttypes = {
-            f.name: f.dataType
-            for f in t_full.schema.fields
-            if f.name in set(tcols)
-        }
-        for m, label in (
-            (matched_update, "matched_update"),
-            (not_matched_by_source_update, "not_matched_by_source_update"),
-            (not_matched_insert, "not_matched_insert"),
-        ):
-            unknown = sorted(set(m or ()) - set(tcols))
-            if unknown:
-                raise ValueError(
-                    f"{label} references unknown target column(s) "
-                    f"{unknown}; table columns: {tcols}"
-                )
-        clash = sorted({"_f", "_p", "_s_hit"} & set(source.columns))
-        if clash:
-            raise ValueError(
-                f"source columns {clash} collide with merge bookkeeping "
-                "names; rename them first"
-            )
-        # pin the source ONCE (the small side): every downstream frame
-        # — hit scan, rewrite, metrics, CDC — sees identical rows
-        src = source.withColumn("_s_hit", F.lit(1)).localCheckpoint()
-        s = src.alias("s")
-        t = t_full.alias("t")
-        cond = F.expr(on)
-        always = F.lit(True)
-
-        def _clause_cond(expr_str):
-            # r13 (ADVICE r12 high): SQL/Delta treat a clause condition
-            # that evaluates to NULL as NOT satisfied — the row is
-            # kept untouched. Without the coalesce, ``(~upd) & NULL``
-            # is NULL, so filter(~del_applies) AND filter(del_applies)
-            # both dropped the row: it vanished uncounted, no CDC row.
-            return (
-                F.coalesce(F.expr(expr_str), F.lit(False))
-                if expr_str
-                else always
-            )
-
-        mu_cond = _clause_cond(matched_update_condition)
-        md_cond = _clause_cond(matched_delete_condition)
-        bsu_cond = _clause_cond(not_matched_by_source_update_condition)
-        bsd_cond = _clause_cond(not_matched_by_source_delete_condition)
-        # ---- which files rewrite ----
-        hit_names = set()
-        if has_matched:
-            hit_names |= {
-                r[0]
-                for r in t.join(s, cond, "left_semi")
-                .select("_f")
-                .distinct()
-                .collect()
-            }
-        if has_bs:
-            bs_any = None
-            if not_matched_by_source_update:
-                bs_any = bsu_cond
-            if not_matched_by_source_delete:
-                bs_any = (
-                    bsd_cond if bs_any is None else (bs_any | bsd_cond)
-                )
-            hit_names |= {
-                r[0]
-                for r in t.join(s, cond, "left_anti")
-                .filter(bs_any)
-                .select("_f")
-                .distinct()
-                .collect()
-            }
-        base2rel = self._base2rel(candidates)
-        hits = sorted(base2rel[b] for b in hit_names)
-
-        def _proj(frame, updates, apply_cond):
-            """target columns with ``updates`` applied where
-            ``apply_cond`` holds, cast back to the target types."""
-            return frame.select(
-                *[
-                    (
-                        F.when(apply_cond, F.expr(updates[c]))
-                        .otherwise(F.col(f"t.`{c}`"))
-                        if updates and c in updates
-                        else F.col(f"t.`{c}`")
-                    )
-                    .cast(ttypes[c])
-                    .alias(c)
-                    for c in tcols
-                ]
-            )
-
-        pieces: list[DataFrame] = []  # the rewritten hit-file rows
-        cdc: list[DataFrame] = []
-        n_upd = n_del = 0
-        if hits:
-            th = scan(hits, keep_keys=True).alias("t")
-            if has_matched:
-                mj = th.join(s, cond, "inner")
-                if (
-                    mj.groupBy(F.col("t._f"), F.col("t._p"))
-                    .count()
-                    .filter("count > 1")
-                    .limit(1)
-                    .count()
-                ):
-                    raise ValueError(
-                        "merge_into: a target row matches more than one "
-                        "source row — the update/delete outcome would be "
-                        "nondeterministic (Delta's multiple-matches error); "
-                        "aggregate the source first"
-                    )
-                upd_applies = mu_cond if matched_update else F.lit(False)
-                del_applies = (
-                    (~upd_applies) & md_cond
-                    if matched_delete
-                    else F.lit(False)
-                )
-                upd_rows = mj.filter(upd_applies)
-                n_upd += upd_rows.count()
-                del_rows = mj.filter(del_applies)
-                n_del += del_rows.count()
-                pieces.append(
-                    _proj(mj.filter(~del_applies), matched_update, upd_applies)
-                )
-                if (meta0 or {}).get("change_data_feed"):
-                    cdc.append(
-                        upd_rows.select(
-                            *[F.col(f"t.`{c}`").alias(c) for c in tcols]
-                        ).withColumn(
-                            "_change_type", F.lit("update_preimage")
-                        )
-                    )
-                    cdc.append(
-                        _proj(upd_rows, matched_update, always).withColumn(
-                            "_change_type", F.lit("update_postimage")
-                        )
-                    )
-                    cdc.append(
-                        del_rows.select(
-                            *[F.col(f"t.`{c}`").alias(c) for c in tcols]
-                        ).withColumn("_change_type", F.lit("delete"))
-                    )
-            else:
-                pieces.append(
-                    th.join(s, cond, "left_semi").select(
-                        *[F.col(f"`{c}`") for c in tcols]
-                    )
-                )
-            um = th.join(s, cond, "left_anti")
-            if has_bs:
-                bsu_applies = (
-                    bsu_cond if not_matched_by_source_update else F.lit(False)
-                )
-                bsd_applies = (
-                    (~bsu_applies) & bsd_cond
-                    if not_matched_by_source_delete
-                    else F.lit(False)
-                )
-                upd_rows = um.filter(bsu_applies)
-                n_upd += upd_rows.count()
-                del_rows = um.filter(bsd_applies)
-                n_del += del_rows.count()
-                pieces.append(
-                    _proj(
-                        um.filter(~bsd_applies),
-                        not_matched_by_source_update,
-                        bsu_applies,
-                    )
-                )
-                if (meta0 or {}).get("change_data_feed"):
-                    cdc.append(
-                        upd_rows.select(
-                            *[F.col(f"t.`{c}`").alias(c) for c in tcols]
-                        ).withColumn(
-                            "_change_type", F.lit("update_preimage")
-                        )
-                    )
-                    cdc.append(
-                        _proj(
-                            upd_rows, not_matched_by_source_update, always
-                        ).withColumn(
-                            "_change_type", F.lit("update_postimage")
-                        )
-                    )
-                    cdc.append(
-                        del_rows.select(
-                            *[F.col(f"t.`{c}`").alias(c) for c in tcols]
-                        ).withColumn("_change_type", F.lit("delete"))
-                    )
-            else:
-                pieces.append(um.select(*[F.col(f"`{c}`") for c in tcols]))
-        ins_df = None
-        n_ins = 0
-        if not_matched_insert is not None:
-            ins_src = s.join(t, cond, "left_anti")
-            if not_matched_insert_condition:
-                ins_src = ins_src.filter(
-                    F.expr(not_matched_insert_condition)
-                )
-            ins_df = ins_src.select(
-                *[
-                    (
-                        F.expr(not_matched_insert[c])
-                        if c in not_matched_insert
-                        else F.lit(None)
-                    )
-                    .cast(ttypes[c])
-                    .alias(c)
-                    for c in tcols
-                ]
-            )
-            n_ins = ins_df.count()
-        if not hits and not n_ins:
-            return base_version, {
-                "rows_updated": 0,
-                "rows_deleted": 0,
-                "rows_inserted": 0,
-                "files_rewritten": 0,
-            }
-        staged_parts = pieces + ([ins_df] if n_ins else [])
-        out = staged_parts[0]
-        for p in staged_parts[1:]:
-            out = out.unionByName(p)
-        names = self._stage(out, meta=meta0)
-        self._enforce_constraints(names, meta0, spark)
-        actions = self._add_actions(
-            names, self._partition_dtypes(meta0)
-        ) + [{"remove": f} for f in hits]
-        if (meta0 or {}).get("change_data_feed"):
-            if n_ins:
-                cdc.append(
-                    ins_df.withColumn("_change_type", F.lit("insert"))
-                )
-            if cdc:
-                cdc_df = cdc[0]
-                for d in cdc[1:]:
-                    cdc_df = cdc_df.unionByName(d)
-                actions += [
-                    {"cdc": n}
-                    for n in self._stage(cdc_df, pcols=None, meta=meta0)
-                ]
-        metrics = {
-            "rows_updated": n_upd,
-            "rows_deleted": n_del,
-            "rows_inserted": n_ins,
-            "files_rewritten": len(hits),
-        }
-        v = self._commit_snapshot_dependent(
-            base_version,
+        if not_matched_by_source_delete:
+            target.append((not_matched_by_source_delete_condition, None))
+        v, metrics, _ = self._cow_dml(
+            spark,
             "merge",
-            actions,
-            # metrics ride the commit info so DESCRIBE HISTORY serves
-            # Delta-style operationMetrics for generic merges too
-            info={"merge_into": True, "condition": on, "metrics": metrics},
-            disjoint=None,  # arbitrary condition: any racer may collide
-            base_meta=meta0,
+            lambda m: {"merge_into": True, "condition": on, "metrics": m},
+            {} if by_source else _dml_probes(None, None, None, scope_partitions),
+            source=source,
+            on=on,
+            matched=matched,
+            insert=(
+                None
+                if not_matched_insert is None
+                else (not_matched_insert_condition, not_matched_insert)
+            ),
+            target=target,
+            disjoint=False,  # arbitrary condition: any racer may collide
         )
         return v, metrics
 
@@ -4853,97 +4645,39 @@ class TxTable:
         hi=None,
         partitions: dict | None = None,
     ) -> tuple[int, int, int]:
-        """Copy-on-write DELETE (r8 — the Delta DELETE shape): rewrite
-        ONLY the files that actually contain matching rows, leave every
-        other file untouched. Returns (new version, files rewritten,
-        files untouched).
+        """Copy-on-write DELETE (the Delta DELETE shape), a target-only
+        clause set over :meth:`_cow_dml`: rewrite ONLY the files that
+        contain matching rows, leave every other file untouched.
+        Returns (new version, files rewritten, files untouched). A row
+        whose predicate evaluates to NULL is kept.
 
         Two pruning layers keep the rewrite set minimal at 100 TB:
         1. zone maps — with ``prune_column``/[lo, hi] given, files
            whose committed zone cannot contain a match are skipped
-           without any I/O (same machinery as ``merge(prune_on_key)``);
-        2. hit scan — surviving candidates are scanned once with
-           ``_metadata.file_path`` and only files with ≥1 matching row
-           are rewritten (a file full of non-matching rows costs one
-           predicate scan, zero writes). The hit-file list is driver
-           state bounded by the file count — already log-sized.
+           without any I/O (the planner's range probe);
+        2. hit scan — surviving candidates are scanned once and only
+           files with ≥1 matching row are rewritten.
 
-        ``partitions`` (r11, VERDICT r10 #3) scopes the delete to the
-        listed partition values — ``{"day": ["2024-01-01"]}`` — with
-        candidate files selected by their committed partitionValues
-        before any zone-map check or data I/O. Because a partition
-        column is constant per file, the effective predicate is
-        exactly ``where AND <col> IN (values)`` — a Delta
-        replaceWhere-style condition, not an unsound hint.
+        ``partitions`` scopes the delete to the listed partition
+        values — ``{"day": ["2024-01-01"]}`` — with candidate files
+        selected by their committed partitionValues before any
+        zone-map check or data I/O. The effective predicate is exactly
+        ``where AND <col> IN (values)`` at row level (it also holds for
+        a column that is not a partition column), and that is the
+        predicate the commit records.
 
-        The commit is add(rewritten) + remove(hit files): snapshot
-        isolation, time travel to pre-delete versions, and concurrent
-        appends all behave exactly as for MERGE."""
-        base_version = self.latest_version()
-        if base_version < 0:
-            raise ValueError(f"table {self.path} is empty")
-        probes = _dml_probes(prune_column, lo, hi, partitions)
-        base_version, meta0, plan, scan = self._planner(spark)
-        candidates, n_live = plan(probes)
-        if not candidates:
-            return base_version, 0, n_live
-        # r12 (ADVICE r11): row-level partitions enforcement — the
-        # rewrite, the CDC sidecar, and the recorded predicate all see
-        # the exact `where AND col IN (…)` the contract documents
+        The commit is add(rewritten) + remove(hit files); with pruning
+        declared it rebases over interleaved blind appends wholly
+        outside the pruned ranges."""
         where = _with_partition_residual(where, partitions)
-        cand_df = scan(candidates, keep_keys=True)
-        # _f provenance is the file BASENAME (unique via the staged
-        # per-file counter, checked by _base2rel); log actions key on
-        # the table-relative path, which for partitioned tables (r9)
-        # includes the hive dirs — map back
-        base2rel = self._base2rel(candidates)
-        hits = [
-            base2rel[r[0]]
-            for r in cand_df.filter(where).select("_f").distinct().collect()
-        ]
-        if not hits:
-            return base_version, 0, n_live
-        # DV-aware rewrite: tombstoned rows must NOT resurrect, and the
-        # rewritten files shed their vectors (they are removed below)
-        kept_rows = (
-            scan(hits, keep_keys=True)
-            .filter(f"NOT ({where})")
-            .drop("_f", "_p")
-        )
-        names = self._stage(kept_rows, meta=meta0)
-        actions = self._add_actions(
-            names, self._partition_dtypes(meta0)
-        ) + [{"remove": f} for f in hits]
-        if (meta0 or {}).get("change_data_feed"):
-            # CDC sidecar (r11): the deleted rows are exactly the hit
-            # files' visible rows matching the predicate — already
-            # scanned once above; one more filtered pass lands them as
-            # the commit's cdc parquet, so the (streaming) feed never
-            # re-reads the removed files
-            cdc_df = (
-                scan(hits)
-                .filter(where)
-                .withColumn("_change_type", F.lit("delete"))
-            )
-            actions += [
-                {"cdc": n}
-                for n in self._stage(cdc_df, pcols=None, meta=meta0)
-            ]
-        # OCC rebase (r11): with zone/partition pruning declared, the
-        # delete's effective predicate is bounded to those ranges — an
-        # interleaved blind append wholly outside them cannot contain
-        # a row this delete would have removed, so the commit rebases
-        # instead of raising (see _commit_snapshot_dependent). An
-        # unbounded predicate read the whole table: conflicts stay.
-        v = self._commit_snapshot_dependent(
-            base_version,
+        v, m, n_live = self._cow_dml(
+            spark,
             "delete",
-            actions,
-            info={"predicate": where},
-            disjoint=self._disjoint(probes, meta0),
-            base_meta=meta0,
+            lambda _m: {"predicate": where},
+            _dml_probes(prune_column, lo, hi, partitions),
+            target=[(where, None)],
         )
-        return v, len(hits), n_live - len(hits)
+        return v, m["files_rewritten"], n_live - m["files_rewritten"]
 
     def update(
         self,
@@ -4955,13 +4689,13 @@ class TxTable:
         hi=None,
         partitions: dict | None = None,
     ) -> tuple[int, int, int]:
-        """Copy-on-write UPDATE ... SET (r11 — Delta's UPDATE shape,
-        completing the DML triangle beside ``merge`` and ``delete``):
-        rewrite ONLY the files containing ≥1 row matching ``where``;
-        in those files, matching rows get each ``set_exprs`` column
-        replaced by its (Spark SQL) expression and every other row
-        passes through unchanged. Returns (new version, files
-        rewritten, rows updated).
+        """Copy-on-write UPDATE ... SET (Delta's UPDATE shape), a
+        target-only clause set over :meth:`_cow_dml`: rewrite ONLY the
+        files containing ≥1 row matching ``where``; in those files,
+        matching rows get each ``set_exprs`` column replaced by its
+        (Spark SQL) expression and every other row passes through
+        unchanged. Returns (new version, files rewritten, rows
+        updated).
 
         Semantics pinned to SQL UPDATE: every right-hand side
         evaluates against the OLD row — ``{"a": "b", "b": "a"}`` swaps
@@ -4970,110 +4704,30 @@ class TxTable:
         on a partition column genuinely moves rows between partitions
         (the rewrite re-stages under the table's declared hive
         layout). Updated rows are NEW rows: table CHECK constraints
-        validate the rewritten files before anything commits, exactly
-        as for merge — a violating SET refuses with
-        ``ConstraintViolation`` and the snapshot is untouched.
+        validate the rewritten files before anything commits — a
+        violating SET refuses with ``ConstraintViolation`` and the
+        snapshot is untouched. Identity columns refuse assignment.
 
-        Scale shape (same two pruning layers as ``delete``): zone maps
-        via ``prune_column``/[lo, hi] and partition values via
-        ``partitions`` bound the candidate set from metadata alone,
-        then one predicate scan selects the files actually hit. With
-        pruning declared, the commit REBASES over provably-disjoint
-        interleaved blind appends (``_commit_snapshot_dependent``) —
-        a scoped backfill UPDATE lands under live ingest.
+        Pruning is ``delete``'s: zone maps via
+        ``prune_column``/[lo, hi] and partition values via
+        ``partitions`` (exact at row level) bound the candidate set
+        from metadata alone; with pruning declared the commit rebases
+        over provably-disjoint interleaved blind appends.
 
         Change feed: with ``change_data_feed`` set, the commit lands a
-        CDC sidecar of ``update_preimage``/``update_postimage`` rows
-        (Delta CDF's update shape) computed from data the rewrite
-        already scanned; without one, ``read_changes`` reconstructs
-        the same rows from the recorded predicate + SET map over the
-        removed files — either way the feed never re-reads the table.
-        Tombstoned rows are invisible throughout (``_scan``): a
-        deleted row is neither updated nor resurrected."""
-        base_version = self.latest_version()
-        if base_version < 0:
-            raise ValueError(f"table {self.path} is empty")
-        probes = _dml_probes(prune_column, lo, hi, partitions)
-        base_version, meta0, plan, scan = self._planner(spark)
-        candidates, _n_live = plan(probes)
-        if not candidates:
-            return base_version, 0, 0
-        # r12 (ADVICE r11): enforce the partitions option at ROW
-        # granularity — the effective predicate (and the recorded one
-        # CDF reconstruction replays) is exactly `where AND col IN (…)`
+        CDC sidecar of ``update_preimage``/``update_postimage`` rows;
+        without one, ``read_changes`` reconstructs the same rows from
+        the recorded predicate + SET map over the removed files.
+        Tombstoned rows are neither updated nor resurrected."""
         where = _with_partition_residual(where, partitions)
-        cand_df = scan(candidates, keep_keys=True)
-        base2rel = self._base2rel(candidates)
-        hits = [
-            base2rel[r[0]]
-            for r in cand_df.filter(where).select("_f").distinct().collect()
-        ]
-        if not hits:
-            return base_version, 0, 0
-        old = scan(hits)
-        unknown = sorted(set(set_exprs) - set(old.columns))
-        if unknown:
-            raise ValueError(
-                f"UPDATE SET references unknown column(s) {unknown}; "
-                f"table columns: {old.columns}"
-            )
-        bad_ident = sorted(
-            set(set_exprs) & set((meta0 or {}).get("identity") or {})
-        )
-        if bad_ident:  # Delta's rule: identity values are immutable
-            raise ValueError(
-                f"cannot UPDATE identity column(s) {bad_ident} — values "
-                "are GENERATED ALWAYS"
-            )
-        cond = F.expr(where)
-
-        def _apply_set(d: DataFrame, guard: bool) -> DataFrame:
-            # one projection, every RHS bound to the INPUT row — the
-            # SQL evaluate-then-assign rule; ``guard`` wraps each
-            # assignment in the predicate for the mixed rewrite frame
-            return d.select(
-                *[
-                    (
-                        F.when(cond, F.expr(set_exprs[c]))
-                        .otherwise(F.col(c))
-                        .alias(c)
-                        if guard
-                        else F.expr(set_exprs[c]).alias(c)
-                    )
-                    if c in set_exprs
-                    else F.col(c)
-                    for c in d.columns
-                ]
-            )
-
-        n_rows = old.filter(cond).count()
-        names = self._stage(_apply_set(old, guard=True), meta=meta0)
-        self._enforce_constraints(names, meta0, spark)
-        actions = self._add_actions(
-            names, self._partition_dtypes(meta0)
-        ) + [{"remove": f} for f in hits]
-        if (meta0 or {}).get("change_data_feed"):
-            pre = old.filter(cond)
-            cdc_df = pre.withColumn(
-                "_change_type", F.lit("update_preimage")
-            ).unionByName(
-                _apply_set(pre, guard=False).withColumn(
-                    "_change_type", F.lit("update_postimage")
-                )
-            )
-            actions += [
-                {"cdc": n}
-                for n in self._stage(cdc_df, pcols=None, meta=meta0)
-            ]
-        v = self._commit_snapshot_dependent(
-            base_version,
+        v, m, _ = self._cow_dml(
+            spark,
             "update",
-            actions,
-            info={"predicate": where, "set": dict(set_exprs)},
-            disjoint=self._disjoint(probes, meta0),
-            base_meta=meta0,
+            lambda _m: {"predicate": where, "set": dict(set_exprs)},
+            _dml_probes(prune_column, lo, hi, partitions),
+            target=[(where, set_exprs)],
         )
-        return v, len(hits), n_rows
+        return v, m["files_rewritten"], m["rows_updated"]
 
     def live_files(self, version: int | None = None) -> list[tuple[str, int]]:
         """(file name, version that added it) for the live snapshot —
@@ -5106,10 +4760,10 @@ class TxTable:
         serves ``deleteMor`` commits (row-level deletes — their
         tombstone parquets name exactly the (file, pos) rows removed),
         ``restore`` commits (the snapshot diff is file/position
-        exact), and — r11 (VERDICT r10 #2) — ``merge``/``delete``
-        copy-on-write commits (reconstructed from the commit's
-        operation info, see read_changes); anything else rewrites rows
-        in place and raises."""
+        exact), and ``merge``/``delete``/``update`` copy-on-write
+        commits (served from their CDC sidecar or reconstructed from
+        the commit's operation info, see read_changes); anything else
+        rewrites rows in place and raises."""
         versions = self._versions()
         # r8 retention: serving a range that reaches below the log
         # horizon would silently DROP the expired commits' rows — the
@@ -5211,28 +4865,34 @@ class TxTable:
         bookkeeping) and contribute NOTHING — their added files only
         re-house rows a consumer already saw.
 
-        MERGE and copy-on-write DELETE commits (r11, VERDICT r10 #2 —
-        the Delta CDF shapes) are served from the commit's recorded
-        operation info:
+        Copy-on-write DML commits (``merge``, ``merge_into``,
+        ``update``, ``delete`` — the Delta CDF shapes) are served from
+        the commit's CDC sidecar when the table had
+        ``change_data_feed`` set, and otherwise reconstructed from the
+        commit's recorded operation info:
 
         - ``delete``: the removed rows are exactly the rewritten
           files' visible rows matching the recorded predicate —
           re-evaluating it over those files (pre-existing tombstones
-          subtracted) reproduces them row-exactly with zero diffing;
-          a pre-r11 delete commit without a predicate falls back to an
-          exact multiset EXCEPT between old-visible and rewritten
-          rows. Emitted as ``'delete'``.
+          subtracted) reproduces them with zero diffing; a delete
+          commit without a recorded predicate falls back to an exact
+          multiset EXCEPT between old-visible and rewritten rows.
+          Emitted as ``'delete'``.
+        - ``update``: the preimage is the removed files' visible rows
+          matching the recorded predicate, the postimage the same rows
+          with the recorded SET map applied.
         - ``merge``: old-visible (of the removed files) and new
           (added files) rows are full-outer joined on the recorded
           merge key — rows whose compared struct changed emit
           ``'update_preimage'`` + ``'update_postimage'``, new keys
           emit ``'insert'``, unchanged keys emit NOTHING (value-
           identical rows merely re-housed), matching Delta CDF. A
-          pre-r11 merge commit records no key and still raises.
+          merge commit with no recorded key (a ``merge_into`` without
+          a sidecar) raises.
 
-        Both reconstructions touch only the commit's own files (the
-        data the merge/delete itself processed), never the table —
-        the zone-map pruning that bounded the rewrite bounds the feed.
+        Reconstructions touch only the commit's own files (the data
+        the DML itself processed), never the table — the pruning that
+        bounded the rewrite bounds the feed.
 
         OVERWRITE commits — full (``mode("overwrite")``) and dynamic
         partition overwrite — serve the Delta CDF replace shape: every
@@ -5390,8 +5050,8 @@ class TxTable:
             elif op in ("delete", "merge", "update"):
                 cdc = [a["cdc"] for a in entry["actions"] if "cdc" in a]
                 if cdc:
-                    # CDC sidecar fast path (r11): the commit landed
-                    # its own change rows — serve them join-free;
+                    # CDC sidecar: the commit landed its own change
+                    # rows — serve them join-free;
                     # _project_logical passes _change_type through
                     d = self._project_logical(
                         spark.read.parquet(
@@ -5407,11 +5067,12 @@ class TxTable:
                     old = _visible(removed, v - 1, meta_v)
                     pred = (entry.get("info") or {}).get("predicate")
                     if pred is not None:
-                        # the rewrite kept exactly NOT(predicate): the
-                        # deleted rows are the old files' visible rows
-                        # matching it — re-evaluate, no diffing
+                        # the rewrite kept every row the predicate does
+                        # not hold for: the deleted rows are the old
+                        # files' visible rows matching it — re-evaluate,
+                        # no diffing
                         d = old.filter(pred)
-                    else:  # pre-r11 commit: exact multiset EXCEPT
+                    else:  # no recorded predicate: multiset EXCEPT
                         d = old
                         if added:
                             d = d.exceptAll(
@@ -5420,8 +5081,8 @@ class TxTable:
                     _emit_raw(d, "delete", v)
                     continue
                 if op == "update":
-                    # reconstruct from the recorded predicate + SET map
-                    # (r11): preimage = the removed files' visible rows
+                    # reconstruct from the recorded predicate + SET map:
+                    # preimage = the removed files' visible rows
                     # matching the predicate, postimage = the same rows
                     # with each SET expression applied against the OLD
                     # row — definitionally what the rewrite computed
