@@ -4289,7 +4289,9 @@ class TxTable:
                     f"source columns {clash} collide with merge bookkeeping "
                     "names; rename them first"
                 )
-            s = source.withColumn("_s_hit", F.lit(1)).localCheckpoint().alias("s")
+            # pinned once, lazily: the first job over it materializes it
+            s = source.withColumn("_s_hit", F.lit(1))
+            s = s.localCheckpoint(eager=False).alias("s")
         if callable(probes):
             probes = probes(meta, s)
         cands, n_live = plan(probes)
@@ -4475,14 +4477,15 @@ class TxTable:
           refuses with the multiple-matches error; a repeated NEW key
           inserts every copy.
         - Only files holding a staged key are rewritten; inserts land
-          as new files. A batch that changes nothing it can see — an
-          empty batch, or only NULL keys — commits nothing and returns
-          the base version.
+          as new files. A batch with no row that matches or inserts —
+          an empty batch, or only NULL keys — commits nothing and
+          returns the base version.
 
         ``prune_on_key=True`` reads only the files whose [min, max]
-        zone for ``key`` overlaps the staged key range. Correctness does not depend on the clustering:
-        a row in a skipped file cannot hold a staged key, so the
-        output is the full merge's; only the pruning rate does.
+        zone for ``key`` overlaps the staged key range. Correctness
+        does not depend on the clustering: a row in a skipped file
+        cannot hold a staged key, so the output is the full merge's;
+        only the pruning rate does.
 
         ``prune_on_partitions=True`` reads only the files of the
         staged batch's partition values (one driver collect of its
