@@ -4242,8 +4242,10 @@ class TxTable:
 
         - ``probes``: the planner's ``{column: [probe, ...]}``, or a
           callable ``(meta, pinned source) -> probes`` for probes that
-          depend on the table's layout or on the staged rows. Only the
-          files they keep are read; every other file stays untouched.
+          depend on the table's layout or on the staged rows; the
+          callable returns None when the staged rows can change
+          nothing, and no file is read. Only the files the probes keep
+          are read; every other file stays untouched.
         - ``source`` and ``on``: the staged rows, aliased ``s``, and
           the join condition over ``t`` (target) and ``s``. The source
           is pinned once with ``localCheckpoint``, so the probes, the
@@ -4273,7 +4275,8 @@ class TxTable:
         plus those where a target clause applies), the row counts and
         the multiple-match check. A target row matching more than one
         source row refuses when matched clauses exist (Delta's
-        nondeterministic-merge error). Only the hit files are
+        nondeterministic-merge error); without them it is rewritten
+        once. Only the hit files are
         rewritten; inserts are staged beside them. With
         ``change_data_feed`` set, the commit lands update_preimage /
         update_postimage / delete / insert rows as a CDC sidecar.
@@ -4292,12 +4295,14 @@ class TxTable:
             # pinned once, lazily: the first job over it materializes it
             s = source.withColumn("_s_hit", F.lit(1))
             s = s.localCheckpoint(eager=False).alias("s")
-        if callable(probes):
-            probes = probes(meta, s)
-        cands, n_live = plan(probes)
         metrics = dict.fromkeys(
             ("rows_updated", "rows_deleted", "rows_inserted", "files_rewritten"), 0
         )
+        if callable(probes):
+            probes = probes(meta, s)
+            if probes is None:  # the staged rows can change nothing
+                return base, metrics, 0
+        cands, n_live = plan(probes)
         if not cands and s is None:
             return base, metrics, n_live
         if cands:
@@ -4372,31 +4377,32 @@ class TxTable:
         dele = F.coalesce(pick.isin(gone), false)
         ins = s_only & holds(ins_cond) if insert else false
         hit = (m & F.lit(bool(matched))) | pick.isNotNull()
-        aggs = [
-            F.collect_set(F.when(hit, F.col("t._f"))),
-            F.count(F.when(upd, 1)),
-            F.count(F.when(dele, 1)),
-            F.count(F.when(ins, 1)),
-        ]
-        if matched:  # matched pairs against matched target rows
-            aggs += [
-                F.count(F.when(m, 1)),
-                F.size(F.collect_set(F.when(m, F.struct("t._f", "t._p")))),
-            ]
-        row = j.agg(*aggs).first()
-        if matched and row[4] != row[5]:
+        # one row per candidate file holding a hit (plus the inserts'
+        # NULL file): hit / updated / deleted / inserted counts and,
+        # with matched clauses, matched pairs against distinct matched
+        # rows. Grouping by file keeps each set within one file's rows.
+        tally = [hit, upd, dele, ins] + ([m] if matched else [])
+        counts = [F.count(F.when(c, 1)).alias(f"n{i}") for i, c in enumerate(tally)]
+        if matched:
+            counts.append(F.size(F.collect_set(F.when(m, F.col("t._p")))))
+        got = j.groupBy("t._f").agg(*counts).filter("n0 > 0 OR n3 > 0").collect()
+        if matched and any(g[5] != g[6] for g in got):
             raise ValueError(
                 f"{op}: a target row matches more than one source row — the "
                 "update/delete outcome would be nondeterministic (Delta's "
                 "multiple-matches error); aggregate the source first"
             )
+        hit_f = [g[0] for g in got if g[1]]
         base2rel = self._base2rel(cands)
-        hits = sorted(base2rel[b] for b in row[0])
+        hits = sorted(base2rel[b] for b in hit_f)
+        n_ins = sum(g[4] for g in got)
         metrics.update(
-            rows_updated=row[1], rows_deleted=row[2], rows_inserted=row[3],
+            rows_updated=sum(g[2] for g in got),
+            rows_deleted=sum(g[3] for g in got),
+            rows_inserted=n_ins,
             files_rewritten=len(hits),
         )
-        if not hits and not row[3]:
+        if not hits and not n_ins:
             return base, metrics, n_live
         # rewrite only the hit files; an insert clause without matched
         # clauses must still anti-join every candidate
@@ -4417,7 +4423,14 @@ class TxTable:
             return v.cast(ttypes[c]).alias(c)
 
         post = [value(c) for c in tcols]
-        out = r.filter((F.col("t._f").isin(list(row[0])) & ~dele) | ins).select(*post)
+        keep = F.col("t._f").isin(hit_f) & ~dele
+        if s is not None and not matched and target:
+            # no matched clause, so no multiple-match check: a target
+            # row meets the join once per matching source row; keep one
+            rows = r.filter(keep).dropDuplicates(["_f", "_p"]).select(*post)
+            out = rows.unionByName(r.filter(ins).select(*post))
+        else:
+            out = r.filter(keep | ins).select(*post)
         names = self._stage(out, meta=meta)
         if insert or updates:  # a delete only keeps validated rows
             self._enforce_constraints(names, meta, spark)
@@ -4529,9 +4542,13 @@ class TxTable:
             if prune_on_partitions:
                 for pc in pcols:
                     vals = [r[0] for r in src.select(pc).distinct().collect()]
+                    if not vals:  # an empty batch
+                        return None
                     out[pc] = [_probe(values=vals)]
             if prune_on_key:
                 lo, hi = src.select(F.min(key), F.max(key)).first()
+                if lo is None:  # no non-NULL staged key
+                    return None
                 out.setdefault(key, []).append(_probe(lo, hi))
             return out
 

@@ -70,8 +70,30 @@ def test_merge_of_only_null_keys_commits_nothing(spark, tmp_path):
     assert t.latest_version() == 0
 
 
-@pytest.mark.parametrize("prune", [False, True])
-def test_empty_batch_commits_nothing(spark, tmp_path, prune):
+def _scan_spy(t, monkeypatch) -> list:
+    """Record every file list the planner's scan reads on ``t``."""
+    scanned: list = []
+    planner = t._planner
+
+    def spy(*a, **kw):
+        base, meta, plan, scan = planner(*a, **kw)
+
+        def spied(files, **skw):
+            scanned.append(list(files))
+            return scan(files, **skw)
+
+        return base, meta, plan, spied
+
+    monkeypatch.setattr(t, "_planner", spy)
+    return scanned
+
+
+@pytest.mark.parametrize(
+    "rows,prune",
+    [([], False), ([], True), ([(None, "n")], True)],
+    ids=["empty", "empty_pruned", "null_keys_pruned"],
+)
+def test_empty_batch_commits_nothing(spark, tmp_path, monkeypatch, rows, prune):
     t = TxTable(str(tmp_path / "t"))
     t.append(
         spark.range(0, 1000, numPartitions=4).selectExpr(
@@ -79,10 +101,13 @@ def test_empty_batch_commits_nothing(spark, tmp_path, prune):
         )
     )
     before = sorted(t._snapshot_files())
-    empty = spark.createDataFrame([], _KV)
-    assert t.merge(spark, empty, "id", ["name"], prune_on_key=prune) == 0
+    scanned = _scan_spy(t, monkeypatch)
+    staged = spark.createDataFrame(rows, _KV)
+    assert t.merge(spark, staged, "id", ["name"], prune_on_key=prune) == 0
     assert t.latest_version() == 0
     assert sorted(t._snapshot_files()) == before
+    if prune:  # no staged key to probe: no table file is read
+        assert scanned == []
 
 
 def test_empty_batch_does_not_widen(spark, tmp_path):

@@ -325,6 +325,47 @@ def test_merge_into_null_by_source_condition_keeps_rows(spark, tmp_path):
     assert got == [1, 2]  # id=2's NULL condition keeps it; id=3 deleted
 
 
+@pytest.mark.parametrize("insert", [False, True])
+@pytest.mark.parametrize("cdf", [False, True])
+def test_merge_into_by_source_repeated_source_key_keeps_row_once(
+    spark, tmp_path, cdf, insert
+):
+    """With no matched clause a source key may repeat (Delta allows
+    it). A target row matching two source rows, in a file a BY SOURCE
+    delete rewrites, must land once, not once per match."""
+    t = TxTable(str(tmp_path / "t"))
+    t.append(
+        spark.createDataFrame(
+            [(1, "a"), (2, "b"), (3, "c")], "id long, name string"
+        ).coalesce(1)
+    )
+    if cdf:
+        t.set_change_data_feed(True)
+    base = t.latest_version()
+    src = spark.createDataFrame([(1, "x"), (1, "y"), (9, "n")], "id long, name string")
+    v, m = t.merge_into(
+        spark,
+        src,
+        "t.id = s.id",
+        not_matched_insert={"id": "s.id", "name": "s.name"} if insert else None,
+        not_matched_by_source_delete=True,
+        not_matched_by_source_delete_condition="t.id = 2",
+    )
+    assert m == {
+        "rows_updated": 0,
+        "rows_deleted": 1,
+        "rows_inserted": int(insert),
+        "files_rewritten": 1,
+    }
+    got = sorted(tuple(r) for r in t.read(spark).collect())
+    assert got == [(1, "a"), (3, "c")] + ([(9, "n")] if insert else [])
+    if cdf:
+        changes = t.read_changes(spark, base, v).select("id", "_change_type")
+        assert sorted(tuple(r) for r in changes.collect()) == [(2, "delete")] + (
+            [(9, "insert")] if insert else []
+        )
+
+
 def test_merge_into_empty_live_snapshot_inserts(spark, tmp_path):
     """r13 (ADVICE r12 medium): MERGE on a table whose live snapshot
     is empty (all rows previously deleted) must treat every source row
