@@ -64,10 +64,59 @@ def _norm(fold_or_ck):
     )
 
 
+def _readd_in_tail(spark, path):
+    """A checkpoint-live file removed and re-added in the tail with its
+    checkpoint-era tombstones shed: restore to v0 after a DV on the v0
+    file and a checkpoint crossing."""
+    t = TxTable(path)
+    t.append(_df(spark, [(i, "a", float(i)) for i in range(6)]))  # v0
+    t.delete_mor(spark, "id = 0")  # v1: DV on the v0 file
+    for i in range(10, 10 + txlog.CHECKPOINT_INTERVAL - 1):  # ckpt at v10
+        t.append(_df(spark, [(i, "b", float(i))]))
+    assert t._checkpoint_versions(), "setup must cross a checkpoint"
+    t.restore(spark, 0)  # v11: removes + re-adds the v0 file, no DV
+    return t
+
+
+def _txn_only_tail(spark, path):
+    """A tail whose one entry holds only a txn bump: no add, remove, dv
+    or meta action."""
+    t = TxTable(path)
+    for c in range(txlog.CHECKPOINT_INTERVAL):  # v0..v9
+        t.append(_df(spark, [(c, "a", float(c))]).coalesce(1))
+    t.append_stream_batch(
+        _df(spark, [(99, "b", 9.0)]).coalesce(1), "appx", 3
+    )  # v10: checkpoint with the txn
+    assert t.commit_stream_names([], "appx", 4) == 11
+    assert t._read_entry(11)["actions"] == []
+    return t
+
+
 def test_checkpoint_spark_equals_driver_fold(spark, tmp_path):
-    t = _rich(spark, str(tmp_path / "t"))
+    for build in (_rich, _readd_in_tail, _txn_only_tail):
+        t = build(spark, str(tmp_path / build.__name__))
+        _check_spark_routes_equal_fold(spark, t)
+
+
+def _check_spark_routes_equal_fold(spark, t):
     v = t.latest_version()
+    assert t._checkpoint_versions()[-1] < v  # a non-empty tail
     truth = _norm(t._fold_state(v))
+    # the Spark-side live frames over checkpoint + tail agree with the
+    # fold: add rows (typed columns too), DV names and meta
+    adds, dv_names, meta = TxTable(t.path)._live_frames(spark, v)
+    rows = adds.collect()
+    assert len(rows) == len({r["path"] for r in rows})
+    assert {
+        r["path"]: json.dumps(json.loads(r["payload"]), sort_keys=True)
+        for r in rows
+    } == truth[0]
+    fold_adds = t._fold_state(v)[0]
+    assert {r["path"]: (r["rows"], r["v"]) for r in rows} == {
+        p: (a.get("rows"), a.get("v")) for p, a in fold_adds.items()
+    }
+    assert dv_names == sorted({d for ds in truth[2].values() for d in ds})
+    assert json.dumps(meta, sort_keys=True) == truth[3]
     got_v = TxTable(t.path).checkpoint_spark(spark)
     assert got_v == v
     ck = TxTable(t.path)._load_checkpoint(v)

@@ -18,8 +18,8 @@ from hephaestus_spark.sources.txlog import CHECKPOINT_INTERVAL, TxTable
 
 
 def _rich_table(spark, path):
-    """Partitioned table with history past a checkpoint, orphans in
-    the root AND inside a partition dir, plus an aborted stage dir."""
+    """Partitioned table with history past a checkpoint and planted
+    orphans."""
     t = TxTable(path)
     for i in range(CHECKPOINT_INTERVAL + 2):
         t.append(
@@ -31,17 +31,54 @@ def _rich_table(spark, path):
         )
     t.delete(spark, "id = 1")
     assert t._checkpoint_versions()
+    _plant_orphans(path)
+    return t
+
+
+def _restore_in_tail(spark, path):
+    """A checkpoint-live file removed and re-added in the tail by a
+    restore (its tombstones shed), with the same planted orphans."""
+    t = TxTable(path)
+    t.append(
+        spark.createDataFrame(
+            [(i, "a", float(i)) for i in range(6)],
+            "id long, day string, val double",
+        )
+    )
+    t.delete_mor(spark, "id = 0")
+    for i in range(CHECKPOINT_INTERVAL - 1):
+        t.append(
+            spark.createDataFrame(
+                [(10 + i, "b", float(i))], "id long, day string, val double"
+            )
+        )
+    assert t._checkpoint_versions()
+    t.restore(spark, 0)
+    os.makedirs(os.path.join(path, "day=a"))
+    _plant_orphans(path)
+    return t
+
+
+def _plant_orphans(path):
+    """Orphans in the root AND inside a partition dir, plus an aborted
+    stage dir."""
     for rel in ("part-orphan-root.parquet", "day=a/part-orphan-part.parquet"):
         with open(os.path.join(path, rel), "wb") as f:
             f.write(b"junk")
     os.makedirs(os.path.join(path, "_stage-deadbeef"))
     with open(os.path.join(path, "_stage-deadbeef", "x.parquet"), "wb") as f:
         f.write(b"junk")
-    return t
 
 
 def test_vacuum_spark_equals_driver_path(spark, tmp_path, monkeypatch):
-    t = _rich_table(spark, str(tmp_path / "t"))
+    for build in (_rich_table, _restore_in_tail):
+        with monkeypatch.context() as m:
+            _check_vacuum_routes_equal(
+                spark, build(spark, str(tmp_path / build.__name__)), m
+            )
+
+
+def _check_vacuum_routes_equal(spark, t, monkeypatch):
     driver_list = set(t.vacuum(grace_seconds=0, dry_run=True))
     # force the Spark route regardless of table size
     monkeypatch.setattr(TxTable, "DML_SPARK_PLAN_THRESHOLD", 0)
