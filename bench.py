@@ -520,14 +520,47 @@ def main() -> None:
         skew = _sf1_skew_section(spark, timings, sf)
         if skew:
             out["sf1_skew"] = skew
-    # r16 (VERDICT r15 #6/#2): the PRINTED line carries only the keys
-    # the driver parses — the r14 record was lost because the growing
-    # one-line JSON outgrew the driver's stdout-tail capture
-    # (BENCH_r14 `parsed: null`), which erased that round from the
-    # official round-over-round comparison. Everything else
-    # (min/calibration/credibility/build/shuffle/sf1/skew/ratios)
-    # still lands in the lossless BENCH_LOCAL_r*.json side-file below,
-    # which _records() reads for history. < 4 kB at 25 queries.
+    out["median_semantics"] = "cold"
+    print(json.dumps(_compact(out)))
+    # The driver's BENCH_r{N}.json wrapper keeps only a 2000-char
+    # stdout tail, so the FULL record is persisted repo-locally too;
+    # _records() reads these as history. Full runs only — a
+    # `bench.py q33` subset would poison the history — and only at the
+    # canonical sf0.1 (verify-recipe runs at sf0.01 must not clobber
+    # the round's record).
+    if not extra and sf == 0.1:
+        # a low-core run (the driver measures scaling at
+        # SPARK_GRAFT_CPUS=8) is suffixed like the driver's own
+        # BENCH_rN_c8 wrapper; _records()' round-history regex does not
+        # match the suffixed name, so low-core numbers never pollute
+        # the 32-core recent-reference medians.
+        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+        out["cpus"] = cpus
+        suffix = "" if cpus == 32 else f"_c{cpus}"
+        rnd = os.environ.get("SPARK_GRAFT_ROUND")
+        if rnd is None:
+            # the round comes from the DRIVER's records only: the
+            # driver writes BENCH_rN at the END of round N, so during
+            # round N the newest BENCH_r* is N-1 and max+1 labels this
+            # run correctly (counting BENCH_LOCAL_r* too made each
+            # local run drift one round ahead of the driver).
+            prior = [
+                int(m.group(1))
+                for f in os.listdir(_REPO_DIR)
+                if (m := re.match(r"BENCH_r(\d+)\.json$", f))
+            ]
+            rnd = str(max(prior, default=0) + 1)
+        _save_local(out, int(rnd), suffix)
+    spark.stop()
+
+
+def _compact(out: dict) -> dict:
+    """The PRINTED line: the keys the driver parses plus the host
+    verdict. Everything else (min/calibration/credibility/build/
+    shuffle/sf1/skew/ratios) lands in the lossless BENCH_LOCAL_r*.json
+    side-file, because a one-line JSON that outgrows the driver's
+    stdout-tail capture is lost whole (BENCH_r14 `parsed: null`).
+    Under 4 kB at 25 queries."""
     compact = {
         k: out[k]
         for k in (
@@ -540,47 +573,30 @@ def main() -> None:
         )
         if k in out
     }
-    print(json.dumps(compact))
-    # r8 (VERDICT r7 #2): the driver's BENCH_r{N}.json wrapper keeps
-    # only a 2000-char stdout tail, so recent rounds' per-query numbers
-    # had vanished from _regressions_vs_best history. Persist the FULL
-    # record repo-locally; _bench_history() reads these too. Full runs
-    # only — a `bench.py q33` subset would poison the history — and
-    # only at the canonical sf0.1 (verify-recipe runs at sf0.01 must
-    # not clobber the round's record).
-    if not extra and sf == 0.1:
-        # r16: the low-core run (the driver measures scaling at
-        # SPARK_GRAFT_CPUS=8) must not OVERWRITE the 32-core local
-        # record — suffix it like the driver's own BENCH_rN_c8 wrapper.
-        # _records()' round-history regex intentionally does not match
-        # the suffixed name, so low-core numbers never pollute the
-        # 32-core recent-reference medians.
-        cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-        out["cpus"] = cpus
-        suffix = "" if cpus == 32 else f"_c{cpus}"
-        rnd = os.environ.get("SPARK_GRAFT_ROUND")
-        if rnd is None:
-            # r9 (ADVICE r8): derive the local record's round from the
-            # DRIVER's records only. The driver writes BENCH_rN at the
-            # END of round N, so during round N the newest BENCH_r* is
-            # N-1 and max+1 labels this run correctly. Counting
-            # BENCH_LOCAL_r* too made each local full run drift one
-            # round ahead of the driver (the r7-line run landed as
-            # BENCH_LOCAL_r08, the r8 run as BENCH_LOCAL_r09).
-            prior = [
-                int(m.group(1))
-                for f in os.listdir(_REPO_DIR)
-                if (m := re.match(r"BENCH_r(\d+)\.json$", f))
-            ]
-            rnd = str(max(prior, default=0) + 1)
-        with open(
-            os.path.join(
-                _REPO_DIR, f"BENCH_LOCAL_r{int(rnd):02d}{suffix}.json"
-            ),
-            "w",
-        ) as f:
-            json.dump(out, f)
-    spark.stop()
+    cred = out.get("host_credibility")
+    if cred is not None:
+        compact["host_credible"] = cred["credible"]
+        compact["steal_frac"] = cred["steal_frac"]
+    return compact
+
+
+def _save_local(out: dict, rnd: int, suffix: str) -> str:
+    """Write the full record once, never over an earlier one:
+    ``BENCH_LOCAL_r{N}{suffix}.json``, or the first free ``b``, ``c``,
+    … variant after the round number when a run of the same round
+    already saved one (the ``r11b``/``r14c`` names ``_records()``
+    reads). Returns the path written."""
+    for letter in ["", *"bcdefghijklmnopqrstuvwxyz"]:
+        path = os.path.join(
+            _REPO_DIR, f"BENCH_LOCAL_r{rnd:02d}{letter}{suffix}.json"
+        )
+        try:
+            with open(path, "x") as f:
+                json.dump(out, f)
+            return path
+        except FileExistsError:
+            continue
+    raise FileExistsError(f"no free BENCH_LOCAL_r{rnd:02d}*{suffix} name")
 
 
 # Scale-trend evidence (VERDICT r6 item 3): when the 10x key-shifted

@@ -654,7 +654,7 @@ class TxTable:
 
     def _load_checkpoint(self, version: int) -> dict | None:
         """Load one checkpoint version into fold-state form. Parquet
-        first (r9), legacy JSON as fallback. Returns None when the
+        first, legacy JSON as fallback. Returns None when the
         version is incomplete or unreadable — multi-part writes are
         not atomic as a set, so (like Delta) a checkpoint is usable
         only when every declared part is present; the caller then
@@ -664,26 +664,15 @@ class TxTable:
         if parts:
             import pyarrow.parquet as pq
 
-            adds: dict[str, dict] = {}
-            txns: dict[str, int] = {}
-            dvs: dict[str, list[str]] = {}
-            meta = None
+            cols = ["kind", "path", "payload"]
             try:
-                for p in parts:
-                    t = pq.read_table(p, columns=["kind", "path", "payload"])
-                    for kind, path_, payload in zip(
-                        t.column("kind").to_pylist(),
-                        t.column("path").to_pylist(),
-                        t.column("payload").to_pylist(),
-                    ):
-                        if kind == "add":
-                            adds[path_] = json.loads(payload)
-                        elif kind == "txn":
-                            txns[path_] = int(payload)
-                        elif kind == "dv":
-                            dvs[path_] = json.loads(payload)
-                        elif kind == "meta":
-                            meta = json.loads(payload)
+                adds, txns, dvs, meta = self._ckpt_state(
+                    row
+                    for p in parts
+                    for row in zip(
+                        *pq.read_table(p, columns=cols).to_pydict().values()
+                    )
+                )
             except (OSError, ValueError, KeyError):
                 return None
             return {
@@ -722,6 +711,60 @@ class TxTable:
                     return ck
         return None
 
+    def _pick_checkpoint(self, upto: int | None = None) -> tuple[int, list[str]]:
+        """(version, part files) of the newest COMPLETE parquet
+        checkpoint at a version ≤ ``upto`` (None: any), or (-1, []).
+        The one pick behind every Spark-side reader of the checkpoint:
+        the route size (``_ckpt_live_rows``), ``checkpoint_df`` and the
+        Spark-side snapshot (``_spark_state``)."""
+        for v in reversed(self._checkpoint_versions()):
+            if upto is None or v <= upto:
+                parts = self._complete_ckpt_parquet(v)
+                if parts:
+                    return v, parts
+        return -1, []
+
+    @staticmethod
+    def _ckpt_records(
+        adds: dict, txns: dict, dvs: dict, meta: dict | None
+    ) -> list[tuple]:
+        """Checkpoint rows ``(kind, path, rows, v, payload)`` for a
+        snapshot state — one per live file, txn app and file with
+        tombstones, plus one meta row — for both checkpoint writers.
+        ``rows`` and ``v`` are real typed columns so ``checkpoint_df``
+        metadata queries (COUNT(*), commit provenance) never touch
+        JSON; the payload keeps the complete action verbatim (zone
+        maps, partition values) — the stats-as-JSON-string shape Delta
+        checkpoints use."""
+        return (
+            [
+                ("add", p, a.get("rows"), a.get("v"), json.dumps(a))
+                for p, a in adds.items()
+            ]
+            + [("txn", app, None, None, str(b)) for app, b in txns.items()]
+            + [("dv", p, None, None, json.dumps(ds)) for p, ds in dvs.items()]
+            + ([("meta", "", None, None, json.dumps(meta))] if meta else [])
+        )
+
+    @staticmethod
+    def _ckpt_state(rows) -> tuple[dict, dict, dict, dict | None]:
+        """Fold state ``(adds, txns, dvs, meta)`` from checkpoint rows
+        ``(kind, path, payload)`` — the inverse of ``_ckpt_records``."""
+        adds: dict[str, dict] = {}
+        txns: dict[str, int] = {}
+        dvs: dict[str, list[str]] = {}
+        meta = None
+        for kind, path, payload in rows:
+            if kind == "add":
+                adds[path] = json.loads(payload)
+            elif kind == "txn":
+                txns[path] = int(payload)
+            elif kind == "dv":
+                dvs[path] = json.loads(payload)
+            elif kind == "meta":
+                meta = json.loads(payload)
+        return adds, txns, dvs, meta
+
     @staticmethod
     def _apply(
         entry: dict,
@@ -729,14 +772,19 @@ class TxTable:
         txns: dict[str, int],
         dvs: dict[str, list[str]],
         meta_box: list,
-    ) -> None:
+    ) -> list[str]:
+        """Fold one log entry into the snapshot state, in place — the
+        one definition of what each action does. Returns the paths the
+        entry removes, which ``_spark_state`` drops from checkpoint add
+        rows it never folds."""
+        removed = []
         for a in entry["actions"]:
             if "add" in a:
                 adds[a["add"]] = a
             elif "meta" in a:
-                # r9 column mapping: the latest metadata action wins —
-                # it carries the COMPLETE logical->physical mapping +
-                # dropped-physical list, so folding needs no history
+                # the latest metadata action wins — it carries the
+                # COMPLETE logical->physical mapping + dropped-physical
+                # list, so folding needs no history
                 meta_box[0] = a["meta"]
             elif "remove" in a:
                 # a removed (rewritten/compacted) file takes its
@@ -744,8 +792,9 @@ class TxTable:
                 # materialized the deletes
                 adds.pop(a["remove"], None)
                 dvs.pop(a["remove"], None)
+                removed.append(a["remove"])
             elif "dv" in a:
-                # merge-on-read delete (r8): the dv parquet holds
+                # merge-on-read delete: the dv parquet holds
                 # (file, pos) tombstones for the listed data files
                 for f in a["files"]:
                     dvs.setdefault(f, []).append(a["dv"])
@@ -754,6 +803,7 @@ class TxTable:
             prev = txns.get(t["app"])
             if prev is None or t["batch"] > prev:
                 txns[t["app"]] = t["batch"]
+        return removed
 
     def _fold_state(
         self, upto: int | None = None
@@ -838,24 +888,21 @@ class TxTable:
         + advance the ``_last_checkpoint`` pointer after every
         interval-th commit. Idempotent and race-safe: the state folded
         at a version is the same for every writer (the log is
-        immutable), each part is an exclusive create, and the pointer
-        only moves forward. A crash between commit and checkpoint
-        loses nothing — the next interval boundary writes the next
-        one; a crash mid-multipart leaves an incomplete part set that
-        ``_load_checkpoint`` rejects, so readers fall back to the
+        immutable), parts publish first-writer-wins (``_publish_ckpt``),
+        and the pointer only moves forward. A crash between commit and
+        checkpoint loses nothing — the next interval boundary writes
+        the next one; a crash mid-publish leaves an incomplete part set
+        that ``_load_checkpoint`` rejects, so readers fall back to the
         previous checkpoint."""
         if version <= 0 or version % CHECKPOINT_INTERVAL != 0:
             return
-        # r12: big checkpoint-backed tables write the NEXT checkpoint
+        # big checkpoint-backed tables write the NEXT checkpoint
         # through Spark (previous checkpoint + tail — the add-set
         # never touches the driver); the driver fold below remains the
         # small-table path and the fallback (checkpointing must never
         # fail a commit that already landed)
         active = SparkSession.getActiveSession()
-        if (
-            active is not None
-            and self._ckpt_live_rows() >= self.DML_SPARK_PLAN_THRESHOLD
-        ):
+        if self._spark_route(active, version):
             try:
                 if self.checkpoint_spark(active, version) == version:
                     return
@@ -864,22 +911,7 @@ class TxTable:
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        adds, txns, dvs, meta = self._fold_state(version)
-        # One row per live file / txn app / dv'd file. ``rows`` and
-        # ``v`` are REAL typed columns so ``checkpoint_df`` metadata
-        # queries (COUNT(*), commit provenance) never touch JSON; the
-        # payload keeps the complete action verbatim (zone maps,
-        # partition values) — the stats-as-JSON-string shape Delta
-        # checkpoints use.
-        recs = (
-            [
-                ("add", p, a.get("rows"), a.get("v"), json.dumps(a))
-                for p, a in adds.items()
-            ]
-            + [("txn", app, None, None, str(b)) for app, b in txns.items()]
-            + [("dv", p, None, None, json.dumps(ds)) for p, ds in dvs.items()]
-            + ([("meta", "", None, None, json.dumps(meta))] if meta else [])
-        )
+        recs = self._ckpt_records(*self._fold_state(version))
         schema = pa.schema(
             [
                 ("kind", pa.string()),
@@ -889,201 +921,102 @@ class TxTable:
                 ("payload", pa.string()),
             ]
         )
-        nparts = max(1, -(-len(recs) // CHECKPOINT_PART_ROWS))
-        try:
-            for i in range(nparts):
-                chunk = recs[
-                    i * CHECKPOINT_PART_ROWS : (i + 1) * CHECKPOINT_PART_ROWS
-                ]
-                tbl = pa.Table.from_arrays(
-                    [
-                        pa.array([r[j] for r in chunk], type=schema.field(j).type)
-                        for j in range(5)
-                    ],
-                    schema=schema,
-                )
-                p = (
-                    _ckpt_pq_path(self.path, version)
-                    if nparts == 1
-                    else _ckpt_pq_path(self.path, version, i + 1, nparts)
-                )
-                # r13 (VERDICT r12 #1 — the multi-writer fuzz torn
-                # read): NEVER stream into the final checkpoint name.
-                # The old `open(p, "xb")` made the file visible at 0
-                # bytes, so a concurrent writer's _ckpt_live_rows /
-                # _live_frames listed the version, _complete_ckpt_parquet
-                # served it (os.path.exists), and pyarrow raised
-                # ArrowInvalid('Parquet file size is 0 bytes').
-                # Write fully to a .tmp name the checkpoint regex
-                # cannot match, then publish with os.link — atomic AND
-                # exclusive (EEXIST keeps first-writer-wins), so a
-                # checkpoint file is either absent or complete.
-                tmp_p = f"{p}.{uuid.uuid4().hex[:8]}.tmp"
-                with open(tmp_p, "wb") as f:
-                    pq.write_table(tbl, f)
-                try:
-                    os.link(tmp_p, p)
-                finally:
-                    os.unlink(tmp_p)
-        except FileExistsError:
-            return  # another writer already materialized this one
-        self._advance_ckpt_pointer(version, nparts)
 
-    def _advance_ckpt_pointer(self, version: int, nparts: int) -> None:
+        def write(tmp: str) -> list[str]:
+            os.mkdir(tmp)
+            parts = []
+            for i in range(0, max(len(recs), 1), CHECKPOINT_PART_ROWS):
+                cols = list(zip(*recs[i : i + CHECKPOINT_PART_ROWS])) or [()] * 5
+                parts.append(os.path.join(tmp, f"{i}.parquet"))
+                pq.write_table(
+                    pa.Table.from_arrays(
+                        [pa.array(c, type=f.type) for c, f in zip(cols, schema)],
+                        schema=schema,
+                    ),
+                    parts[-1],
+                )
+            return parts
+
+        self._publish_ckpt(version, write)
+
+    def _publish_ckpt(self, version: int, write) -> None:
+        """Publish one checkpoint version for either writer.
+        ``write(tmp)`` writes the part files under the fresh private
+        dir ``tmp`` (a name the checkpoint listing never matches) and
+        returns them in part order. Each is then hard-linked to its
+        final name: atomic AND exclusive, so a checkpoint file is
+        either absent or complete, and the first collision — another
+        writer materialized this version — abandons the whole set,
+        keeping theirs. Only a published set advances the
+        ``_last_checkpoint`` pointer, and never backwards. A crash
+        leaves ``tmp`` for ``vacuum``."""
+        import shutil
+
+        tmp = os.path.join(
+            self.path, _LOG_DIR, f"_ckpt_tmp-{uuid.uuid4().hex[:8]}"
+        )
+        try:
+            parts = write(tmp)
+            n = len(parts)
+            for i, p in enumerate(parts, 1):
+                part = (i, n) if n > 1 else ()
+                os.link(p, _ckpt_pq_path(self.path, version, *part))
+        except FileExistsError:
+            return
+        finally:
+            shutil.rmtree(tmp, ignore_errors=True)
         hint = os.path.join(self.path, _LOG_DIR, _LAST_CKPT)
         try:
             with open(hint) as f:
                 if json.load(f)["version"] >= version:
-                    return  # never move the pointer backwards
+                    return
         except (OSError, ValueError, KeyError):
             pass
-        tmp = hint + f".{uuid.uuid4().hex[:8]}.tmp"
-        with open(tmp, "w") as f:
-            json.dump({"version": version, "parts": nparts}, f)
-        os.replace(tmp, hint)
+        with open(f"{hint}.{uuid.uuid4().hex[:8]}.tmp", "w") as f:
+            json.dump({"version": version, "parts": n}, f)
+        os.replace(f.name, hint)
 
     def checkpoint_spark(self, spark: SparkSession, version=None):
-        """Write the ``version`` checkpoint THROUGH SPARK (r12): new
-        checkpoint = previous checkpoint parquet (a cluster scan, the
-        unbounded add-set never touches the driver) + the log tail
-        folded driver-side (≤ CHECKPOINT_INTERVAL small entries) —
-        Delta's incremental-checkpoint idea. This removes the LAST
-        periodic driver materialization: without it, every interval-th
-        commit on a million-file table folds the whole state into
-        Python dicts inside the commit path. Driver state here is the
-        tail plus the bounded non-add rows (txn apps, files with live
-        tombstones, one meta row).
+        """Write the ``version`` checkpoint THROUGH SPARK from
+        ``_spark_state``: the previous checkpoint's add rows stay a
+        cluster scan (the unbounded add-set never touches the driver)
+        and the log tail is folded driver-side — Delta's
+        incremental-checkpoint idea. This removes the last periodic
+        driver materialization: without it, every interval-th commit
+        on a million-file table folds the whole state into Python
+        dicts inside the commit path.
 
         Content equals the driver-fold checkpoint exactly (payloads
         are verbatim json round-trips; pinned by test) — only the
         row-to-part assignment differs, which ``_complete_ckpt_parquet``
-        isolates per declared set size. Races stay first-writer-wins:
-        parts hard-link into place in order with exclusive creates,
-        and the first collision abandons this writer's whole set.
+        isolates per declared set size. Races stay first-writer-wins
+        (``_publish_ckpt``).
 
         Returns the version on success, or None when the Spark path
         does not apply (no prior complete checkpoint, or an empty
         state) — callers fall back to the driver fold."""
-        import shutil
-
         upto = self.latest_version() if version is None else version
-        # r15: pick checkpoint + read the tail entries under an
-        # expiry-race retry — a concurrent expire_log can destroy an
-        # entry in (ckv, upto] after a NEWER checkpoint landed; the
-        # re-pick then folds from that newer base instead of crashing
-        for _ in range(5):
-            ckdf, ckv = None, -1
-            for v in reversed(self._checkpoint_versions()):
-                if v > upto:
-                    continue
-                parts = self._complete_ckpt_parquet(v)
-                if parts:
-                    ckdf, ckv = spark.read.parquet(*parts), v
-                    break
-            if ckdf is None:
-                return None
-            if ckv == upto:
-                return upto  # already materialized
-            try:
-                tail_entries = [
-                    self._read_entry(v)
-                    for v in self._versions()
-                    if ckv < v <= upto
-                ]
-                break
-            except FileNotFoundError:
-                continue
-        else:
-            return None  # callers fall back to the driver fold
-        # ---- tail fold (mirrors _apply exactly) ----
-        tail_adds: dict[str, dict] = {}
-        removed_ever: set[str] = set()
-        tail_dvs: dict[str, list[str]] = {}
-        meta, meta_in_tail = None, False
-        txn_tail: dict[str, int] = {}
-        for e in tail_entries:
-            for a in e["actions"]:
-                if "add" in a:
-                    tail_adds[a["add"]] = a
-                elif "remove" in a:
-                    tail_adds.pop(a["remove"], None)
-                    removed_ever.add(a["remove"])
-                    tail_dvs.pop(a["remove"], None)
-                elif "dv" in a:
-                    for f in a["files"]:
-                        tail_dvs.setdefault(f, []).append(a["dv"])
-                elif "meta" in a:
-                    meta, meta_in_tail = a["meta"], True
-            t = e.get("txn")
-            if t:
-                prev = txn_tail.get(t["app"])
-                if prev is None or t["batch"] > prev:
-                    txn_tail[t["app"]] = t["batch"]
-        # ---- bounded non-add state from the base checkpoint ----
-        txns: dict[str, int] = {}
-        dvs: dict[str, list[str]] = {}
-        base_meta = None
-        for r in ckdf.filter(F.col("kind") != "add").collect():
-            if r["kind"] == "txn":
-                txns[r["path"]] = int(r["payload"])
-            elif r["kind"] == "dv":
-                if r["path"] not in removed_ever:
-                    dvs[r["path"]] = json.loads(r["payload"])
-            elif r["kind"] == "meta":
-                base_meta = json.loads(r["payload"])
-        if not meta_in_tail:
-            meta = base_meta
-        for app, b in txn_tail.items():
-            prev = txns.get(app)
-            if prev is None or b > prev:
-                txns[app] = b
-        for f, lst in tail_dvs.items():  # append AFTER surviving base
-            dvs.setdefault(f, [])
-            dvs[f] = dvs[f] + lst
-        # ---- assemble: distributed adds + local small rows ----
-        schema = "kind string, path string, rows long, v long, payload string"
-        base_adds = ckdf.filter(F.col("kind") == "add").select(
-            "kind", "path", "rows", "v", "payload"
-        )
-        base_adds = self._drop_paths(
-            spark, base_adds, removed_ever | set(tail_adds)
-        )
-        local = (
-            [
-                ("add", p, a.get("rows"), a.get("v"), json.dumps(a))
-                for p, a in tail_adds.items()
-            ]
-            + [("txn", app, None, None, str(b)) for app, b in txns.items()]
-            + [("dv", p, None, None, json.dumps(ds)) for p, ds in dvs.items()]
-            + ([("meta", "", None, None, json.dumps(meta))] if meta else [])
-        )
-        total = base_adds.count() + len(local)
+        ckv, adds, txns, dvs, meta = self._spark_state(spark, upto)
+        if ckv < 0:
+            return None
+        if ckv == upto:
+            return upto  # already materialized
+        local = self._ckpt_records({}, txns, dvs, meta)
+        total = adds.count() + len(local)
         if total == 0:
             return None  # empty state: the driver path's 1-part form
-        final = base_adds
         if local:
-            final = final.unionByName(spark.createDataFrame(local, schema))
-        nparts = max(1, -(-total // CHECKPOINT_PART_ROWS))
-        tmp = os.path.join(
-            self.path, _LOG_DIR, f"_ckpt_tmp-{uuid.uuid4().hex[:8]}"
-        )
-        final.repartition(nparts).write.parquet(tmp)
-        parts = sorted(f for f in os.listdir(tmp) if f.endswith(".parquet"))
-        n = len(parts)
-        try:
-            for i, p in enumerate(parts):
-                dst = (
-                    _ckpt_pq_path(self.path, upto)
-                    if n == 1
-                    else _ckpt_pq_path(self.path, upto, i + 1, n)
-                )
-                os.link(os.path.join(tmp, p), dst)
-        except FileExistsError:
-            pass  # another writer won this version; keep theirs
-        else:
-            self._advance_ckpt_pointer(upto, n)
-        finally:
-            shutil.rmtree(tmp, ignore_errors=True)
+            adds = adds.unionByName(spark.createDataFrame(local, adds.schema))
+
+        def write(tmp: str) -> list[str]:
+            adds.repartition(-(-total // CHECKPOINT_PART_ROWS)).write.parquet(tmp)
+            return sorted(
+                os.path.join(tmp, f)
+                for f in os.listdir(tmp)
+                if f.endswith(".parquet")
+            )
+
+        self._publish_ckpt(upto, write)
         return upto
 
     def checkpoint_df(self, spark: SparkSession) -> DataFrame | None:
@@ -1096,19 +1029,15 @@ class TxTable:
         cluster scan the columnar checkpoint. Returns None when no
         checkpoint exists yet. The tail (entries after the checkpoint
         version) is at most CHECKPOINT_INTERVAL small JSON commits."""
-        vs = self._checkpoint_versions()
-        for v in reversed(vs):
-            parts = self._complete_ckpt_parquet(v)
-            if parts:
-                return spark.read.parquet(*parts)
-        return None
+        parts = self._pick_checkpoint()[1]
+        return spark.read.parquet(*parts) if parts else None
 
     def _snapshot_files(self, version: int | None = None) -> list[str]:
         return list(self._fold_state(version)[0])
 
     @staticmethod
     def _drop_paths(spark: SparkSession, df: DataFrame, drop: set):
-        """Filter ``df`` to paths outside ``drop`` (r12): small sets
+        """Filter ``df`` to paths outside ``drop``: small sets
         inline as an isin; big ones — a tail OPTIMIZE removes every
         live file at once — go through a broadcast anti-join instead
         of exploding the plan with a million string literals."""
@@ -1121,7 +1050,7 @@ class TxTable:
         )
         return df.join(F.broadcast(dropdf), "path", "left_anti")
 
-    # ---- Spark-side snapshot metadata (r10, VERDICT r9 #6) ----
+    # ---- Spark-side snapshot metadata ----
     #
     # The driver fold (_fold_state/_load_checkpoint) materializes every
     # live add action into Python dicts — fine for serving file LISTS
@@ -1146,122 +1075,81 @@ class TxTable:
         (young tables — the fold is small by definition there)."""
         return self._live_frames(spark)[0]
 
-    def _live_frames(
-        self, spark: SparkSession, upto: int | None = None
-    ) -> tuple[DataFrame, list[str], dict | None]:
-        """(live add-set DataFrame, live deletion-vector parquet
-        names, metadata) from checkpoint + tail — the shared core of
-        the Spark-side metadata path. The DV name list is collected
-        driver-side: it is bounded by files-with-tombstones (a
-        compaction-managed quantity), never by table size; the meta
-        dict is one row. ``upto`` pins the snapshot version (r13
-        TOCTOU fix — see ``_planner``)."""
-        schema = "path string, rows long, v long, payload string"
-        if upto is None:
-            upto = self.latest_version()
-        # r15: pick + tail-read under the expiry-race retry (see
-        # checkpoint_spark) — on exhaustion fall through to the driver
-        # fold, whose own retry/horizon guard defines the outcome
-        tail_entries: "list[dict] | None" = None
+    def _spark_state(self, spark: SparkSession, upto: int):
+        """The snapshot at ``upto`` with its add-set as a DataFrame:
+        ``(checkpoint version, adds, txns, dvs, meta)``, ``adds`` in
+        checkpoint columns (kind, path, rows, v, payload). The newest
+        complete parquet checkpoint's add rows stay a cluster scan,
+        less every path the tail removed or re-added, plus the tail's
+        adds; its bounded non-add rows (txn apps, files with
+        tombstones, one meta row) come to the driver in one collect,
+        and the tail is folded onto them by ``_apply`` — so driver
+        state is bounded by the tail and those rows, never by table
+        size. Both ``checkpoint_spark`` and ``_live_frames`` derive
+        from it.
+
+        A concurrent ``expire_log`` can delete a tail entry after a
+        NEWER checkpoint landed; the re-pick then folds from that one.
+        Without a complete parquet checkpoint (young tables, legacy
+        JSON), or once the re-picks are exhausted, the driver fold
+        serves the state — its own retry and horizon guard define the
+        outcome — with checkpoint version -1."""
+        ckv, base = -1, None
         for _ in range(5):
-            ckdf, ckv = None, -1
-            for v in reversed(self._checkpoint_versions()):
-                if v > upto:
-                    continue
-                parts = self._complete_ckpt_parquet(v)
-                if parts:
-                    ckdf, ckv = spark.read.parquet(*parts), v
-                    break
-            if ckdf is None:
+            ckv, parts = self._pick_checkpoint(upto)
+            if not parts:
                 break
             try:
-                tail_entries = [
+                tail = [
                     self._read_entry(v)
                     for v in self._versions()
                     if ckv < v <= upto
                 ]
-                break
             except FileNotFoundError:
-                ckdf = None
                 continue
-        if ckdf is None or tail_entries is None:
-            adds, _txns, dvs, meta = self._fold_state(upto)
-            return (
-                spark.createDataFrame(
-                    [
-                        (p, a.get("rows"), a.get("v"), json.dumps(a))
-                        for p, a in adds.items()
-                    ],
-                    schema,
+            ck = spark.read.parquet(*parts)
+            _, txns, dvs, meta = self._ckpt_state(
+                ck.filter(F.col("kind") != "add")
+                .select("kind", "path", "payload")
+                .collect()
+            )
+            adds, meta_box, dropped = {}, [meta], set()
+            for e in tail:
+                dropped.update(self._apply(e, adds, txns, dvs, meta_box))
+            base = self._drop_paths(
+                spark,
+                ck.filter(F.col("kind") == "add").select(
+                    "kind", "path", "rows", "v", "payload"
                 ),
-                sorted({d for ds in dvs.values() for d in ds}),
-                meta,
+                dropped | set(adds),
             )
-        # the tail: every commit after the checkpoint, folded
-        # driver-side (bounded by CHECKPOINT_INTERVAL small entries)
-        tail_adds: dict[str, dict] = {}
-        tail_dvs: dict[str, list[str]] = {}
-        # r11 (ADVICE r10): a file removed and then RE-ADDED in the
-        # tail (exactly what restore emits for a checkpoint-live file)
-        # must be served from tail_adds alone — the old code discarded
-        # it from the removed-set on re-add, so the checkpoint row
-        # survived the filter AND a tail row was unioned in,
-        # double-counting that file. Track removal-at-any-point
-        # separately: removed_ever drives the checkpoint DV filter
-        # (mirroring _apply, where a remove clears the file's vectors
-        # and a re-add starts clean), while the base filter drops
-        # every path that was removed or re-added in the tail.
-        removed_ever: set[str] = set()
-        meta = None
-        meta_in_tail = False
-        for e in tail_entries:
-            for a in e["actions"]:
-                if "add" in a:
-                    tail_adds[a["add"]] = a
-                elif "remove" in a:
-                    tail_adds.pop(a["remove"], None)
-                    removed_ever.add(a["remove"])
-                    tail_dvs.pop(a["remove"], None)
-                elif "dv" in a:
-                    for f in a["files"]:
-                        tail_dvs.setdefault(f, []).append(a["dv"])
-                elif "meta" in a:
-                    meta, meta_in_tail = a["meta"], True
-        if not meta_in_tail:
-            mrow = ckdf.filter(F.col("kind") == "meta").select("payload").first()
-            if mrow is not None:
-                meta = json.loads(mrow["payload"])
-        base = ckdf.filter(F.col("kind") == "add").select(
-            "path", "rows", "v", "payload"
-        )
-        base = self._drop_paths(spark, base, removed_ever | set(tail_adds))
-        if tail_adds:
-            base = base.unionByName(
-                spark.createDataFrame(
-                    [
-                        (p, a.get("rows"), a.get("v"), json.dumps(a))
-                        for p, a in tail_adds.items()
-                    ],
-                    schema,
-                )
+            meta = meta_box[0]
+            break
+        if base is None:
+            ckv = -1
+            adds, txns, dvs, meta = self._fold_state(upto)
+        if base is None or adds:
+            local = spark.createDataFrame(
+                self._ckpt_records(adds, {}, {}, None),
+                "kind string, path string, rows long, v long, payload string",
             )
-        # checkpoint DV rows survive only for files never removed in
-        # the tail (a remove sheds the file's vectors even when the
-        # file is later re-added, mirroring _apply)
-        dv_names: set[str] = {d for ds in tail_dvs.values() for d in ds}
-        ck_dv = (
-            ckdf.filter(F.col("kind") == "dv")
-            .filter(
-                ~F.col("path").isin(sorted(removed_ever))
-                if removed_ever
-                else F.lit(True)
-            )
-            .select("payload")
-            .collect()
-        )
-        for r in ck_dv:
-            dv_names.update(json.loads(r["payload"]))
-        return base, sorted(dv_names), meta
+            base = local if base is None else base.unionByName(local)
+        return ckv, base, txns, dvs, meta
+
+    def _live_frames(
+        self, spark: SparkSession, upto: int | None = None
+    ) -> tuple[DataFrame, list[str], dict | None]:
+        """(live add-set DataFrame (path, rows, v, payload), live
+        deletion-vector parquet names, metadata) at ``upto`` (None:
+        latest) from ``_spark_state`` — the shared core of the
+        Spark-side metadata path. The DV name list is driver-side: it
+        is bounded by files-with-tombstones (a compaction-managed
+        quantity), never by table size."""
+        if upto is None:
+            upto = self.latest_version()
+        _, adds, _, dvs, meta = self._spark_state(spark, upto)
+        names = sorted({d for ds in dvs.values() for d in ds})
+        return adds.drop("kind"), names, meta
 
     def count_spark(self, spark: SparkSession) -> dict:
         """``stats_summary()``'s COUNT computed through Spark — the
@@ -2339,39 +2227,42 @@ class TxTable:
         phys = self._phys_probes(probes, meta)
         return (lambda act: not self._act_keep(act, phys)) if phys else None
 
-    # Engage the Spark-side planner when the newest complete
+    # Table-scale work runs as Spark jobs once the newest complete
     # checkpoint holds at least this many rows (≈ live files): below
     # it the driver fold is both faster and already log-sized; above
     # it materializing every add action into Python dicts is the
-    # scale-killer the _live_frames path exists to avoid.
+    # scale-killer the Spark route exists to avoid.
     DML_SPARK_PLAN_THRESHOLD = 20_000
 
+    def _spark_route(
+        self, spark: "SparkSession | None", version: int | None = None
+    ) -> bool:
+        """THE route switch of checkpointing, planning, auto-compaction
+        and vacuum: with a session, and when the newest complete
+        checkpoint at ``version`` (None: any) holds at least
+        ``DML_SPARK_PLAN_THRESHOLD`` rows."""
+        return (
+            spark is not None
+            and self._ckpt_live_rows(version) >= self.DML_SPARK_PLAN_THRESHOLD
+        )
+
     def _ckpt_live_rows(self, upto: int | None = None) -> int:
-        """Row count of the newest complete parquet checkpoint — from
-        footers only (no data I/O, no driver fold). 0 when no usable
-        checkpoint exists (young table: the fold is small by
-        definition). ``upto`` pins the snapshot version (r13 TOCTOU
-        fix: DML paths resolve the version ONCE and thread it)."""
+        """Row count of the newest complete parquet checkpoint at a
+        version ≤ ``upto`` (None: any) — from footers only (no data
+        I/O, no driver fold). 0 when no usable checkpoint exists
+        (young table: the fold is small by definition)."""
         import pyarrow.parquet as pq
 
-        if upto is None:
-            upto = self.latest_version()
-        for v in reversed(self._checkpoint_versions()):
-            if v > upto:
-                continue
-            parts = self._complete_ckpt_parquet(v)
-            if parts:
-                try:
-                    return sum(
-                        pq.ParquetFile(p).metadata.num_rows for p in parts
-                    )
-                except (OSError, ValueError):
-                    # ValueError covers pyarrow's ArrowInvalid (the r12
-                    # mw-fuzz torn read: a 0-byte checkpoint published
-                    # by a pre-r13 writer mid-stream). Treat as "no
-                    # usable checkpoint" — the driver fold takes over.
-                    return 0
-        return 0
+        try:
+            return sum(
+                pq.ParquetFile(p).metadata.num_rows
+                for p in self._pick_checkpoint(upto)[1]
+            )
+        except (OSError, ValueError):
+            # ValueError covers pyarrow's ArrowInvalid (a 0-byte
+            # checkpoint left by a writer that streamed into the final
+            # name): no usable checkpoint — the driver fold takes over
+            return 0
 
     def _planner(
         self, spark: SparkSession | None = None, version: int | None = None
@@ -2385,9 +2276,8 @@ class TxTable:
         provenance columns). The version is resolved exactly once, so
         candidates, meta, scan and the caller's commit base agree.
 
-        Route: with a session, on the LATEST snapshot, and when its
-        checkpoint holds at least ``DML_SPARK_PLAN_THRESHOLD`` rows,
-        plan filters the columnar checkpoint's add rows
+        Route: on the LATEST snapshot and on the Spark route
+        (``_spark_route``), plan filters the columnar checkpoint's add rows
         (``_live_frames``) with ``_keep_column`` and collects only the
         survivors — driver state O(selected files), the checkpoint is
         never folded — then consults bloom sidecars on that list.
@@ -2397,11 +2287,7 @@ class TxTable:
         latest = self.latest_version()
         version = latest if version is None else version
         frames = None
-        if (
-            spark is not None
-            and version == latest
-            and self._ckpt_live_rows(version) >= self.DML_SPARK_PLAN_THRESHOLD
-        ):
+        if version == latest and self._spark_route(spark, version):
             frames, dv_names, meta = self._live_frames(spark, version)
         else:
             meta = self._fold_state(version)[3]
@@ -4133,7 +4019,7 @@ class TxTable:
             return None
         small = int(ac.get("small_bytes", 16 << 20))
         try:
-            if self._ckpt_live_rows() >= self.DML_SPARK_PLAN_THRESHOLD:
+            if self._spark_route(spark):
                 adds, _dvs, _m = self._live_frames(spark)
                 n = adds.filter(
                     F.get_json_object(
@@ -5924,20 +5810,12 @@ class TxTable:
         spark: "SparkSession | None" = None,
     ) -> list[str]:
         """Remove files unreferenced by ANY log version (aborted
-        stages), returning what was deleted. ``dry_run=True`` (r11 —
-        Delta's VACUUM DRY RUN) returns the same list WITHOUT touching
-        the filesystem, so operators can audit before reclaiming. Deleting removed-but-
-        historical files would break the time-travel promise, so those
-        always survive — until ``expire_log`` moves the horizon past
-        them.
-
-        r13 (VERDICT r12 #4): with ``spark`` given and the table at
-        checkpoint scale (``_ckpt_live_rows >= DML_SPARK_PLAN_THRESHOLD``),
-        listing, reference anti-join and deletion all run AS SPARK JOBS
-        (``_vacuum_spark``) — the Delta VACUUM shape, where at
-        object-store scale listing/deleting millions of files is
-        cluster work. The driver path below stays for small tables and
-        as the fallback (legacy JSON-only checkpoints).
+        stages), returning what was deleted. ``dry_run=True`` (Delta's
+        VACUUM DRY RUN) returns the same list WITHOUT touching the
+        filesystem, so operators can audit before reclaiming. Deleting
+        removed-but-historical files would break the time-travel
+        promise, so those always survive — until ``expire_log`` moves
+        the horizon past them.
 
         ``grace_seconds`` closes the in-flight-commit race (found in
         review): a concurrent append has ALREADY renamed its staged
@@ -5948,359 +5826,186 @@ class TxTable:
         period comfortably above a commit's stage->log latency makes
         the race impossible (Delta's retention-check reasoning).
 
-        Also reclaims aborted ``_stage-*`` directories past the grace
-        window (r8, ADVICE): a writer that crashes inside ``_stage``
-        before the renames leaves its whole staging dir behind — no
-        log entry will ever reference it, so without this sweep it is
-        unbounded garbage."""
-        # r15 (ADVICE): a hard crash (SIGKILL/power loss) between
-        # writing a commit/checkpoint tmp and its os.link publish
-        # leaks '<name>.<hex>.tmp' in _txlog/ forever — the
-        # finally-unlink only covers exception paths. Sweep log-dir
-        # tmps past the grace window here (driver-side in BOTH vacuum
-        # routes: the count is crash-bounded, not table-scale). A tmp
-        # younger than grace may belong to a commit mid-publish, so
-        # the same retention reasoning as data files applies. The
-        # sweep is always recorded under the _txlog/ prefix so
-        # callers can distinguish it from data reclamation.
-        tmp_swept: list[str] = []
-        cutoff0 = time.time() - grace_seconds
-        ldir = os.path.join(self.path, _LOG_DIR)
-        for sub in ("", "_bloom", "_ndv"):
-            d = os.path.join(ldir, sub) if sub else ldir
-            if not os.path.isdir(d):
-                continue
-            for f in os.listdir(d):
-                full = os.path.join(d, f)
-                if (
-                    f.endswith(".tmp")
-                    and os.path.isfile(full)
-                    and os.path.getmtime(full) <= cutoff0
-                ):
-                    if not dry_run:
-                        try:
-                            os.remove(full)
-                        except OSError:
-                            continue
-                    tmp_swept.append(
-                        os.path.join(_LOG_DIR, sub, f)
-                        if sub
-                        else os.path.join(_LOG_DIR, f)
-                    )
-        if (
-            spark is not None
-            and self._ckpt_live_rows() >= self.DML_SPARK_PLAN_THRESHOLD
-        ):
-            out = self._vacuum_spark(spark, grace_seconds, dry_run)
-            if out is not None:
-                return tmp_swept + out
-            # legacy JSON-only checkpoint: fall through to the fold
+        Crash leftovers past the grace window go too: aborted
+        ``_stage-*`` dirs (a writer that crashed inside ``_stage``
+        before its renames — no log entry will ever reference them),
+        ``<name>.<hex>.tmp`` publish files in the log dirs and
+        ``_ckpt_tmp-*`` checkpoint dirs (a hard crash between writing
+        a tmp and its publish). They are reported under their
+        table-relative names.
+
+        Both routes walk the same log references, sweep the same
+        leftovers, list with ``_vacuum_list`` and remove with
+        ``_vacuum_rm``; only the anti-join against the references
+        differs. With ``spark`` on the Spark route (``_spark_route``)
+        listing, anti-join and deletion run AS SPARK JOBS — the Delta
+        VACUUM shape, where at object-store scale listing and deleting
+        millions of files is cluster work — and every checkpoint's
+        add-set stays a parquet scan. Otherwise — and when there is no
+        parquet checkpoint to scan, or one exists only in the legacy
+        JSON form (a partial reference set would delete live data) —
+        the driver folds the checkpoints into a Python set."""
         import shutil
 
-        referenced = set()
-        for entry in self._read_log():
-            for a in entry["actions"]:
-                referenced.add(
-                    a.get("add")
-                    or a.get("remove")
-                    or a.get("dv")
-                    or a.get("cdc")
-                )
-        # r8 retention: after expire_log, files live at the horizon are
-        # referenced ONLY by the surviving checkpoints' add-sets —
-        # without this union vacuum would delete live data. Files
-        # removed before the horizon appear in no surviving record and
-        # are reclaimed here: that is the storage point of expiry.
-        for cv in self._checkpoint_versions():
-            ck = self._load_checkpoint(cv)
-            if ck is None:
-                continue
-            referenced.update(ck["adds"])
-            for ds in ck.get("dvs", {}).values():
-                referenced.update(ds)
-        deleted = list(tmp_swept)
+        root = os.path.abspath(self.path)
         cutoff = time.time() - grace_seconds
-
-        def _mtime(p: str) -> "float | None":
-            # A concurrent vacuum/expiry in another process may remove
-            # the path between listdir/walk and stat — treat it as
-            # already reclaimed, not an error (the Spark route already
-            # does; the xproc fuzz caught this fold racing itself).
-            try:
-                return os.path.getmtime(p)
-            except OSError:
-                return None
-
-        for f in os.listdir(self.path):
-            full = os.path.join(self.path, f)
-            mt = _mtime(full)
-            if (
-                f.startswith("_stage-")
-                and os.path.isdir(full)
-                and mt is not None
-                and mt <= cutoff
-            ):
-                if not dry_run:
-                    shutil.rmtree(full, ignore_errors=True)
-                deleted.append(f)
-        # data files live at the root or, for partitioned tables (r9),
-        # under hive col=value/ dirs — walk everything but the log and
-        # staging dirs; the log references table-RELATIVE paths
-        for dirpath, dirs, fnames in os.walk(self.path):
-            dirs[:] = [
-                d for d in dirs if d != _LOG_DIR and not d.startswith("_stage-")
+        ck_parts = None  # the checkpoints the Spark route scans
+        if self._spark_route(spark):
+            sets = [
+                (cv, self._complete_ckpt_parquet(cv))
+                for cv in self._checkpoint_versions()
             ]
-            for f in fnames:
-                full = os.path.join(dirpath, f)
-                rel = os.path.relpath(full, self.path)
-                if f.endswith(".parquet") and rel not in referenced:
-                    mt = _mtime(full)
-                    if mt is None or mt > cutoff:
+            if all(
+                parts or not os.path.exists(_ckpt_path(self.path, cv))
+                for cv, parts in sets
+            ):
+                ck_parts = [p for _cv, parts in sets for p in parts] or None
+        # crash leftovers are bounded by crashes, not table size:
+        # swept driver-side on both routes
+        deleted = []
+        ldirs = [os.path.join(_LOG_DIR, s) for s in ("", "_bloom", "_ndv")]
+        for sub in (*ldirs, ""):
+            d = os.path.join(root, sub)
+            for f in os.listdir(d) if os.path.isdir(d) else ():
+                full = os.path.join(d, f)
+                is_dir = f.startswith(("_stage-", "_ckpt_tmp-"))
+                if not (
+                    os.path.isdir(full)
+                    if is_dir
+                    else sub and f.endswith(".tmp") and os.path.isfile(full)
+                ):
+                    continue
+                try:
+                    if os.path.getmtime(full) > cutoff:
                         continue
                     if not dry_run:
-                        try:
-                            os.remove(full)
-                        except OSError:
-                            pass  # raced delete: idempotent either way
-                        try:  # r13: the file's bloom sidecar goes too
-                            os.remove(self._bloom_sidecar(f))
-                        except OSError:
-                            pass
-                        try:  # r14: and its NDV sidecar
-                            os.remove(self._ndv_sidecar(f))
-                        except OSError:
-                            pass
-                    deleted.append(rel)
-        # r13: orphan bloom sidecars (their data file was reclaimed by
-        # an earlier pass, e.g. optimize -> expire -> vacuum before the
-        # sidecar cleanup existed) — a sidecar is garbage once no
-        # surviving record references its basename and no such file is
-        # on disk. Grace window applies as usual. r14: NDV sidecars
-        # share the rule.
-        ref_base = {os.path.basename(r) for r in referenced if r}
-        for sub, suffix in (("_bloom", ".bloom.json"), ("_ndv", ".ndv.json")):
-            bdir = os.path.join(self.path, _LOG_DIR, sub)
-            if not os.path.isdir(bdir):
-                continue
-            for f in os.listdir(bdir):
-                if not f.endswith(suffix):
-                    continue
-                base = f[: -len(suffix)]
-                full = os.path.join(bdir, f)
-                mt = _mtime(full)
-                if base not in ref_base and mt is not None and mt <= cutoff:
-                    if not dry_run:
-                        try:
-                            os.remove(full)
-                        except OSError:
-                            pass
-                    deleted.append(os.path.join("_txlog", sub, f))
-        return deleted
-
-    def _vacuum_spark(
-        self, spark: SparkSession, grace_seconds: float, dry_run: bool
-    ) -> "list[str] | None":
-        """VACUUM as Spark jobs (r13, VERDICT r12 #4 — the Delta
-        shape). Three stages, none materializing table-scale state on
-        the driver:
-
-        1. **References.** Surviving JSON log entries are walked
-           driver-side (bounded: post-expiry tail of small entries),
-           but the unbounded part — every checkpoint's add-set — is
-           read as a Spark parquet scan: add rows contribute ``path``,
-           dv rows explode their JSON name lists. Returns None (caller
-           refolds) if any checkpoint version lacks a complete parquet
-           set (legacy JSON form) — a partial reference set would
-           delete live data.
-        2. **Listing.** One task per top-level partition directory
-           (recursive walk) plus one for the table root's own files —
-           the driver ships DIRECTORY NAMES only. On hive-partitioned
-           100 TB tables this is the object-store-parallel listing;
-           an unpartitioned flat dir degrades to one listing task,
-           which is the filesystem's own sequential bound.
-        3. **Delete.** The unreferenced-and-past-grace candidates are
-           deleted INSIDE ``mapPartitions`` (idempotent: ENOENT from a
-           task retry still reports the name); the returned name list
-           is the same contract the driver path serves.
-
-        The ``_stage-*`` sweep stays driver-side — bounded by aborted
-        staging attempts, and directory removal is one rmtree each."""
-        import shutil
-
-        ck_parts: list[str] = []
-        for cv in self._checkpoint_versions():
-            parts = self._complete_ckpt_parquet(cv)
-            if not parts:
-                if os.path.exists(_ckpt_path(self.path, cv)):
-                    return None  # legacy JSON checkpoint: driver path
-                continue  # torn/incomplete set references nothing
-            ck_parts.extend(parts)
-        refs_small: set[str] = set()
-        for entry in self._read_log():
-            for a in entry["actions"]:
-                n = (
-                    a.get("add")
-                    or a.get("remove")
-                    or a.get("dv")
-                    or a.get("cdc")
-                )
-                if n:
-                    refs_small.add(n)
-        cutoff = time.time() - grace_seconds
-        deleted: list[str] = []
-        for f in os.listdir(self.path):
-            full = os.path.join(self.path, f)
-            try:
-                mt = os.path.getmtime(full)
-            except OSError:
-                continue  # raced with another cleaner: already gone
-            if (
-                f.startswith("_stage-")
-                and os.path.isdir(full)
-                and mt <= cutoff
-            ):
-                if not dry_run:
-                    shutil.rmtree(full, ignore_errors=True)
-                deleted.append(f)
-        root = os.path.abspath(self.path)
-        units = ["."]
-        for f in os.listdir(root):
-            if f == _LOG_DIR or f.startswith("_stage-"):
-                continue
-            if os.path.isdir(os.path.join(root, f)):
-                units.append(f)
-
-        def _list_unit(unit_iter):
-            for u in unit_iter:
-                if u == ".":
-                    with os.scandir(root) as it:
-                        for e in it:
-                            if e.is_file() and e.name.endswith(".parquet"):
-                                yield (e.name, e.stat().st_mtime)
-                else:
-                    for dirpath, _dirs, fnames in os.walk(
-                        os.path.join(root, u)
-                    ):
-                        for f in fnames:
-                            if not f.endswith(".parquet"):
-                                continue
-                            full = os.path.join(dirpath, f)
-                            try:
-                                yield (
-                                    os.path.relpath(full, root),
-                                    os.path.getmtime(full),
-                                )
-                            except OSError:
-                                pass  # raced with another cleaner
-
-        files_df = spark.createDataFrame(
-            spark.sparkContext.parallelize(
-                units, max(1, min(len(units), 64))
-            ).mapPartitions(_list_unit),
-            "rel string, mtime double",
-        )
-        cand = files_df.filter(F.col("mtime") <= F.lit(cutoff))
-        if ck_parts:
-            ck = spark.read.parquet(*ck_parts)
-            refs = ck.filter(F.col("kind") == "add").select(
-                F.col("path").alias("rel")
-            )
-            refs = refs.unionByName(
-                ck.filter(F.col("kind") == "dv").select(
-                    F.explode(
-                        F.from_json(F.col("payload"), "array<string>")
-                    ).alias("rel")
-                )
-            )
-            cand = cand.join(refs, "rel", "left_anti")
-        if refs_small:
-            cand = cand.filter(~F.col("rel").isin(sorted(refs_small)))
-        if dry_run:
-            rels = [r["rel"] for r in cand.select("rel").collect()]
+                        shutil.rmtree(full) if is_dir else os.remove(full)
+                except OSError:
+                    continue  # a concurrent cleaner got there first
+                deleted.append(os.path.join(sub, f))
+        refs = {
+            a.get("add") or a.get("remove") or a.get("dv") or a.get("cdc")
+            for entry in self._read_log()
+            for a in entry["actions"]
+        } - {None}
+        # data files live at the root or, for partitioned tables, under
+        # hive col=value/ dirs: one listing unit per top-level dir
+        data_units = [(".", ".parquet")] + [
+            (f, ".parquet")
+            for f in os.listdir(root)
+            if f != _LOG_DIR
+            and not f.startswith("_stage-")
+            and os.path.isdir(os.path.join(root, f))
+        ]
+        side_units = [
+            (os.path.join(_LOG_DIR, "_bloom"), ".bloom.json"),
+            (os.path.join(_LOG_DIR, "_ndv"), ".ndv.json"),
+        ]
+        if ck_parts is None:
+            # after expire_log, files live at the horizon are
+            # referenced ONLY by the surviving checkpoints' add-sets
+            for cv in self._checkpoint_versions():
+                ck = self._load_checkpoint(cv)
+                if ck is not None:
+                    refs.update(ck["adds"])
+                    refs.update(d for ds in ck.get("dvs", {}).values() for d in ds)
         else:
-
-            bdir = os.path.join(root, _LOG_DIR, "_bloom")
-            ndir = os.path.join(root, _LOG_DIR, "_ndv")
-
-            def _rm(rows):
-                for row in rows:
-                    try:
-                        os.remove(os.path.join(root, row["rel"]))
-                    except OSError:
-                        pass  # retry/raced delete: idempotent
-                    base = os.path.basename(row["rel"])
-                    for d, suf in (
-                        (bdir, ".bloom.json"),  # r13: sidecars ride
-                        (ndir, ".ndv.json"),  # r14: their data file
-                    ):
-                        try:
-                            os.remove(os.path.join(d, base + suf))
-                        except OSError:
-                            pass
-                    yield row["rel"]
-
-            rels = cand.select("rel").rdd.mapPartitions(_rm).collect()
-        # r14: orphan sidecars (their data file already gone — an
-        # earlier pass, or a pre-cleanup artifact) swept through the
-        # same Spark anti-join shape as the data files: one listing
-        # task per sidecar kind, basename-joined against the
-        # checkpoint's referenced adds. Bounded by sidecar count.
-        side_units = [("_bloom", ".bloom.json"), ("_ndv", ".ndv.json")]
-
-        def _list_side(unit_iter):
-            for sub, suffix in unit_iter:
-                d = os.path.join(root, _LOG_DIR, sub)
-                if not os.path.isdir(d):
-                    continue
-                with os.scandir(d) as it:
-                    for e in it:
-                        if e.is_file() and e.name.endswith(suffix):
-                            try:
-                                yield (
-                                    sub,
-                                    e.name,
-                                    e.name[: -len(suffix)],
-                                    e.stat().st_mtime,
-                                )
-                            except OSError:
-                                pass
-
-        sides_df = spark.createDataFrame(
-            spark.sparkContext.parallelize(side_units, 2).mapPartitions(
-                _list_side
-            ),
-            "sub string, name string, base string, mtime double",
-        )
-        scand = sides_df.filter(F.col("mtime") <= F.lit(cutoff))
-        if ck_parts:
-            ref_base = (
-                spark.read.parquet(*ck_parts)
-                .filter(F.col("kind") == "add")
-                .select(
-                    F.element_at(F.split(F.col("path"), "/"), -1).alias(
-                        "base"
+            ck = spark.read.parquet(*ck_parts)
+            ck_refs = ck.filter(F.col("kind") == "add").select("path")
+            ck_refs = ck_refs.unionByName(
+                ck.filter(F.col("kind") == "dv").select(
+                    F.explode(F.from_json("payload", "array<string>")).alias(
+                        "path"
                     )
                 )
             )
-            scand = scand.join(ref_base, "base", "left_anti")
-        if refs_small:
-            small_base = sorted(
-                {os.path.basename(r) for r in refs_small}
-            )
-            scand = scand.filter(~F.col("base").isin(small_base))
 
-        def _rm_side(rows):
-            for row in rows:
-                if not dry_run:
+        def sweep(units, base: bool) -> list[str]:
+            keys = {os.path.basename(r) for r in refs} if base else refs
+            if ck_parts is None:
+                return list(
+                    self._vacuum_rm(
+                        root,
+                        [
+                            rel
+                            for key, rel, mtime in self._vacuum_list(root, units)
+                            if mtime <= cutoff and key not in keys
+                        ],
+                        dry_run,
+                    )
+                )
+            cand = spark.createDataFrame(
+                spark.sparkContext.parallelize(
+                    units, min(len(units), 64)
+                ).mapPartitions(lambda us: TxTable._vacuum_list(root, us)),
+                "path string, rel string, mtime double",
+            ).filter(F.col("mtime") <= F.lit(cutoff))
+            ck_keys = ck_refs.select(
+                F.element_at(F.split("path", "/"), -1).alias("path")
+                if base
+                else "path"
+            )
+            return (
+                self._drop_paths(spark, cand, keys)
+                .join(ck_keys, "path", "left_anti")
+                .select("rel")
+                .rdd.mapPartitions(
+                    lambda rows: TxTable._vacuum_rm(
+                        root, (r["rel"] for r in rows), dry_run
+                    )
+                )
+                .collect()
+            )
+
+        # data first: a data file's removal takes its sidecars along,
+        # so only sidecars orphaned earlier remain for the second pass
+        data = sorted(sweep(data_units, False))
+        return deleted + data + sorted(sweep(side_units, True))
+
+    @staticmethod
+    def _vacuum_list(root: str, units):
+        """Yield ``(key, rel, mtime)`` for each vacuum candidate of the
+        ``(dir, suffix)`` units: every file ending in ``suffix`` under
+        the root-relative ``dir`` (``"."``: the root's own files; any
+        other dir is walked, log and staging dirs pruned). A data
+        file's key is ``rel``, the name the log references it by; a
+        sidecar's is the basename of the data file it indexes. A file
+        that vanishes between listing and stat — a concurrent vacuum
+        or expiry removed it — is already reclaimed and skipped. Runs
+        in-process on the driver route, as a Spark task otherwise."""
+        for d, suffix in units:
+            for dirpath, dirs, names in os.walk(os.path.join(root, d)):
+                dirs[:] = [] if d == "." else [
+                    x for x in dirs if x != _LOG_DIR and not x.startswith("_stage-")
+                ]
+                for f in names:
+                    if not f.endswith(suffix):
+                        continue
+                    full = os.path.join(dirpath, f)
+                    rel = os.path.relpath(full, root)
                     try:
-                        os.remove(
-                            os.path.join(root, _LOG_DIR, row["sub"], row["name"])
-                        )
+                        mtime = os.path.getmtime(full)
+                    except OSError:
+                        continue
+                    key = rel if suffix == ".parquet" else f[: -len(suffix)]
+                    yield key, rel, mtime
+
+    @staticmethod
+    def _vacuum_rm(root: str, rels, dry_run: bool):
+        """Remove each root-relative ``rels`` file — a data file with
+        its bloom and NDV sidecars — and yield its name. Idempotent: a
+        file a retried task or a concurrent cleaner already removed is
+        still reported."""
+        for rel in rels:
+            if not dry_run:
+                base = os.path.basename(rel)
+                sides = [
+                    os.path.join(_LOG_DIR, "_bloom", base + ".bloom.json"),
+                    os.path.join(_LOG_DIR, "_ndv", base + ".ndv.json"),
+                ]
+                for p in [rel] + (sides if rel.endswith(".parquet") else []):
+                    try:
+                        os.remove(os.path.join(root, p))
                     except OSError:
                         pass
-                yield os.path.join(_LOG_DIR, row["sub"], row["name"])
-
-        orphaned = (
-            scand.select("sub", "name").rdd.mapPartitions(_rm_side).collect()
-        )
-        return deleted + sorted(rels) + sorted(orphaned)
+            yield rel

@@ -83,3 +83,39 @@ def test_credibility_fires_on_load_not_on_quiet(tmp_path):
     assert loaded is not None
     assert loaded["credible"] is False, loaded
     assert "co_tenant_cpu" in loaded["reasons"], loaded
+
+
+def test_compact_line_has_driver_keys_and_host_verdict():
+    """The printed line keeps the keys the driver parses, adds the
+    host verdict, and stays under 4 kB at the 25 headline queries."""
+    import json
+
+    from bench import HEADLINE, _compact
+
+    assert len(HEADLINE) == 25
+    times = {q: 123.456 for q in HEADLINE}
+    out = {
+        "metric": "headline_queries_total",
+        "value": 3086.4,
+        "unit": "sec",
+        "queries": times,
+        "queries_min": times,
+        "queries_first_run": times,
+        "sf": 0.1,
+        "calibration": {"py_loop_1t_sec": 1.0, "spark_mt32_sec": 2.0},
+        "host_credibility": {
+            "jiffies_total": 10_000,
+            "steal_jiffies": 12,
+            "steal_frac": 0.0012,
+            "busy_other_frac": 0.01,
+            "credible": True,
+        },
+        "median_semantics": "cold",
+    }
+    line = _compact(out)
+    assert set(line) == {
+        "metric", "value", "unit", "queries", "queries_first_run", "sf",
+        "host_credible", "steal_frac",
+    }
+    assert line["host_credible"] is True and line["steal_frac"] == 0.0012
+    assert len(json.dumps(line)) < 4096

@@ -55,3 +55,32 @@ def test_recent_calibration_and_median_ratio(tmp_path, monkeypatch):
     assert bench._recent_calibration(0.1)["spark_mt32_sec"] == 1.1
     assert bench._median_ratio({"q": 0.75}, {"q": 0.5}) == 1.5
     assert bench._median_ratio({"q": 0.5}, {}) is None
+
+
+def test_local_record_is_write_once(tmp_path, monkeypatch):
+    """A second run in the same round takes the next free letter
+    instead of overwriting the first record; ``_records()`` reads the
+    lettered names as the same round, and never a low-core record."""
+    monkeypatch.setattr(bench, "_REPO_DIR", str(tmp_path))
+    names = [
+        bench._save_local({"sf": 0.1, "queries": {"q": t}}, 16, "")
+        for t in (0.5, 0.6, 0.7)
+    ]
+    assert [p.rsplit("/", 1)[1] for p in names] == [
+        "BENCH_LOCAL_r16.json",
+        "BENCH_LOCAL_r16b.json",
+        "BENCH_LOCAL_r16c.json",
+    ]
+    assert json.loads((tmp_path / "BENCH_LOCAL_r16.json").read_text())[
+        "queries"
+    ] == {"q": 0.5}
+    c8 = [
+        bench._save_local({"sf": 0.1, "queries": {"q": 9.0}}, 16, "_c8")
+        for _ in range(2)
+    ]
+    assert [p.rsplit("/", 1)[1] for p in c8] == [
+        "BENCH_LOCAL_r16_c8.json",
+        "BENCH_LOCAL_r16b_c8.json",
+    ]
+    got = sorted((r, rec["queries"]["q"]) for r, rec in bench._records(0.1))
+    assert got == [(16, 0.5), (16, 0.6), (16, 0.7)]

@@ -55,21 +55,30 @@ def test_vacuum_sweeps_crashed_commit_tmps(spark, tmp_path):
         ldir, "_ndv", "part-x.parquet.ndv.json.cafe0123.tmp"
     )
     fresh = os.path.join(ldir, "00000000000000000009.json.aaaa0000.tmp")
+    # a checkpoint writer's private part dir, left by a hard crash
+    stale_ckpt = os.path.join(ldir, "_ckpt_tmp-0badf00d")
+    os.makedirs(stale_ckpt)
+    _plant_tmp(os.path.join(stale_ckpt, "0.parquet"), age_seconds=7200)
+    old = time.time() - 7200
+    os.utime(stale_ckpt, (old, old))
     _plant_tmp(stale_log, age_seconds=7200)
     _plant_tmp(stale_ndv, age_seconds=7200)
     _plant_tmp(fresh, age_seconds=0)
-    # dry run lists both stale tmps, removes nothing
+    # dry run lists the stale tmps, removes nothing
     listed = t.vacuum(grace_seconds=3600, dry_run=True)
     assert os.path.join("_txlog", os.path.basename(stale_log)) in listed
     assert (
         os.path.join("_txlog", "_ndv", os.path.basename(stale_ndv)) in listed
     )
+    assert os.path.join("_txlog", "_ckpt_tmp-0badf00d") in listed
     assert os.path.exists(stale_log) and os.path.exists(stale_ndv)
+    assert os.path.exists(stale_ckpt)
     # real run reclaims stale, keeps the fresh (possibly mid-publish) tmp
     deleted = t.vacuum(grace_seconds=3600)
     assert os.path.join("_txlog", os.path.basename(stale_log)) in deleted
     assert not os.path.exists(stale_log)
     assert not os.path.exists(stale_ndv)
+    assert not os.path.exists(stale_ckpt)
     assert os.path.exists(fresh)
     # the log itself still reads: versions listing never matched tmps
     assert t.read(spark).count() == 200

@@ -158,3 +158,45 @@ def test_vacuum_spark_falls_back_on_legacy_json_checkpoint(
     n = t.read(spark).count()
     t.vacuum(grace_seconds=0, spark=spark)
     assert t.read(spark).count() == n
+
+
+def test_vacuum_listing_skips_a_file_vanished_before_stat(
+    tmp_path, monkeypatch
+):
+    """A concurrent vacuum or expiry can remove a file between the
+    listing and its stat. The listing both routes share (in-process on
+    the driver, inside a task on Spark) treats it as already reclaimed
+    instead of failing the whole vacuum."""
+    root = tmp_path / "t"
+    (root / "day=a").mkdir(parents=True)
+    (root / "_txlog" / "_bloom").mkdir(parents=True)
+    for rel in (
+        "a.parquet",
+        "gone.parquet",
+        "day=a/b.parquet",
+        "day=a/gone.parquet",
+        "_txlog/_bloom/b.parquet.bloom.json",
+        "_txlog/_bloom/gone.parquet.bloom.json",
+    ):
+        (root / rel).write_bytes(b"x")
+    real = os.path.getmtime
+
+    def racing(p):
+        if os.path.basename(p).startswith("gone"):
+            os.remove(p)  # another cleaner wins the race
+        return real(p)
+
+    monkeypatch.setattr(os.path, "getmtime", racing)
+    units = [
+        (".", ".parquet"),
+        ("day=a", ".parquet"),
+        ("_txlog/_bloom", ".bloom.json"),
+    ]
+    got = sorted(
+        (key, rel) for key, rel, _mt in TxTable._vacuum_list(str(root), units)
+    )
+    assert got == [
+        ("a.parquet", "a.parquet"),
+        ("b.parquet", "_txlog/_bloom/b.parquet.bloom.json"),
+        ("day=a/b.parquet", "day=a/b.parquet"),
+    ]
