@@ -26,6 +26,7 @@ ACTION_INSERT = "insert"
 ACTION_UPDATE = "update"
 ACTION_SKIP = "skip"  # staged row identical to snapshot (A10)
 ACTION_KEEP = "keep"  # snapshot row untouched by this batch
+ACTIONS = (ACTION_INSERT, ACTION_UPDATE, ACTION_SKIP, ACTION_KEEP)
 
 
 def rows_differ(old_prefix: str, new_prefix: str, cols: list[str]) -> Column:

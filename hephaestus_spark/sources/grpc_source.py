@@ -15,9 +15,10 @@ Design:
 - ``FeedTransport`` is the seam: ``get_employees(known_hash)``,
   ``get_daily_tasks(known_hash, date)``, ``get_task_types()``, each
   returning a ``FeedResponse(payloads, new_hash)`` of RAW protobuf
-  message bytes. The poller never touches decoded objects — decode
-  happens in Spark (Arrow-batched mapInPandas), keeping the driver
-  thin even for large snapshots.
+  message bytes. The response already lives on the driver, so the
+  poller decodes it there (``protodecode.decode_local``) into Arrow
+  columns and hands Spark a local relation: no Spark job and no Python
+  worker before the one write that lands the poll.
 - ``GrpcTransport`` (probe-gated: grpcio is not in this image) speaks
   raw unary-unary gRPC: request/response envelopes are encoded with
   the same public wire codec as the row messages, so NO generated stub
@@ -26,11 +27,11 @@ Design:
 - ``InProcessTransport`` serves canned byte feeds for tests and for
   environments without grpcio — same envelope semantics, including the
   hash short-circuit.
-- ``FeedPoller`` lands each non-skipped poll as ONE parquet file in the
-  pipeline's feed directory — each dropped file IS one upstream poll,
-  exactly the stand-in contract ``EmployeeSyncPipeline`` /
-  ``TaskSyncPipeline`` already consume (maxFilesPerTrigger=1 ⇒ one
-  micro-batch per poll). The hash handshake short-circuits BEFORE any
+- ``FeedPoller`` lands each non-skipped poll with ONE Spark write of ONE
+  parquet file in the pipeline's feed directory — each dropped file IS
+  one upstream poll, exactly the stand-in contract
+  ``EmployeeSyncPipeline`` / ``TaskSyncPipeline`` already consume
+  (maxFilesPerTrigger=1 ⇒ one micro-batch per poll). The hash handshake short-circuits BEFORE any
   Spark work (P1), and the per-day task poll loop advances from the
   pipeline watermark (A20) so restart resumes where the reference would.
 """
@@ -38,12 +39,10 @@ Design:
 from __future__ import annotations
 
 import datetime
-import os
-import uuid
 from dataclasses import dataclass, field
 from typing import Optional, Protocol
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hephaestus_spark.sources import protodecode as pc
@@ -82,6 +81,11 @@ class FeedResponse:
     new_hash: str
 
 
+def _feed(resp_bytes: bytes) -> FeedResponse:
+    d = pc.decode_message(resp_bytes, FEED_RESPONSE_FIELDS)
+    return FeedResponse(d.get("payloads", []), d.get("new_hash", ""))
+
+
 class FeedTransport(Protocol):
     def get_employees(self, known_hash: Optional[str]) -> FeedResponse: ...
 
@@ -97,7 +101,29 @@ class FeedTransport(Protocol):
 # --------------------------------------------------------------------------
 
 
-class GrpcTransport:
+class _EnvelopeTransport:
+    """The three RPCs over the shared envelope codec; a subclass only
+    moves request bytes to ``method`` and the response bytes back."""
+
+    def _call(self, method: str, req: bytes) -> bytes:
+        raise NotImplementedError
+
+    def get_employees(self, known_hash: Optional[str]) -> FeedResponse:
+        req = pc.encode_message({"known_hash": known_hash or ""}, EMPLOYEES_REQUEST_FIELDS)
+        return _feed(self._call(METHOD_EMPLOYEES, req))
+
+    def get_daily_tasks(self, known_hash: Optional[str], date: str) -> FeedResponse:
+        req = pc.encode_message(
+            {"known_hash": known_hash or "", "date": date}, TASKS_REQUEST_FIELDS
+        )
+        return _feed(self._call(METHOD_DAILY_TASKS, req))
+
+    def get_task_types(self) -> list[str]:
+        d = pc.decode_message(self._call(METHOD_TASK_TYPES, b""), TYPES_RESPONSE_FIELDS)
+        return d.get("types", [])
+
+
+class GrpcTransport(_EnvelopeTransport):
     """Raw-bytes gRPC transport (requires grpcio).
 
     Uses identity (de)serializers so the only wire knowledge lives in
@@ -112,34 +138,15 @@ class GrpcTransport:
             )
         self._channel = channel or grpc.insecure_channel(target)
         ident = lambda b: b  # noqa: E731
-        self._employees = self._channel.unary_unary(
-            METHOD_EMPLOYEES, request_serializer=ident, response_deserializer=ident
-        )
-        self._tasks = self._channel.unary_unary(
-            METHOD_DAILY_TASKS, request_serializer=ident, response_deserializer=ident
-        )
-        self._types = self._channel.unary_unary(
-            METHOD_TASK_TYPES, request_serializer=ident, response_deserializer=ident
-        )
+        self._stubs = {
+            m: self._channel.unary_unary(
+                m, request_serializer=ident, response_deserializer=ident
+            )
+            for m in (METHOD_EMPLOYEES, METHOD_DAILY_TASKS, METHOD_TASK_TYPES)
+        }
 
-    @staticmethod
-    def _feed(resp_bytes: bytes) -> FeedResponse:
-        d = pc.decode_message(resp_bytes, FEED_RESPONSE_FIELDS)
-        return FeedResponse(d.get("payloads", []), d.get("new_hash", ""))
-
-    def get_employees(self, known_hash: Optional[str]) -> FeedResponse:
-        req = pc.encode_message({"known_hash": known_hash or ""}, EMPLOYEES_REQUEST_FIELDS)
-        return self._feed(self._employees(req))
-
-    def get_daily_tasks(self, known_hash: Optional[str], date: str) -> FeedResponse:
-        req = pc.encode_message(
-            {"known_hash": known_hash or "", "date": date}, TASKS_REQUEST_FIELDS
-        )
-        return self._feed(self._tasks(req))
-
-    def get_task_types(self) -> list[str]:
-        d = pc.decode_message(self._types(b""), TYPES_RESPONSE_FIELDS)
-        return d.get("types", [])
+    def _call(self, method: str, req: bytes) -> bytes:
+        return self._stubs[method](req)
 
 
 @dataclass
@@ -191,7 +198,7 @@ class InProcessTransport:
         return list(self.task_types)
 
 
-class SocketGrpcTransport:
+class SocketGrpcTransport(_EnvelopeTransport):
     """gRPC over a REAL TCP socket with NO grpcio: the transport
     speaks the genuine wire protocol — HTTP/2 framing + HPACK headers +
     gRPC length-prefixed messages — through the from-the-spec client in
@@ -209,28 +216,8 @@ class SocketGrpcTransport:
     def close(self) -> None:
         self._client.close()
 
-    @staticmethod
-    def _feed(resp_bytes: bytes) -> FeedResponse:
-        d = pc.decode_message(resp_bytes, FEED_RESPONSE_FIELDS)
-        return FeedResponse(d.get("payloads", []), d.get("new_hash", ""))
-
-    def get_employees(self, known_hash: Optional[str]) -> FeedResponse:
-        req = pc.encode_message(
-            {"known_hash": known_hash or ""}, EMPLOYEES_REQUEST_FIELDS
-        )
-        return self._feed(self._client.call(METHOD_EMPLOYEES, req))
-
-    def get_daily_tasks(self, known_hash: Optional[str], date: str) -> FeedResponse:
-        req = pc.encode_message(
-            {"known_hash": known_hash or "", "date": date}, TASKS_REQUEST_FIELDS
-        )
-        return self._feed(self._client.call(METHOD_DAILY_TASKS, req))
-
-    def get_task_types(self) -> list[str]:
-        d = pc.decode_message(
-            self._client.call(METHOD_TASK_TYPES, b""), TYPES_RESPONSE_FIELDS
-        )
-        return d.get("types", [])
+    def _call(self, method: str, req: bytes) -> bytes:
+        return self._client.call(method, req)
 
 
 def serve_transport(transport: FeedTransport):
@@ -284,9 +271,10 @@ class FeedPoller:
 
     Keeps the per-feed ``lastKnownHash`` exactly like the reference
     (in-process, reset on restart — employees.go:26; durability comes
-    from the watermark table, not the hash). Decode is Spark-side
-    (mapInPandas over an Arrow batch of payload bytes), so a snapshot
-    of any size never materializes as Python objects on the driver."""
+    from the watermark table, not the hash). The RPC response already
+    lives on the driver, so its payloads are decoded there into Arrow
+    columns of the feed schema, and one Spark write lands them as one
+    file: the poll runs no other Spark job and starts no Python worker."""
 
     transport: FeedTransport
     employee_feed_dir: Optional[str] = None
@@ -294,12 +282,12 @@ class FeedPoller:
     employee_hash: Optional[str] = None
     task_hash: Optional[str] = None
 
-    def _land(self, spark: SparkSession, payloads, feed_dir, decode, feed_date):
-        df = spark.createDataFrame([(p,) for p in payloads], "payload binary")
-        decoded = decode(df).withColumn("feed_date", F.lit(feed_date).cast("date"))
-        # one file per poll: coalesce(1) is deliberate (poll payloads are
-        # one RPC's worth of rows; parallelism comes from the pipeline)
-        decoded.coalesce(1).write.mode("append").parquet(feed_dir)
+    @staticmethod
+    def _land(decoded: DataFrame, feed_dir: str, feed_date) -> None:
+        # one file per poll: coalesce(1) over the local relation merges
+        # nothing (parallelism comes from the pipeline)
+        out = decoded.withColumn("feed_date", F.lit(feed_date).cast("date"))
+        out.coalesce(1).write.mode("append").parquet(feed_dir)
 
     def poll_employees_once(
         self, spark: SparkSession, feed_date: Optional[datetime.date] = None
@@ -313,11 +301,10 @@ class FeedPoller:
         if not resp.payloads or resp.new_hash == self.employee_hash:
             self.employee_hash = resp.new_hash  # commit hash even on skip
             return 0
-        feed_date = feed_date or datetime.date.today()
-        self._land(
-            spark, resp.payloads, self.employee_feed_dir,
-            pc.decode_employees, feed_date,
+        decoded = pc.decode_local(
+            spark, resp.payloads, pc.EMPLOYEE_FIELDS, pc.EMPLOYEE_SCHEMA
         )
+        self._land(decoded, self.employee_feed_dir, feed_date or datetime.date.today())
         self.employee_hash = resp.new_hash
         return len(resp.payloads)
 
@@ -334,13 +321,15 @@ class FeedPoller:
         if not resp.payloads or resp.new_hash == self.task_hash:
             self.task_hash = resp.new_hash
             return 0
-        decoded_cols = lambda df: (  # noqa: E731 — align wire names to feed schema
-            pc.decode_tasks(df)
+        decoded = (  # align wire names and types to the feed schema
+            pc.task_timestamps(
+                pc.decode_local(spark, resp.payloads, pc.TASK_FIELDS, pc.TASK_SCHEMA)
+            )
             .withColumnRenamed("creation_date", "created_at")
             .withColumnRenamed("closing_date", "closed_at")
             .withColumn("executors", F.expr("transform(executors, x -> CAST(x AS STRING))"))
         )
-        self._land(spark, resp.payloads, self.task_feed_dir, decoded_cols, date)
+        self._land(decoded, self.task_feed_dir, date)
         self.task_hash = resp.new_hash
         return len(resp.payloads)
 

@@ -12,12 +12,14 @@ Two decode paths:
    spark-protobuf connector (``from_protobuf`` + a compiled descriptor
    set) decodes JVM-side at wire speed. The jar isn't bundled in every
    distribution (not in this image), so it is probe-gated.
-2. ``decode_employees`` / ``decode_tasks`` (always available): a pure-
-   Python wire-format parser (varints + length-delimited fields — the
-   public protobuf encoding, developers.google.com/protocol-buffers/
-   docs/encoding) run as an Arrow-batched ``mapInPandas``. Batch-at-a-
-   time, never row-at-a-time Python: the per-batch loop is plain bytes
-   slicing with no object churn beyond the output lists.
+2. ``decode_message`` (always available): a pure-Python wire-format
+   parser (varints + length-delimited fields — the public protobuf
+   encoding, developers.google.com/protocol-buffers/docs/encoding).
+   ``decode_columns`` turns its rows into one list per field, and that
+   feeds both uses: ``decode_local`` for payloads that are already on
+   the driver (an RPC response), handed to Spark as Arrow columns, and
+   ``decode_employees`` / ``decode_tasks`` for payloads in a DataFrame,
+   run as an Arrow-batched ``mapInPandas``.
 
 The encoder half exists for test fixtures and the micro-batch replay
 harness — production bytes come from the wire.
@@ -28,7 +30,8 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame
+import pyarrow as pa
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 # ---------------------------------------------------------------------------
@@ -78,25 +81,34 @@ def decode_message(b: bytes, fields: dict[int, tuple[str, str]]) -> dict:
     """Decode one message given {field_no: (name, kind)}.
 
     kinds: int64, bool, string, rep_string, rep_int64 (packed or not),
-    ts (google.protobuf.Timestamp-shaped submessage -> epoch seconds).
+    ts (google.protobuf.Timestamp-shaped submessage -> epoch seconds),
+    bytes, rep_bytes (repeated submessage kept opaque).
     Unknown fields are skipped, per proto3 compatibility rules."""
     out: dict = {}
-    i = 0
-    while i < len(b):
-        tag, i = _read_varint(b, i)
+    i, end = 0, len(b)
+    while i < end:
+        start, tag = i, b[i]
+        if tag < 0x80:  # one-byte varints (field numbers < 16) read inline
+            i += 1
+        else:
+            tag, i = _read_varint(b, i)
         field_no, wire = tag >> 3, tag & 7
         spec = fields.get(field_no)
         if spec is None:
             i = _skip(b, i, wire)
             continue
         name, kind = spec
-        if kind in ("int64", "bool"):
-            v, i = _read_varint(b, i)
-            out[name] = bool(v) if kind == "bool" else v
-        elif kind == "string":
-            n, i = _read_varint(b, i)
+        if kind == "string":
+            n = b[i]
+            if n < 0x80:
+                i += 1
+            else:
+                n, i = _read_varint(b, i)
             out[name] = b[i : i + n].decode("utf-8")
             i += n
+        elif kind in ("int64", "bool"):
+            v, i = _read_varint(b, i)
+            out[name] = bool(v) if kind == "bool" else v
         elif kind == "rep_string":
             n, i = _read_varint(b, i)
             out.setdefault(name, []).append(b[i : i + n].decode("utf-8"))
@@ -104,9 +116,9 @@ def decode_message(b: bytes, fields: dict[int, tuple[str, str]]) -> dict:
         elif kind == "rep_int64":
             if wire == _LEN:  # packed
                 n, i = _read_varint(b, i)
-                end = i + n
+                stop = i + n
                 vals = out.setdefault(name, [])
-                while i < end:
+                while i < stop:
                     v, i = _read_varint(b, i)
                     vals.append(v)
             else:
@@ -121,10 +133,23 @@ def decode_message(b: bytes, fields: dict[int, tuple[str, str]]) -> dict:
             n, i = _read_varint(b, i)
             out[name] = b[i : i + n]
             i += n
-        elif kind == "rep_bytes":  # repeated submessage, kept opaque
-            n, i = _read_varint(b, i)
-            out.setdefault(name, []).append(b[i : i + n])
-            i += n
+        elif kind == "rep_bytes":
+            # A feed envelope is one run of thousands of entries under the
+            # same tag: take the whole run here instead of one pass of the
+            # outer loop per entry.
+            vals = out.setdefault(name, [])
+            tag_bytes, tag_len = b[start:i], i - start
+            while True:
+                n = b[i]
+                if n < 0x80:
+                    i += 1
+                else:
+                    n, i = _read_varint(b, i)
+                vals.append(b[i : i + n])
+                i += n
+                if not b.startswith(tag_bytes, i):
+                    break
+                i += tag_len
         else:
             raise ValueError(f"unsupported kind {kind}")
     return out
@@ -203,19 +228,33 @@ TASK_SCHEMA = (
 _DEFAULTS = {"int64": 0, "bool": False, "string": "", "rep_string": [], "rep_int64": [], "ts": 0}
 
 
+def decode_columns(payloads, fields: dict[int, tuple[str, str]]) -> dict[str, list]:
+    """Decode messages into one list per field, in field-number order,
+    with the proto3 default wherever a message omits the field."""
+    rows = [decode_message(b, fields) for b in payloads]
+    return {
+        name: [r.get(name, _DEFAULTS[kind]) for r in rows]
+        for _, (name, kind) in sorted(fields.items())
+    }
+
+
+def decode_local(
+    spark: SparkSession, payloads: list[bytes], fields: dict[int, tuple[str, str]], schema: str
+) -> DataFrame:
+    """Decode payloads that already live on the driver into a local
+    relation of ``schema``, handed to Spark as Arrow columns: no Spark
+    job and no Python worker."""
+    return spark.createDataFrame(pa.table(decode_columns(payloads, fields)), schema)
+
+
 def _decode_df(
     df: DataFrame, bytes_col: str, fields: dict[int, tuple[str, str]], schema: str
 ) -> DataFrame:
     """mapInPandas decode: Arrow batches in, typed Arrow batches out."""
-    names = [name for _, (name, _k) in sorted(fields.items())]
-    kinds = {name: k for _, (name, k) in fields.items()}
 
     def decode_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            rows = [decode_message(b, fields) for b in pdf[bytes_col]]
-            yield pd.DataFrame(
-                {n: [r.get(n, _DEFAULTS[kinds[n]]) for r in rows] for n in names}
-            )
+            yield pd.DataFrame(decode_columns(pdf[bytes_col], fields))
 
     return df.mapInPandas(decode_batches, schema=schema)
 
@@ -224,13 +263,16 @@ def decode_employees(df: DataFrame, bytes_col: str = "payload") -> DataFrame:
     return _decode_df(df, bytes_col, EMPLOYEE_FIELDS, EMPLOYEE_SCHEMA)
 
 
-def decode_tasks(df: DataFrame, bytes_col: str = "payload") -> DataFrame:
-    """Decoded Task feed; epoch-second dates become proper timestamps
-    (UTC session — session.py pins spark.sql.session.timeZone)."""
-    out = _decode_df(df, bytes_col, TASK_FIELDS, TASK_SCHEMA)
-    return out.withColumn(
+def task_timestamps(df: DataFrame) -> DataFrame:
+    """Epoch-second Task dates become proper timestamps (UTC session —
+    session.py pins spark.sql.session.timeZone)."""
+    return df.withColumn(
         "creation_date", F.timestamp_seconds("creation_date")
     ).withColumn("closing_date", F.timestamp_seconds("closing_date"))
+
+
+def decode_tasks(df: DataFrame, bytes_col: str = "payload") -> DataFrame:
+    return task_timestamps(_decode_df(df, bytes_col, TASK_FIELDS, TASK_SCHEMA))
 
 
 def spark_protobuf_available(spark) -> bool:

@@ -68,14 +68,10 @@ class EmployeeSyncPipeline:
     snapshot_path: str
     watermark_path: str
 
-    def run_available_now(self, spark: SparkSession) -> MergeSinkJob:
-        """Catch-up mode (A20/A21 initial sync): drain everything
-        currently in the feed, then stop — Trigger.AvailableNow."""
-        target = ParquetSnapshotTarget(
-            self.snapshot_path, "id", EMPLOYEE_COMPARE_COLS
-        )
+    def _start(self, spark: SparkSession, **trigger):
+        """One pipeline body for both modes; only the trigger differs."""
         sink = MergeSinkJob(
-            target=target,
+            target=ParquetSnapshotTarget(self.snapshot_path, "id", EMPLOYEE_COMPARE_COLS),
             fingerprint_cols=["id"] + EMPLOYEE_COMPARE_COLS,
             watermark=WatermarkTable(self.watermark_path),
             watermark_date_col="feed_date",
@@ -89,9 +85,15 @@ class EmployeeSyncPipeline:
             clean_employees(stream)
             .writeStream.foreachBatch(sink)
             .option("checkpointLocation", f"{self.snapshot_path}.ckpt")
-            .trigger(availableNow=True)
+            .trigger(**trigger)
             .start()
         )
+        return q, sink
+
+    def run_available_now(self, spark: SparkSession) -> MergeSinkJob:
+        """Catch-up mode (A20/A21 initial sync): drain everything
+        currently in the feed, then stop — Trigger.AvailableNow."""
+        q, sink = self._start(spark, availableNow=True)
         q.awaitTermination()
         return sink
 
@@ -106,28 +108,7 @@ class EmployeeSyncPipeline:
         the query runs until the caller stops it (the ticker never
         terminates on its own), so tests stop after >= 2 observed
         ticks (tests/test_streaming_pipeline.py)."""
-        target = ParquetSnapshotTarget(
-            self.snapshot_path, "id", EMPLOYEE_COMPARE_COLS
-        )
-        sink = MergeSinkJob(
-            target=target,
-            fingerprint_cols=["id"] + EMPLOYEE_COMPARE_COLS,
-            watermark=WatermarkTable(self.watermark_path),
-            watermark_date_col="feed_date",
-        )
-        stream = (
-            spark.readStream.schema(EMPLOYEE_FEED_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(self.feed_dir)
-        )
-        q = (
-            clean_employees(stream)
-            .writeStream.foreachBatch(sink)
-            .option("checkpointLocation", f"{self.snapshot_path}.ckpt")
-            .trigger(processingTime=processing_time)
-            .start()
-        )
-        return q, sink
+        return self._start(spark, processingTime=processing_time)
 
 
 TASK_FEED_SCHEMA = T.StructType(
@@ -218,7 +199,7 @@ class TaskSyncPipeline:
                 "geocoding_error"
             ),
         )
-        swap_parquet_dir(out, self.tasks_path)
+        swap_parquet_dir(out.write.parquet, self.tasks_path)
 
     def _rebuild_bridge(self, spark: SparkSession, staged: DataFrame) -> None:
         """A15: replace the executor sets of the tasks in this batch
@@ -237,24 +218,24 @@ class TaskSyncPipeline:
             touched = staged.select(F.col("id").alias("task_id")).distinct()
             kept = existing.join(touched, "task_id", "left_anti")
             fresh = kept.unionByName(fresh, allowMissingColumns=True)
-        swap_parquet_dir(fresh, self.bridge_path)
+        swap_parquet_dir(fresh.write.parquet, self.bridge_path)
 
     def run_available_now(self, spark: SparkSession) -> list:
         wm = WatermarkTable(self.watermark_path)
         history: list = []
 
         def body(batch_df: DataFrame, batch_id: int) -> None:
-            # A20: the watermark advances even when the day is empty
-            if not batch_df.isEmpty():
+            rows, day = batch_df.select(F.count(F.lit(1)), F.max("feed_date")).first()
+            if rows:
                 self._merge_tasks(
                     spark,
                     batch_df.select("id", *TASK_COMPARE_COLS, "executors"),
                 )
                 self._rebuild_bridge(spark, batch_df)
-            day = batch_df.select(F.max("feed_date").alias("d")).first()["d"]
+            # A20: the watermark advances even when the day is empty
             if day is not None:
                 wm.write(spark, day + datetime.timedelta(days=1), batch_id)
-            history.append({"batch_id": batch_id, "rows": batch_df.count()})
+            history.append({"batch_id": batch_id, "rows": rows})
 
         stream = (
             spark.readStream.schema(TASK_FEED_SCHEMA)
@@ -607,7 +588,8 @@ class JdbcTaskSyncPipeline:
         history: list = []
 
         def body(batch_df: DataFrame, batch_id: int) -> None:
-            if not batch_df.isEmpty():
+            rows, day = batch_df.select(F.count(F.lit(1)), F.max("feed_date")).first()
+            if rows:
                 staged = self._resolve_type_ids(
                     batch_df.dropDuplicates(["id"])
                 ).select(
@@ -626,10 +608,9 @@ class JdbcTaskSyncPipeline:
                 self._merge_tasks(spark, staged.drop("executors"))
                 self._rebuild_bridge(spark, staged.select("task_id", "executors"))
             # A20: the watermark advances even when the day is empty
-            day = batch_df.select(F.max("feed_date").alias("d")).first()["d"]
             if day is not None:
                 self.advance_watermark(day + datetime.timedelta(days=1))
-            history.append({"batch_id": batch_id, "rows": batch_df.count()})
+            history.append({"batch_id": batch_id, "rows": rows})
 
         q = (
             spark.readStream.schema(TASK_FEED_SCHEMA)

@@ -10,11 +10,16 @@ internal/repository/scraper_status.go:10-27), and a content-hash
 short-circuit that skips unchanged feeds (P1, employees.go:88-101).
 
 Spark-side, each micro-batch goes through ``foreachBatch``:
-1. fingerprint guard (P1): sha over the batch's canonical rows — equal
-   to the previous batch's hash ⇒ skip all work;
-2. set-wise SCD-1 merge (operators/merge.py) into the target;
+1. fingerprint guard (P1): one aggregate gives the batch's row count,
+   the sha over its canonical rows and its latest date — an empty
+   batch does nothing, a hash equal to the previous batch's skips the
+   merge. The first batch has no previous hash, so its aggregate runs
+   beside the merge instead of before it;
+2. set-wise SCD-1 merge (operators/merge.py) into the target, its
+   action counts observed on the write job;
 3. watermark table upsert (A18) — persisted state, not just the
-   checkpoint, exactly like the reference keeps scraper_status.
+   checkpoint, exactly like the reference keeps scraper_status —
+   written on the driver: it is one row.
 
 Two targets:
 - ParquetSnapshotTarget: lakehouse path (atomic directory swap) — used
@@ -28,44 +33,51 @@ Two targets:
 
 from __future__ import annotations
 
+import datetime
 import os
 import shutil
 import uuid
 from collections.abc import Callable
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark import inheritable_thread_target
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from hephaestus_spark.operators.merge import scd1_merge
+from hephaestus_spark.operators.merge import ACTIONS, scd1_merge
 
 
-def batch_fingerprint(df: DataFrame, cols: list[str]) -> str:
-    """Order-insensitive content hash of a batch (P1's KnownHash)."""
-    row = df.select(
-        F.sha2(
-            F.concat_ws(
-                "",
-                F.sort_array(
-                    F.collect_list(F.sha2(F.concat_ws("\x1f", *cols), 256))
-                ),
-            ),
-            256,
-        ).alias("h")
-    ).first()
-    return row["h"] if row else ""
+def batch_fingerprint(df: DataFrame, cols: list[str], max_of: Column | None = None):
+    """Order-insensitive content hash of a batch (P1's KnownHash).
+
+    With ``max_of`` the same aggregate also counts the batch's rows and
+    takes the maximum of that expression, and the result is
+    ``(hash, rows, maximum)``."""
+    h = F.sha2(
+        F.concat_ws(
+            "", F.sort_array(F.collect_list(F.sha2(F.concat_ws("\x1f", *cols), 256)))
+        ),
+        256,
+    )
+    if max_of is None:
+        return df.select(h).first()[0]
+    return tuple(df.select(h, F.count(F.lit(1)), F.max(max_of)).first())
 
 
-def swap_parquet_dir(df: DataFrame, path: str) -> None:
-    """Write ``df`` as a parquet directory and swap it in at ``path``.
+def swap_parquet_dir(write: Callable[[str], None], path: str) -> None:
+    """Write a parquet directory with ``write(tmp)`` and swap it in at
+    ``path``.
 
     The old directory is renamed aside before the publish rename and
     renamed back if the publish fails, so ``path`` always holds either
-    the previous table or the new one. ``df`` may read ``path`` itself:
-    the write finishes before anything is moved."""
+    the previous table or the new one. The write may read ``path``
+    itself: it finishes before anything is moved."""
     tag = uuid.uuid4().hex[:8]
     tmp, old = f"{path}.tmp-{tag}", f"{path}.old-{tag}"
-    df.write.mode("overwrite").parquet(tmp)
+    write(tmp)
     had_old = os.path.exists(path)
     if had_old:
         os.rename(path, old)
@@ -106,12 +118,13 @@ class ParquetSnapshotTarget:
             merged = scd1_merge(snapshot.select(self.key, *self.compare_cols),
                                 staged.select(self.key, *self.compare_cols),
                                 self.key, self.compare_cols)
-        counts = {
-            r["action"]: r["n"]
-            for r in merged.groupBy("action").agg(F.count("*").alias("n")).collect()
-        }
-        swap_parquet_dir(merged.drop("action"), self.path)
-        return counts
+        # the action counts ride on the write job instead of a second pass
+        seen = Observation()
+        merged = merged.observe(
+            seen, *[F.count_if(F.col("action") == a).alias(a) for a in ACTIONS]
+        )
+        swap_parquet_dir(merged.drop("action").write.parquet, self.path)
+        return {a: n for a, n in seen.get.items() if n}
 
 
 def upsert_sql(
@@ -350,10 +363,16 @@ class WatermarkTable:
         return row["last_processed_date"] if row else None
 
     def write(self, spark: SparkSession, date, batch_id: int) -> None:
-        df = spark.createDataFrame(
-            [(1, date, batch_id)], "id int, last_processed_date date, batch_id long"
-        ).withColumn("updated_at", F.current_timestamp())
-        swap_parquet_dir(df, self.path)
+        """One row, written on the driver: a Spark job would cost more
+        than the row."""
+        now = datetime.datetime.now(datetime.timezone.utc)
+        row = pa.table({
+            "id": pa.array([1], pa.int32()),
+            "last_processed_date": pa.array([date], pa.date32()),
+            "batch_id": pa.array([batch_id], pa.int64()),
+            "updated_at": pa.array([now], pa.timestamp("us", "UTC")),
+        })
+        swap_parquet_dir(lambda tmp: pq.write_to_dataset(row, tmp), self.path)
 
 
 @dataclass
@@ -367,23 +386,35 @@ class MergeSinkJob:
     last_hash: str | None = None
     history: list[dict] = field(default_factory=list)
 
+    def _fingerprint(self, batch_df: DataFrame) -> tuple:
+        """(hash, rows, latest watermark date) in one aggregate."""
+        col = self.watermark_date_col
+        day = F.to_date(col) if col is not None else F.lit(None)
+        return batch_fingerprint(batch_df, self.fingerprint_cols, max_of=day)
+
     def __call__(self, batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        if batch_df.isEmpty():
-            return
-        h = batch_fingerprint(batch_df, self.fingerprint_cols)
-        if h == self.last_hash:
+        if self.last_hash is None:
+            # Nothing to compare with: the fingerprint cannot gate this
+            # merge, it only seeds the next batch's skip, so it runs
+            # beside the merge and is joined before the batch returns.
+            if batch_df.isEmpty():
+                return
+            with ThreadPoolExecutor(1) as pool:
+                fp = pool.submit(inheritable_thread_target(spark)(self._fingerprint), batch_df)
+                counts = self.target.merge_batch(spark, batch_df)
+            h, _, day = fp.result()
+        else:
+            h, rows, day = self._fingerprint(batch_df)
+            if not rows:
+                return
+            counts = None if h == self.last_hash else self.target.merge_batch(spark, batch_df)
+        if counts is None:
             # P1: unchanged upstream feed — skip merge AND still advance
             # the watermark (tasks.go:164-169 advances on empty days).
             self.history.append({"batch_id": batch_id, "skipped": True})
         else:
-            counts = self.target.merge_batch(spark, batch_df)
             self.last_hash = h
-            self.history.append(
-                {"batch_id": batch_id, "skipped": False, **counts}
-            )
+            self.history.append({"batch_id": batch_id, "skipped": False, **counts})
         if self.watermark is not None and self.watermark_date_col is not None:
-            day = batch_df.select(
-                F.max(F.to_date(self.watermark_date_col)).alias("d")
-            ).first()["d"]
             self.watermark.write(spark, day, batch_id)

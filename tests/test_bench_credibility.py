@@ -52,9 +52,11 @@ def test_credibility_fires_on_load_not_on_quiet(tmp_path):
     s1, t1 = _cpu_stat(), _proc_tree_jiffies()
     quiet = _host_credibility(s0, s1, t0, t1)
     assert quiet is not None
-    if quiet["steal_frac"] >= 0.05:
-        pytest.skip("host genuinely contended during the quiet window")
-    assert quiet["credible"] is True, quiet
+    # hypervisor steal and another tenant's CPU both mean the host was
+    # not quiet: the quiet half is then skipped, the loaded half still runs
+    busy_host = {"hypervisor_steal", "co_tenant_cpu"} & set(quiet.get("reasons", []))
+    if not busy_host:
+        assert quiet["credible"] is True, quiet
 
     # deliberately loaded: orphaned busy loops = co-tenant CPU.
     # The spawning shell exits immediately, so the loops reparent to
@@ -83,6 +85,8 @@ def test_credibility_fires_on_load_not_on_quiet(tmp_path):
     assert loaded is not None
     assert loaded["credible"] is False, loaded
     assert "co_tenant_cpu" in loaded["reasons"], loaded
+    if busy_host:
+        pytest.skip(f"quiet window not quiet ({sorted(busy_host)}); loaded half passed")
 
 
 def test_compact_line_has_driver_keys_and_host_verdict():

@@ -8,12 +8,16 @@ checked below against a hand-assembled message).
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from hephaestus_spark.operators.cleaning import email_valid, repaired_email
 from hephaestus_spark.sources.protodecode import (
     EMPLOYEE_FIELDS,
     TASK_FIELDS,
+    _encode_field,
+    _read_varint,
+    _skip,
     decode_employees,
     decode_message,
     decode_tasks,
@@ -54,6 +58,54 @@ def test_decode_skips_unknown_fields():
     extra = bytes([15 << 3 | 2, 0x03]) + b"xyz"
     b = encode_message(EMPLOYEES[0], EMPLOYEE_FIELDS) + extra
     assert decode_message(b, EMPLOYEE_FIELDS)["email"] == "ann@x.com"
+
+
+def _decode_per_field(b, fields):
+    """Reference decode of string / rep_bytes fields: one pass of the
+    loop per field, with no special handling of a run of entries."""
+    out, i = {}, 0
+    while i < len(b):
+        tag, i = _read_varint(b, i)
+        spec = fields.get(tag >> 3)
+        if spec is None:
+            i = _skip(b, i, tag & 7)
+            continue
+        name, kind = spec
+        n, i = _read_varint(b, i)
+        value, i = b[i : i + n], i + n
+        if kind == "rep_bytes":
+            out.setdefault(name, []).append(value)
+        else:
+            out[name] = value.decode("utf-8")
+    return out
+
+
+@pytest.mark.parametrize("payload_field", [1, 20])  # one- and two-byte tags
+def test_repeated_bytes_run_matches_per_field_decode(payload_field):
+    """A feed envelope's payloads are consumed as one run per tag; the
+    result must equal the per-field decode when the run is broken by
+    unknown fields and by the hash field, before, between and after the
+    payloads, for empty and multi-byte-length payloads."""
+    fields = {payload_field: ("payloads", "rep_bytes"), 2: ("new_hash", "string")}
+    run = lambda ps: _encode_field(payload_field, "rep_bytes", ps)  # noqa: E731
+    payloads = [b"", b"a", bytes(range(200)), b"\x0a\x0a", b"x" * 300]
+    envelope = b"".join([
+        _encode_field(2, "string", "first"),
+        run(payloads[:2]),
+        _encode_field(99, "string", "unknown"),  # two-byte unknown tag
+        run(payloads[2:4]),
+        _encode_field(3, "int64", 7),  # unknown varint
+        _encode_field(2, "string", "middle"),
+        run(payloads[4:]),
+        _encode_field(4, "bytes", b"tail"),  # unknown, same wire type
+        _encode_field(2, "string", "last"),
+    ])
+    want = _decode_per_field(envelope, fields)
+    assert want == {"payloads": payloads, "new_hash": "last"}
+    assert decode_message(envelope, fields) == want
+    # a run that ends the message
+    tail = _encode_field(2, "string", "h") + run(payloads)
+    assert decode_message(tail, fields) == _decode_per_field(tail, fields)
 
 
 def test_employee_feed_decodes_end_to_end(spark):
