@@ -13,7 +13,7 @@ on the key + null-safe column comparison. At scale this is one shuffle
 on the merge key (or zero if both sides are bucketed on it) instead of
 N round-trips; AQE picks broadcast when the delta is small.
 
-``IS DISTINCT FROM`` ⇔ ``~eqNullSafe`` — using ``!=`` here is the
+``IS DISTINCT FROM`` ⇔ ``NOT (a <=> b)`` — using ``!=`` here is the
 classic silent-wrong-answer on NULLs (SURVEY.md §7 risk 2).
 """
 
@@ -29,12 +29,9 @@ ACTION_KEEP = "keep"  # snapshot row untouched by this batch
 ACTIONS = (ACTION_INSERT, ACTION_UPDATE, ACTION_SKIP, ACTION_KEEP)
 
 
-def rows_differ(old_prefix: str, new_prefix: str, cols: list[str]) -> Column:
-    """True when any compared column IS DISTINCT FROM its counterpart."""
-    cond = F.lit(False)
-    for c in cols:
-        cond = cond | ~F.col(f"{old_prefix}.{c}").eqNullSafe(F.col(f"{new_prefix}.{c}"))
-    return cond
+def _q(name: str) -> str:
+    """A column name as a backtick-quoted SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
 
 
 def scd1_merge(
@@ -49,24 +46,27 @@ def scd1_merge(
     Returns the post-merge snapshot; when ``with_action`` each row
     carries how it got there (insert/update/skip/keep) — the set-wise
     equivalent of the reference's per-row branch at employees.go:108-133.
+    Both projections are SQL text, one ``selectExpr`` each: building
+    them column by column costs a Py4J round trip per call.
     """
-    old = snapshot.alias("old")
-    new = staged.alias("new")
-    joined = old.join(new, F.col(f"old.{key}").eqNullSafe(F.col(f"new.{key}")), "full_outer")
+    k = _q(key)
+    joined = snapshot.alias("old").join(
+        staged.alias("new"), F.expr(f"old.{k} <=> new.{k}"), "full_outer"
+    )
 
-    in_old = F.col(f"old.{key}").isNotNull()
-    in_new = F.col(f"new.{key}").isNotNull()
-    differ = rows_differ("old", "new", compare_cols)
+    in_old, in_new = f"old.{k} IS NOT NULL", f"new.{k} IS NOT NULL"
+    # any compared column IS DISTINCT FROM its counterpart
+    differ = " OR ".join(f"NOT (old.{_q(c)} <=> new.{_q(c)})" for c in compare_cols)
+    differ = differ or "FALSE"
 
     action = (
-        F.when(~in_old & in_new, F.lit(ACTION_INSERT))
-        .when(in_old & in_new & differ, F.lit(ACTION_UPDATE))
-        .when(in_old & in_new, F.lit(ACTION_SKIP))
-        .otherwise(F.lit(ACTION_KEEP))
+        f"CASE WHEN NOT {in_old} AND {in_new} THEN '{ACTION_INSERT}' "
+        f"WHEN {in_old} AND {in_new} AND ({differ}) THEN '{ACTION_UPDATE}' "
+        f"WHEN {in_old} AND {in_new} THEN '{ACTION_SKIP}' ELSE '{ACTION_KEEP}' END"
     )
     # action ∈ {insert, update}  ⇔  in_new ∧ (¬in_old ∨ differ) — keep it
     # a plain boolean rather than re-testing the string CASE.
-    take_new = in_new & (~in_old | differ)
+    take_new = f"{in_new} AND (NOT {in_old} OR ({differ}))"
 
     # Two-stage projection on purpose: ``__take_new`` (and ``action``)
     # are each referenced by several output columns, and inlining them
@@ -75,24 +75,23 @@ def scd1_merge(
     # long sessions. Non-cheap aliases referenced more than once are
     # NOT re-inlined by CollapseProject, so the flags are computed once.
     mid_cols = (
-        [F.coalesce(F.col(f"old.{key}"), F.col(f"new.{key}")).alias(key)]
-        + [F.col(f"old.{c}").alias(f"__o_{c}") for c in compare_cols]
-        + [F.col(f"new.{c}").alias(f"__n_{c}") for c in compare_cols]
-        + [take_new.alias("__take_new")]
+        [f"coalesce(old.{k}, new.{k}) AS {k}"]
+        + [f"old.{_q(c)} AS {_q('__o_' + c)}" for c in compare_cols]
+        + [f"new.{_q(c)} AS {_q('__n_' + c)}" for c in compare_cols]
+        + [f"{take_new} AS __take_new"]
     )
     if with_action:
-        mid_cols.append(action.alias("action"))
-    mid = joined.select(*mid_cols)
+        mid_cols.append(f"{action} AS action")
+    mid = joined.selectExpr(*mid_cols)
 
-    out_cols = [F.col(key)] + [
-        F.when(F.col("__take_new"), F.col(f"__n_{c}"))
-        .otherwise(F.col(f"__o_{c}"))
-        .alias(c)
+    out_cols = [k] + [
+        f"CASE WHEN __take_new THEN {_q('__n_' + c)} "
+        f"ELSE {_q('__o_' + c)} END AS {_q(c)}"
         for c in compare_cols
     ]
     if with_action:
-        out_cols.append(F.col("action"))
-    return mid.select(*out_cols)
+        out_cols.append("action")
+    return mid.selectExpr(*out_cols)
 
 
 def conditional_reset(

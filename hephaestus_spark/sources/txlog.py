@@ -71,7 +71,7 @@ import time
 import uuid
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -4156,14 +4156,18 @@ class TxTable:
         the probes prove disjoint (``_commit_snapshot_dependent``);
         without it any racer conflicts.
 
-        One pass over the joined candidate rows yields the rewritten
+        Metrics observed on the joined candidate rows yield the hit
         files (those with a matched row when matched clauses exist,
         plus those where a target clause applies), the row counts and
         the multiple-match check. A target row matching more than one
         source row refuses when matched clauses exist (Delta's
         nondeterministic-merge error); without them it is rewritten
-        once. Only the hit files are
-        rewritten; inserts are staged beside them. With
+        once. Only the hit files are rewritten; inserts are staged
+        beside them. When the planner pruned, the observed pass is the
+        rewrite of every candidate file: it commits when every
+        candidate is hit, and is deleted otherwise, before the narrow
+        rewrite, the refusal or the no-op return. Unpruned, the
+        observed pass runs into the ``noop`` sink before the rewrite. With
         ``change_data_feed`` set, the commit lands update_preimage /
         update_postimage / delete / insert rows as a CDC sidecar.
         Nothing to do commits nothing and returns the base version."""
@@ -4198,14 +4202,9 @@ class TxTable:
 
             schema = (meta or {}).get("schema")
             empty = StructType.fromJson(json.loads(schema)) if schema else StructType()
-            t = self._project_logical(spark.createDataFrame([], empty), meta).select(
-                "*",
-                F.lit(None).cast("string").alias("_f"),
-                F.lit(None).cast("long").alias("_p"),
-            )
-        ttypes = {
-            f.name: f.dataType for f in t.schema.fields if f.name not in ("_f", "_p")
-        }
+            t = self._project_logical(spark.createDataFrame([], empty), meta)
+            t = t.selectExpr("*", "string(NULL) AS _f", "bigint(NULL) AS _p")
+        ttypes = {f.name: f.dataType for f in t.drop("_f", "_p").schema.fields}
         ins_cond, ins_map = insert or (None, {})
         pad = []
         if evolve or base < 0:
@@ -4263,37 +4262,6 @@ class TxTable:
         dele = F.coalesce(pick.isin(gone), false)
         ins = s_only & holds(ins_cond) if insert else false
         hit = (m & F.lit(bool(matched))) | pick.isNotNull()
-        # one row per candidate file holding a hit (plus the inserts'
-        # NULL file): hit / updated / deleted / inserted counts and,
-        # with matched clauses, matched pairs against distinct matched
-        # rows. Grouping by file keeps each set within one file's rows.
-        tally = [hit, upd, dele, ins] + ([m] if matched else [])
-        counts = [F.count(F.when(c, 1)).alias(f"n{i}") for i, c in enumerate(tally)]
-        if matched:
-            counts.append(F.size(F.collect_set(F.when(m, F.col("t._p")))))
-        got = j.groupBy("t._f").agg(*counts).filter("n0 > 0 OR n3 > 0").collect()
-        if matched and any(g[5] != g[6] for g in got):
-            raise ValueError(
-                f"{op}: a target row matches more than one source row — the "
-                "update/delete outcome would be nondeterministic (Delta's "
-                "multiple-matches error); aggregate the source first"
-            )
-        hit_f = [g[0] for g in got if g[1]]
-        base2rel = self._base2rel(cands)
-        hits = sorted(base2rel[b] for b in hit_f)
-        n_ins = sum(g[4] for g in got)
-        metrics.update(
-            rows_updated=sum(g[2] for g in got),
-            rows_deleted=sum(g[3] for g in got),
-            rows_inserted=n_ins,
-            files_rewritten=len(hits),
-        )
-        if not hits and not n_ins:
-            return base, metrics, n_live
-        # rewrite only the hit files; an insert clause without matched
-        # clauses must still anti-join every candidate
-        narrow = 0 < len(hits) < len(cands) and (matched or not insert)
-        r = joined(scan(hits, keep_keys=True)) if narrow else j
 
         def value(c: str):
             arms = [
@@ -4309,15 +4277,64 @@ class TxTable:
             return v.cast(ttypes[c]).alias(c)
 
         post = [value(c) for c in tcols]
-        keep = F.col("t._f").isin(hit_f) & ~dele
-        if s is not None and not matched and target:
-            # no matched clause, so no multiple-match check: a target
-            # row meets the join once per matching source row; keep one
-            rows = r.filter(keep).dropDuplicates(["_f", "_p"]).select(*post)
-            out = rows.unionByName(r.filter(ins).select(*post))
+
+        def rewrite(r: DataFrame, hit_f: list[str]):
+            """Stage the rewrite of the ``hit_f`` files plus the inserts."""
+            keep = F.col("t._f").isin(hit_f) & ~dele
+            if s is not None and not matched and target:
+                # no matched clause, so no multiple-match check: a target
+                # row meets the join once per matching source row; keep one
+                # (the inserts come from ``j``: an observed ``r`` runs once)
+                rows = r.filter(keep).dropDuplicates(["_f", "_p"]).select(*post)
+                out = rows.unionByName(j.filter(ins).select(*post))
+            else:
+                out = r.filter(keep | ins).select(*post)
+            return out, self._stage(out, meta=meta)
+
+        # the classification is observed on the joined frame: the hit
+        # files, the row counts and, with matched clauses, the target
+        # rows met in the join against the target rows read. An outer
+        # join emits a target row max(1, k) times, so the two agree
+        # exactly when no target row matches more than one source row.
+        # A target side found empty at run time leaves the plan with its
+        # observation, so that count is read only when a target row met.
+        seen, read = Observation(), Observation()
+        tally = [F.collect_set(F.when(hit, F.col("t._f"))).alias("hit")]
+        for n, c in (("updated", upd), ("deleted", dele), ("inserted", ins)):
+            tally.append(F.count_if(c).alias(f"rows_{n}"))
+        tally.append(F.count_if(F.col("t._f").isNotNull()).alias("met"))
+        jo = joined(t.observe(read, F.count(F.lit(1)).alias("n"))).observe(seen, *tally)
+        base2rel = self._base2rel(cands)
+        # a pruned merge stages while it classifies, betting that every
+        # candidate is hit (none is without clauses); anything else
+        # classifies into the noop sink and then rewrites
+        bet, names = sorted(base2rel) if clauses else [], None
+        if len(cands) < n_live:
+            out, names = rewrite(jo, bet)
         else:
-            out = r.filter(keep | ins).select(*post)
-        names = self._stage(out, meta=meta)
+            jo.write.format("noop").mode("overwrite").save()
+        got = seen.get
+        hit_f, met = sorted(got.pop("hit")), got.pop("met")
+        hits, n_ins = sorted(base2rel[b] for b in hit_f), got["rows_inserted"]
+        metrics.update(got, files_rewritten=len(hits))
+        refuse = matched and met and met != read.get["n"]
+        if names is not None and (refuse or hit_f != bet or not (hits or n_ins)):
+            list(self._vacuum_rm(self.path, names, dry_run=False))
+            names = None
+        if refuse:
+            raise ValueError(
+                f"{op}: a target row matches more than one source row — the "
+                "update/delete outcome would be nondeterministic (Delta's "
+                "multiple-matches error); aggregate the source first"
+            )
+        if not hits and not n_ins:
+            return base, metrics, n_live
+        # rewrite only the hit files; an insert clause without matched
+        # clauses must still anti-join every candidate
+        narrow = 0 < len(hits) < len(cands) and (matched or not insert)
+        r = joined(scan(hits, keep_keys=True)) if narrow else j
+        if names is None:
+            out, names = rewrite(r, hit_f)
         if insert or updates:  # a delete only keeps validated rows
             self._enforce_constraints(names, meta, spark)
         actions = self._add_actions(names, self._partition_dtypes(meta)) + [
@@ -4343,12 +4360,8 @@ class TxTable:
             cdc = r.select(F.explode(change).alias("c")).select("c.*")
             actions += [{"cdc": n} for n in self._stage(cdc, pcols=None, meta=meta)]
         v = self._commit_snapshot_dependent(
-            base,
-            op,
-            actions,
-            info=info(metrics),
+            base, op, actions, info=info(metrics), base_meta=meta,
             disjoint=self._disjoint(probes, meta) if disjoint else None,
-            base_meta=meta,
         )
         return v, metrics, n_live
 

@@ -109,15 +109,13 @@ class ParquetSnapshotTarget:
         return spark.read.parquet(self.path)
 
     def merge_batch(self, spark: SparkSession, staged: DataFrame) -> dict[str, int]:
-        snapshot = self.read(spark)
-        if snapshot is None:
-            merged = staged.select(self.key, *self.compare_cols).withColumn(
-                "action", F.lit("insert")
-            )
+        staged = staged.select(self.key, *self.compare_cols)
+        if os.path.exists(self.path):
+            # read at the schema this target writes: no inference job
+            snapshot = spark.read.schema(staged.schema).parquet(self.path)
+            merged = scd1_merge(snapshot, staged, self.key, self.compare_cols)
         else:
-            merged = scd1_merge(snapshot.select(self.key, *self.compare_cols),
-                                staged.select(self.key, *self.compare_cols),
-                                self.key, self.compare_cols)
+            merged = staged.withColumn("action", F.lit("insert"))
         # the action counts ride on the write job instead of a second pass
         seen = Observation()
         merged = merged.observe(

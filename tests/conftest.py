@@ -1,6 +1,7 @@
 from __future__ import annotations
 
 import os
+import uuid
 
 import duckdb
 import pytest
@@ -33,3 +34,16 @@ def oracle(sf_dir):
         )
     yield con
     con.close()
+
+
+def spark_jobs(spark, fn):
+    """Run ``fn()`` under a job group of its own; return its result and
+    the number of Spark jobs it started from this thread."""
+    sc = spark.sparkContext
+    group = f"spark_jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))

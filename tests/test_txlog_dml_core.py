@@ -13,15 +13,22 @@ failed against them):
 - ``merge`` keeps the target columns outside ``key``/``compare_cols``
   on the rows it rewrites (they used to read NULL afterwards);
 - ``delete`` keeps a row whose predicate is NULL (it used to drop it
-  from the rewrite without reporting it as deleted)."""
+  from the rewrite without reporting it as deleted).
+
+A key-pruned merge classifies on its own write job. The tests at the
+end pin its Spark job count and, for the cases where the staged first
+pass is not the commit, that it leaves no uncommitted file behind."""
 
 from __future__ import annotations
+
+import os
 
 import pytest
 
 from pyspark.sql import functions as F
 
 from hephaestus_spark.sources.txlog import TxTable
+from tests.conftest import spark_jobs
 
 _KV = "id long, name string"
 
@@ -170,3 +177,103 @@ def test_merge_keeps_columns_outside_key_and_compare_cols(spark, tmp_path):
     got = sorted(tuple(r) for r in t.read(spark).collect())
     # the updated and the untouched row keep ``extra``; the insert has none
     assert got == [(1, "a2", "x1"), (2, "b", "x2"), (3, "c", None)]
+
+
+def _lake(spark, path, sidecars=True):
+    """Four key-clustered files of even keys: 0..1998, 2000..3998, ...;
+    with ``sidecars``, bloom and NDV sidecars ride every staged file."""
+    t = TxTable(path)
+    t.append(
+        spark.range(0, 4000, numPartitions=4).selectExpr(
+            "id * 2 AS id", "concat('r', id * 2) AS name"
+        )
+    )
+    if sidecars:
+        t.set_bloom_filter(["name"])
+        t.set_ndv_columns(["name"])
+    return t
+
+
+def _uncommitted(t) -> list[str]:
+    """Data files and bloom/NDV sidecars no commit adds, and stage dirs."""
+    added = {
+        os.path.basename(f)
+        for v in range(t.latest_version() + 1)
+        for f in t._snapshot_files(v)
+    }
+    left = [f for f in os.listdir(t.path) if f.startswith("_stage-")]
+    for d in (t.path, f"{t.path}/_txlog/_bloom", f"{t.path}/_txlog/_ndv"):
+        for f in os.listdir(d) if os.path.isdir(d) else []:
+            base = f.removesuffix(".bloom.json").removesuffix(".ndv.json")
+            if base.startswith("part-") and base not in added:
+                left.append(f)
+    return left
+
+
+def test_pruned_upsert_is_one_pass(spark, tmp_path):
+    """The lake upsert: an update and an insert inside one file's key
+    range. The classification rides the rewrite's write job, so the
+    candidate is scanned and joined once (the two-pass core ran 9 jobs)."""
+    t = _lake(spark, str(tmp_path / "t"), sidecars=False)
+    staged = spark.createDataFrame([(10, "x"), (11, "new")], _KV)
+    _, jobs = spark_jobs(
+        spark, lambda: t.merge(spark, staged, "id", ["name"], prune_on_key=True)
+    )
+    assert jobs == 5
+    assert t.history()[-1]["files_removed"] == 1
+    assert t.read_pruned(spark, "id", 10, 11).collect() == [(10, "x"), (11, "new")]
+    assert _uncommitted(t) == []
+
+
+def test_pruned_refusal_leaves_nothing(spark, tmp_path):
+    t = _lake(spark, str(tmp_path / "t"))
+    v = t.latest_version()
+    staged = spark.createDataFrame([(10, "x"), (10, "y")], _KV)
+    with pytest.raises(ValueError, match="more than one"):
+        t.merge(spark, staged, "id", ["name"], prune_on_key=True)
+    assert t.latest_version() == v
+    assert _uncommitted(t) == []
+
+
+def test_pruned_unhit_candidate_falls_back(spark, tmp_path):
+    """The staged key range spans two files, but only the first holds a
+    staged key (2001 is a new odd key): only that file is rewritten."""
+    t = _lake(spark, str(tmp_path / "t"))
+    staged = spark.createDataFrame([(10, "x"), (2001, "new")], _KV)
+    t.merge(spark, staged, "id", ["name"], prune_on_key=True)
+    assert t.history()[-1]["files_removed"] == 1
+    assert t.read(spark).count() == 4001
+    assert t.read_pruned(spark, "id", 10, 10).collect() == [(10, "x")]
+    assert _uncommitted(t) == []
+
+
+@pytest.mark.parametrize(
+    "dml",
+    [
+        lambda spark, t: t.delete(spark, "id = 11", "id", 11, 11),
+        lambda spark, t: t.update(spark, "id = 11", {"name": "'x'"}, "id", 11, 11),
+    ],
+    ids=["delete", "update"],
+)
+def test_pruned_batch_that_changes_nothing(spark, tmp_path, dml):
+    """The first pass staged a rewrite of the candidate file, but no row
+    in it holds the predicate. (A key-pruned ``merge`` always changes
+    something: every staged key either matches a row or inserts.)"""
+    t = _lake(spark, str(tmp_path / "t"))
+    v = t.latest_version()
+    assert dml(spark, t)[:2] == (v, 0)
+    assert t.latest_version() == v
+    assert _uncommitted(t) == []
+
+
+def test_pruned_merge_over_a_fully_tombstoned_file(spark, tmp_path):
+    """Every row of the candidate file is deleted by a deletion vector,
+    so the target side of the join is empty at run time and the plan
+    drops it: the multiple-match check must not need its row count."""
+    t = _lake(spark, str(tmp_path / "t"), sidecars=False)
+    t.delete_mor(spark, "id < 2000", "id", 0, 1998)
+    staged = spark.createDataFrame([(10, "x"), (11, "y")], _KV)
+    t.merge(spark, staged, "id", ["name"], prune_on_key=True)
+    got = sorted(tuple(r) for r in t.read_pruned(spark, "id", 0, 1998).collect())
+    assert got == [(10, "x"), (11, "y")]
+    assert t.read(spark).count() == 3002
