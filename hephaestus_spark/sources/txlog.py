@@ -1855,6 +1855,23 @@ class TxTable:
             self._write_ndv(df.sparkSession, names, meta)
         return names
 
+    def _tombstoned(self, dv_names, files) -> dict[str, set]:
+        """Table-relative file -> the distinct row positions the
+        vectors ``dv_names`` tombstone in it, for ``files``. Vectors
+        key on the basename, and a position can appear in several of
+        them (reads anti-join, so that is harmless, but a count must
+        not double it). Read driver-side: vectors are KB-sized."""
+        import pyarrow.parquet as pq
+
+        base2rel = {os.path.basename(f): f for f in files}
+        out: dict[str, set] = {}
+        for n in dv_names:
+            t = pq.read_table(self._abs(n), columns=["file", "pos"])
+            for b, p in zip(t.column("file").to_pylist(), t.column("pos").to_pylist()):
+                if b in base2rel:
+                    out.setdefault(base2rel[b], set()).add(p)
+        return out
+
     def _base2rel(self, files: list[str]) -> dict[str, str]:
         """basename -> table-relative path for a live file set. Row
         provenance (``_f``) and deletion vectors key on the basename,
@@ -1907,21 +1924,7 @@ class TxTable:
         missing_rows = any("rows" not in a for a in adds.values())
         count = sum(a.get("rows", 0) for a in adds.values())
         dv_names = sorted({d for ds in dvs.values() for d in ds})
-        if dv_names:
-            import pyarrow.parquet as pq
-
-            # DV 'file' values are BASENAMES (what _scan's _f carries);
-            # add actions key on the table-relative path, which on a
-            # partitioned table includes the hive dirs — compare on the
-            # basename or no tombstone ever discounts the count (r10)
-            live = {os.path.basename(p) for p in adds}
-            for n in dv_names:
-                t = pq.read_table(
-                    os.path.join(self.path, n), columns=["file"]
-                )
-                count -= sum(
-                    1 for f in t.column("file").to_pylist() if f in live
-                )
+        count -= sum(map(len, self._tombstoned(dv_names, adds).values()))
         out: dict = {"count": count, "count_exact": not missing_rows}
         if column is not None:
             lo = hi = None
@@ -2268,13 +2271,17 @@ class TxTable:
         self, spark: SparkSession | None = None, version: int | None = None
     ):
         """THE file-skipping planner, resolved once for one snapshot:
-        (version, meta, plan, scan). ``plan(probes)`` returns (kept
-        files, total live files) for ``{logical column: [probe, ...]}``
-        (every probe must hold; no probes keeps every file);
+        (version, meta, plan, scan, live_rows). ``plan(probes)`` returns
+        (kept files, total live files) for ``{logical column: [probe,
+        ...]}`` (every probe must hold; no probes keeps every file);
         ``scan(files, keep_keys=False)`` reads files of that snapshot
         with tombstones applied (``keep_keys`` leaves the ``_f``/``_p``
-        provenance columns). The version is resolved exactly once, so
-        candidates, meta, scan and the caller's commit base agree.
+        provenance columns); ``live_rows(files)`` is the row count a
+        scan of planned files yields, from the log: their recorded row
+        counts (a footer read for an add written without one) less
+        their tombstoned positions. The version is resolved exactly
+        once, so candidates, meta, scan and the caller's commit base
+        agree.
 
         Route: on the LATEST snapshot and on the Spark route
         (``_spark_route``), plan filters the columnar checkpoint's add rows
@@ -2290,7 +2297,9 @@ class TxTable:
         if version == latest and self._spark_route(spark, version):
             frames, dv_names, meta = self._live_frames(spark, version)
         else:
-            meta = self._fold_state(version)[3]
+            _adds, _txns, dvs, meta = self._fold_state(version)
+            dv_names = sorted({d for ds in dvs.values() for d in ds})
+        counts: dict[str, int | None] = {}  # planned file -> footer rows
 
         def plan(probes: dict) -> tuple[list[str], int]:
             phys = self._phys_probes(probes, meta)
@@ -2303,11 +2312,13 @@ class TxTable:
                     n for n, a in adds.items()
                     if not phys or self._act_keep(a, phys)
                 ]
+                counts.update((n, adds[n].get("rows")) for n in keep)
                 return keep, len(adds)
-            rows = frames.filter(cond).select("path").collect()
+            rows = frames.filter(cond).select("path", "rows").collect()
             keep = [
                 r["path"] for r in rows if self._bloom_keep(r["path"], phys)
             ]
+            counts.update((r["path"], r["rows"]) for r in rows)
             return keep, frames.count()
 
         def scan(files, keep_keys=False):
@@ -2315,7 +2326,11 @@ class TxTable:
                 return self._scan(spark, files, version, keep_keys)
             return self._scan_live(spark, files, dv_names, meta, keep_keys)
 
-        return version, meta, plan, scan
+        def live_rows(files) -> int:  # a pre-r8 add has no "rows": read its footer
+            n = sum(counts.get(f) or self._file_rows(f) for f in files)
+            return n - sum(map(len, self._tombstoned(dv_names, files).values()))
+
+        return version, meta, plan, scan, live_rows
 
     def delete_mor(
         self,
@@ -2350,7 +2365,7 @@ class TxTable:
         if base_version < 0:
             raise ValueError(f"table {self.path} is empty")
         probes = _dml_probes(prune_column, lo, hi, partitions)
-        base_version, meta0, plan, scan = self._planner(spark)
+        base_version, meta0, plan, scan, _ = self._planner(spark)
         candidates, _n_live = plan(probes)
         if not candidates:
             return base_version, 0, 0
@@ -2583,7 +2598,7 @@ class TxTable:
         checkpoint through Spark, so the driver holds only the
         surviving paths (see ``_planner``)."""
         probe = _probe(lo, hi, values, is_null)
-        version, _meta, plan, scan = self._planner(spark, version)
+        version, _meta, plan, scan, _ = self._planner(spark, version)
         keep, _total = plan({column: [probe]})
         if not keep:
             return self.read(spark, version).filter(F.lit(False))
@@ -4117,6 +4132,7 @@ class TxTable:
         evolve: bool = False,
         disjoint: bool = True,
         create: bool = False,
+        stage_first: bool = False,
     ) -> tuple[int, dict[str, int], int]:
         """The one copy-on-write DML engine: ``merge``, ``merge_into``,
         ``update`` and ``delete`` are clause sets over it. Returns
@@ -4152,6 +4168,9 @@ class TxTable:
         have yet (existing rows read them as NULL, a type change
         refuses); ``create`` lets the inserts create a table with no
         version yet. ``info(metrics)`` is the commit's operation info.
+        ``stage_first`` bets that every candidate file is hit (see
+        below); only a caller whose candidates almost always are should
+        set it.
         With ``disjoint`` the commit rebases over interleaved appends
         the probes prove disjoint (``_commit_snapshot_dependent``);
         without it any racer conflicts.
@@ -4163,15 +4182,16 @@ class TxTable:
         source row refuses when matched clauses exist (Delta's
         nondeterministic-merge error); without them it is rewritten
         once. Only the hit files are rewritten; inserts are staged
-        beside them. When the planner pruned, the observed pass is the
-        rewrite of every candidate file: it commits when every
-        candidate is hit, and is deleted otherwise, before the narrow
-        rewrite, the refusal or the no-op return. Unpruned, the
-        observed pass runs into the ``noop`` sink before the rewrite. With
-        ``change_data_feed`` set, the commit lands update_preimage /
-        update_postimage / delete / insert rows as a CDC sidecar.
+        beside them. With ``stage_first``, when the planner pruned, the
+        observed pass is the rewrite of every candidate file: it
+        commits when every candidate is hit, and is deleted otherwise,
+        before the narrow rewrite, the refusal or the no-op return.
+        Otherwise the observed pass runs into the ``noop`` sink before
+        the rewrite. With ``change_data_feed`` set, the commit lands
+        update_preimage / update_postimage / delete / insert rows as a
+        CDC sidecar.
         Nothing to do commits nothing and returns the base version."""
-        base, meta, plan, scan = self._planner(spark)
+        base, meta, plan, scan, live_rows = self._planner(spark)
         if base < 0 and not create:
             raise ValueError(f"table {self.path} is empty")
         s = None
@@ -4284,32 +4304,30 @@ class TxTable:
             if s is not None and not matched and target:
                 # no matched clause, so no multiple-match check: a target
                 # row meets the join once per matching source row; keep one
-                # (the inserts come from ``j``: an observed ``r`` runs once)
                 rows = r.filter(keep).dropDuplicates(["_f", "_p"]).select(*post)
-                out = rows.unionByName(j.filter(ins).select(*post))
+                out = rows.unionByName(r.filter(ins).select(*post))
             else:
                 out = r.filter(keep | ins).select(*post)
             return out, self._stage(out, meta=meta)
 
-        # the classification is observed on the joined frame: the hit
-        # files, the row counts and, with matched clauses, the target
-        # rows met in the join against the target rows read. An outer
+        # the classification is observed on the joined frame, in the
+        # write's result stage, where Spark applies a task's metrics once
+        # even when a stage re-runs: the hit files, the row counts and,
+        # with matched clauses, the target rows met in the join, held
+        # against the rows the log says the candidates hold. An outer
         # join emits a target row max(1, k) times, so the two agree
         # exactly when no target row matches more than one source row.
-        # A target side found empty at run time leaves the plan with its
-        # observation, so that count is read only when a target row met.
-        seen, read = Observation(), Observation()
+        seen = Observation()
         tally = [F.collect_set(F.when(hit, F.col("t._f"))).alias("hit")]
         for n, c in (("updated", upd), ("deleted", dele), ("inserted", ins)):
             tally.append(F.count_if(c).alias(f"rows_{n}"))
         tally.append(F.count_if(F.col("t._f").isNotNull()).alias("met"))
-        jo = joined(t.observe(read, F.count(F.lit(1)).alias("n"))).observe(seen, *tally)
+        jo = j.observe(seen, *tally)
         base2rel = self._base2rel(cands)
-        # a pruned merge stages while it classifies, betting that every
-        # candidate is hit (none is without clauses); anything else
-        # classifies into the noop sink and then rewrites
-        bet, names = sorted(base2rel) if clauses else [], None
-        if len(cands) < n_live:
+        # a staged first pass bets that every candidate is hit; without
+        # the bet the classification runs into the noop sink
+        bet, names = sorted(base2rel), None
+        if stage_first and len(cands) < n_live:
             out, names = rewrite(jo, bet)
         else:
             jo.write.format("noop").mode("overwrite").save()
@@ -4317,7 +4335,7 @@ class TxTable:
         hit_f, met = sorted(got.pop("hit")), got.pop("met")
         hits, n_ins = sorted(base2rel[b] for b in hit_f), got["rows_inserted"]
         metrics.update(got, files_rewritten=len(hits))
-        refuse = matched and met and met != read.get["n"]
+        refuse = matched and met != live_rows(cands)
         if names is not None and (refuse or hit_f != bet or not (hits or n_ins)):
             list(self._vacuum_rm(self.path, names, dry_run=False))
             names = None
@@ -4463,6 +4481,7 @@ class TxTable:
             insert=(f"s.`{key}` IS NOT NULL", {c: f"s.`{c}`" for c in cols}),
             evolve=schema_evolution,
             create=True,
+            stage_first=prune_on_key,  # its candidates nearly always hold a key
         )[0]
 
     def merge_into(
@@ -5485,26 +5504,11 @@ class TxTable:
                     "does not compose with cluster_by, partitions or "
                     "small_files_below (run separate OPTIMIZE commits)"
                 )
-            import pyarrow.parquet as _pq
-
             adds, _txns, dvs, _meta = self._fold_state(base_version)
             covered = sorted(dvs)
             if not covered:
                 return base_version
-            base2rel = {os.path.basename(f): f for f in covered}
-            # distinct tombstoned positions per covered file (a
-            # position can appear in several live vectors; reads
-            # anti-join so duplicates are harmless, but the FRACTION
-            # must not double-count)
-            positions: dict[str, set] = {}
-            for dvn in sorted({d for ds in dvs.values() for d in ds}):
-                t = _pq.read_table(self._abs(dvn), columns=["file", "pos"])
-                for b, p in zip(
-                    t.column("file").to_pylist(), t.column("pos").to_pylist()
-                ):
-                    rel = base2rel.get(b)
-                    if rel is not None:
-                        positions.setdefault(rel, set()).add(p)
+            positions = self._tombstoned(set().union(*dvs.values()), covered)
             hits = []
             for f in covered:
                 rows = (adds.get(f) or {}).get("rows")

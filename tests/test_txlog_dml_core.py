@@ -17,7 +17,10 @@ failed against them):
 
 A key-pruned merge classifies on its own write job. The tests at the
 end pin its Spark job count and, for the cases where the staged first
-pass is not the commit, that it leaves no uncommitted file behind."""
+pass is not the commit, that it leaves no uncommitted file behind; that
+a pruned update or delete stages only its hit files; and that the
+multiple-match check counts the candidates' rows from the log, less
+their tombstones."""
 
 from __future__ import annotations
 
@@ -83,13 +86,13 @@ def _scan_spy(t, monkeypatch) -> list:
     planner = t._planner
 
     def spy(*a, **kw):
-        base, meta, plan, scan = planner(*a, **kw)
+        base, meta, plan, scan, live_rows = planner(*a, **kw)
 
         def spied(files, **skw):
             scanned.append(list(files))
             return scan(files, **skw)
 
-        return base, meta, plan, spied
+        return base, meta, plan, spied, live_rows
 
     monkeypatch.setattr(t, "_planner", spy)
     return scanned
@@ -256,9 +259,10 @@ def test_pruned_unhit_candidate_falls_back(spark, tmp_path):
     ids=["delete", "update"],
 )
 def test_pruned_batch_that_changes_nothing(spark, tmp_path, dml):
-    """The first pass staged a rewrite of the candidate file, but no row
-    in it holds the predicate. (A key-pruned ``merge`` always changes
-    something: every staged key either matches a row or inserts.)"""
+    """No row of the candidate file holds the predicate: nothing is
+    committed or left behind. (A key-pruned ``merge``, the one caller
+    that stages on its first pass, always changes something: every
+    staged key either matches a row or inserts.)"""
     t = _lake(spark, str(tmp_path / "t"))
     v = t.latest_version()
     assert dml(spark, t)[:2] == (v, 0)
@@ -277,3 +281,69 @@ def test_pruned_merge_over_a_fully_tombstoned_file(spark, tmp_path):
     got = sorted(tuple(r) for r in t.read_pruned(spark, "id", 0, 1998).collect())
     assert got == [(10, "x"), (11, "y")]
     assert t.read(spark).count() == 3002
+
+
+@pytest.mark.parametrize(
+    "dml",
+    [
+        lambda spark, t: t.delete(spark, "id = 10", "id", 10, 2010),
+        lambda spark, t: t.update(spark, "id = 10", {"name": "'x'"}, "id", 10, 2010),
+    ],
+    ids=["delete", "update"],
+)
+def test_pruned_delete_and_update_stage_only_the_hit_files(
+    spark, tmp_path, monkeypatch, dml
+):
+    """Only a key-pruned merge stages every candidate on its first pass.
+    A pruned delete or update whose predicate holds in one of its two
+    candidates stages that file's rewrite once, and it is the commit."""
+    t = _lake(spark, str(tmp_path / "t"), sidecars=False)
+    staged, stage = [], TxTable._stage
+
+    def recording(self, df, *args, **kwargs):
+        names = stage(self, df, *args, **kwargs)
+        staged.extend(names)
+        return names
+
+    monkeypatch.setattr(TxTable, "_stage", recording)
+    dml(spark, t)
+    assert t.history()[-1]["files_removed"] == 1
+    assert staged and set(staged) <= set(t._snapshot_files())
+
+
+@pytest.mark.parametrize("route", ["driver", "spark"])
+def test_multiple_match_check_counts_tombstones_out(
+    spark, tmp_path, monkeypatch, route
+):
+    """The check holds the target rows met in the join against the
+    log's row count of the candidates less their tombstoned rows: a
+    repeated matching key refuses, a valid batch commits."""
+    if route == "spark":
+        monkeypatch.setattr(TxTable, "DML_SPARK_PLAN_THRESHOLD", 0)
+    t = _lake(spark, str(tmp_path / "t"), sidecars=False)
+    t.delete_mor(spark, "id < 100", "id", 0, 98)
+    v, dv = t.latest_version(), _uncommitted(t)  # the vector is no data add
+    dup = spark.createDataFrame([(300, "a"), (300, "b")], _KV)
+    with pytest.raises(ValueError, match="more than one"):
+        t.merge(spark, dup, "id", ["name"], prune_on_key=True)
+    assert t.latest_version() == v
+    assert _uncommitted(t) == dv
+    # 10 is tombstoned, so it inserts; 300 matches
+    staged = spark.createDataFrame([(10, "x"), (300, "y")], _KV)
+    t.merge(spark, staged, "id", ["name"], prune_on_key=True)
+    got = t.read_pruned(spark, "id", 0, 300).filter("id IN (10, 300)").collect()
+    assert sorted(tuple(r) for r in got) == [(10, "x"), (300, "y")]
+    assert t.read(spark).count() == 3951
+
+
+def test_multiple_match_check_without_footer_row_counts(spark, tmp_path, monkeypatch):
+    """Adds written before the log recorded row counts: the check reads
+    the candidates' row counts from their parquet footers instead."""
+    with monkeypatch.context() as m:
+        m.setattr(TxTable, "_file_rows", lambda self, name: None)
+        t = _lake(spark, str(tmp_path / "t"), sidecars=False)
+    dup = spark.createDataFrame([(10, "a"), (10, "b")], _KV)
+    with pytest.raises(ValueError, match="more than one"):
+        t.merge(spark, dup, "id", ["name"], prune_on_key=True)
+    t.merge(spark, dup.limit(1), "id", ["name"], prune_on_key=True)
+    assert t.read_pruned(spark, "id", 10, 10).collect() == [(10, "a")]
