@@ -70,6 +70,7 @@ import re
 import time
 import uuid
 from dataclasses import dataclass
+from typing import NamedTuple
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -496,6 +497,31 @@ def _ckpt_pq_path(
     return os.path.join(
         base, f"{version:020d}.checkpoint.{part:04d}-of-{nparts:04d}.parquet"
     )
+
+
+# commits only the row-level change feed serves (``_change_plan``)
+_ROW_LEVEL_OPS = (
+    "deleteMor", "restore", "merge", "delete", "update", "overwrite",
+    "overwritePartitions",
+)
+
+
+class _Change(NamedTuple):
+    """One change unit of a commit (``TxTable._change_plan``): the rows
+    of ``file`` served as ``kind``, a ``_change_type``. Two kinds are
+    not row types: ``cdc``, a CDC sidecar whose rows carry their own
+    ``_change_type``, and ``rebuild``, a copy-on-write commit without
+    sidecars (``file`` None) that only the batch feed reconstructs.
+
+    The mask names tombstones, never resolved vector files: ``show``
+    keeps only the positions tombstoned at that version (None: every
+    row), ``hide`` drops those tombstoned at that version. A
+    ``deleteMor`` commit's ``show`` is the tuple of its own vectors."""
+
+    file: str | None
+    kind: str
+    show: "int | tuple[str, ...] | None" = None
+    hide: int | None = None
 
 
 @dataclass
@@ -4678,34 +4704,28 @@ class TxTable:
     def change_files(
         self, since_version: int, upto: int | None = None
     ) -> list[tuple[str, int]]:
-        """(file name, commit version) for every file added by
-        append/streamAppend commits in ``(since_version, upto]`` —
-        the file-level change feed ``read_changes`` and the streaming
-        datasource share. OPTIMIZE commits contribute nothing (their
-        files re-house already-delivered rows); row-rewriting
-        merge/delete commits raise (append-only feeds only)."""
+        """(file name, commit version) for every file the append-only
+        change feed serves in ``(since_version, upto]``: the adds of
+        append/streamAppend/createPartitioned commits and of a clone
+        inception without tombstones. OPTIMIZE commits contribute
+        nothing (their files re-house already-delivered rows);
+        row-rewriting commits raise."""
         if upto is None:
             upto = self.latest_version()
-        out: list[tuple[str, int]] = []
-        for v, _op, entry in self._change_entries(since_version, upto, False):
-            out.extend((a["add"], v) for a in entry["actions"] if "add" in a)
-        return out
+        plan = self._change_plan(since_version, upto, False)
+        return [(u.file, v) for v, _entry, units in plan for u in units]
 
     def _change_entries(self, since_version: int, upto: int, allow_dv: bool):
         """Yield (version, op, entry) for the servable change commits
         in ``(since_version, upto]``. OPTIMIZE commits are skipped
         (data-identical rehousing); ``allow_dv=True`` additionally
-        serves ``deleteMor`` commits (row-level deletes — their
-        tombstone parquets name exactly the (file, pos) rows removed),
-        ``restore`` commits (the snapshot diff is file/position
-        exact), and ``merge``/``delete``/``update`` copy-on-write
-        commits (served from their CDC sidecar or reconstructed from
-        the commit's operation info, see read_changes); anything else
-        rewrites rows in place and raises."""
+        serves the row-level shapes ``_change_plan`` lists (deleteMor,
+        restore, overwrite, copy-on-write DML, and a clone carrying
+        tombstones); anything else rewrites rows in place and raises."""
         versions = self._versions()
-        # r8 retention: serving a range that reaches below the log
-        # horizon would silently DROP the expired commits' rows — the
-        # one thing a change feed must never do. Fail loudly instead.
+        # serving a range that reaches below the log horizon would
+        # silently DROP the expired commits' rows — the one thing a
+        # change feed must never do. Fail loudly instead.
         if versions and versions[0] > 0 and since_version < versions[0] - 1:
             raise ValueError(
                 f"change feed from {since_version} reaches below the log "
@@ -4718,7 +4738,7 @@ class TxTable:
             try:
                 entry = self._read_entry(v)
             except FileNotFoundError:
-                # r15: expire_log raced this feed mid-iteration — same
+                # expire_log raced this feed mid-iteration — same
                 # silent-drop hazard as the pre-loop guard, surfaced
                 # with the same defined horizon error (the consumer
                 # restarts from a servable version)
@@ -4743,29 +4763,13 @@ class TxTable:
                     f"version {v} of {self.path} carrying deletion "
                     "vectors; use the row-level feed (read_changes)"
                 )
-            if op in ("append", "streamAppend", "createPartitioned") or (
-                allow_dv
-                and op
-                in (
-                    "deleteMor",
-                    "restore",
-                    "merge",
-                    "delete",
-                    "update",
-                    "overwrite",
-                    "overwritePartitions",
-                )
-            ):
-                yield v, op, entry
-                continue
             # metadata-only commits (rename/drop column): no row-set
             # change, but the feed must still track the schema they
-            # carry — serve them; every branch ignores an entry with
-            # no data actions (r11)
-            if not any(
-                k in a
-                for a in entry["actions"]
-                for k in ("add", "remove", "dv")
+            # carry — serve them; their plan has no units
+            if (
+                op in ("append", "streamAppend", "createPartitioned")
+                or (allow_dv and op in _ROW_LEVEL_OPS)
+                or not any(k in a for a in entry["actions"] for k in ("add", "remove", "dv"))
             ):
                 yield v, op, entry
                 continue
@@ -4779,67 +4783,105 @@ class TxTable:
                 )
             )
 
+    def _change_plan(self, since_version: int, upto: int, allow_dv: bool):
+        """Yield (version, entry, change units) for the servable commits
+        in ``(since_version, upto]`` (``_change_entries``): THE rule for
+        which rows of a commit changed, and how. The batch feed
+        (``read_changes``), the streaming feed and its admission cost
+        all consume this one list; it reads log entries only.
+
+        - appends and a clone's inception: each add is an insert, a
+          clone's under the tombstones it carries;
+        - ``deleteMor``: each covered file's positions in the commit's
+          own vectors are deletes;
+        - overwrite: each replaced file's visible rows (tombstones at
+          v-1) are deletes, each add an insert;
+        - restore: a file only removed is a delete under the tombstones
+          at v-1, one only added an insert under those at v, and one
+          removed and re-added (a tombstone reset) deletes the
+          positions tombstoned at v and not at v-1 and inserts the
+          reverse;
+        - ``merge`` / ``delete`` / ``update``: their CDC sidecars, or
+          one ``rebuild`` unit without them;
+        - metadata-only commits: no units."""
+        for v, op, entry in self._change_entries(since_version, upto, allow_dv):
+            acts = entry["actions"]
+            adds = [a["add"] for a in acts if "add" in a]
+            removes = [a["remove"] for a in acts if "remove" in a]
+            if op == "deleteMor":
+                own = tuple(a["dv"] for a in acts if "dv" in a)
+                covered = sorted({f for a in acts if "dv" in a for f in a["files"]})
+                units = [_Change(f, "delete", show=own) for f in covered]
+            elif op == "restore":
+                rm, ad = set(removes), set(adds)
+                units = [_Change(f, "delete", hide=v - 1) for f in sorted(rm - ad)]
+                units += [_Change(f, "insert", hide=v) for f in sorted(ad - rm)]
+                for f in sorted(rm & ad):
+                    units += [_Change(f, "delete", v, v - 1), _Change(f, "insert", v - 1, v)]
+            elif op in ("overwrite", "overwritePartitions"):
+                units = [_Change(f, "delete", hide=v - 1) for f in removes]
+                units += [_Change(f, "insert") for f in adds]
+            elif op in ("merge", "delete", "update"):
+                cdc = [_Change(a["cdc"], "cdc") for a in acts if "cdc" in a]
+                units = cdc or [_Change(None, "rebuild")]
+            else:  # appends, clone; a metadata-only commit has no adds
+                hide = v if op == "clone" else None
+                units = [_Change(f, "insert", hide=hide) for f in adds]
+            yield v, entry, units
+
+    def _mask_vectors(self):
+        """A resolver ``(mask ref, files) -> deletion-vector names`` for
+        ``_Change`` masks: a tuple is the commit's own vectors, a
+        version the vectors live on ``files`` then (each version folded
+        once per resolver), None none."""
+        live: dict[int, dict] = {}
+
+        def names(ref, files) -> list[str]:
+            if ref is None or isinstance(ref, tuple):
+                return list(ref or ())
+            if ref not in live:
+                live[ref] = self.dv_map(ref)
+            return sorted({n for f in files for n in live[ref].get(f, ())})
+
+        return names
+
     def read_changes(
         self,
         spark: SparkSession,
         since_version: int,
         upto: int | None = None,
     ) -> DataFrame:
-        """Incremental change feed for APPEND-ONLY consumption (r8 —
-        the Delta CDF idea restricted to the shapes this log can serve
-        row-exactly without per-row change tracking): every row added
-        by append/streamAppend commits in ``(since_version, upto]``,
-        stamped with ``_commit_version`` and ``_change_type='insert'``
-        — plus, r10 (VERDICT r9 #3), every row tombstoned by a
-        ``deleteMor`` commit served as ``_change_type='delete'``: the
-        commit's deletion-vector parquet names exactly the (file, pos)
-        rows it removed, so a semi-join of the covered files against
-        the tombstones reconstructs the deleted rows row-exactly.
-        RESTORE commits are served as their row-level diff (the
-        rollback is file/position exact): rows that vanished emit
-        ``'delete'``, rows that resurfaced emit ``'insert'``,
-        tombstone-state flips emit exactly the changed positions.
-        OPTIMIZE commits are data-identical (pure add+remove
-        bookkeeping) and contribute NOTHING — their added files only
-        re-house rows a consumer already saw.
+        """Row-level change feed (Delta CDF) of ``(since_version,
+        upto]``: every changed row with ``_change_type`` (insert /
+        delete / update_preimage / update_postimage) and
+        ``_commit_version``. Which rows of a commit changed is
+        ``_change_plan``'s rule; within a commit, the files of one
+        change type and mask are read in one scan, a mask applied as a
+        semi- or anti-join on (file, position). OPTIMIZE commits
+        contribute nothing: their files only re-house rows a consumer
+        already saw.
 
-        Copy-on-write DML commits (``merge``, ``merge_into``,
-        ``update``, ``delete`` — the Delta CDF shapes) are served from
-        the commit's CDC sidecar when the table had
-        ``change_data_feed`` set, and otherwise reconstructed from the
-        commit's recorded operation info:
+        Copy-on-write DML commits written without a CDC sidecar are
+        reconstructed here, from the commit's own files and its
+        recorded operation info (the streaming feed cannot run these
+        joins and refuses them):
 
-        - ``delete``: the removed rows are exactly the rewritten
-          files' visible rows matching the recorded predicate —
-          re-evaluating it over those files (pre-existing tombstones
-          subtracted) reproduces them with zero diffing; a delete
-          commit without a recorded predicate falls back to an exact
-          multiset EXCEPT between old-visible and rewritten rows.
-          Emitted as ``'delete'``.
+        - ``delete``: the rewritten files' visible rows matching the
+          recorded predicate; without one, an exact multiset EXCEPT of
+          the old visible rows and the rewritten rows.
         - ``update``: the preimage is the removed files' visible rows
           matching the recorded predicate, the postimage the same rows
           with the recorded SET map applied.
-        - ``merge``: old-visible (of the removed files) and new
-          (added files) rows are full-outer joined on the recorded
-          merge key — rows whose compared struct changed emit
-          ``'update_preimage'`` + ``'update_postimage'``, new keys
-          emit ``'insert'``, unchanged keys emit NOTHING (value-
-          identical rows merely re-housed), matching Delta CDF. A
-          merge commit with no recorded key (a ``merge_into`` without
-          a sidecar) raises.
+        - ``merge``: old-visible and new rows full-outer joined on the
+          recorded key (``_merge_cdc``): changed rows emit
+          update_preimage + update_postimage, new keys insert, keys
+          gone delete, unchanged keys nothing. A merge with no
+          recorded key (a ``merge_into`` without a sidecar) raises.
 
-        Reconstructions touch only the commit's own files (the data
-        the DML itself processed), never the table — the pruning that
-        bounded the rewrite bounds the feed.
-
-        OVERWRITE commits — full (``mode("overwrite")``) and dynamic
-        partition overwrite — serve the Delta CDF replace shape: every
-        replaced file's visible row emits ``'delete'`` and every new
-        row ``'insert'`` (r11). ``createPartitioned`` serves its adds
-        as inserts, and metadata-only commits (rename/drop column)
-        pass through contributing no rows but carrying their schema —
-        the feed renders subsequent (and replaced) rows under the new
-        logical names instead of failing the range.
+        Each commit's files are read under that version's metadata, so
+        a partitioned table's feed carries its partition columns and a
+        column-mapped table serves the logical names as of each commit
+        (a rename renders later and replaced rows under the new name).
 
         Cost: exactly the log entries in the requested range — the
         incremental-consumer shape (a downstream index or aggregate
@@ -4847,248 +4889,62 @@ class TxTable:
         latest = self.latest_version()
         if upto is None:
             upto = latest
-        # each commit's files are read under THAT version's metadata —
-        # the same explicit-schema + basePath reader _scan uses, so a
-        # partitioned table's change feed carries its partition columns
-        # (they live in the hive dirs, not the file bytes) and a
-        # column-mapped table serves LOGICAL names as of that commit
-        dfs = []
+        vectors = self._mask_vectors()
+        pos = (F.col("_f") == F.col("file")) & (F.col("_p") == F.col("pos"))
 
-        def _emit(d: DataFrame, meta_v: dict | None, ctype: str, v: int):
-            dfs.append(
-                self._project_logical(d, meta_v)
-                .withColumn("_change_type", F.lit(ctype))
-                .withColumn("_commit_version", F.lit(v))
-            )
+        def tombs(names: list[str]) -> DataFrame:
+            paths = [self._abs(n) for n in names]
+            return spark.read.parquet(*paths).select("file", "pos")
 
-        def _keyed(files: list[str], meta_v: dict | None) -> DataFrame:
-            self._base2rel(files)  # position joins key on basenames
-            return self._read_files(spark, meta_v, files, keyed=True)
-
-        def _dv_frame(files: list[str], version: int) -> DataFrame | None:
-            """(file-basename, pos) tombstones covering ``files`` as of
-            ``version`` — None when none are live."""
-            dvs = self.dv_map(version)
-            names = sorted({n for f in files for n in dvs.get(f, [])})
-            if not names:
+        def rows(files: list[str], show=None, hide=None) -> DataFrame | None:
+            """Logical rows of ``files`` under a ``_Change`` mask; None
+            when the mask shows no position."""
+            sel, drop = vectors(show, files), vectors(hide, files)
+            if show is not None and not sel:
                 return None
-            return spark.read.parquet(
-                *[os.path.join(self.path, n) for n in names]
-            ).select("file", "pos")
-
-        _POS = (F.col("_f") == F.col("file")) & (F.col("_p") == F.col("pos"))
-
-        def _emit_raw(d: DataFrame, ctype: str, v: int):
-            """Append an ALREADY-logical frame (no re-projection)."""
-            dfs.append(
-                d.withColumn("_change_type", F.lit(ctype)).withColumn(
-                    "_commit_version", F.lit(v)
-                )
-            )
-
-        def _visible(files: list[str], at_version: int, meta_l) -> DataFrame:
-            """Logical visible rows of ``files`` at ``at_version`` —
-            pre-existing tombstones subtracted."""
-            d = _keyed(files, meta_l)
-            dv = _dv_frame(files, at_version)
-            if dv is not None:
-                d = d.join(dv, _POS, "left_anti")
-            return self._project_logical(d.drop("_f", "_p"), meta_l)
-
-        def _added_rows(files: list[str], meta_l) -> DataFrame:
-            """Logical rows of a commit's freshly added files (no
-            tombstones can exist on them at their own version)."""
-            return self._project_logical(
-                self._read_files(spark, meta_l, files), meta_l
-            )
+            if not sel and not drop:
+                return self._project_logical(self._read_files(spark, meta, files), meta)
+            self._base2rel(files)  # position joins key on basenames
+            d = self._read_files(spark, meta, files, keyed=True)
+            if sel:
+                keep = tombs(sel)
+                if drop:
+                    keep = keep.join(tombs(drop), ["file", "pos"], "left_anti")
+                d = d.join(keep, pos, "left_semi")
+            else:
+                d = d.join(tombs(drop), pos, "left_anti")
+            return self._project_logical(d.drop("_f", "_p"), meta)
 
         # metadata tracked INCREMENTALLY across the range: one fold at
         # the first served commit, then each entry's own meta action
         # (every meta change in range rides a served entry — optimize
         # never carries meta and rewrites raise). Folding per version
-        # would parse the full checkpoint once per commit in range —
-        # a real cost on a million-file table's cold driver.
-        meta_v: dict | None = None
-        meta_init = False
-        for v, op, entry in self._change_entries(since_version, upto, True):
-            if not meta_init:
-                meta_v = self._fold_state(v)[3]
-                meta_init = True
+        # would parse the full checkpoint once per commit in range.
+        dfs, meta = [], None
+        plan = self._change_plan(since_version, upto, True)
+        for i, (v, entry, units) in enumerate(plan):
+            if i == 0:
+                meta = self._fold_state(v)[3]
             else:
                 for a in entry["actions"]:
                     if "meta" in a:
-                        meta_v = a["meta"]
-            if op == "deleteMor":
-                dv_names = [a["dv"] for a in entry["actions"] if "dv" in a]
-                covered = sorted(
-                    {f for a in entry["actions"] if "dv" in a for f in a["files"]}
-                )
-                dv = spark.read.parquet(
-                    *[os.path.join(self.path, n) for n in dv_names]
-                ).select("file", "pos")
-                d = (
-                    _keyed(covered, meta_v)
-                    .join(dv, _POS, "left_semi")
-                    .drop("_f", "_p")
-                )
-                _emit(d, meta_v, "delete", v)
-            elif op == "restore":
-                # The rollback diff is file/position exact, so it can
-                # be served row-level (r10): files only live BEFORE the
-                # restore lose their visible rows (deletes, under the
-                # pre-restore tombstones), files only live AFTER gain
-                # theirs (inserts, under the re-attached target
-                # tombstones), and remove+add DV-reset pairs flip
-                # exactly the positions whose tombstone state changed.
-                ent_rm = {a["remove"] for a in entry["actions"] if "remove" in a}
-                ent_ad = {a["add"] for a in entry["actions"] if "add" in a}
-                gone = sorted(ent_rm - ent_ad)
-                fresh = sorted(ent_ad - ent_rm)
-                flipped = sorted(ent_rm & ent_ad)
-                if gone:
-                    d = _keyed(gone, meta_v)
-                    prev = _dv_frame(gone, v - 1)
-                    if prev is not None:
-                        d = d.join(prev, _POS, "left_anti")
-                    _emit(d.drop("_f", "_p"), meta_v, "delete", v)
-                if fresh:
-                    d = _keyed(fresh, meta_v)
-                    now = _dv_frame(fresh, v)
-                    if now is not None:
-                        d = d.join(now, _POS, "left_anti")
-                    _emit(d.drop("_f", "_p"), meta_v, "insert", v)
-                for files_, a_ver, b_ver, ctype in (
-                    (flipped, v, v - 1, "delete"),  # newly hidden
-                    (flipped, v - 1, v, "insert"),  # newly visible
-                ):
-                    if not files_:
-                        continue
-                    a = _dv_frame(files_, a_ver)
-                    if a is None:
-                        continue
-                    b = _dv_frame(files_, b_ver)
-                    diff = a if b is None else a.join(b, ["file", "pos"], "left_anti")
-                    d = (
-                        _keyed(files_, meta_v)
-                        .join(diff, _POS, "left_semi")
-                        .drop("_f", "_p")
-                    )
-                    _emit(d, meta_v, ctype, v)
-            elif op in ("overwrite", "overwritePartitions"):
-                # a replace is a full delete+insert of the affected
-                # files' rows — Delta CDF's overwrite shape (r11); for
-                # dynamic partition overwrite the affected set is
-                # exactly the replaced partitions' files
-                removed = [a["remove"] for a in entry["actions"] if "remove" in a]
-                added = [a["add"] for a in entry["actions"] if "add" in a]
-                if removed:
-                    _emit_raw(_visible(removed, v - 1, meta_v), "delete", v)
-                if added:
-                    _emit_raw(_added_rows(added, meta_v), "insert", v)
-            elif op in ("delete", "merge", "update"):
-                cdc = [a["cdc"] for a in entry["actions"] if "cdc" in a]
-                if cdc:
-                    # CDC sidecar: the commit landed its own change
-                    # rows — serve them join-free;
-                    # _project_logical passes _change_type through
+                        meta = a["meta"]
+            groups: dict[tuple, list[str]] = {}
+            for u in units:
+                groups.setdefault((u.kind, u.show, u.hide), []).append(u.file)
+            for (kind, show, hide), files in groups.items():
+                if kind == "rebuild":
+                    d = self._rebuild_changes(entry, v, rows)
+                elif kind == "cdc":  # the sidecar carries _change_type
                     d = self._project_logical(
-                        spark.read.parquet(
-                            *[os.path.join(self.path, n) for n in cdc]
-                        ),
-                        meta_v,
+                        spark.read.parquet(*[self._abs(n) for n in files]), meta
                     )
+                else:
+                    d = rows(files, show, hide)
+                    if d is not None:
+                        d = d.withColumn("_change_type", F.lit(kind))
+                if d is not None:
                     dfs.append(d.withColumn("_commit_version", F.lit(v)))
-                    continue
-                removed = [a["remove"] for a in entry["actions"] if "remove" in a]
-                added = [a["add"] for a in entry["actions"] if "add" in a]
-                if op == "delete":
-                    old = _visible(removed, v - 1, meta_v)
-                    pred = (entry.get("info") or {}).get("predicate")
-                    if pred is not None:
-                        # the rewrite kept every row the predicate does
-                        # not hold for: the deleted rows are the old
-                        # files' visible rows matching it — re-evaluate,
-                        # no diffing
-                        d = old.filter(pred)
-                    else:  # no recorded predicate: multiset EXCEPT
-                        d = old
-                        if added:
-                            d = d.exceptAll(
-                                _added_rows(added, meta_v).select(*old.columns)
-                            )
-                    _emit_raw(d, "delete", v)
-                    continue
-                if op == "update":
-                    # reconstruct from the recorded predicate + SET map:
-                    # preimage = the removed files' visible rows
-                    # matching the predicate, postimage = the same rows
-                    # with each SET expression applied against the OLD
-                    # row — definitionally what the rewrite computed
-                    info = entry.get("info") or {}
-                    pred, sets = info.get("predicate"), info.get("set")
-                    if pred is None or sets is None:
-                        raise ValueError(
-                            f"change feed crossed an update commit at "
-                            f"version {v} of {self.path} with no recorded "
-                            "predicate/SET — its row-level changes cannot "
-                            "be reconstructed"
-                        )
-                    pre = _visible(removed, v - 1, meta_v).filter(pred)
-                    post = pre.select(
-                        *[
-                            F.expr(sets[c]).alias(c) if c in sets else F.col(c)
-                            for c in pre.columns
-                        ]
-                    )
-                    _emit_raw(pre, "update_preimage", v)
-                    _emit_raw(post, "update_postimage", v)
-                    continue
-                info = entry.get("info") or {}
-                key = info.get("key")
-                if key is None:
-                    why = (
-                        "a generic merge_into commit has no single merge "
-                        "key — enable set_change_data_feed(True) before "
-                        "such merges so the commit lands CDC sidecars"
-                        if info.get("merge_into")
-                        else "recorded before operation info existed"
-                    )
-                    raise ValueError(
-                        f"change feed crossed a merge commit at version {v} "
-                        f"of {self.path}: {why} — its row-level changes "
-                        "cannot be reconstructed"
-                    )
-                new = _added_rows(added, meta_v) if added else None
-                if not removed:
-                    if new is not None:
-                        _emit_raw(new, "insert", v)
-                    continue
-                old = _visible(removed, v - 1, meta_v)
-                if new is None:  # degenerate: everything deleted
-                    _emit_raw(old, "delete", v)
-                    continue
-                # reconstruction: the same helper the sidecar writer
-                # uses, so served rows are definitionally identical
-                # whether the commit carried cdc files or not; join
-                # volume is the commit's rewritten+added files only
-                dfs.append(
-                    self._merge_cdc(old, new, key).withColumn(
-                        "_commit_version", F.lit(v)
-                    )
-                )
-            elif op == "clone":
-                # a shallow clone's inception (r11): the referenced
-                # rows ARE inserts to this table's feed — minus the
-                # tombstones the clone carried over (it copied the DV
-                # sidecars, so _visible subtracts them locally)
-                files = [a["add"] for a in entry["actions"] if "add" in a]
-                if files:
-                    _emit_raw(_visible(files, v, meta_v), "insert", v)
-            else:
-                files = [a["add"] for a in entry["actions"] if "add" in a]
-                if not files:
-                    continue
-                _emit(self._read_files(spark, meta_v, files), meta_v, "insert", v)
         if not dfs:
             return (
                 self.read(spark, latest)
@@ -5101,6 +4957,70 @@ class TxTable:
             # allowMissingColumns: a feed may cross a widening append
             out = out.unionByName(d, allowMissingColumns=True)
         return out
+
+    def _rebuild_changes(self, entry: dict, v: int, rows) -> DataFrame | None:
+        """The change rows, with ``_change_type``, of copy-on-write
+        commit ``v`` written without a CDC sidecar (see
+        ``read_changes``). ``rows(files, show, hide)`` reads logical
+        rows under a ``_Change`` mask."""
+        op, info = entry["op"], entry.get("info") or {}
+        removed = [a["remove"] for a in entry["actions"] if "remove" in a]
+        added = [a["add"] for a in entry["actions"] if "add" in a]
+        old = rows(removed, hide=v - 1) if removed else None
+        new = rows(added) if added else None
+
+        def tag(d: DataFrame, ctype: str) -> DataFrame:
+            return d.withColumn("_change_type", F.lit(ctype))
+
+        if op == "delete":
+            pred = info.get("predicate")
+            if pred is not None:
+                # the rewrite kept every row the predicate does not
+                # hold for: re-evaluate it, no diffing
+                return tag(old.filter(pred), "delete")
+            d = old if new is None else old.exceptAll(new.select(*old.columns))
+            return tag(d, "delete")
+        if op == "update":
+            pred, sets = info.get("predicate"), info.get("set")
+            if pred is None or sets is None:
+                raise ValueError(
+                    f"change feed crossed an update commit at version {v} "
+                    f"of {self.path} with no recorded predicate/SET — its "
+                    "row-level changes cannot be reconstructed"
+                )
+            # each SET expression applied against the OLD row — what
+            # the rewrite computed
+            pre = old.filter(pred)
+            post = pre.select(
+                *[F.expr(sets[c]).alias(c) if c in sets else F.col(c) for c in pre.columns]
+            )
+            return tag(pre, "update_preimage").unionByName(
+                tag(post, "update_postimage")
+            )
+        key = info.get("key")
+        if key is None:
+            why = (
+                "a generic merge_into commit has no single merge key — "
+                "enable set_change_data_feed(True) before such merges so "
+                "the commit lands CDC sidecars"
+                if info.get("merge_into")
+                else "recorded before operation info existed"
+            )
+            raise ValueError(
+                f"change feed crossed a merge commit at version {v} of "
+                f"{self.path}: {why} — its row-level changes cannot be "
+                "reconstructed"
+            )
+        if old is None:
+            return None if new is None else tag(new, "insert")
+        if new is None:  # degenerate: everything deleted
+            return tag(old, "delete")
+        # the join volume is the commit's rewritten and added files
+        # only. The sidecar writer (the explode in _cow_dml) is separate
+        # code: the golden DML tests and
+        # test_cdc_sidecars_match_reconstruction_and_survive_vacuum pin
+        # the two to the same rows
+        return self._merge_cdc(old, new, key)
 
     def clone_to(
         self,

@@ -548,29 +548,21 @@ def seed_admission_position(
 
 class TxLogStreamReader(DataSourceStreamReader):
     """Streaming source. Default mode serves the append-only file
-    feed; ``cdf=True`` (``.option("readChangeFeed", "true")``, r11 —
-    Delta's streaming CDF) serves ROW-LEVEL changes with a
-    ``_change_type`` column, one partition per (file, change kind):
-
-    - appends/creation: the added files, stamped ``insert``;
-    - deleteMor: the covered files with the commit's tombstone
-      positions SELECTED (not masked) — exactly the deleted rows,
-      stamped ``delete``;
-    - merge / CoW delete: the commit's CDC sidecar parquets (written
-      when ``set_change_data_feed(True)`` — a source partition cannot
-      run the reconstruction join, so sidecar-less rewrites fail the
-      stream loudly with the fix spelled out);
-    - overwrite (full & dynamic-partition): replaced files' visible
-      rows as ``delete`` + new files as ``insert``;
-    - restore: vanished files as ``delete``, resurfaced as ``insert``
-      (each under its version's tombstones), and tombstone-state
-      flips as position-set differences in both directions;
-    - metadata-only commits contribute nothing.
+    feed; ``cdf=True`` (``.option("readChangeFeed", "true")``, Delta's
+    streaming CDF) serves ROW-LEVEL changes with a
+    ``_change_type`` column: one partition per change unit of
+    ``TxTable._change_plan``, the rule the batch ``read_changes`` serves
+    too. A unit's mask becomes the partition's ``dv_paths`` (positions
+    hidden) or ``dv_select`` (only those positions shown), resolved to
+    vector files once per version per batch; a CDC sidecar is served
+    as written. A copy-on-write commit without sidecars fails the
+    stream loudly with the fix spelled out: a source partition cannot
+    run its reconstruction join.
 
     Everything is per-file executor work (position sets from KB-sized
     DV parquets) — no joins, no driver data.
 
-    Admission control (r12, VERDICT r11 #1 — Delta's
+    Admission control (Delta's
     ``maxFilesPerTrigger`` / ``maxBytesPerTrigger``): without a cap,
     ``latestOffset`` jumps straight to the table's latest version, so
     a stream starting against a deep backlog (or resuming after
@@ -599,7 +591,7 @@ class TxLogStreamReader(DataSourceStreamReader):
     skip or repeat rows, because the hint is monotone over ends
     already returned (end >= any checkpointed start).
 
-    ``Trigger.AvailableNow`` caveat (probed, r12): Spark wraps Python
+    ``Trigger.AvailableNow`` caveat (probed): Spark wraps Python
     sources in ``AvailableNowDataStreamWrapper``, which memorizes ONE
     ``latestOffset`` at query start and serves it as the single
     batch's end — the engine, not this reader, decides that. A fresh
@@ -725,7 +717,7 @@ class TxLogStreamReader(DataSourceStreamReader):
         self._pos = self.starting_version
         return {"version": self.starting_version}
 
-    # ---- admission control (r12) ----
+    # ---- admission control ----
     def _hint_path(self) -> str:
         return _admission_hint_path(self.table.path, self.stream_id)
 
@@ -739,35 +731,24 @@ class TxLogStreamReader(DataSourceStreamReader):
     def _save_hint(self, end: int) -> None:
         _save_hint_file(self._hint_path(), end)
 
-    def _admission_cost(self, entry: dict) -> "tuple[int, int]":
-        """(files, bytes) a batch containing this commit schedules.
-        Plain mode reads only added files (``change_files``); CDF mode
-        additionally reads CDC sidecars, DV-covered files, and
-        replaced files (overwrite/restore deletes). Bytes come from
-        the add action's recorded ``bytes`` when present (r12 logs),
-        else one driver-side getsize — metadata-only either way."""
-        acts = entry["actions"]
-        sized: "dict[str, int | None]" = {
-            a["add"]: a.get("bytes") for a in acts if "add" in a
-        }
-        if self.cdf:
-            for a in acts:
-                if "cdc" in a:
-                    sized.setdefault(a["cdc"], None)
-                elif "remove" in a:
-                    sized.setdefault(a["remove"], None)
-                elif "dv" in a:
-                    for n in a.get("files", ()):
-                        sized.setdefault(n, None)
+    def _admission_cost(self, entry: dict, units) -> "tuple[int, int]":
+        """(files, bytes) a batch containing this commit schedules: the
+        files its change units read (``TxTable._change_plan``; plain
+        mode serves only adds). Bytes come from the add action's
+        recorded ``bytes`` when present, else one driver-side getsize
+        — metadata-only either way."""
+        sized = {a["add"]: a.get("bytes") for a in entry["actions"] if "add" in a}
+        files = {u.file for u in units} - {None}
         total = 0
-        for n, b in sized.items():
+        for n in files:
+            b = sized.get(n)
             if b is None:
                 try:
                     b = os.path.getsize(self.table._abs(n))
                 except OSError:
                     b = 0
             total += b
-        return len(sized), total
+        return len(files), total
 
     def latestOffset(self) -> dict:
         latest = self.table.latest_version()
@@ -784,10 +765,8 @@ class TxLogStreamReader(DataSourceStreamReader):
             return {"version": pos}
         files = nbytes = 0
         end, exhausted = pos, True
-        for v, _op, entry in self.table._change_entries(
-            pos, latest, self.cdf
-        ):
-            f, b = self._admission_cost(entry)
+        for v, entry, units in self.table._change_plan(pos, latest, self.cdf):
+            f, b = self._admission_cost(entry, units)
             over = (
                 self.max_files is not None and files + f > self.max_files
             ) or (self.max_bytes is not None and nbytes + b > self.max_bytes)
@@ -805,18 +784,6 @@ class TxLogStreamReader(DataSourceStreamReader):
         self._save_hint(end)
         return {"version": end}
 
-    def _part(self, name: str, v: int, **kw) -> TxLogPartition:
-        cdc = kw.pop("cdc", False)
-        return TxLogPartition(
-            self.table._abs(name),
-            v,
-            kw.pop("dv_paths", ()),
-            self.target_schema if cdc else self.data_schema,
-            tuple(sorted(_parse_partition_values(name).items())),
-            change_type=kw.pop("change_type", None),
-            dv_select=kw.pop("dv_select", None),
-        )
-
     def partitions(self, start: dict, end: dict) -> Sequence[InputPartition]:
         # every planned batch (incl. the restart replay of the last
         # offset-log batch) tells us where the stream really is —
@@ -825,111 +792,37 @@ class TxLogStreamReader(DataSourceStreamReader):
         if self._pos is None or v > self._pos:
             self._pos = v
         self._check_widening(start["version"], end["version"])
-        if not self.cdf:
-            return [
-                TxLogPartition(
-                    self.table._abs(n),
-                    v,
-                    (),
-                    self.target_schema,
-                    tuple(sorted(_parse_partition_values(n).items())),
-                )
-                for n, v in self.table.change_files(
-                    start["version"], end["version"]
-                )
-            ]
         t = self.table
-        abs_ = lambda names: tuple(t._abs(n) for n in names)
+        vectors = t._mask_vectors()
         parts: list[TxLogPartition] = []
-        for v, op, entry in t._change_entries(
-            start["version"], end["version"], True
+        for v, entry, units in t._change_plan(
+            start["version"], end["version"], self.cdf
         ):
-            adds = [a["add"] for a in entry["actions"] if "add" in a]
-            removes = [a["remove"] for a in entry["actions"] if "remove" in a]
-            cdc = [a["cdc"] for a in entry["actions"] if "cdc" in a]
-            if op in ("append", "streamAppend", "createPartitioned"):
-                parts += [self._part(n, v, change_type="insert") for n in adds]
-            elif op == "deleteMor":
-                sel = abs_(a["dv"] for a in entry["actions"] if "dv" in a)
-                covered = sorted(
-                    {f for a in entry["actions"] if "dv" in a for f in a["files"]}
-                )
-                parts += [
-                    self._part(n, v, change_type="delete", dv_select=(sel, ()))
-                    for n in covered
-                ]
-            elif op in ("merge", "delete", "update"):
-                # r12 (ADVICE r11): 'update' fell through this chain and
-                # emitted NOTHING — silent row loss. Its CDC sidecars
-                # carry update_preimage/update_postimage rows, exactly
-                # like merge's; serve them the same way, and fail loudly
-                # when a sidecar-less rewrite crosses the stream.
-                if not cdc:
+            for u in units:
+                if u.kind == "rebuild":  # a source partition cannot join
                     raise ValueError(
-                        f"streaming change feed crossed a '{op}' commit at "
-                        f"version {v} of {t.path} without CDC sidecars; "
-                        "enable set_change_data_feed(True) before such "
-                        "commits (batch read_changes can still reconstruct "
-                        "this range)"
+                        f"streaming change feed crossed a '{entry['op']}' "
+                        f"commit at version {v} of {t.path} without CDC "
+                        "sidecars; enable set_change_data_feed(True) before "
+                        "such commits (batch read_changes can still "
+                        "reconstruct this range)"
                     )
-                parts += [self._part(n, v, cdc=True) for n in cdc]
-            elif op == "clone":
-                # r12 (ADVICE r11): a shallow clone's inception inserts
-                # also fell through silently. Mirror read_changes: the
-                # referenced files' VISIBLE rows (the commit's own DV
-                # sidecars masked) are inserts at the clone version.
-                dv_now = t.dv_map(v)
-                parts += [
-                    self._part(
-                        n, v, change_type="insert",
-                        dv_paths=abs_(dv_now.get(n, ())),
+                show = tuple(map(t._abs, vectors(u.show, [u.file])))
+                hide = tuple(map(t._abs, vectors(u.hide, [u.file])))
+                if u.show is not None and not show:
+                    continue
+                cdc = u.kind == "cdc"
+                parts.append(
+                    TxLogPartition(
+                        t._abs(u.file),
+                        v,
+                        hide if u.show is None else (),
+                        self.target_schema if cdc else self.data_schema,
+                        tuple(sorted(_parse_partition_values(u.file).items())),
+                        change_type=u.kind if self.cdf and not cdc else None,
+                        dv_select=None if u.show is None else (show, hide),
                     )
-                    for n in adds
-                ]
-            elif op in ("overwrite", "overwritePartitions"):
-                dv_prev = t.dv_map(v - 1)
-                parts += [
-                    self._part(
-                        n, v, change_type="delete",
-                        dv_paths=abs_(dv_prev.get(n, ())),
-                    )
-                    for n in removes
-                ]
-                parts += [self._part(n, v, change_type="insert") for n in adds]
-            elif op == "restore":
-                dv_prev, dv_now = t.dv_map(v - 1), t.dv_map(v)
-                rm, ad = set(removes), set(adds)
-                for n in sorted(rm - ad):
-                    parts.append(
-                        self._part(
-                            n, v, change_type="delete",
-                            dv_paths=abs_(dv_prev.get(n, ())),
-                        )
-                    )
-                for n in sorted(ad - rm):
-                    parts.append(
-                        self._part(
-                            n, v, change_type="insert",
-                            dv_paths=abs_(dv_now.get(n, ())),
-                        )
-                    )
-                for n in sorted(rm & ad):  # tombstone-state flip
-                    now, prev = abs_(dv_now.get(n, ())), abs_(dv_prev.get(n, ()))
-                    if now:
-                        parts.append(
-                            self._part(
-                                n, v, change_type="delete",
-                                dv_select=(now, prev),
-                            )
-                        )
-                    if prev:
-                        parts.append(
-                            self._part(
-                                n, v, change_type="insert",
-                                dv_select=(prev, now),
-                            )
-                        )
-            # metadata-only commits: no data actions, nothing to emit
+                )
         return parts
 
     def read(self, partition: TxLogPartition):  # type: ignore[override]

@@ -11,7 +11,10 @@ from collections import Counter
 import pytest
 
 from hephaestus_spark.sources.txlog import TxTable
-from hephaestus_spark.sources.txlog_datasource import TxLogDataSource
+from hephaestus_spark.sources.txlog_datasource import (
+    TxLogDataSource,
+    TxLogStreamReader,
+)
 
 S_OLD = "id long, val double"
 S_NEW = "id long, amount double"
@@ -122,3 +125,19 @@ def test_clone_change_feeds_agree(spark, table, tmp_path):
         {(i, float(i), "insert", 0): 1 for i in range(200, 210) if i != 201}
     )
 
+
+def test_admission_cow_delete_costs_its_sidecar(spark, tmp_path):
+    """A CoW delete's change rows are its CDC sidecar, so the capped
+    stream admits it as one file, beside the append before it."""
+    t = TxTable(str(tmp_path / "t"))
+    t.append(_rows(spark, 0, 4, S_OLD))                       # v0: 1 file
+    t.set_change_data_feed(True)                              # v1
+    t.delete(spark, "id = 0")                                 # v2: sidecar
+    r = TxLogStreamReader(t, -1, cdf=True, max_files=2)
+    cur, ends = r.initialOffset(), []
+    while (end := r.latestOffset()) != cur:
+        r.partitions(cur, end)
+        r.commit(end)
+        ends.append(end["version"])
+        cur = end
+    assert ends == [2]

@@ -742,12 +742,19 @@ def test_merge_prunes_by_partition_values(spark, tmp_path):
     entry = t._read_entry(t.latest_version())
     removed = {a["remove"] for a in entry["actions"] if "remove" in a}
     added = {a["add"] for a in entry["actions"] if "add" in a}
-    # prune fraction pinned: ONLY day-3 files were rewritten
-    assert removed == day2_before
+    # ONLY the day-3 files holding a staged key were rewritten (day 3
+    # may be written as several files, depending on the session's cores)
+    holding = {
+        f
+        for f in day2_before
+        if {202, 299}
+        & {r["id"] for r in spark.read.parquet(t._abs(f)).select("id").collect()}
+    }
+    assert holding and removed == holding
     assert all(f.startswith("day=2024-01-03/") for f in added)
-    # and every other partition's files survive untouched by identity
+    # and every other file, in day 3 or not, survives untouched by identity
     after = set(t._snapshot_files())
-    assert (before - day2_before) <= after
+    assert (before - holding) <= after
     got = {r["id"]: r["val"] for r in t.read(spark).collect()}
     assert got[202] == 99.0 and got[299] == 9.0
     assert len(got) == 25
