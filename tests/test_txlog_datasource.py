@@ -598,8 +598,8 @@ def test_admission_cdf_counts_sidecars(spark, tmp_path):
     t.delete(spark, "id = 0")                     # v3 CoW delete + sidecar
     r = TxLogStreamReader(t, -1, cdf=True, max_files=1)
     batches, _ = _drain(r)
-    # v1 costs nothing and rides with v0; v3 (add+remove+cdc = 3 files)
-    # exceeds the cap but is admitted alone via the progress guarantee
+    # v1 costs nothing and rides with v0; v3 costs 1 file, its CDC
+    # sidecar (the change rows the feed serves), and fills the cap alone
     assert [(s, e) for s, e, _ in batches] == [(-1, 1), (1, 2), (2, 3)]
 
 
